@@ -61,6 +61,27 @@ EXECUTES_AT_BUILD = {
 }
 
 
+#: Queries that run Spark jobs every time their DataFrame is built, by
+#: design — beyond EXECUTES_AT_BUILD, whose driver loops do too. Every
+#: other auditable query must build with zero jobs once its session is
+#: warm (tests/test_plan_audit.py): fixture reads come from the catalog's
+#: handle registry, persisted layouts from their warm attach.
+BUILD_JOBS_OK = {
+    "join_dpp",               # writes the status-partitioned fact, then
+                              # reads it back (partition discovery)
+    "layout_time_travel",     # reads the as-of snapshot dir it resolved
+    "layout_time_travel_ts",  # (spark.read.parquet footer-schema job)
+    "layout_zorder_skipping", # collects the custkey min/max that size the
+                              # query rectangle
+    "sim_ivf",                # train the ANN index per call from
+    "sim_pq",                 # driver-side collects (sim_ivf_pq_stored
+    "sim_ivf_pq",             # is the persisted, train-once form)
+    "sim_lsh_approx",         # Spark ML LSH fit reads the vector size
+    "source_csv_malformed",   # writes the CSV source the read is tested on
+    "text_tfidf",             # collects the corpus document count
+}
+
+
 def is_effectful(name: str, tags: tuple[str, ...]) -> bool:
     """True when the query's plan should not be statically audited."""
     return name in SKIP_EFFECTFUL or bool(
@@ -106,6 +127,25 @@ def audit_plan(plan: str) -> dict:
             if n in plan
         ],
     }
+
+
+def build_jobs(spark, build) -> tuple[object, int]:
+    """Run ``build()`` under a fresh Spark job group and return its result
+    with the number of jobs it launched (its thread's jobs only). The
+    listener bus is drained first, so a job that already finished is
+    never missed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched while building a DataFrame")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def plan_string(df) -> str:

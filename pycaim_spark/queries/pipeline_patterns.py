@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pycaim_spark.catalog import load_table
+from pycaim_spark.queries.pipeline_ops import _scan_unify
 from pycaim_spark.registry import register
 
 
@@ -50,9 +51,7 @@ def events_funnel(spark, sf_dir):
     reuses one partitioning; no window over the full event stream is
     needed."""
     ev = load_table(spark, sf_dir, "events")
-    import os
-
-    if os.environ.get("PYCAIM_SCAN_UNIFY", "1") != "0":
+    if _scan_unify():
         # r18 exchange-reuse guard (guide §2.4): the view-step aggregate
         # is consumed twice — inside the click join (which pushes an
         # inferred isnotnull(user_id) into ITS copy's scan) and as the
@@ -222,9 +221,7 @@ def events_cohort_retention(spark, sf_dir):
     small cohort-cell rollup). Week arithmetic is integer day-diff / 7 —
     no float time math."""
     ev = load_table(spark, sf_dir, "events")
-    import os
-
-    if os.environ.get("PYCAIM_SCAN_UNIFY", "1") != "0":
+    if _scan_unify():
         # r18 scan-share (guide §2.4, same mechanism as pipeline_ops
         # `_shard_exchange`): both aggregates key on user_id, so ONE
         # explicit hash exchange serves them shuffle-free — a

@@ -44,9 +44,9 @@ def tpch_q6(spark, sf_dir):
     regression at sf0.1 (ISOLATE_r12.json
     `tpch_q6_fixedpoint_sf01_paired_series`: ~1.21 vs ~1.43 s median).
     PYCAIM_TPCH_FORM=fixedpoint keeps the losing arm runnable."""
-    register_temp_views(spark, sf_dir)
     if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
         return _tpch_q6_fixedpoint(spark, sf_dir)
+    register_temp_views(spark, sf_dir)
     return spark.sql(_Q6_SQL)
 
 
@@ -95,9 +95,9 @@ def tpch_q10(spark, sf_dir):
     SQL-decimal form (see tpch_q3's docstring: the r11 fixed-point
     conversion was a wash at sf10 and a 4/4 paired regression at sf0.1 —
     ISOLATE_r12.json `tpch_fixedpoint_sf01_paired_series`)."""
-    register_temp_views(spark, sf_dir)
     if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
         return _tpch_q10_fixedpoint(spark, sf_dir)
+    register_temp_views(spark, sf_dir)
     return spark.sql(_Q10_SQL)
 
 
@@ -177,8 +177,8 @@ def tpch_q18(spark, sf_dir):
     PYCAIM_Q18_SHAPE=twophase keeps the literal two-aggregation shape
     runnable as the control. Result equality with the SQL form is
     bit-asserted by the forms-equality test and the parity gate."""
-    register_temp_views(spark, sf_dir)
     if os.environ.get("PYCAIM_TPCH_FORM") == "sql":
+        register_temp_views(spark, sf_dir)
         return spark.sql(_Q18_SQL)
     if os.environ.get("PYCAIM_Q18_SHAPE") == "twophase":
         return _tpch_q18_twophase(spark, sf_dir)
@@ -258,7 +258,6 @@ def tpch_q18_bucketed(spark, sf_dir):
     ISOLATE_r11.json `tpch_fixedpoint_paired_series`); same oracle."""
     from pycaim_spark.queries.advanced import _bucketed_orderkey_layout
 
-    register_temp_views(spark, sf_dir)
     lib, ob = _bucketed_orderkey_layout(spark, sf_dir)
     qty_c = cents("l_quantity")
     big_orders = (
@@ -302,7 +301,6 @@ def tpch_q10_bucketed(spark, sf_dir):
     final top-20 is a TakeOrdered. Same DuckDB oracle as tpch_q10."""
     from pycaim_spark.queries.advanced import _bucketed_orderkey_layout
 
-    register_temp_views(spark, sf_dir)
     lib, ob = _bucketed_orderkey_layout(spark, sf_dir)
     o = ob.filter(
         (F.col("o_orderdate")
@@ -415,7 +413,6 @@ def tpch_q21_bucketed(spark, sf_dir):
 
     from pycaim_spark.queries.advanced import _bucketed_orderkey_layout
 
-    register_temp_views(spark, sf_dir)
     lib, ob = _bucketed_orderkey_layout(spark, sf_dir)
     o = ob.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"

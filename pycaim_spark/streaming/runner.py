@@ -55,10 +55,14 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     (VERDICT r18 #3). The default ``spark.sql.shuffle.partitions`` tracks
     the core count, and every stateful micro-batch — including the no-data
     finalize batch availableNow always appends — pays a state-store
-    open/commit per partition (~27 ms each on this box per the r18
-    StreamingQueryProgress decomposition), so the cost scaled with CORES,
-    not data: the r18 driver's own scaling block read stream_watermark_agg
-    at 0.29 (8 cores 3.4× faster than 32 on identical code).
+    open/commit per partition (~27 ms each per the StreamingQueryProgress
+    decomposition in OPTIMIZATION_r18.md, `stream_watermark_agg` row), so
+    the cost scaled with CORES, not data: the r18 driver's scaling block
+    read stream_watermark_agg at 0.29 (8 cores 3.4× faster than 32 on
+    identical code). With this sizing the 8/32-core ratio is 0.95
+    (ISOLATE_r19.json `stream_state_partitions_core_scaling`), and the
+    shipped default beat a forced 32 partitions in 4/4 order-alternating
+    fresh-JVM rounds, ~1.0 vs ~2.0 s (`stream_state_partitions_series`).
 
     Sizing rule: one state partition per ~32 MiB of source input — the
     watermark bounds live state to a fraction of in-flight input, so

@@ -17,9 +17,11 @@ import os
 import pytest
 
 from pycaim_spark.planaudit import (
+    BUILD_JOBS_OK,
     CARTESIAN_OK,
     EXECUTES_AT_BUILD,
     ROW_PYTHON_OK,
+    build_jobs,
     is_effectful,
     plan_string,
 )
@@ -34,7 +36,23 @@ _AUDITABLE = sorted(
 
 @pytest.mark.parametrize("name", _AUDITABLE)
 def test_plan_has_no_silent_scale_killers(spark, sf_dir, name):
-    df = REGISTRY[name].fn(spark, sf_dir)
+    REGISTRY[name].fn(spark, sf_dir)
+    # Build-time job budget: a second build in a warm session launches no
+    # Spark job (fixture schemas come from the catalog's handle registry),
+    # unless the query collects or writes at build time by design.
+    df, jobs = build_jobs(spark, lambda: REGISTRY[name].fn(spark, sf_dir))
+    if name in BUILD_JOBS_OK:
+        assert jobs > 0, (
+            f"{name}: builds with no Spark job now — drop it from "
+            "planaudit.BUILD_JOBS_OK"
+        )
+    elif name not in EXECUTES_AT_BUILD:
+        assert jobs == 0, (
+            f"{name}: {jobs} Spark job(s) launched while re-building the "
+            "DataFrame in a warm session (read fixtures via "
+            "catalog.load_table, or list the query in "
+            "planaudit.BUILD_JOBS_OK with a reason)"
+        )
     plan = plan_string(df)
     if name not in CARTESIAN_OK:
         assert "CartesianProduct" not in plan, f"{name}: unplanned cartesian"
