@@ -113,7 +113,7 @@ def _load_guard(label: str) -> list[float]:
     0.5 — three rounds of BENCH_r{N} comparisons started false regression
     alarms from shared-session drift that paired series kept ruling noise
     (VERDICT r11). Decision-grade series should refuse to start hot
-    (tools/tpch_series.py settle()); the headline bench just records."""
+    (see ``_settle``); the headline bench just records."""
     load = [round(x, 3) for x in os.getloadavg()]
     if load[0] > 0.5:
         print(
@@ -129,11 +129,11 @@ def _load_guard(label: str) -> list[float]:
 #: load 2.3–2.7 and produced a phantom across-the-board "regression" that
 #: the settled paired runs (BENCH_r18_settled vs _post) ruled a wash. The
 #: headline bench now waits — bounded — for the box to settle before
-#: timing, the tools/tpch_series.py pattern: poll until 1-min load < 0.5,
+#: timing: poll until 1-min load < 0.5,
 #: proceed after 900 s regardless, and record what happened in the JSON
 #: (``settle_waited_s``, plus ``settle_timeout: true`` when it gave up) so
 #: a hot run is marked instead of silently misread. PYCAIM_BENCH_NO_SETTLE=1
-#: skips the wait (for harnesses that already settle, e.g. form_ab_series).
+#: skips the wait (for harnesses that already settle before each run).
 _SETTLE_THRESHOLD = 0.5
 _SETTLE_TIMEOUT_S = 900.0
 
@@ -308,8 +308,8 @@ def _isolate(names: list[str], n: int, canary: bool = False) -> None:
     timings: dict[str, float] = {}
     canaries: dict[str, list[float]] = {}
     # $PYCAIM_CANARY_REF carries the best canary seen EARLIER in a series
-    # that spans multiple bench.py invocations (tools/form_ab_series.py
-    # runs one invocation per (round, arm)); without it each invocation's
+    # that spans multiple bench.py invocations (e.g. one invocation per
+    # (round, arm) of a paired series); without it each invocation's
     # first probe would define its own reference and the gate could never
     # fire on a box that decayed between invocations.
     ref_env = os.environ.get("PYCAIM_CANARY_REF")

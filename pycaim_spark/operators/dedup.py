@@ -32,12 +32,9 @@ def _banded_pairs_with_guard(
     keys: list[str],
     max_bucket_width: int,
     with_sig: bool = False,
-    shape: str | None = None,
     pair_filter=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Bucket self-join with the dense-clique STAR guard, in one of six
-    measured plan shapes (select with env ``PYCAIM_LSH_GUARD_SHAPE`` ∈
-    {grouped, grouped_unbounded, window, join, anti, nopart}).
+    """Bucket self-join with the dense-clique STAR guard.
 
     Input ``bands`` has columns ``keys… , id`` (+ ``sig`` when
     ``with_sig``). Returns ``(pairs, wide_buckets)`` where ``pairs`` is
@@ -45,223 +42,68 @@ def _banded_pairs_with_guard(
     ``max_bucket_width``, star pairs against the bucket min id beyond it —
     and ``wide_buckets`` is (keys…, width) for the degraded buckets.
 
-    - ``window`` (default since round 9): tag every band row with bucket
-      width and bucket-min via one window over the bucket key; narrow/star
-      split is a filter, pairs via self-join. Window partition buffers
-      SPILL (ExternalAppendOnlyUnsafeRowArray), so per-task state is
-      bounded no matter the clique width. Decision evidence —
-      ISOLATE_r9.json, two independent 4-round alternating paired series
-      run outside the round-8 session that picked ``grouped``: the round-8
-      "grouped wins minhash 4/4, ~16%" result did NOT replicate
-      (``dedup_shape_paired_series_r9`` rounds 1-3: grouped 2/3, medians
-      2.99 vs 3.19; ``dedup_shape_bounded_paired_series``: minhash
-      pairwise TIES 2-2 across all three shapes, medians window 3.38 /
-      grouped 3.39 / grouped_unbounded 2.79 with ±40% round bounce, while
-      simhash prefers window 4-0 vs grouped and 3-1 vs unbounded). With
-      no decisive speed winner, the state-bounded spillable shape wins on
-      structure.
-    - ``grouped``: the round-9 BOUNDED-state revision of the grouped
-      shape (ADVICE r8) — streaming (count, min) stats find wide buckets,
-      which are star-paired as a broadcast-join projection and anti-joined
-      OUT before any collect_list, so no aggregation buffer ever holds
-      more than ``cap`` structs. Measured a wash with window on minhash
-      and slower on simhash (ISOLATE_r9.json
-      ``dedup_shape_bounded_paired_series``). NOTE: assumes the wide set
-      is small — do not use with cap ≈ 1 (star-everything callers), where
-      "wide" is every bucket and the broadcast anti degenerates.
-    - ``grouped_unbounded``: the round-8 single-groupBy form — one read of
-      the bands exchange, narrow/star split as a per-row ``when`` on
-      ``size()``; best minhash median in the r9 series (2.79) but within
-      the tie, and its collect_list buffer is O(bucket width) per-group
-      NON-spillable state — the W-deep-clique exposure that made round 9
-      demote it from default.
-    - ``join`` / ``anti`` / ``nopart``: the round-6/7 historical shapes
-      (groupBy stats + tagging join; explicit repartition + left-anti;
-      AQE-broadcast anti) — all measured slower (earlier ISOLATE_r8.json
-      rows: minhash 2.92 / 3.82 / 3.51, simhash 11.89 / 7.54 / 13.55,
-      different session, same protocol).
+    One window over the bucket key tags every band row with bucket width
+    and bucket-min; the narrow/star split is a filter and pairs come from
+    a self-join. Window partition buffers SPILL
+    (ExternalAppendOnlyUnsafeRowArray), so per-task state is bounded no
+    matter the clique width. No other shape (grouped, grouped-unbounded,
+    join, anti, nopart) beat it decisively (ISOLATE_r8.json;
+    ISOLATE_r9.json ``dedup_shape_bounded_paired_series``: minhash ties,
+    simhash prefers window), so the bounded-state shape is the one kept.
+    Under memory pressure it tails worse than the groupBy shapes
+    (ISOLATE_r18.json
+    ``sim_guard_shape_window_vs_nopart_sf10_series``,
+    ``sim_guard_shape_window_vs_single_sf10_series``).
 
     Guard-off control: 1.75 minhash (ISOLATE_r8.json dedup_guard_off) —
-    the residual guard cost is the collect_list vs plain self-join delta,
-    paid for bounding per-task memory at W ≤ cap; on simhash the guard is
-    a net WIN (guard-off 4.84, star pairing prunes the homogeneous
-    fixture's wide buckets). All shapes are pure physical variants; a
-    parametrized test asserts identical output (tests/test_llm_ops.py
-    test_guard_shapes_equivalent).
+    the residual guard cost is the window vs plain self-join delta, paid
+    for bounding per-task memory at W ≤ cap; on simhash the guard is a
+    net WIN (guard-off 4.84, star pairing prunes the homogeneous
+    fixture's wide buckets).
     """
-    if shape is None:
-        shape = os.environ.get("PYCAIM_LSH_GUARD_SHAPE", "window")
     cap = max_bucket_width
     min_expr = F.min(F.struct("id", "sig")) if with_sig else F.min("id")
-
-    def _narrow_pairs(narrow):
-        cols = [
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-        ] + (
-            [F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b")]
-            if with_sig else []
-        )
-        return (
-            narrow.alias("a")
-            .join(narrow.alias("b"), keys)
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(*cols)
-        )
-
-    def _star_pairs(wide_rows):
-        # _min is the bucket minimum, so id_a < id_b by construction.
-        min_id = F.col("_min.id") if with_sig else F.col("_min")
-        cols = [min_id.alias("id_a"), F.col("id").alias("id_b")] + (
-            [F.col("_min.sig").alias("sig_a"), F.col("sig").alias("sig_b")]
-            if with_sig else []
-        )
-        return wide_rows.filter(F.col("id") != min_id).select(*cols)
-
-    if shape in ("grouped", "grouped_unbounded"):
-        # Grouped collect_list + HOF pair expansion: no window sort, no
-        # narrow self-join. Two variants:
-        #
-        # - ``grouped`` (default, BOUNDED state — ADVICE r8): a streaming
-        #   (count, min) aggregate finds wide buckets first (hash-agg
-        #   partial state, spillable, map-side combined); the wide set is
-        #   tiny post-filter so AQE broadcasts it, and narrow rows reach
-        #   the collect_list through a map-side anti join — so no
-        #   aggregation buffer ever holds more than ``cap`` structs.
-        #   Wide buckets never enter collect_list at all: their star
-        #   pairs stream as a broadcast-join projection, O(1) memory per
-        #   row. This is what actually survives a W-deep clique at 100 TB
-        #   — collect_list buffers are per-group and NON-spillable, so
-        #   the previous single-groupBy form held O(W) structs for the
-        #   clique bucket (the expansion was capped at cap²/2 structs
-        #   per row, but the _ids buffer itself was not).
-        # - ``grouped_unbounded``: the round-8 single-groupBy form (ONE
-        #   read of the bands exchange, narrow/star split as a per-row
-        #   ``when`` on size()) — kept for A/B; its collect_list state is
-        #   O(bucket width).
-        elem = F.struct("id", "sig") if with_sig else F.struct("id")
-
-        def _hof_pairs(grouped_df, width_guard):
-            n = F.size("_ids")
-            pair = lambda a, b: F.struct(a.alias("_a"), b.alias("_b"))  # noqa: E731
-            all_pairs = F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), n - 1),
-                    lambda i: F.transform(
-                        F.slice(F.col("_ids"), (i + F.lit(1)).cast("int"), n),
-                        lambda x: pair(F.element_at(F.col("_ids"), i), x),
-                    ),
-                )
-            )
-            star_pairs = F.transform(
-                F.slice(F.col("_ids"), 2, n - 1),
-                lambda x: pair(F.element_at(F.col("_ids"), 1), x),
-            )
-            # n >= 2 filter BEFORE the expansion: width-1 buckets (the
-            # vast majority) emit nothing, and sequence(1, 0) would
-            # DESCEND into an element_at(_ids, 0) error (same Spark
-            # gotcha as the n-gram ops).
-            expanded = (
-                F.when(n <= cap, all_pairs).otherwise(star_pairs)
-                if width_guard else all_pairs
-            )
-            exploded = grouped_df.filter(n >= 2).select(
-                F.explode(expanded).alias("_p")
-            )
-            cols = [
-                F.col("_p._a.id").alias("id_a"),
-                F.col("_p._b.id").alias("id_b"),
-            ] + (
-                [F.col("_p._a.sig").alias("sig_a"),
-                 F.col("_p._b.sig").alias("sig_b")]
-                if with_sig else []
-            )
-            return exploded.select(*cols)
-
-        if shape == "grouped":
-            stats_wide = (
-                bands.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("_w"), min_expr.alias("_min"))
-                .filter(F.col("_w") > cap)
-            )
-            narrow = bands.join(stats_wide, keys, "left_anti")
-            grouped = narrow.groupBy(*keys).agg(
-                F.sort_array(F.collect_list(elem)).alias("_ids")
-            )
-            pairs = _hof_pairs(grouped, width_guard=False)
-            star = _star_pairs(bands.join(stats_wide, keys))
-            wide_buckets = stats_wide.select(
-                *keys, F.col("_w").alias("width")
-            )
-        else:
-            grouped = bands.groupBy(*keys).agg(
-                F.sort_array(F.collect_list(elem)).alias("_ids")
-            )
-            n = F.size("_ids")
-            pairs = _hof_pairs(grouped, width_guard=True)
-            star = pairs.limit(0)  # star pairs are already inside `pairs`
-            wide_buckets = grouped.filter(n > cap).select(
-                *keys, n.cast("long").alias("width")
-            )
-    elif shape == "window":
-        w = Window.partitionBy(*keys)
-        tagged = bands.select(
-            "*",
-            F.count(F.lit(1)).over(w).alias("_w"),
-            min_expr.over(w).alias("_min"),
-        )
-        narrow_cond = F.col("_w") <= cap
-        if os.environ.get("PYCAIM_BAND_UNIFY", "1") != "0":
-            # Row-level no-op (the bucket min is an aggregate over the
-            # row's own non-null bucket, so it can never be null) that
-            # keeps `_min` referenced in the NARROW branch: without it,
-            # column pruning drops `_min` from the narrow window, and for
-            # the with_sig callers the star window's min(struct(id, sig))
-            # pre-projects a `_w0` struct column BELOW the exchange that
-            # the narrow side then lacks — the two band exchanges
-            # canonicalize differently and the whole signature+explode
-            # subtree executes twice (dedup_simhash before: Exchange (16)
-            # vs (36), plans/r18). With the reference, both windows
-            # compute [count, min] over one shared exchange.
-            narrow_cond = narrow_cond & F.col("_min").isNotNull()
-        narrow = tagged.filter(narrow_cond).drop("_w", "_min")
-        pairs = _narrow_pairs(narrow)
-        star = _star_pairs(tagged.filter(F.col("_w") > cap))
-        wide_buckets = (
-            tagged.filter(F.col("_w") > cap)
-            .groupBy(*keys)
-            .agg(F.max("_w").alias("width"))
-        )
-    elif shape == "join":
-        stats = bands.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("_w"), min_expr.alias("_min")
-        )
-        tagged = bands.join(stats, keys)
-        narrow = tagged.filter(F.col("_w") <= cap).drop("_w", "_min")
-        pairs = _narrow_pairs(narrow)
-        star = _star_pairs(tagged.filter(F.col("_w") > cap))
-        wide_buckets = stats.filter(F.col("_w") > cap).select(
-            *keys, F.col("_w").alias("width")
-        )
-    elif shape in ("anti", "nopart"):
-        if shape == "anti":
-            n_part = bands.sparkSession.sparkContext.defaultParallelism
-            bands = bands.repartition(n_part, *[F.col(k) for k in keys])
-        # "nopart": no explicit exchange — the wide-stats aggregate partial-
-        # aggregates map-side into a tiny shuffle, AQE demotes the wide
-        # list to broadcast at runtime, so the band rows shuffle exactly
-        # once (the narrow self-join) at the cost of re-evaluating the
-        # band expressions per consumer.
-        stats_wide = (
-            bands.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_w"), min_expr.alias("_min"))
-            .filter(F.col("_w") > cap)
-        )
-        narrow = bands.join(stats_wide, keys, "left_anti")
-        pairs = _narrow_pairs(narrow)
-        star = _star_pairs(bands.join(stats_wide, keys))
-        wide_buckets = stats_wide.select(*keys, F.col("_w").alias("width"))
-    else:  # pragma: no cover - env misconfiguration
-        raise ValueError(f"unknown PYCAIM_LSH_GUARD_SHAPE: {shape!r}")
+    w = Window.partitionBy(*keys)
+    tagged = bands.select(
+        "*",
+        F.count(F.lit(1)).over(w).alias("_w"),
+        min_expr.over(w).alias("_min"),
+    )
+    # Row-level no-op (the bucket min is an aggregate over the row's own
+    # non-null bucket, so it can never be null) that keeps `_min`
+    # referenced in the NARROW branch: without it, column pruning drops
+    # `_min` from the narrow window, and for the with_sig callers the
+    # star window's min(struct(id, sig)) pre-projects a `_w0` struct
+    # column BELOW the exchange that the narrow side then lacks — the two
+    # band exchanges canonicalize differently and the whole
+    # signature+explode subtree executes twice (dedup_simhash before:
+    # Exchange (16) vs (36), plans/r18; ISOLATE_r18.json
+    # `dedup_minhash_unify_*`). With the reference, both windows compute
+    # [count, min] over one shared exchange.
+    narrow = tagged.filter(
+        (F.col("_w") <= cap) & F.col("_min").isNotNull()
+    ).drop("_w", "_min")
+    narrow_cols = [
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+    ] + (
+        [F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b")]
+        if with_sig else []
+    )
+    pairs = (
+        narrow.alias("a")
+        .join(narrow.alias("b"), keys)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(*narrow_cols)
+    )
+    # _min is the bucket minimum, so id_a < id_b by construction.
+    wide_rows = tagged.filter(F.col("_w") > cap)
+    min_id = F.col("_min.id") if with_sig else F.col("_min")
+    star_cols = [min_id.alias("id_a"), F.col("id").alias("id_b")] + (
+        [F.col("_min.sig").alias("sig_a"), F.col("sig").alias("sig_b")]
+        if with_sig else []
+    )
+    star = wide_rows.filter(F.col("id") != min_id).select(*star_cols)
+    wide_buckets = wide_rows.groupBy(*keys).agg(F.max("_w").alias("width"))
     if pair_filter is not None:
         # Row-local predicate (e.g. the Hamming cut) applied BEFORE the
         # dedup shuffle: candidates that fail it never leave their map
@@ -310,12 +152,8 @@ def _shingle_sets(
     # ReuseExchange cannot dedup them, so the CPU-bound shingle stage ran
     # TWICE per query (plans/r18/dedup_minhash_before.txt operators 1-6
     # vs 33-38: two full scan→tokenize→shingle→hash chains).
-    # PYCAIM_BAND_UNIFY=0 restores the r17 asymmetric form (A/B arm).
-    base_filter = F.size(toks) >= shingle_n
-    if os.environ.get("PYCAIM_BAND_UNIFY", "1") != "0":
-        base_filter = base_filter & F.col(id_col).isNotNull()
     base = (
-        docs.filter(base_filter)
+        docs.filter((F.size(toks) >= shingle_n) & F.col(id_col).isNotNull())
         .select(F.col(id_col).alias("id"), toks.alias("_toks"))
         .select("id", shingles.alias("_sh"))
         .select(
@@ -368,10 +206,8 @@ def _band_rows(base: DataFrame, num_hashes: int, seed: int) -> DataFrame:
     # the star branch does not, so the two (table_id, mh) exchanges over
     # these band rows canonicalized differently and the explode+shuffle
     # ran twice (plans/r18/dedup_minhash_before.txt operators 7-9 vs
-    # 23-24). PYCAIM_BAND_UNIFY=0 restores the r17 form (A/B arm).
-    if os.environ.get("PYCAIM_BAND_UNIFY", "1") != "0":
-        rows = rows.filter(F.col("mh").isNotNull())
-    return rows
+    # 23-24).
+    return rows.filter(F.col("mh").isNotNull())
 
 
 def minhash_candidate_pairs(
@@ -391,7 +227,6 @@ def minhash_candidate_pairs(
     seed: int = 42,
     max_bucket_width: int | None = None,
     return_wide_buckets: bool = False,
-    guard_shape: str | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs (id_a < id_b, jaccard_dist).
 
@@ -433,7 +268,7 @@ def minhash_candidate_pairs(
     wide_buckets = None
     if max_bucket_width:
         pairs, wide_buckets = _banded_pairs_with_guard(
-            bands, ["table_id", "mh"], max_bucket_width, shape=guard_shape
+            bands, ["table_id", "mh"], max_bucket_width
         )
     else:
         pairs = (
@@ -504,11 +339,8 @@ def minhash_clusters(
     from pycaim_spark.operators.graph import connected_components_star
 
     # max_bucket_width=1 routes EVERY bucket (width ≥ 2) down the star
-    # path of the measured guard shapes — reusing the A/B'd plan machinery
-    # rather than a sixth bespoke plan. The shape is PINNED to ``window``
-    # (not the env knob): with cap=1 "wide" means every bucket, so the
-    # grouped shape's tiny-broadcast-wide-set assumption degenerates —
-    # the window tag streams regardless of how many buckets are wide.
+    # path of the window guard — reusing its plan rather than a bespoke
+    # one; the window tag streams regardless of how many buckets are wide.
     pairs = minhash_candidate_pairs(
         docs,
         text_col=text_col,
@@ -518,7 +350,6 @@ def minhash_clusters(
         max_jaccard_dist=max_jaccard_dist,
         seed=seed,
         max_bucket_width=1,
-        guard_shape="window",
     )
     comp = connected_components_star(pairs, src="id_a", dst="id_b")
     cluster = F.coalesce(F.col("component"), F.col(id_col))
@@ -920,7 +751,6 @@ def incremental_cluster_assignments(
         num_hashes=num_hashes,
         max_jaccard_dist=max_jaccard_dist,
         seed=seed,
-        guard_shape="window",
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comp = connected_components_star(anchored.unionByName(dd), "src", "dst")
     cluster = F.coalesce(F.col("component"), F.col(id_col))

@@ -135,15 +135,11 @@ def bucketed_cosine_neighbors(
     # signature pass twice per branch (4× per query with the star branch;
     # plans/r18/sim_lsh_bucketed_before.txt operators 3/6/18/21). The
     # function is pure on fixed inputs; the flag only forbids Catalyst
-    # from reordering/duplicating it, so results are unchanged.
-    # PYCAIM_SIM_UNIFY arms: "1" (default) = this pin + the exchange-
-    # unifying keep-alives below; "nd" = this pin only (each branch keeps
-    # its own pruned exchange but evaluates the UDF once); "0" = the r17
-    # form (duplicated evaluation under the inferred posexplode filter).
-    _sim_unify = os.environ.get("PYCAIM_SIM_UNIFY", "1")
-    signatures = F.pandas_udf(_signatures, "array<long>")
-    if _sim_unify != "0":
-        signatures = signatures.asNondeterministic()
+    # from reordering/duplicating it, so results are unchanged. This pin
+    # and the keep-alives below beat both the r17 form and the pin alone
+    # (ISOLATE_r18.json `sim_lsh_unify_paired_series`,
+    # `sim_lsh_unify_sf10_series`).
+    signatures = F.pandas_udf(_signatures, "array<long>").asNondeterministic()
 
     sig = emb.select(
         F.col("vec_id"),
@@ -195,150 +191,53 @@ def bucketed_cosine_neighbors(
     if max_bucket_width:
         # INPUT-side clique guard: bucket widths must be known BEFORE the
         # grouped map so no pandas group ever materializes more than the
-        # cap. Four shapes measured under the isolate protocol
-        # (ISOLATE_r8.json, sf0.1, fresh JVM, median of 3; guard-off
-        # floor 1.25 s; select with env ``PYCAIM_SIM_GUARD_SHAPE``):
-        #
-        # - ``window`` (default, 1.61 s): one window over the bucket key
-        #   tags every exploded row with its width and bucket-min — ONE
-        #   exchange + ONE sort total, and the grouped map reuses both the
-        #   partitioning and the sort order the window established; the
-        #   narrow/star split is a filter, no joins. The signature UDF
-        #   runs once, below the exchange.
-        # - ``nopart`` (1.89 s): wide stats partial-aggregate into a tiny
-        #   shuffle, AQE broadcasts the wide list — embedding rows shuffle
-        #   once, but the signature UDF re-evaluates per consumer.
-        # - ``single`` (2.53 s): explicit repartition of the exploded
-        #   embedding rows, stats/star/anti/gemm all read it via
-        #   ReuseExchange — extra exchange reads cost more than they save.
-        # - ``dual`` (2.44 s): the round-7 shape — a second skinny
-        #   exchange that re-runs the signature UDF for the stats side.
-        #
-        # All four are pure physical variants of the same semantics: wide
-        # buckets star-pair against the bucket min id as a JVM projection,
-        # so a width-W replica clique costs O(W) shuffled rows and no
-        # W×dim Arrow batch ever reaches a task. The shared exact-scoring
+        # cap. ONE exchange + ONE sort total: a window over the bucket key
+        # tags every exploded row with its width and bucket-min, and the
+        # grouped map reuses both the partitioning and the sort order the
+        # window established; the narrow/star split is a filter, no
+        # joins, and the signature UDF runs once, below the exchange.
+        # Wide buckets star-pair against the bucket min id as a JVM
+        # projection, so a width-W replica clique costs O(W) shuffled rows
+        # and no W×dim Arrow batch ever reaches a task; the exact-scoring
         # join below applies the same min_cos filter to star pairs the
-        # gemm prefilter would have.
-        n_part = emb.sparkSession.sparkContext.defaultParallelism
-        shape = os.environ.get("PYCAIM_SIM_GUARD_SHAPE", "window")
-        if shape == "window":
-            # ONE exchange + ONE sort total: the window over the bucket
-            # key tags every exploded row with its bucket width and min id;
-            # the grouped map then reuses both the partitioning AND the
-            # sort order the window already established.
-            from pyspark.sql import Window
+        # gemm prefilter would have. This shape beat nopart, single and
+        # dual (ISOLATE_r8.json: 1.61 vs 1.89 / 2.53 / 2.44 s at sf0.1)
+        # and won every canary-clean sf10 round, but tails worse under
+        # memory pressure (ISOLATE_r18.json
+        # `sim_guard_shape_window_vs_nopart_sf10_series`,
+        # `sim_guard_shape_window_vs_single_sf10_series`).
+        from pyspark.sql import Window
 
-            w = Window.partitionBy("table_id", "bucket")
-            tagged = buckets.select(
-                "*",
-                F.count(F.lit(1)).over(w).alias("_w"),
-                F.min("vec_id").over(w).alias("_min_id"),
-            )
-            star_cond = (F.col("_w") > max_bucket_width) & (
-                F.col("vec_id") != F.col("_min_id")
-            )
-            if _sim_unify not in ("0", "nd"):
-                # Canonical-subtree keep-alive (row-level no-op: sizes are
-                # ≥ 0 for non-null arrays and _norm is a sqrt): without a
-                # reference to embedding/_norm ABOVE the window, column
-                # pruning skinnies the star branch's copy of the bucket
-                # exchange to (vec_id, table_id, bucket) while the gemm
-                # branch carries the vectors — the canonicalized subtrees
-                # then differ and ReuseExchange cannot dedup them, so the
-                # scan + signature UDF + explode + shuffle all ran TWICE
-                # (plans/r18/sim_lsh_bucketed_before.txt operators 1-9 vs
-                # 16-24). These predicates sit above the window (they are
-                # not partition-key filters, so they cannot be pushed
-                # below it) and force the same wide exchange on both
-                # branches. PYCAIM_SIM_UNIFY=nd keeps the single-eval UDF
-                # pin but drops these keep-alives (thin star exchange);
-                # =0 restores the r17 form.
-                star_cond = (
-                    star_cond
-                    & (F.size("embedding") >= 0)
-                    & (F.col("_norm") >= 0)
-                )
-            star = tagged.filter(star_cond).select(
-                F.col("_min_id").alias("vec_a"),
-                F.col("vec_id").alias("vec_b"),
-            )
-            narrow = tagged.filter(F.col("_w") <= max_bucket_width).drop(
-                "_w", "_min_id"
-            )
-        elif shape == "nopart":
-            # No explicit exchange: wide stats partial-aggregate into a
-            # tiny shuffle, AQE broadcasts the wide list, the embedding
-            # rows shuffle exactly once (into the grouped map) — at the
-            # cost of re-evaluating the signature UDF per consumer.
-            stats_wide = (
-                buckets.groupBy("table_id", "bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("_w"),
-                    F.min("vec_id").alias("_min_id"),
-                )
-                .filter(F.col("_w") > max_bucket_width)
-            )
-            star = (
-                buckets.join(stats_wide, ["table_id", "bucket"])
-                .filter(F.col("vec_id") != F.col("_min_id"))
-                .select(
-                    F.col("_min_id").alias("vec_a"),
-                    F.col("vec_id").alias("vec_b"),
-                )
-            )
-            narrow = buckets.join(
-                stats_wide, ["table_id", "bucket"], "left_anti"
-            )
-        elif shape == "single":
-            bucket_rows = buckets.repartition(
-                n_part, F.col("table_id"), F.col("bucket")
-            )
-            stats_wide = (
-                bucket_rows.groupBy("table_id", "bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("_w"),
-                    F.min("vec_id").alias("_min_id"),
-                )
-                .filter(F.col("_w") > max_bucket_width)
-            )
-            # _min_id is the bucket minimum, so vec_a < vec_b holds.
-            star = (
-                bucket_rows.join(stats_wide, ["table_id", "bucket"])
-                .filter(F.col("vec_id") != F.col("_min_id"))
-                .select(
-                    F.col("_min_id").alias("vec_a"),
-                    F.col("vec_id").alias("vec_b"),
-                )
-            )
-            narrow = bucket_rows.join(
-                stats_wide, ["table_id", "bucket"], "left_anti"
-            )
-        elif shape == "dual":
-            skinny = sig.select(
-                "vec_id", F.posexplode("sigs").alias("table_id", "bucket")
-            ).repartition(n_part, F.col("table_id"), F.col("bucket"))
-            stats_wide = (
-                skinny.groupBy("table_id", "bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("_w"),
-                    F.min("vec_id").alias("_min_id"),
-                )
-                .filter(F.col("_w") > max_bucket_width)
-            )
-            star = (
-                skinny.join(stats_wide, ["table_id", "bucket"])
-                .filter(F.col("vec_id") != F.col("_min_id"))
-                .select(
-                    F.col("_min_id").alias("vec_a"),
-                    F.col("vec_id").alias("vec_b"),
-                )
-            )
-            narrow = buckets.repartition(
-                n_part, F.col("table_id"), F.col("bucket")
-            ).join(stats_wide, ["table_id", "bucket"], "left_anti")
-        else:  # pragma: no cover - env misconfiguration
-            raise ValueError(f"unknown PYCAIM_SIM_GUARD_SHAPE: {shape!r}")
+        w = Window.partitionBy("table_id", "bucket")
+        tagged = buckets.select(
+            "*",
+            F.count(F.lit(1)).over(w).alias("_w"),
+            F.min("vec_id").over(w).alias("_min_id"),
+        )
+        # Canonical-subtree keep-alive (row-level no-op: sizes are ≥ 0
+        # for non-null arrays and _norm is a sqrt): without a reference
+        # to embedding/_norm ABOVE the window, column pruning skinnies
+        # the star branch's copy of the bucket exchange to (vec_id,
+        # table_id, bucket) while the gemm branch carries the vectors —
+        # the canonicalized subtrees then differ and ReuseExchange cannot
+        # dedup them, so the scan + signature UDF + explode + shuffle all
+        # ran TWICE (plans/r18/sim_lsh_bucketed_before.txt operators 1-9
+        # vs 16-24). These predicates sit above the window (they are not
+        # partition-key filters, so they cannot be pushed below it) and
+        # force the same wide exchange on both branches.
+        star_cond = (
+            (F.col("_w") > max_bucket_width)
+            & (F.col("vec_id") != F.col("_min_id"))
+            & (F.size("embedding") >= 0)
+            & (F.col("_norm") >= 0)
+        )
+        star = tagged.filter(star_cond).select(
+            F.col("_min_id").alias("vec_a"),
+            F.col("vec_id").alias("vec_b"),
+        )
+        narrow = tagged.filter(F.col("_w") <= max_bucket_width).drop(
+            "_w", "_min_id"
+        )
         candidates = (
             narrow.groupBy("table_id", "bucket")
             .applyInPandas(_bucket_pairs, "vec_a long, vec_b long")
@@ -375,37 +274,12 @@ def bucketed_cosine_neighbors(
     )
 
 
-def _kmeanspp_init(x: np.ndarray, n_cells: int, rng) -> np.ndarray:
-    """k-means++ seeding on the unit sphere: each next seed is drawn with
-    probability ∝ its squared Euclidean distance to the nearest chosen
-    seed (for unit vectors, ‖a−b‖² = 2(1−cos), so ∝ 1−cos). Spreads the
-    initial centroids across the data's actual modes instead of uniform
-    draws that can land several seeds in one dense region — the classic
-    fix for k-means landing in a poor local optimum (VERDICT r11 #6:
-    improve cell ASSIGNMENT at unchanged nprobe). Measured and DECLINED
-    as the default — it lowers fixed-nprobe recall on this corpus (see
-    _spherical_kmeans's docstring; SCALING_r12.json `ivf_init_grid`);
-    kept selectable via PYCAIM_IVF_INIT=kmeanspp. Deterministic under
-    the caller's seeded rng."""
-    centroids = np.empty((n_cells, x.shape[1]))
-    centroids[0] = x[rng.integers(len(x))]
-    d = np.maximum(1.0 - x @ centroids[0], 0.0)
-    for i in range(1, n_cells):
-        total = d.sum()
-        idx = rng.choice(len(x), p=d / total) if total > 0 else rng.integers(len(x))
-        centroids[i] = x[idx]
-        d = np.minimum(d, np.maximum(1.0 - x @ centroids[i], 0.0))
-    return centroids
-
-
 def _spherical_kmeans(
-    sample: np.ndarray, n_cells: int, iters: int, seed: int,
-    init: str | None = None,
+    sample: np.ndarray, n_cells: int, iters: int, seed: int
 ) -> np.ndarray:
     """Seeded spherical k-means over a driver-side sample — the IVF coarse
-    quantizer. Deterministic: seeded init, fixed iteration count, empty
-    cells keep their previous centroid. ``init`` is 'uniform' (default)
-    or 'kmeanspp' ($PYCAIM_IVF_INIT overrides for the A/B harness).
+    quantizer. Deterministic: seeded uniform init, fixed iteration count,
+    empty cells keep their previous centroid.
 
     Uniform seeding is the MEASURED winner for recall at fixed nprobe
     (VERDICT r11 #6 tried k-means++ and more Lloyd iterations;
@@ -415,13 +289,9 @@ def _spherical_kmeans(
     0.72→0.60 (sim_ivf) and 0.80→0.74 (sim_ivf_pq registry settings);
     iters 10→25 moved nothing. Good k-means objective ≠ good
     fixed-nprobe recall."""
-    init = init or os.environ.get("PYCAIM_IVF_INIT", "uniform")
     rng = np.random.default_rng(seed)
     x = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    if init == "uniform":
-        centroids = x[rng.choice(len(x), size=n_cells, replace=False)].copy()
-    else:
-        centroids = _kmeanspp_init(x, n_cells, rng)
+    centroids = x[rng.choice(len(x), size=n_cells, replace=False)].copy()
     for _ in range(iters):
         assign = np.argmax(x @ centroids.T, axis=1)
         for c in range(n_cells):

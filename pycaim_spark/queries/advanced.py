@@ -111,41 +111,9 @@ def tpch_q3(spark, sf_dir):
     dominates this shape) and a measured REGRESSION at sf0.1, the
     driver's bench scale (ISOLATE_r12.json
     `tpch_fixedpoint_sf01_paired_series`: SQL wins 4/4 order-alternating
-    paired rounds, ~1.21 vs ~1.62 s). PYCAIM_TPCH_FORM=fixedpoint keeps
-    the losing arm runnable for the A/B harness (tools/tpch_series.py);
-    both forms are bit-identical (tests/test_aggregates.py)."""
-    if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
-        return _tpch_q3_fixedpoint(spark, sf_dir)
+    paired rounds, ~1.21 vs ~1.62 s)."""
     register_temp_views(spark, sf_dir)
     return spark.sql(_Q3_SQL)
-
-
-def _tpch_q3_fixedpoint(spark, sf_dir):
-    """The r11 fixed-point DataFrame arm, demoted from the production
-    body by the r12 sf0.1 adjudication (see tpch_q3's docstring)."""
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate")
-        < F.lit("1998-03-15 00:00:00").cast("timestamp_ntz")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate")
-        > F.lit("1998-03-15 00:00:00").cast("timestamp_ntz")
-    )
-    disc_price = cents("l_extendedprice") * (
-        F.lit(100).cast("long") - cents("l_discount")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(fsum(disc_price, 4, "revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
 
 
 _Q5_SQL = """
@@ -175,37 +143,8 @@ def tpch_q5(spark, sf_dir):
     `tpch_fixedpoint_sf01_paired_series`). For the orderkey-bucketed
     layout that removes this query's dominant 60 M-row shuffle join, see
     tpch_q5_bucketed."""
-    if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
-        return _tpch_q5_fixedpoint(spark, sf_dir)
     register_temp_views(spark, sf_dir)
     return spark.sql(_Q5_SQL)
-
-
-def _tpch_q5_fixedpoint(spark, sf_dir):
-    """The r11 fixed-point DataFrame arm, demoted from the production
-    body by the r12 sf0.1 adjudication (see tpch_q3's docstring)."""
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate")
-         >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("o_orderdate")
-           < F.lit("1998-01-01 00:00:00").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = cents("l_extendedprice") * (
-        F.lit(100).cast("long") - cents("l_discount")
-    )
-    return (
-        r.join(n, n.n_regionkey == r.r_regionkey)
-        .join(c, c.c_nationkey == F.col("n_nationkey"))
-        .join(o, o.o_custkey == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("n_name")
-        .agg(fsum(disc_price, 4, "revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
-    )
 
 
 def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
@@ -226,12 +165,12 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     sort of the (already sorted) bucket. Round 14 discovered this while
     building the incremental append path: this function now sets the
     conf on the session (runtime-settable, same convention as
-    catalog.load_table's nanosAsLong) unless $PYCAIM_BUCKET_SORTED_SCAN
-    is "0" — the A/B arm. Spark itself re-checks the one-file-per-bucket
-    precondition per scan and re-inserts sorts where it fails (e.g. the
-    post-append multi-file state, `_incremental_orderkey_layout`), so
-    correctness never rests on the env value. Decision evidence (r15,
-    after the r14 series was decay-contaminated): ISOLATE_r15.json
+    catalog.load_table's nanosAsLong). Spark itself re-checks the
+    one-file-per-bucket precondition per scan and re-inserts sorts where
+    it fails (e.g. the post-append multi-file state,
+    `_incremental_orderkey_layout`), so correctness never rests on the
+    conf. Decision evidence (r15, after the r14 series was
+    decay-contaminated): ISOLATE_r15.json
     `q5_sorted_scan_series_r15` — 5 order-alternating canary-gated
     fresh-JVM paired rounds of tpch_q5_bucketed at sf10, conf-ON wins
     3/5 with median 3.45 s vs 4.81 s OFF (−28%), consistent with the
@@ -284,10 +223,9 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
-    if os.environ.get("PYCAIM_BUCKET_SORTED_SCAN") != "0":
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-        )
+    spark.conf.set(
+        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
+    )
 
     layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
     abs_sf = os.path.abspath(sf_dir)
@@ -623,10 +561,9 @@ def _incremental_orderkey_layout(
     # The warm path reads no fixture table, so load_table's runtime confs
     # are applied here for every layout query built on this helper.
     configure_session(spark)
-    if os.environ.get("PYCAIM_BUCKET_SORTED_SCAN") != "0":
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-        )
+    spark.conf.set(
+        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
+    )
     layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
     abs_sf = os.path.abspath(sf_dir)
     out = {}

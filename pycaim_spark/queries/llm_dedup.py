@@ -808,25 +808,22 @@ def sim_lsh_bucketed(spark, sf_dir):
     4-bit signature tables collide, exact cosine inside (SURVEY §2.C
     sim_lsh_approx scale path).
 
-    ``n_tables`` defaults to 20 ($PYCAIM_SIM_LSH_TABLES overrides),
-    raised from 16 in r14 (VERDICT r13 #4 — recall margin at scale was
-    within 3% of the 0.8 contract floor). OR-of-T banding at the cos=0.3
-    threshold collides per table with p = (1-θ/π)^4 ≈ 0.13, so recall ≈
-    1-(1-p)^T; measured on the perturbed scale corpora the retune lifts
+    ``n_tables`` is 20, raised from 16 in r14 (VERDICT r13 #4 — recall
+    margin at scale was within 3% of the 0.8 contract floor). OR-of-T
+    banding at the cos=0.3 threshold collides per table with
+    p = (1-θ/π)^4 ≈ 0.13, so recall ≈ 1-(1-p)^T; measured on the perturbed scale corpora the retune lifts
     query-touching pair recall 0.88/0.83/0.82 → 0.94/0.88/0.88 at
     sf0.1/sf1/sf10, with no wall regression observed at sf0.1/sf1 and
     ~+11% at sf10 on the single shared-process grid (advisory, not a
     bound). T=24 bought 0.97/0.93/0.92 but ~2× the sf10 wall (the
     candidate volume grows superlinearly once buckets saturate) —
-    declined (SCALING_r14.json `lsh_tables_grid`)."""
-    import os
-
+    declined (SCALING_r14.json `lsh_tables_grid`; ISOLATE_r15.json
+    `lsh_tables_paired_sf10`)."""
     from pycaim_spark.operators.similarity import bucketed_cosine_neighbors
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_tables = int(os.environ.get("PYCAIM_SIM_LSH_TABLES", "20"))
     return bucketed_cosine_neighbors(
-        emb, n_planes=4, n_tables=n_tables, dim=64, seed=42, min_cos=0.3
+        emb, n_planes=4, n_tables=20, dim=64, seed=42, min_cos=0.3
     )
 
 

@@ -8,7 +8,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pycaim_spark.catalog import load_table
-from pycaim_spark.queries.pipeline_ops import _scan_unify
 from pycaim_spark.registry import register
 
 # Single source of truth for the language-ID heuristic wordlists — the
@@ -344,81 +343,62 @@ def text_ngram_lm(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.lower("text"), " ")
     base = d.select("doc_id", ws.alias("ws")).filter(F.size("ws") >= 2)
-    bigram_at = lambda i: F.struct(  # noqa: E731 — 1-based token index
-        F.element_at(F.col("ws"), i).alias("w1"),
-        F.concat_ws(
-            " ",
-            F.element_at(F.col("ws"), i),
-            F.element_at(F.col("ws"), (i + F.lit(1)).cast("int")),
-        ).alias("bg"),
-    )
-    # Shared family knob (pipeline_ops._scan_unify, ADVICE r18): one
-    # helper, one default, across the whole scan-unify family.
-    _unify = _scan_unify()
-    if _unify:
-        # r18 single-corpus-pass form (guide §2.4; PYCAIM_SCAN_UNIFY=0
-        # restores the r17 three-pass shape as the A/B arm). Three
-        # structural changes, none touching a result value:
-        #
-        # 1. The explode emits plain bigram STRINGS and w1 is re-derived
-        #    ABOVE the exchange as substring_index(bg, ' ', 1) — exact,
-        #    because split-by-space tokens contain no spaces (empty
-        #    tokens from repeated separators included). Carrying w1
-        #    through the explode (the r17 struct) would hang an
-        #    optimizer-irremovable isnotnull(w1) off the c1 join on the
-        #    stream side only (element_at is not provably non-null) and
-        #    split the copies' canonical form; a string min() keep-alive
-        #    instead would demote the corpus aggregate to SortAggregate
-        #    (var-length agg buffer).
-        # 2. One explicit bg exchange is shared by the count aggregate
-        #    (clustering satisfied by the bg hash) and the join's stream
-        #    side — the corpus scan+explode runs ONCE; the long-typed
-        #    min(doc_id) keep-alive + no-op filter stop ColumnPruning
-        #    from skinnying the aggregate's copy (the
-        #    `_offsets_keepalive` mechanism in pipeline_ops.py).
-        # 3. Context counts FOLD from the bigram counts: c(w1 ·) = Σ_bg
-        #    c(w1 w2) over the vocabulary-sized c2 table instead of a
-        #    third corpus explode (same fold as sample_stratified's
-        #    n_lang-from-counts).
-        bg = base.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ws") - 1),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at(F.col("ws"), i),
-                        F.element_at(F.col("ws"), (i + F.lit(1)).cast("int")),
-                    ),
-                )
-            ).alias("bg"),
-        ).repartition("bg")
-        c2 = (
-            bg.groupBy("bg")
-            .agg(
-                F.count(F.lit(1)).alias("c2"),
-                F.min("doc_id").alias("_k1"),
+    # r18 single-corpus-pass form (guide §2.4), which replaced the r17
+    # three-pass shape (ISOLATE_r18.json
+    # `text_ngram_lm_scan_unify_paired_series`,
+    # `text_ngram_lm_scan_unify_sf10_series`). Three structural
+    # changes, none touching a result value:
+    #
+    # 1. The explode emits plain bigram STRINGS and w1 is re-derived
+    #    ABOVE the exchange as substring_index(bg, ' ', 1) — exact,
+    #    because split-by-space tokens contain no spaces (empty
+    #    tokens from repeated separators included). Carrying w1
+    #    through the explode (the r17 struct) would hang an
+    #    optimizer-irremovable isnotnull(w1) off the c1 join on the
+    #    stream side only (element_at is not provably non-null) and
+    #    split the copies' canonical form; a string min() keep-alive
+    #    instead would demote the corpus aggregate to SortAggregate
+    #    (var-length agg buffer).
+    # 2. One explicit bg exchange is shared by the count aggregate
+    #    (clustering satisfied by the bg hash) and the join's stream
+    #    side — the corpus scan+explode runs ONCE; the long-typed
+    #    min(doc_id) keep-alive + no-op filter stop ColumnPruning
+    #    from skinnying the aggregate's copy (the
+    #    `_offsets_keepalive` mechanism in pipeline_ops.py).
+    # 3. Context counts FOLD from the bigram counts: c(w1 ·) = Σ_bg
+    #    c(w1 w2) over the vocabulary-sized c2 table instead of a
+    #    third corpus explode (same fold as sample_stratified's
+    #    n_lang-from-counts).
+    bg = base.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("ws") - 1),
+                lambda i: F.concat_ws(
+                    " ",
+                    F.element_at(F.col("ws"), i),
+                    F.element_at(F.col("ws"), (i + F.lit(1)).cast("int")),
+                ),
             )
-            .filter(F.col("_k1").isNotNull())
-            .select("bg", "c2")
+        ).alias("bg"),
+    ).repartition("bg")
+    c2 = (
+        bg.groupBy("bg")
+        .agg(
+            F.count(F.lit(1)).alias("c2"),
+            F.min("doc_id").alias("_k1"),
         )
-        c1 = (
-            c2.select(F.substring_index("bg", " ", 1).alias("w1"), "c2")
-            .groupBy("w1")
-            .agg(F.sum("c2").alias("c1"))
-        )
-        bg = bg.select(
-            "doc_id", "bg", F.substring_index("bg", " ", 1).alias("w1")
-        )
-    else:
-        bg = base.select(
-            "doc_id",
-            F.explode(
-                F.transform(F.sequence(F.lit(1), F.size("ws") - 1), bigram_at)
-            ).alias("b"),
-        ).select("doc_id", "b.w1", "b.bg")
-        c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
-        c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
+        .filter(F.col("_k1").isNotNull())
+        .select("bg", "c2")
+    )
+    c1 = (
+        c2.select(F.substring_index("bg", " ", 1).alias("w1"), "c2")
+        .groupBy("w1")
+        .agg(F.sum("c2").alias("c1"))
+    )
+    bg = bg.select(
+        "doc_id", "bg", F.substring_index("bg", " ", 1).alias("w1")
+    )
     logp = F.round(
         F.log(F.col("c2").cast("double") / F.col("c1")), 6
     ).cast("decimal(18,6)")
@@ -489,7 +469,6 @@ def text_dup_spans(spark, sf_dir):
     # ONCE and the join needs no further shuffle; the explicit IsNotNull
     # matches the filter the join infers into its copy (span is an
     # array_join over non-null slices — a row-level no-op).
-    # PYCAIM_SCAN_UNIFY=0 restores the r17 two-scan shape (A/B arm).
     #
     # Adjudication history: the unify arm LOST its first sf10 series 1/4
     # raw (medians 56.5 vs 49.1 s — ISOLATE_r18.json
@@ -503,8 +482,7 @@ def text_dup_spans(spark, sf_dir):
     # tokenize+explode pass dominates exactly when the box is healthy;
     # the two-scan shape's map-side partial aggregation only looked
     # better under memory pressure.
-    if _scan_unify():
-        sp = sp.filter(F.col("span").isNotNull()).repartition("span")
+    sp = sp.filter(F.col("span").isNotNull()).repartition("span")
     sd = sp.groupBy("span").agg(F.count_distinct("doc_id").alias("nd"))
     dup = (F.col("nd") >= 2).cast("int")
     return (

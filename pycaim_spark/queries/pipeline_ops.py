@@ -9,12 +9,10 @@ windowed transformation both engines can express exactly.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from pycaim_spark.catalog import load_table
+from pycaim_spark.catalog import fresh_cache, load_table
 from pycaim_spark.registry import register
 
 
@@ -43,19 +41,13 @@ def _shard_exchange(base, *keys):
     so without the explicit copy the two exchange subtrees canonicalize
     differently and ReuseExchange silently splits — the r18
     dedup_minhash/sim_lsh lesson (commit 3553fb4). Keys are never null by
-    construction (fixture langs/epochs, shard = doc_id DIV k).
-    PYCAIM_SCAN_UNIFY=0 restores the r17 two-scan shape (A/B arm).
+    construction (fixture langs/epochs, shard = doc_id DIV k). Decision:
+    ISOLATE_r18.json `*_scan_unify_*` series; plans/r18.
     """
-    if not _scan_unify():
-        return base
     cond = F.col(keys[0]).isNotNull()
     for k in keys[1:]:
         cond = cond & F.col(k).isNotNull()
     return base.filter(cond).repartition(*keys)
-
-
-def _scan_unify() -> bool:
-    return os.environ.get("PYCAIM_SCAN_UNIFY", "1") != "0"
 
 
 def _offsets_keepalive(agg_df, keep_cols):
@@ -192,12 +184,12 @@ def text_pack(spark, sf_dir):
         ),
         "lang", "shard",
     )
-    agg_cols = [F.sum("n_tok").alias("s")]
-    if _scan_unify():
-        agg_cols.append(F.min("doc_id").alias("_keep"))
-    shard_sums = base.groupBy("lang", "shard").agg(*agg_cols)
-    if _scan_unify():
-        shard_sums = _offsets_keepalive(shard_sums, ["_keep"])
+    shard_sums = _offsets_keepalive(
+        base.groupBy("lang", "shard").agg(
+            F.sum("n_tok").alias("s"), F.min("doc_id").alias("_keep")
+        ),
+        ["_keep"],
+    )
     w_off = (
         Window.partitionBy("lang")
         .orderBy("shard")
@@ -756,9 +748,7 @@ def pipeline_pretrain(spark, sf_dir):
     semi-join aggregation, anti-join on doc_id — hash/long keys only), and
     the post-quality frame is persisted before the decontamination fan-out
     (the static plan otherwise re-scans the corpus per consuming branch —
-    measured 29%/17% at sf0.1/sf1, ISOLATE_r8.json pipeline_persist_*;
-    PYCAIM_PIPELINE_PERSIST=0 opts out when the pipeline runner owns
-    materialization).
+    measured 29%/17% at sf0.1/sf1, ISOLATE_r8.json pipeline_persist_*).
     """
     d = load_table(spark, sf_dir, "documents")
     norm_hash = F.md5(
@@ -783,14 +773,10 @@ def pipeline_pretrain(spark, sf_dir):
     # has no automatic CTE materialization), so persist the post-quality
     # frame before the decontamination fan-out. Isolate A/B
     # (ISOLATE_r8.json pipeline_persist_*): 1.71 → 1.21 s at sf0.1,
-    # 3.59 → 2.97 s at sf1. MEMORY_AND_DISK spills at 100 TB scale;
-    # Spark's CacheManager dedups repeated identical plans, so repeated
-    # calls share one entry. PYCAIM_PIPELINE_PERSIST=0 opts out (e.g. when
-    # the runner owns materialization).
-    import os as _os
-
-    if _os.environ.get("PYCAIM_PIPELINE_PERSIST", "1") != "0":
-        quality = quality.persist()
+    # 3.59 → 2.97 s at sf1. MEMORY_AND_DISK spills at 100 TB scale.
+    # fresh_cache drops the previous call's entry first, so every call
+    # recomputes from parquet instead of reading an earlier call's cache.
+    quality = fresh_cache("pipeline_pretrain.quality", quality)
 
     trigrams = _word_ngrams(words, 3)
     bench = F.broadcast(

@@ -12,7 +12,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pycaim_spark.catalog import load_table
-from pycaim_spark.queries.pipeline_ops import _scan_unify
 from pycaim_spark.registry import register
 
 
@@ -51,17 +50,16 @@ def events_funnel(spark, sf_dir):
     reuses one partitioning; no window over the full event stream is
     needed."""
     ev = load_table(spark, sf_dir, "events")
-    if _scan_unify():
-        # r18 exchange-reuse guard (guide §2.4): the view-step aggregate
-        # is consumed twice — inside the click join (which pushes an
-        # inferred isnotnull(user_id) into ITS copy's scan) and as the
-        # preserved side of the final left join (which cannot infer it) —
-        # so the two copies canonicalized differently and the view pass
-        # ran twice (plans/r18/events_funnel_{before,after}.txt). The
-        # explicit filter is a row-level no-op (fixture user_id is never
-        # null) that makes every branch carry the same predicate; the
-        # click aggregate was already reused by the purchase branch.
-        ev = ev.filter(F.col("user_id").isNotNull())
+    # r18 exchange-reuse guard (guide §2.4): the view-step aggregate
+    # is consumed twice — inside the click join (which pushes an
+    # inferred isnotnull(user_id) into ITS copy's scan) and as the
+    # preserved side of the final left join (which cannot infer it) —
+    # so the two copies canonicalized differently and the view pass
+    # ran twice (plans/r18/events_funnel_{before,after}.txt). The
+    # explicit filter is a row-level no-op (fixture user_id is never
+    # null) that makes every branch carry the same predicate; the
+    # click aggregate was already reused by the purchase branch.
+    ev = ev.filter(F.col("user_id").isNotNull())
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id").agg(F.min("ts").alias("t_view"))
@@ -221,19 +219,18 @@ def events_cohort_retention(spark, sf_dir):
     small cohort-cell rollup). Week arithmetic is integer day-diff / 7 —
     no float time math."""
     ev = load_table(spark, sf_dir, "events")
-    if _scan_unify():
-        # r18 scan-share (guide §2.4, same mechanism as pipeline_ops
-        # `_shard_exchange`): both aggregates key on user_id, so ONE
-        # explicit hash exchange serves them shuffle-free — a
-        # HashPartitioning on user_id satisfies ClusteredDistribution for
-        # the (user_id, activity_week) distinct too, and the join needs
-        # no further shuffle. Without it each aggregate planned its own
-        # subtree and the events corpus was SCANNED TWICE
-        # (plans/r18/events_cohort_retention_{before,after}.txt). Both
-        # consumers project exactly (user_id, ts), so the copies
-        # canonicalize with no keep-alive; activity_week is derived ABOVE
-        # the exchange. PYCAIM_SCAN_UNIFY=0 restores the r17 shape.
-        ev = ev.select("user_id", "ts").repartition("user_id")
+    # r18 scan-share (guide §2.4, same mechanism as pipeline_ops
+    # `_shard_exchange`): both aggregates key on user_id, so ONE
+    # explicit hash exchange serves them shuffle-free — a
+    # HashPartitioning on user_id satisfies ClusteredDistribution for
+    # the (user_id, activity_week) distinct too, and the join needs
+    # no further shuffle. Without it each aggregate planned its own
+    # subtree and the events corpus was SCANNED TWICE
+    # (plans/r18/events_cohort_retention_{before,after}.txt). Both
+    # consumers project exactly (user_id, ts), so the copies
+    # canonicalize with no keep-alive; activity_week is derived ABOVE
+    # the exchange.
+    ev = ev.select("user_id", "ts").repartition("user_id")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )

@@ -11,8 +11,6 @@ a left-semi join against the re-aggregated lineitem).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 
 from pycaim_spark.catalog import load_table, register_temp_views
@@ -42,30 +40,9 @@ def tpch_q6(spark, sf_dir):
     (ISOLATE_r11.json `tpch_fixedpoint_paired_series` — the filtered scan,
     not the aggregate, dominates) and a 4/4 order-alternating paired
     regression at sf0.1 (ISOLATE_r12.json
-    `tpch_q6_fixedpoint_sf01_paired_series`: ~1.21 vs ~1.43 s median).
-    PYCAIM_TPCH_FORM=fixedpoint keeps the losing arm runnable."""
-    if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
-        return _tpch_q6_fixedpoint(spark, sf_dir)
+    `tpch_q6_fixedpoint_sf01_paired_series`: ~1.21 vs ~1.43 s median)."""
     register_temp_views(spark, sf_dir)
     return spark.sql(_Q6_SQL)
-
-
-def _tpch_q6_fixedpoint(spark, sf_dir):
-    """The r11 fixed-point DataFrame arm, demoted from the production
-    body by the r12 sf0.1 adjudication (see tpch_q6's docstring)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate")
-         >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("l_shipdate")
-           < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        fsum(cents("l_extendedprice") * cents("l_discount"), 4, "revenue"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 _Q10_SQL = """
@@ -95,39 +72,8 @@ def tpch_q10(spark, sf_dir):
     SQL-decimal form (see tpch_q3's docstring: the r11 fixed-point
     conversion was a wash at sf10 and a 4/4 paired regression at sf0.1 —
     ISOLATE_r12.json `tpch_fixedpoint_sf01_paired_series`)."""
-    if os.environ.get("PYCAIM_TPCH_FORM") == "fixedpoint":
-        return _tpch_q10_fixedpoint(spark, sf_dir)
     register_temp_views(spark, sf_dir)
     return spark.sql(_Q10_SQL)
-
-
-def _tpch_q10_fixedpoint(spark, sf_dir):
-    """The r11 fixed-point DataFrame arm, demoted from the production
-    body by the r12 sf0.1 adjudication (see tpch_q3's docstring)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate")
-         >= F.lit("1996-10-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("o_orderdate")
-           < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    )
-    n = load_table(spark, sf_dir, "nation")
-    disc_price = cents("l_extendedprice") * (
-        F.lit(100).cast("long") - cents("l_discount")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(n, c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(fsum(disc_price, 4, "revenue"))
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
 
 
 _Q18_SQL = """
@@ -173,15 +119,10 @@ def tpch_q18(spark, sf_dir):
     exactly the per-order sum the subquery already holds. Computing the
     per-order sum ONCE and joining it through halves the lineitem work
     (one 60 M-row aggregation instead of two plus a 60 M-row join) —
-    A/B in ISOLATE_r11.json `q18_shape_paired_series`;
-    PYCAIM_Q18_SHAPE=twophase keeps the literal two-aggregation shape
-    runnable as the control. Result equality with the SQL form is
-    bit-asserted by the forms-equality test and the parity gate."""
-    if os.environ.get("PYCAIM_TPCH_FORM") == "sql":
-        register_temp_views(spark, sf_dir)
-        return spark.sql(_Q18_SQL)
-    if os.environ.get("PYCAIM_Q18_SHAPE") == "twophase":
-        return _tpch_q18_twophase(spark, sf_dir)
+    ISOLATE_r11.json `q18_shape_paired_series`: 11.94 → 7.94 s median
+    at sf10 against the literal two-aggregation shape. Result equality
+    with the SQL form is bit-asserted by tests/test_aggregates.py and
+    the parity gate."""
     li = load_table(spark, sf_dir, "lineitem")
     qty_c = cents("l_quantity")
     # Catalyst collapses the two sum expressions into one buffer: the
@@ -204,37 +145,6 @@ def tpch_q18(spark, sf_dir):
             "c_name", "c_custkey", "o_orderkey", "o_orderdate",
             "o_totalprice", "sum_qty",
         )
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
-    )
-
-
-def _tpch_q18_twophase(spark, sf_dir):
-    """The literal two-aggregation Q18 shape, demoted from the production
-    body — kept runnable (PYCAIM_Q18_SHAPE=twophase) as the A/B control
-    behind ISOLATE_r11.json `q18_shape_paired_series` (11.94 → 7.94 s
-    median at sf10 for the shipped aggregate-reuse form)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    qty_c = cents("l_quantity")
-    big_orders = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(qty_c).alias("qty_cents"))
-        .filter(F.col("qty_cents") > 18000)
-        .select("l_orderkey")
-    )
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").join(
-        big_orders, F.col("o_orderkey") == big_orders.l_orderkey,
-        "left_semi",
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy(
-            "c_name", "c_custkey", "o_orderkey", "o_orderdate",
-            "o_totalprice",
-        )
-        .agg(fsum(qty_c, 2, "sum_qty"))
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(100)
     )
@@ -298,7 +208,10 @@ def tpch_q10_bucketed(spark, sf_dir):
     exactly the oracle's grouped sum — but the custkey shuffle now moves
     one row per custkey partial instead of every joined lineitem row, and
     the second "aggregate" disappears entirely. nation broadcasts; the
-    final top-20 is a TakeOrdered. Same DuckDB oracle as tpch_q10."""
+    final top-20 is a TakeOrdered. Same DuckDB oracle as tpch_q10.
+    A broadcast left-semi of the quarter's orderkeys into the lineitem
+    side lost 3 of 4 sf10 paired rounds to this plain merge
+    (ISOLATE_r13.json `q10_semi_filter_paired_series`)."""
     from pycaim_spark.queries.advanced import _bucketed_orderkey_layout
 
     lib, ob = _bucketed_orderkey_layout(spark, sf_dir)
@@ -314,22 +227,6 @@ def tpch_q10_bucketed(spark, sf_dir):
     disc_price = cents("l_extendedprice") * (
         F.lit(100).cast("long") - cents("l_discount")
     )
-    if os.environ.get("PYCAIM_Q10_FORM") == "semi":
-        # A/B arm (VERDICT r12 #1, the untried selective-side filter):
-        # broadcast left-semi of the ~3-4% quarter-surviving orderkeys
-        # into the lineitem side before the merge. Broadcast joins
-        # preserve the probe side's bucketing+sort, so the SMJ stays
-        # co-located. Spark's runtime bloom filter is NOT an option here:
-        # InjectRuntimeFilter requires a shuffle on the application side,
-        # which the zero-exchange bucketed plan doesn't have —
-        # ISOLATE_r13.json q10_bucketed_decomposition_sf10
-        # `bloom_injected: false`.
-        keys = o.select(F.col("o_orderkey").alias("k_orderkey"))
-        li = li.join(
-            F.broadcast(keys),
-            li.l_orderkey == F.col("k_orderkey"),
-            "left_semi",
-        )
     rev = (
         li.join(o.hint("MERGE"), li.l_orderkey == o.o_orderkey)
         .groupBy("o_custkey")
@@ -396,9 +293,7 @@ def tpch_q21_bucketed(spark, sf_dir):
     the window arm's range collapsed to a tight 3.2–5.7 s band (vs
     r13's 3.9–15.3 s): the slow mode was the box, not the sort. With
     the bimodality gone, the structural argument governs: never scan
-    the fact subtree twice. PYCAIM_Q21_SHAPE=diamond keeps the
-    two-aggregate arm runnable; both are bit-identical
-    (tests/test_storage.py).
+    the fact subtree twice.
 
     The per-(order,supplier) late-row counts carry numwait's row
     multiplicity, so nothing joins back to raw lineitem at all. supplier
@@ -430,50 +325,21 @@ def tpch_q21_bucketed(spark, sf_dir):
         F.sum(F.when(F.col("late"), 1).otherwise(0)).alias("n_late_rows"),
     )
     s = load_table(spark, sf_dir, "supplier")
-    if os.environ.get("PYCAIM_Q21_SHAPE") == "diamond":
-        qualifying = _q21_two_aggregate_qualifying(per_supp)
-    else:
-        w = Window.partitionBy("l_orderkey")
-        qualifying = (
-            per_supp.withColumn("n_supp", F.count(F.lit(1)).over(w))
-            .withColumn(
-                "n_late",
-                F.sum(F.when(F.col("supp_late"), 1).otherwise(0)).over(w),
-            )
-            .filter(
-                F.col("supp_late")
-                & (F.col("n_supp") >= 2) & (F.col("n_late") == 1)
-            )
+    w = Window.partitionBy("l_orderkey")
+    qualifying = (
+        per_supp.withColumn("n_supp", F.count(F.lit(1)).over(w))
+        .withColumn(
+            "n_late",
+            F.sum(F.when(F.col("supp_late"), 1).otherwise(0)).over(w),
         )
+        .filter(
+            F.col("supp_late")
+            & (F.col("n_supp") >= 2) & (F.col("n_late") == 1)
+        )
+    )
     return (
         qualifying.join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.sum("n_late_rows").alias("numwait"))
         .orderBy(F.desc("numwait"), "s_name")
-    )
-
-
-def _q21_two_aggregate_qualifying(per_supp):
-    """The r13 two-aggregate + self-join qualifying shape, demoted to the
-    PYCAIM_Q21_SHAPE=diamond arm in r14: the diamond recomputes
-    per_supp's 60 M-row subtree twice (no Exchange below it → no
-    ReusedExchange). It shipped in r13 on fresh-JVM stability grounds,
-    but the canary-gated r14 re-adjudication showed the instability was
-    machine-state decay, not the window plan — see tpch_q21_bucketed's
-    docstring (ISOLATE_r14.json `q21_shape_canary_series`)."""
-    per_order = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum(F.when(F.col("supp_late"), 1).otherwise(0)).alias("n_late"),
-    )
-    return (
-        per_supp.filter(F.col("supp_late"))
-        .select(
-            F.col("l_orderkey").alias("q_orderkey"),
-            "l_suppkey", "n_late_rows",
-        )
-        .join(
-            per_order.hint("MERGE"),
-            F.col("q_orderkey") == per_order.l_orderkey,
-        )
-        .filter((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
     )

@@ -87,7 +87,7 @@ def get_spark(
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    # Ad-hoc conf overrides for knob experiments (tools/knob_table.py):
+    # Ad-hoc conf overrides (perfbench sets them for its JVM):
     # PYCAIM_EXTRA_CONFS="key=value;key=value" — applied last so they win.
     for pair in os.environ.get("PYCAIM_EXTRA_CONFS", "").split(";"):
         if "=" in pair:

@@ -88,16 +88,19 @@ def test_agg_hash_fixedpoint_bit_identical_to_decimal_spelling(spark):
         assert fixed == dec, d
 
 
-def test_tpch_composites_fixedpoint_matches_sql_decimal_form(spark, monkeypatch):
-    """The five measured TPC-H composites keep BOTH forms runnable for
-    the A/B harness (tools/tpch_series.py): PYCAIM_TPCH_FORM selects
-    'sql' (decimal spelling) or 'fixedpoint' (DataFrame long-backed
-    arm), and each query's default is its adjudicated winner — q3/q5/q10
-    ship SQL-decimal (ISOLATE_r12.json
-    `tpch_fixedpoint_sf01_paired_series`), q6/q18 ship fixed-point. The
-    two forms must agree BIT-FOR-BIT — same rows, same float bits — on
-    every fixture, and the default must equal one of them."""
+def test_tpch_q18_matches_sql_decimal_form(spark):
+    """tpch_q18 is the one TPC-H composite whose shipped form is not its
+    SQL: it sums fixed-point cents and reuses the per-order aggregate
+    (tpch_more.py; ISOLATE_r11.json `tpch_fixedpoint_paired_series`,
+    `q18_shape_paired_series`). It must agree BIT-FOR-BIT — same rows,
+    same float bits — with the decimal SQL spelling on both gate
+    fixtures."""
     import struct
+
+    from conftest import SF_MEDIUM, SF_SMALL
+
+    from pycaim_spark.catalog import register_temp_views
+    from pycaim_spark.queries.tpch_more import _Q18_SQL
 
     def bits(rows):
         out = []
@@ -108,13 +111,8 @@ def test_tpch_composites_fixedpoint_matches_sql_decimal_form(spark, monkeypatch)
             ))
         return sorted(out, key=str)
 
-    for q in ("tpch_q3", "tpch_q5", "tpch_q6", "tpch_q10", "tpch_q18"):
-        for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-            monkeypatch.setenv("PYCAIM_TPCH_FORM", "sql")
-            sql_form = bits(REGISTRY[q].fn(spark, d).collect())
-            monkeypatch.setenv("PYCAIM_TPCH_FORM", "fixedpoint")
-            fixed = bits(REGISTRY[q].fn(spark, d).collect())
-            monkeypatch.delenv("PYCAIM_TPCH_FORM")
-            shipped = bits(REGISTRY[q].fn(spark, d).collect())
-            assert fixed == sql_form, (q, d)
-            assert shipped == sql_form, (q, d)
+    for d in (SF_SMALL, SF_MEDIUM):
+        shipped = bits(REGISTRY["tpch_q18"].fn(spark, d).collect())
+        register_temp_views(spark, d)
+        sql_form = bits(spark.sql(_Q18_SQL).collect())
+        assert shipped == sql_form and shipped, d

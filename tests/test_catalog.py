@@ -117,6 +117,44 @@ def test_fresh_cache_evicts_previous_entry(spark):
                 prev.unpersist()
 
 
+
+def _cache_loaded(spark, df) -> bool:
+    """Whether the CacheManager entry serving ``df``'s plan already holds
+    materialized column buffers."""
+    entry = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    assert not entry.isEmpty()
+    builder = entry.get().cachedRepresentation().cacheBuilder()
+    return builder.isCachedColumnBuffersLoaded()
+
+
+def test_pipeline_pretrain_cache_does_not_outlive_its_call(spark, sf_dir):
+    from pycaim_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    key = "pipeline_pretrain.quality"
+    fn = REGISTRY["pipeline_pretrain"].fn
+    try:
+        first_rows = _rows(fn(spark, sf_dir))
+        first = catalog._FRESH_CACHE[key]
+        assert _cache_loaded(spark, first)
+        second_df = fn(spark, sf_dir)
+        second = catalog._FRESH_CACHE[key]
+        # The first call's frame was unpersisted and the second call's
+        # entry starts empty: nothing computed by call one serves call two.
+        assert second is not first
+        assert not first.is_cached
+        assert not _cache_loaded(spark, second)
+        assert [
+            k for k in catalog._FRESH_CACHE if k.startswith("pipeline_pretrain")
+        ] == [key]
+        assert _rows(second_df) == first_rows
+    finally:
+        prev = catalog._FRESH_CACHE.pop(key, None)
+        if prev is not None:
+            prev.unpersist()
+
 def _events_of_size(sf: str, nbytes: int) -> str:
     # Sparse file: the sizing rule reads only the byte size.
     with open(os.path.join(sf, "events.parquet"), "wb") as f:

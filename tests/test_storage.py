@@ -368,23 +368,6 @@ def test_bucketed_layout_concurrent_build_regen_gc(
             shutil.rmtree(fake, ignore_errors=True)
 
 
-def test_tpch_q10_bucketed_semi_arm_matches(spark):
-    """PYCAIM_Q10_FORM=semi (the broadcast left-semi selective-side
-    filter arm, round 13) is an alternate physical form of
-    tpch_q10_bucketed: rows and float bits must match the shipped form
-    exactly at both gate scales."""
-    import os
-
-    for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        shipped = _bits(REGISTRY["tpch_q10_bucketed"].fn(spark, d).collect())
-        os.environ["PYCAIM_Q10_FORM"] = "semi"
-        try:
-            semi = _bits(REGISTRY["tpch_q10_bucketed"].fn(spark, d).collect())
-        finally:
-            del os.environ["PYCAIM_Q10_FORM"]
-        assert semi == shipped and shipped, d
-
-
 def test_incremental_layout_plan_states_and_files(spark, sf_dir):
     """The incremental layout lifecycle's three claims (round 14):
 
@@ -1847,23 +1830,6 @@ def test_upsert_schema_evolution_inplace_arm(spark, sf_dir):
     assert (
         oc.filter("o_channel IS NOT NULL").count() == n_upd + n_ins
     )
-
-
-def test_tpch_q21_bucketed_diamond_arm_matches(spark):
-    """PYCAIM_Q21_SHAPE=diamond (the r13 two-aggregate shape, demoted to
-    the arm when r14's canary-gated series flipped the default to the
-    one-pass window form — see tpch_q21_bucketed's docstring) stays
-    bit-identical to the shipped window form at both gate scales."""
-    import os
-
-    for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        shipped = _bits(REGISTRY["tpch_q21_bucketed"].fn(spark, d).collect())
-        os.environ["PYCAIM_Q21_SHAPE"] = "diamond"
-        try:
-            dia = _bits(REGISTRY["tpch_q21_bucketed"].fn(spark, d).collect())
-        finally:
-            del os.environ["PYCAIM_Q21_SHAPE"]
-        assert dia == shipped and shipped, d
 
 
 def test_gc_crash_window_tombstones_displaced_deletes_partial(tmp_path):
