@@ -149,33 +149,68 @@ def caim_incremental_fit(
     value, label, cnt)`` histogram is persisted once (built from
     ``base_dataset`` if the store is absent), each ingest merges the
     delta slice's histogram — union + groupBy SUM, counts over disjoint
-    row sets add exactly — writes the merged state back (versioned dir +
-    rename, so a crashed merge never corrupts the store), and the greedy
-    reruns on the merged histogram, whose size tracks distinct values,
-    not corpus rows. Cuts are IDENTICAL to a full refit over
-    base ∪ delta (asserted in tests/test_caim.py): histogram merging is
-    exact, so incrementality costs nothing in fidelity — the property
-    that makes Strategy B the right 100 TB design."""
-    import os
-    import shutil
+    row sets add exactly — and the greedy reruns on the merged histogram,
+    whose size tracks distinct values, not corpus rows. Cuts are
+    IDENTICAL to a full refit over base ∪ delta (asserted in
+    tests/test_caim.py): histogram merging is exact, so incrementality
+    costs nothing in fidelity — the property that makes Strategy B the
+    right 100 TB design.
 
-    hist_dir = os.path.join(store_dir, "hist")
-    if not os.path.exists(os.path.join(hist_dir, "_SUCCESS")):
-        if base_dataset is None:
-            raise ValueError(f"no histogram store at {hist_dir} and no base")
-        melted_histogram(base_dataset, cols, label).write.mode(
-            "overwrite"
-        ).parquet(hist_dir)
-    merged = (
-        spark.read.parquet(hist_dir)
-        .unionByName(melted_histogram(delta_dataset, cols, label))
-        .groupBy("feature", "value", "label")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    merged.write.mode("overwrite").parquet(hist_dir + "_next")
-    shutil.rmtree(hist_dir)
-    os.rename(hist_dir + "_next", hist_dir)
-    return fit_from_histogram(spark.read.parquet(hist_dir), max_cand)
+    The store commits through ``operators/commit.py``: ``hist_v{N}``
+    behind ``hist_current.json``, under the store write lock, with the
+    displaced version tombstoned and grace-collected. The base histogram
+    commits as its own version before the first merge, so a merge that
+    crashes leaves the base (or the last merged state) in place, and a
+    re-delivered slice merges into it. A pointer-less plain ``hist/``
+    (the pre-pointer layout) reads as version 0."""
+    import os
+
+    from pycaim_spark.operators import commit
+
+    def version(n):
+        return os.path.join(store_dir, f"hist_v{n}")
+
+    def publish(frame, n):
+        frame.write.mode("overwrite").parquet(version(n))
+        commit.write_json_atomic(ptr_path, {"version": n})
+
+    ptr_path = os.path.join(store_dir, "hist_current.json")
+    legacy = os.path.join(store_dir, "hist")
+    with commit.store_lock(store_dir):
+        ptr = commit.load_pointer(ptr_path)
+        hist_vs = [
+            (int(d[len("hist_v"):]), os.path.join(store_dir, d))
+            for d in os.listdir(store_dir)
+            if d.startswith("hist_v") and d[len("hist_v"):].isdigit()
+        ]
+        if ptr is not None:
+            v = ptr["version"]
+            olds = hist_vs + ([(-1, legacy)] if os.path.isdir(legacy) else [])
+            commit.reconcile_versions(olds, v)
+            for n, path in olds:
+                if n < v:
+                    commit.collect_if_aged(path, commit.store_grace(), data=True)
+            cur = version(v)
+        else:
+            # No pointer: every hist_v* is an unpublished write.
+            commit.reconcile_versions(hist_vs, -1)
+            v, cur = 0, legacy
+            if not os.path.exists(os.path.join(legacy, "_SUCCESS")):
+                if base_dataset is None:
+                    raise ValueError(
+                        f"no histogram store at {store_dir} and no base"
+                    )
+                cur = version(0)
+                publish(melted_histogram(base_dataset, cols, label), 0)
+        merged = (
+            spark.read.parquet(cur)
+            .unionByName(melted_histogram(delta_dataset, cols, label))
+            .groupBy("feature", "value", "label")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        publish(merged, v + 1)
+        commit.tombstone(cur, data=True)
+    return fit_from_histogram(spark.read.parquet(version(v + 1)), max_cand)
 
 
 def _compress_histogram(

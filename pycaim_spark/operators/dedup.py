@@ -7,6 +7,11 @@
   (explode → ``xxhash64`` → 64 per-bit SUM aggregates — deterministic
   across processes, unlike Python's salted ``hash``); candidate pairs by
   Hamming distance with JVM-side xor/bit_count.
+
+The persisted signature store (``minhash_signature_store_*``) commits
+through the shared protocol in ``operators/commit.py``: versioned
+``sets_v{N}``/``buckets_v{N}`` behind ``current.json``, write-aside
+``append/<key>`` and ``deletes/<key>`` layers, two-phase grace GC.
 """
 
 from __future__ import annotations
@@ -18,6 +23,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from pycaim_spark.operators import commit
 
 try:
     from pyspark import cloudpickle as _cloudpickle
@@ -874,19 +881,7 @@ def _store_delete_dirs(store_dir: str) -> list[str]:
     """Live DELETE layers (r18): ``deletes/<key>/ids`` parquet dirs,
     complete (``ids/_SUCCESS``) and not tombstoned — same liveness rule
     as the append layers, same write-aside swap scaffolding exclusions."""
-    del_dir = os.path.join(store_dir, "deletes")
-    if not os.path.isdir(del_dir):
-        return []
-    return sorted(
-        os.path.join(del_dir, k)
-        for k in os.listdir(del_dir)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(del_dir, k, "ids", "_SUCCESS"))
-        and not os.path.exists(
-            os.path.join(del_dir, k, "superseded.json")
-        )
-    )
+    return commit.live_layers(os.path.join(store_dir, "deletes"), "ids")
 
 
 def _store_deleted_ids(spark, store_dir: str):
@@ -894,14 +889,7 @@ def _store_deleted_ids(spark, store_dir: str):
     ``id`` DataFrame, or None when no deletes are pending. Bounded by
     deletions since the last compaction (compaction applies them
     physically and retires the layers), so probes can broadcast it."""
-    dirs = _store_delete_dirs(store_dir)
-    if not dirs:
-        return None
-    out = None
-    for d in dirs:
-        ids = spark.read.parquet(os.path.join(d, "ids"))
-        out = ids if out is None else out.unionByName(ids)
-    return out.distinct()
+    return commit.union_layer_ids(spark, _store_delete_dirs(store_dir))
 
 
 #: Above this many pending deleted ids the probes skip the exact
@@ -970,29 +958,20 @@ def minhash_signature_store_delete(
     row. Cost: O(delete batch) now, O(store) at the next compaction
     (the physical pass — at 100 TB the same rewrite a table-format
     purge pays)."""
-    import shutil
-
     with _store_write_lock(store_dir):
         _recover_store_swap(store_dir)
         _store_gc_superseded(store_dir)
         if delete_key in _store_del_manifest(store_dir):
             return  # already physically applied by a compaction
-        layer = os.path.join(store_dir, "deletes", delete_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        (
-            doc_ids.select(F.col(id_col).cast("long").alias("id"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(fresh, "ids"))
+        commit.swap_layer(
+            os.path.join(store_dir, "deletes", delete_key),
+            lambda fresh: (
+                doc_ids.select(F.col(id_col).cast("long").alias("id"))
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(os.path.join(fresh, "ids"))
+            ),
         )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"), {"ts": time.time()}
-            )
-        os.rename(fresh, layer)
 
 
 def _store_manifest_ordered(store_dir: str) -> list[str]:
@@ -1045,47 +1024,31 @@ def minhash_signature_store_append(
     sink (streaming/runner.py). Layers hold RAW band rows (the LSM log);
     ``minhash_signature_store_compact`` folds them into the
     bucket-aggregated base."""
-    import shutil
-
     with _store_write_lock(store_dir):
         _recover_store_swap(store_dir)
         _store_gc_superseded(store_dir)
         if ingest_key in _store_manifest(store_dir):
             return
-        layer = os.path.join(store_dir, "append", ingest_key)
+
         # Write-ASIDE, never in place (ADVICE r15): a redelivered key may
-        # land on an existing layer dir — live (unfolded redelivery) or
-        # tombstoned-in-grace (folded, manifest-GC-trimmed, redelivered) —
-        # and mode("overwrite") would delete part files a stale lockless
-        # reader already resolved: the exact crash class the two-phase GC
-        # exists to prevent. The fresh content goes to ``<key>.next``; the
-        # swap renames the old dir away (tombstoned for grace collection,
-        # every resolved path still valid) and the new one into place — a
-        # fresh dir carries no tombstone, so this also resurrects a
-        # trimmed-and-redelivered key without touching the old files.
-        # Crash anywhere mid-swap is healed by ``_recover_store_swap``'s
-        # layer pass (roll a complete orphaned .next forward, tombstone an
-        # untombstoned .old, delete an incomplete .next).
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        a_sets = _shingle_sets(
-            accepted_docs, text_col, id_col, shingle_n, repartition=False
-        )
-        a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
-        (
-            _band_rows(
-                spark.read.parquet(os.path.join(fresh, "sets")), num_hashes, seed
+        # land on a live or tombstoned-in-grace layer whose part files a
+        # stale lockless reader resolved; mode("overwrite") there would
+        # delete them under it.
+        def write(fresh):
+            a_sets = _shingle_sets(
+                accepted_docs, text_col, id_col, shingle_n, repartition=False
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(fresh, "bands"))
-        )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"), {"ts": time.time()}
+            a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
+            (
+                _band_rows(
+                    spark.read.parquet(os.path.join(fresh, "sets")),
+                    num_hashes, seed,
+                )
+                .write.mode("overwrite")
+                .parquet(os.path.join(fresh, "bands"))
             )
-        os.rename(fresh, layer)
+
+        commit.swap_layer(os.path.join(store_dir, "append", ingest_key), write)
 
 
 def _store_layer_dirs(store_dir: str) -> list[str]:
@@ -1096,23 +1059,7 @@ def _store_layer_dirs(store_dir: str) -> list[str]:
     by ``minhash_store_manifest_gc`` before the dir is collected — without
     this check the trimmed-but-undeleted layer would re-enter probes and
     compactions as a live layer and double-count its rows."""
-    append_dir = os.path.join(store_dir, "append")
-    if not os.path.isdir(append_dir):
-        return []
-    return sorted(
-        os.path.join(append_dir, k)
-        for k in os.listdir(append_dir)
-        # ``<key>.next`` (in-progress write-aside) and ``<key>.old-<ts>``
-        # (swapped-out content awaiting grace collection) are swap
-        # scaffolding, never live layers, even when a crash left them
-        # complete-looking (ADVICE r15 redelivery write-aside).
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(append_dir, k, "bands", "_SUCCESS"))
-        and not os.path.exists(
-            os.path.join(append_dir, k, "superseded.json")
-        )
-    )
+    return commit.live_layers(os.path.join(store_dir, "append"), "bands")
 
 
 def _tombstone_folded_layers(
@@ -1132,17 +1079,7 @@ def _tombstone_folded_layers(
     commit's phase 1 from the pointer's folded list, and an unrestricted
     sweep there would tombstone live layers appended after that commit.
     Caller holds the store write lock."""
-    append_dir = os.path.join(store_dir, "append")
-    if not os.path.isdir(append_dir):
-        return
-    now = time.time()
-    for k in os.listdir(append_dir):
-        if keys is not None and k not in keys:
-            continue
-        layer = os.path.join(append_dir, k)
-        tomb = os.path.join(layer, "superseded.json")
-        if os.path.isdir(layer) and not os.path.exists(tomb):
-            _write_json_atomic(tomb, {"ts": now})
+    commit.tombstone_layers(os.path.join(store_dir, "append"), keys)
 
 
 def _store_gc_superseded(store_dir: str) -> None:
@@ -1155,49 +1092,24 @@ def _store_gc_superseded(store_dir: str) -> None:
     at. Old base versions carry their tombstone INSIDE the parquet dir
     as ``_superseded.json`` — the underscore prefix keeps it invisible
     to a stale reader's parquet scan of that very dir."""
-    import json as _json
-    import shutil
-
-    grace = float(os.environ.get("PYCAIM_STORE_GC_GRACE", "900"))
-    now = time.time()
-
-    def _aged(tomb):
-        try:
-            with open(tomb) as f:
-                return now - float(_json.load(f).get("ts", now)) > grace
-        except (OSError, ValueError, TypeError):
-            return False
-
-    for _kind, _n, path in _version_dirs(store_dir):
-        tomb = os.path.join(path, "_superseded.json")
-        if os.path.exists(tomb) and _aged(tomb):
-            shutil.rmtree(path, ignore_errors=True)
+    grace = commit.store_grace()
     # Tombstoned LEGACY dirs (r18: the migration link-assembles v0 and
     # tombstones the unversioned base instead of renaming it) collect
     # on the same grace as any displaced version.
-    for d in ("sets", "buckets"):
-        base = os.path.join(store_dir, d)
-        for legacy in (base, base + "_next", base + "_old"):
-            tomb = os.path.join(legacy, "_superseded.json")
-            if os.path.exists(tomb) and _aged(tomb):
-                shutil.rmtree(legacy, ignore_errors=True)
+    for path in [p for _k, _n, p in _version_dirs(store_dir)] + \
+            _legacy_dirs(store_dir):
+        commit.collect_if_aged(path, grace, data=True)
     for root in ("append", "deletes"):
-        layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        for k in os.listdir(layer_root):
-            tomb = os.path.join(layer_root, k, "superseded.json")
-            if os.path.exists(tomb) and _aged(tomb):
-                shutil.rmtree(
-                    os.path.join(layer_root, k), ignore_errors=True
-                )
-        # Drop the parent once everything under it is collected, so "no
-        # layer dir at all" stays the fully-quiesced steady state.
-        try:
-            if not os.listdir(layer_root):
-                os.rmdir(layer_root)
-        except OSError:
-            pass
+        commit.collect_layers(os.path.join(store_dir, root), grace)
+
+
+def _legacy_dirs(store_dir: str) -> list[str]:
+    """The pre-r16 unversioned base and its journal-era swap dirs."""
+    return [
+        os.path.join(store_dir, d) + sfx
+        for d in ("sets", "buckets")
+        for sfx in ("", "_next", "_old")
+    ]
 
 
 def _merge_bucket_layers(
@@ -1241,81 +1153,21 @@ def _merge_bucket_layers(
     )
 
 
-class _store_write_lock:
-    """Exclusive advisory lock on a signature store, held for the whole
-    body of every WRITE path (build/append/compact, each of which starts
-    with crash recovery). Serializes two concurrent compactions — the
-    second blocks, then finds nothing to fold and no-ops — and keeps a
-    concurrent append from racing the swap renames. Read paths (the
-    probes) take no lock: they never mutate the store (recovery runs
-    only under this lock) and resolve a consistent snapshot via
-    ``_store_read_view`` — since r16 the pointer commit plus grace-period
-    tombstoning of old versions means a commit landing between a probe's
-    resolution and its lazy materialization leaves every resolved path
-    on disk for $PYCAIM_STORE_GC_GRACE seconds. flock is
-    per-open-file, so this also
-    serializes threads inside one driver process. Cross-HOST writers are
-    NOT serialized (flock is host-local) — on an object store the swap
-    below is a table-format commit and the catalog provides the lock."""
-
-    def __init__(self, store_dir: str):
-        os.makedirs(store_dir, exist_ok=True)
-        self._path = os.path.join(store_dir, "store.lock")
-
-    def __enter__(self):
-        import fcntl
-
-        self._f = open(self._path, "w")
-        fcntl.flock(self._f, fcntl.LOCK_EX)
-        return self
-
-    def __exit__(self, *exc):
-        import fcntl
-
-        fcntl.flock(self._f, fcntl.LOCK_UN)
-        self._f.close()
-        return False
+def _store_write_lock(store_dir: str) -> commit.FileLock:
+    """The store's writer lock (``store.lock``), held for the whole body
+    of every WRITE path; probes take none and read one pointer parse."""
+    return commit.store_lock(store_dir)
 
 
-def _write_json_atomic(path: str, obj) -> None:
-    """Write JSON durably: temp file, fsync, rename into place, fsync the
-    directory entry — a reader (or crash recovery) sees the old content,
-    the new content, or nothing, never a truncated file (ADVICE r10)."""
-    import json as _json
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
-    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+# Importable under its historical name.
+_write_json_atomic = commit.write_json_atomic
 
 
 def _load_pointer(store_dir: str) -> dict | None:
     """Parse the store's snapshot pointer ``current.json`` —
-    ``{"version": N, "folded": [...]}`` — the single atomic commit point
-    of the versioned base (r16, VERDICT r15 #3). Written only via
-    ``_write_json_atomic``, so a reader sees the old snapshot, the new
-    snapshot, or (pre-first-build / legacy store) nothing — never a torn
-    state. ``None`` if absent or unparseable (unparseable ⇒ pre-atomic
-    artifact ⇒ treat as legacy/unbuilt, same doctrine as
-    ``_load_journal``)."""
-    import json as _json
-
-    path = os.path.join(store_dir, "current.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            ptr = _json.load(f)
-        return ptr if isinstance(ptr.get("version"), int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+    ``{"version": N, "folded": [...]}``; ``None`` if absent or
+    unparseable (a legacy or unbuilt store)."""
+    return commit.load_pointer(os.path.join(store_dir, "current.json"))
 
 
 def _commit_pointer(
@@ -1335,7 +1187,7 @@ def _commit_pointer(
     doc = {"version": version, "folded": list(folded)}
     if del_folded:
         doc["del_folded"] = list(del_folded)
-    _write_json_atomic(os.path.join(store_dir, "current.json"), doc)
+    commit.write_json_atomic(os.path.join(store_dir, "current.json"), doc)
 
 
 def _versioned(store_dir: str, name: str, version: int) -> str:
@@ -1382,38 +1234,10 @@ def _load_journal(store_dir: str) -> list[str] | None:
 
 
 def _recover_layer_swaps(store_dir: str) -> None:
-    """Heal a crashed per-layer write-aside swap (the redelivery path of
-    ``minhash_signature_store_append``, ADVICE r15). Deterministic from
-    the on-disk shapes alone: a COMPLETE orphaned ``<key>.next``
-    (``bands/_SUCCESS`` present, no live ``<key>`` sibling) is the
-    committed content of a crash between the two swap renames — roll it
-    forward; an incomplete or non-orphaned ``.next`` is an uncommitted
-    write — delete it (the old layer, live or already renamed aside, is
-    intact); an ``<key>.old-<ts>`` that missed its tombstone gets one so
-    grace GC collects it. Caller holds the store write lock."""
-    import shutil
-
+    """Heal crashed write-aside swaps of both layer families
+    (`commit.recover_layers`). Caller holds the store write lock."""
     for root, marker in (("append", "bands"), ("deletes", "ids")):
-        layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        for k in os.listdir(layer_root):
-            d = os.path.join(layer_root, k)
-            if k.endswith(".next"):
-                layer = d[: -len(".next")]
-                if not os.path.exists(layer) and os.path.exists(
-                    os.path.join(d, marker, "_SUCCESS")
-                ):
-                    os.rename(d, layer)
-                else:
-                    shutil.rmtree(d, ignore_errors=True)
-            elif ".old-" in k and not os.path.exists(
-                os.path.join(d, "superseded.json")
-            ):
-                _write_json_atomic(
-                    os.path.join(d, "superseded.json"),
-                    {"ts": time.time()},
-                )
+        commit.recover_layers(os.path.join(store_dir, root), marker)
 
 
 def _recover_store_swap(store_dir: str) -> None:
@@ -1504,8 +1328,6 @@ def _recover_store_swap(store_dir: str) -> None:
         # rename of live files anywhere in this store family.
         v0 = [d + "_v0" for d in dirs]
         for cur, nxt in zip(dirs, v0):
-            stray = nxt + ".assembling"
-            shutil.rmtree(stray, ignore_errors=True)
             src = (
                 cur + "_next"
                 if folded is not None
@@ -1513,16 +1335,7 @@ def _recover_store_swap(store_dir: str) -> None:
                 else cur
             )
             if os.path.exists(src) and not os.path.exists(nxt):
-                os.makedirs(stray)
-                for fn in os.listdir(src):
-                    full = os.path.join(src, fn)
-                    if not os.path.isfile(full):
-                        continue
-                    try:
-                        os.link(full, os.path.join(stray, fn))
-                    except OSError:
-                        shutil.copy2(full, os.path.join(stray, fn))
-                os.rename(stray, nxt)
+                commit.link_assemble(src, nxt)
         manifest = os.path.join(store_dir, "folded_keys.json")
         if all(
             os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0
@@ -1540,54 +1353,40 @@ def _recover_store_swap(store_dir: str) -> None:
                 _tombstone_folded_layers(store_dir, keys=set(folded))
                 if os.path.exists(journal):
                     os.remove(journal)
-            # Phase-1 GC of the superseded legacy dirs (underscore
-            # marker: invisible to a stale reader's parquet scan of
-            # that very dir); `_store_gc_superseded` collects them
-            # after grace, like any displaced version.
-            for cur in dirs:
-                for d in (cur, cur + "_next", cur + "_old"):
-                    if os.path.isdir(d):
-                        _write_json_atomic(
-                            os.path.join(d, "_superseded.json"),
-                            {"ts": time.time()},
-                        )
+            # Phase-1 GC of the superseded legacy dirs;
+            # `_store_gc_superseded` collects them after grace, like any
+            # displaced version.
+            for d in _legacy_dirs(store_dir):
+                if os.path.isdir(d):
+                    commit.tombstone(d, data=True)
         else:
             for d in v0:
                 if os.path.exists(d):
                     shutil.rmtree(d)
         return
-    v = ptr["version"]
-    for _kind, n, path in _version_dirs(store_dir):
-        if n > v:
-            shutil.rmtree(path, ignore_errors=True)
-        elif n < v and not os.path.exists(
-            os.path.join(path, "_superseded.json")
-        ):
-            _write_json_atomic(
-                os.path.join(path, "_superseded.json"),
-                {"ts": time.time()},
-            )
+    commit.reconcile_versions(
+        [(n, p) for _k, n, p in _version_dirs(store_dir)], ptr["version"]
+    )
     # Delete layers the pointer has folded (``del_folded``) whose
     # tombstone write was lost to a crash: re-lay it so grace
     # collection proceeds — probes stay correct meanwhile (re-filtering
     # already-removed ids is a no-op).
-    for dl in _store_delete_dirs(store_dir):
-        if os.path.basename(dl) in set(ptr.get("del_folded", ())):
-            _write_json_atomic(
-                os.path.join(dl, "superseded.json"),
-                {"ts": time.time()},
-            )
+    commit.tombstone_layers(
+        os.path.join(store_dir, "deletes"),
+        {os.path.basename(d) for d in _store_delete_dirs(store_dir)}
+        & set(ptr.get("del_folded", ())),
+    )
     # Legacy scaffolding outliving a crash between the migration's
     # pointer commit and its phase-1 tombstoning (r18): the pointer
     # supersedes the unversioned dirs by definition — re-lay their
     # tombstones idempotently; `.assembling` strays are unpublished.
     for d in ("sets", "buckets"):
-        base = os.path.join(store_dir, d)
-        shutil.rmtree(base + "_v0.assembling", ignore_errors=True)
-        for legacy in (base, base + "_next", base + "_old"):
-            tomb = os.path.join(legacy, "_superseded.json")
-            if os.path.isdir(legacy) and not os.path.exists(tomb):
-                _write_json_atomic(tomb, {"ts": time.time()})
+        shutil.rmtree(
+            os.path.join(store_dir, d) + "_v0.assembling", ignore_errors=True
+        )
+    for legacy in _legacy_dirs(store_dir):
+        if os.path.isdir(legacy) and not commit.tombstoned(legacy, data=True):
+            commit.tombstone(legacy, data=True)
     _tombstone_folded_layers(store_dir, keys=set(ptr.get("folded", ())))
 
 
@@ -1727,11 +1526,7 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
             # deleted docs, except where a deleted id had evicted
             # another past BUCKET_STORE_CAP (cap 1024 — a documented,
             # fixture-unreachable approximation).
-            dels = None
-            for dl in del_layers:
-                ids = spark.read.parquet(os.path.join(dl, "ids"))
-                dels = ids if dels is None else dels.unionByName(ids)
-            dels = dels.distinct()
+            dels = commit.union_layer_ids(spark, del_layers)
             merged_sets = merged_sets.join(
                 F.broadcast(dels), "id", "left_anti"
             )
@@ -1771,46 +1566,26 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
         merged_buckets.write.mode("overwrite").parquet(
             _versioned(store_dir, "buckets", v + 1)
         )
-        # The manifest is kept in FOLD order (oldest first): prior order,
-        # then this compaction's layers ordered by append time (layer dir
-        # mtime, name tiebreak). GC recency must not depend on key
-        # spelling — 'day10' sorts before 'day2' lexicographically
-        # (ADVICE r11).
-        new_keys = [
-            os.path.basename(l)
-            for l in sorted(layers, key=lambda p: (os.path.getmtime(p), p))
-        ]
-        prior = _store_manifest_ordered(store_dir)
-        folded = prior + [k for k in new_keys if k not in prior]
-        new_del_keys = [
-            os.path.basename(l)
-            for l in sorted(
-                del_layers, key=lambda p: (os.path.getmtime(p), p)
-            )
-        ]
-        prior_del = _store_del_manifest(store_dir)
-        del_folded = prior_del + [
-            k for k in new_del_keys if k not in prior_del
-        ]
+        # Both manifests are kept in FOLD order (`commit.fold_manifest`).
+        folded = commit.fold_manifest(_store_manifest_ordered(store_dir), layers)
+        del_folded = commit.fold_manifest(
+            _store_del_manifest(store_dir), del_layers
+        )
         # THE commit: new base + both manifests become visible together.
         _commit_pointer(store_dir, v + 1, folded, del_folded=del_folded)
         # Two-phase GC (r15): the old immediate `rmtree(append)` here
         # crashed a concurrent lockless reader mid-scan (reproduced:
         # pytest's dedup_stream_ingest PATH_NOT_FOUND while verify_sweep
-        # compacted the shared store). Tombstone in place — folded layers
-        # AND the superseded base version; collect past grace on later
-        # write passes.
-        _tombstone_folded_layers(store_dir, keys=set(new_keys))
-        now = time.time()
-        # Applied delete layers retire on the same two-phase contract.
+        # compacted the shared store). Tombstone in place — folded layers,
+        # applied delete layers AND the superseded base version; collect
+        # past grace on later write passes.
+        _tombstone_folded_layers(
+            store_dir, keys={os.path.basename(l) for l in layers}
+        )
         for dl in del_layers:
-            _write_json_atomic(
-                os.path.join(dl, "superseded.json"), {"ts": now}
-            )
+            commit.tombstone(dl)
         for old in (sets_dir, buckets_dir):
-            _write_json_atomic(
-                os.path.join(old, "_superseded.json"), {"ts": now}
-            )
+            commit.tombstone(old, data=True)
         _store_gc_superseded(store_dir)
         # Housekeeping on the compaction cadence (VERDICT r11 #5): trim
         # the manifest to the newest $PYCAIM_STORE_GC_KEEP folded keys
@@ -1860,7 +1635,7 @@ def _manifest_gc_locked(store_dir: str, keep_last: int) -> int:
     if ptr is not None:
         _commit_pointer(store_dir, ptr["version"], kept)
     else:
-        _write_json_atomic(
+        commit.write_json_atomic(
             os.path.join(store_dir, "folded_keys.json"), kept
         )
     return len(keys) - len(kept)

@@ -1,41 +1,25 @@
 """Snapshot-pointer commits for the bucketed table layout (r17).
 
-The r16 store bases (minhash ``sets``/``buckets``, IVF-PQ ``codes``)
-already commit through immutable versioned dirs behind an atomic
-pointer; the bucketed TABLE still mutated its one live file set — the
-upsert swap's remove/rename instant was the last place a lockless
-reader could crash (VERDICT r16 #1, citing advanced.py's own "residual
-window" docstring). This module ports the pattern to the layout:
+The layout commits through the shared protocol in
+``operators/commit.py`` (pointer as the commit point, tombstone plus
+grace GC, writer lock, link assembly). This module keeps what is the
+layout's own:
 
-- A mutable relation ``rel`` inside a layout slug lives in IMMUTABLE
-  version dirs ``{rel}_v{N}``; the single commit point is the atomic
-  pointer file ``{rel}_current.json`` = ``{"version": N, "dir":
-  "{rel}_v{N}", ...}`` with the state the version serves (the CDC batch
-  spec, the stream's applied-batch manifest, the re-bucket progress)
-  folded INSIDE the pointer, exactly like the signature store folds its
-  layer manifest into ``current.json`` — no interleaving can pair a new
-  file set with a stale batch record.
-- A MERGE publishes version N+1 by HARD-LINKING the untouched buckets'
-  files from version N (zero byte copy — the local stand-in for a
-  table-format manifest that simply re-lists unchanged data files) and
-  moving the staged rewrites in, then flips the pointer. Version N's
-  dir is never mutated: a lockless reader that resolved it keeps
-  scanning intact files.
-- Displaced versions are tombstoned in place (underscore-prefixed
-  ``_superseded.json``, invisible to parquet scans) and collected by
-  `gc_layout_versions` on later WRITE passes after
-  ``$PYCAIM_LAYOUT_GC_GRACE`` (default 900 s) — the repo-wide two-phase
-  GC rule ("never delete store files a lockless reader may have
-  resolved").
-- Crash recovery needs no undo journal: a version dir the pointer does
-  not reference was never published, so the next locked writer simply
-  deletes it and re-merges from the last committed version. This
-  replaces the r16 in-place arm's pending-journal + undo-dir rollback
-  (strictly less machinery for strictly more safety).
-
-On an object store the pointer write is the table-format snapshot
-commit and hard links become manifest entries; flock + link is the
-single-host stand-in (same caveat as the signature store).
+- A mutable relation ``rel`` inside a layout slug lives in immutable
+  version dirs ``{rel}_v{N}`` behind ``{rel}_current.json`` =
+  ``{"version": N, "dir": "{rel}_v{N}", ...}``, with the state the
+  version serves (the CDC batch spec, the stream's applied-batch
+  manifest, the re-bucket progress, per-file column stats) folded
+  inside the pointer.
+- A MERGE publishes version N+1 by hard-linking the untouched buckets'
+  files from version N and moving the staged rewrites in, then flips
+  the pointer; version N is never mutated.
+- Displaced versions are tombstoned and collected by
+  `gc_layout_versions` after ``$PYCAIM_LAYOUT_GC_GRACE``, except
+  versions pinned by the pointer's ``retained`` list (time travel) or
+  named by the slug-level multi-rel commit ``slug_commit.json``.
+- Writers lock per slug (`slug_write_lock`), the lock file beside the
+  slug in its parent dir.
 """
 
 from __future__ import annotations
@@ -49,102 +33,42 @@ import time
 
 import cloudpickle as _cloudpickle
 
+from pycaim_spark.operators import commit
 from pycaim_spark.operators.merge import mv_with_crc
 
 _VDIR_RE = re.compile(r"^(.+)_v(\d+)$")
 
 
-class slug_write_lock:
-    """Exclusive advisory lock on ONE layout slug (r18, VERDICT r17
-    #3): mutating motions (CDC merge, stream sink, split/coalesce,
-    time-travel heal) serialize per SLUG instead of on the whole
-    layout root, so CDC streams to different tables run concurrently.
-    The lock FILE lives in the PARENT dir (``.lock_{slug}`` next to
-    the slug dir), never inside it: cross-slug GC rmtree's a
-    collected slug while holding this lock, and deleting a held lock
-    file would let a blocked waiter acquire the orphaned inode while
-    a newcomer acquires a fresh one — two concurrent "owners" (the
-    classic flock-file-deletion hazard). Parent-dir lock files are
-    tiny, bounded by live slug count, and never collected.
+def _slug_lock_path(slug_dir: str) -> str:
+    slug_dir = os.path.abspath(slug_dir)
+    return os.path.join(
+        os.path.dirname(slug_dir), f".lock_{os.path.basename(slug_dir)}"
+    )
 
-    ``blocking=False`` (GC's phase-2 sweep) try-acquires:
-    ``acquired`` is False when a live writer holds the slug, and the
-    caller must skip it. Lock ORDER is root → slug (builders hold the
-    root flock for cross-slug GC, then nest the slug lock; motions
-    take only their slug; GC only ever TRY-locks other slugs) — no
-    cycle is possible.
 
-    Acquisition RE-VERIFIES the inode after the flock lands: GC
-    removes a collected slug's lock file (`remove_slug_lock_file`, so
-    orphans don't accrue one per regenerated corpus), and a waiter
-    that was blocked on the unlinked inode would otherwise "own" a
-    lock no newcomer can see — the acquire loop detects the unlink
-    (path missing or pointing at a different inode) and retries on a
-    fresh open, the standard flock-file-deletion remedy."""
+def slug_write_lock(slug_dir: str, blocking: bool = True) -> commit.FileLock:
+    """Exclusive writer lock on ONE layout slug (r18, VERDICT r17 #3):
+    mutating motions (CDC merge, stream sink, split/coalesce, time-travel
+    heal) serialize per SLUG, so CDC streams to different tables run
+    concurrently. The lock FILE is ``.lock_{slug}`` in the PARENT dir,
+    never inside the slug: cross-slug GC rmtree's a collected slug while
+    holding this lock, and `remove_slug_lock_file` deletes the file after
+    it (the lock's inode re-check makes that safe for a blocked waiter).
 
-    def __init__(self, slug_dir: str, blocking: bool = True):
-        parent = os.path.dirname(os.path.abspath(slug_dir))
-        os.makedirs(parent, exist_ok=True)
-        self._path = os.path.join(
-            parent, f".lock_{os.path.basename(os.path.abspath(slug_dir))}"
-        )
-        self._blocking = blocking
-        self.acquired = False
-
-    def __enter__(self):
-        import fcntl
-
-        while True:
-            self._f = open(self._path, "a")
-            try:
-                fcntl.flock(
-                    self._f,
-                    fcntl.LOCK_EX
-                    | (0 if self._blocking else fcntl.LOCK_NB),
-                )
-            except BlockingIOError:
-                self._f.close()
-                self._f = None
-                return self
-            try:
-                same = os.stat(self._path).st_ino == os.fstat(
-                    self._f.fileno()
-                ).st_ino
-            except FileNotFoundError:
-                same = False
-            if same:
-                self.acquired = True
-                return self
-            # The file was unlinked (slug collected) while we waited:
-            # this inode is invisible to new lockers — retry fresh.
-            fcntl.flock(self._f, fcntl.LOCK_UN)
-            self._f.close()
-            self._f = None
-
-    def __exit__(self, *exc):
-        import fcntl
-
-        if self._f is not None:
-            fcntl.flock(self._f, fcntl.LOCK_UN)
-            self._f.close()
-        self.acquired = False
-        return False
+    ``blocking=False`` (GC's phase-2 sweep) try-acquires: ``acquired``
+    is False when a live writer holds the slug, and the caller must skip
+    it. Lock ORDER is root → slug (builders hold the root flock for
+    cross-slug GC, then nest the slug lock; motions take only their
+    slug; GC only ever TRY-locks other slugs) — no cycle is possible."""
+    return commit.FileLock(_slug_lock_path(slug_dir), blocking=blocking)
 
 
 def remove_slug_lock_file(slug_dir: str) -> None:
     """Delete a COLLECTED slug's lock file (caller holds that slug's
-    lock and has already rmtree'd the slug dir): without this, every
-    regenerated corpus leaves one orphan ``.lock_<slug>`` forever. Safe
-    against the flock-file-deletion hazard because `slug_write_lock`'s
-    acquire loop re-verifies the inode — a waiter blocked on this
-    unlinked file retries on the fresh path instead of owning an
-    invisible lock."""
-    parent = os.path.dirname(os.path.abspath(slug_dir))
-    path = os.path.join(
-        parent, f".lock_{os.path.basename(os.path.abspath(slug_dir))}"
-    )
+    lock and has already rmtree'd the slug dir), so regenerated corpora
+    leave no orphan ``.lock_<slug>`` behind."""
     try:
-        os.remove(path)
+        os.remove(_slug_lock_path(slug_dir))
     except OSError:
         pass
 
@@ -154,18 +78,8 @@ def _pointer_path(slug_dir: str, rel: str) -> str:
 
 
 def load_layout_pointer(slug_dir: str, rel: str) -> dict | None:
-    """Parse ``{rel}_current.json``; None if absent or unparseable
-    (written only via `_write_json_atomic`, so unparseable ⇒ legacy
-    artifact, same doctrine as the store pointer)."""
-    path = _pointer_path(slug_dir, rel)
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            ptr = json.load(f)
-        return ptr if isinstance(ptr.get("version"), int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+    """Parse ``{rel}_current.json``; None if absent or unparseable."""
+    return commit.load_pointer(_pointer_path(slug_dir, rel))
 
 
 def resolve_layout_rel(slug_dir: str, rel: str) -> tuple[str, dict | None]:
@@ -177,13 +91,6 @@ def resolve_layout_rel(slug_dir: str, rel: str) -> tuple[str, dict | None]:
     if ptr is not None:
         return os.path.join(slug_dir, ptr["dir"]), ptr
     return os.path.join(slug_dir, rel), None
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
 
 
 def _stat_json(v):
@@ -291,26 +198,20 @@ def publish_layout_version(
     else:
         os.makedirs(vdir)
         skip = skip_names or set()
-        for fn in os.listdir(src_dir):
-            full = os.path.join(src_dir, fn)
-            if not os.path.isfile(full):
-                continue
-            if fn == "_superseded.json" or fn.endswith(".tmp"):
-                continue
-            base = fn[1:-len(".crc")] if (
-                fn.startswith(".") and fn.endswith(".crc")
-            ) else fn
-            if base in skip:
-                continue
-            _link_or_copy(full, os.path.join(vdir, fn))
+        commit.link_files(
+            src_dir, vdir,
+            # a displaced file's hidden ``.crc`` sidecar goes with it
+            skip=lambda fn: (
+                fn[1:-len(".crc")] if fn.startswith(".")
+                and fn.endswith(".crc") else fn
+            ) in skip,
+        )
         for f in staged_files or ():
             mv_with_crc(f, vdir)
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
     ptr = {"version": n, "dir": vname, **(extra or {})}
     ts = time.time()
     ptr["ts"] = ts
-    _write_json_atomic(
+    commit.write_json_atomic(
         os.path.join(vdir, "_commit.json"),
         {"version": n, "ts": ts, "kind": _commit_kind(extra, prebuilt_dir),
          "key": _commit_key(extra)},
@@ -330,7 +231,7 @@ def publish_layout_version(
             )
         ptr["files"] = files
         ptr["stats_cols"] = list(cols)
-    _write_json_atomic(_pointer_path(slug_dir, rel), ptr)
+    commit.write_json_atomic(_pointer_path(slug_dir, rel), ptr)
     return vdir, ptr
 
 
@@ -376,28 +277,20 @@ def prune_layout_files(
 def rewrite_layout_pointer(slug_dir: str, rel: str, ptr: dict) -> None:
     """Atomically rewrite a rel's pointer in place (same version/dir,
     updated commit record — e.g. recording an empty CDC batch)."""
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    _write_json_atomic(_pointer_path(slug_dir, rel), dict(ptr))
+    commit.write_json_atomic(_pointer_path(slug_dir, rel), dict(ptr))
 
 
 def tombstone_layout_dir(path: str) -> None:
     """Phase-1 GC: mark a displaced version dir for collection after
-    grace. Underscore-prefixed so parquet scans of the dir (a reader
-    still inside its grace window) never see it as data."""
-    if not os.path.isdir(path):
-        return
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    _write_json_atomic(
-        os.path.join(path, "_superseded.json"), {"ts": time.time()}
-    )
+    grace (the data-dir tombstone, invisible to parquet scans)."""
+    if os.path.isdir(path):
+        commit.tombstone(path, data=True)
 
 
 def gc_layout_versions(slug_dir: str) -> None:
     """Phase-2 GC + crash sweep, under the slug's write lock:
 
-    - any dir carrying ``_superseded.json`` older than
+    - any version dir whose tombstone is older than
       ``$PYCAIM_LAYOUT_GC_GRACE`` (default 900 s) is deleted — a
       displaced version past every reader's grace window;
     - an untombstoned ``{rel}_v{N}`` dir the rel's pointer does not
@@ -413,39 +306,30 @@ def gc_layout_versions(slug_dir: str) -> None:
       rather than deleted. A pointer FILE that exists but fails to
       parse makes us skip the rel entirely (fail-safe: never delete on
       ambiguity);
-    - legacy r16 undo dirs (``*_old-*`` with a bare ``superseded.json``)
+    - legacy r16 undo dirs (``*_old-*`` with a plain layer tombstone)
       are collected past the same grace.
     """
     if not os.path.isdir(slug_dir):
         return
-    grace = float(os.environ.get("PYCAIM_LAYOUT_GC_GRACE", "900"))
-    now = time.time()
+    grace = commit.layout_grace()
     for d in os.listdir(slug_dir):
         p = os.path.join(slug_dir, d)
         if not os.path.isdir(p):
             continue
-        tomb = os.path.join(p, "_superseded.json")
-        legacy_tomb = os.path.join(p, "superseded.json")
-        if os.path.exists(tomb) or ("_old-" in d and os.path.exists(legacy_tomb)):
+        data = commit.tombstoned(p, data=True)
+        if data or ("_old-" in d and commit.tombstoned(p)):
             if _gc_retained(slug_dir, p, d):
                 continue  # pinned snapshot (time travel): never collect
             m = _VDIR_RE.match(d)
-            if m and os.path.exists(tomb):
+            if m and data:
                 ptr = load_layout_pointer(slug_dir, m.group(1))
                 if ptr is not None and ptr.get("dir") == d:
                     # The rel's pointer still references this dir: the
                     # tombstone is debris from an interrupted cleanup —
                     # resurrect the LIVE state rather than collect it.
-                    os.remove(tomb)
+                    commit.clear_tombstone(p, data=True)
                     continue
-            src = tomb if os.path.exists(tomb) else legacy_tomb
-            try:
-                with open(src) as f:
-                    ts = float(json.load(f).get("ts", now))
-            except (OSError, ValueError, TypeError):
-                continue  # unreadable tombstone: leave for a later pass
-            if now - ts > grace:
-                shutil.rmtree(p, ignore_errors=True)
+            commit.collect_if_aged(p, grace, data=data)
             continue
         if d.endswith("_stage") or "_feed_tmp_" in d:
             # Stage/scratch dirs only live inside a locked writer's own
@@ -462,14 +346,12 @@ def gc_layout_versions(slug_dir: str) -> None:
                 if ptr is None:
                     continue  # unparseable pointer: fail safe, skip rel
                 if ptr["dir"] != d:
-                    if int(m.group(2)) > ptr["version"]:
-                        # Above the pointer: never pointer-visible.
-                        shutil.rmtree(p, ignore_errors=True)
-                    else:
-                        # Below the pointer: displaced version whose
-                        # tombstone write was lost to a crash — readers
-                        # may hold it; grace-collect, never rmtree.
-                        tombstone_layout_dir(p)
+                    # Above the pointer: never pointer-visible, delete.
+                    # Below it: a displaced version whose tombstone was
+                    # lost to a crash — readers may hold it; tombstone.
+                    commit.reconcile_versions(
+                        [(int(m.group(2)), p)], ptr["version"]
+                    )
             else:
                 # No pointer at all: crashed before the rel's first
                 # publish — the plain dir is still the live state.
@@ -596,8 +478,6 @@ def publish_slug_commit(
     commit flip leaves the commit's versions readable until the next
     locked writer completes or re-derives the motion. Caller MUST hold
     the slug write lock."""
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
     old = load_slug_commit(slug_dir)
     rec = {
         "commit": (old["commit"] + 1) if old else 1,
@@ -605,21 +485,15 @@ def publish_slug_commit(
         "rels": {r: int(v) for r, v in rels.items()},
         **(extra or {}),
     }
-    _write_json_atomic(os.path.join(slug_dir, "slug_commit.json"), rec)
+    commit.write_json_atomic(os.path.join(slug_dir, "slug_commit.json"), rec)
     return rec
 
 
 def load_slug_commit(slug_dir: str) -> dict | None:
     """Parse ``slug_commit.json``; None if absent/unparseable."""
-    path = os.path.join(slug_dir, "slug_commit.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            rec = json.load(f)
-        return rec if isinstance(rec.get("rels"), dict) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+    return commit.load_pointer(
+        os.path.join(slug_dir, "slug_commit.json"), key="rels", kind=dict
+    )
 
 
 def resolve_slug_commit(slug_dir: str) -> dict:

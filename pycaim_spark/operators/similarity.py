@@ -9,6 +9,12 @@ Scale design: norms are precomputed per vector (one projection) before any
 pair join; the brute-force path crossJoins a small query set against the
 corpus (broadcast the queries); the approximate paths bucket the corpus so
 the pair space never materializes.
+
+The persisted IVF-PQ store (``ivf_pq_index_*``, ``ivf_pq_codes_vacuum``)
+commits through the shared protocol in ``operators/commit.py``:
+``codes_v{N}`` behind ``codes_current.json``, write-aside
+``codes_append/<key>`` and ``codes_deletes/<key>`` layers, two-phase
+grace GC.
 """
 
 from __future__ import annotations
@@ -19,6 +25,8 @@ import sys as _sys
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from pycaim_spark.operators import commit
 
 try:
     from pyspark import cloudpickle as _cloudpickle
@@ -802,156 +810,78 @@ _INDEX_PARAM_KEYS = (
 _INDEX_ALGO_VERSION = 3
 
 
-def _codes_version(store_dir: str) -> int | None:
-    """Parse the coded-corpus snapshot pointer ``codes_current.json``
-    (r16, VERDICT r15 #3 — the same pointer-commit the minhash store
-    base got). ``None`` = legacy/unbuilt store."""
-    import json
-    import os
+def _codes_pointer(store_dir: str) -> dict | None:
+    """One parse of the coded-corpus snapshot pointer
+    ``codes_current.json`` — ``{"version": N[, "del_folded": [...]]
+    [, "app_folded": [...]]}``; None = legacy/unbuilt store."""
+    return commit.load_pointer(os.path.join(store_dir, "codes_current.json"))
 
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            v = json.load(f).get("version")
-        return v if isinstance(v, int) else None
-    except (OSError, ValueError, AttributeError):
-        return None
+
+def _codes_version(store_dir: str) -> int | None:
+    """The pointed codes version; ``None`` = legacy/unbuilt store."""
+    ptr = _codes_pointer(store_dir)
+    return None if ptr is None else ptr["version"]
+
+
+def _codes_dir(store_dir: str, ptr: dict | None) -> str:
+    if ptr is not None:
+        return os.path.join(store_dir, f"codes_v{ptr['version']}")
+    return os.path.join(store_dir, "codes")
 
 
 def _codes_path(store_dir: str) -> str:
     """Resolve the live coded-corpus dir: ``codes_v{N}`` behind the
     pointer, or the legacy unversioned ``codes`` until the next write
-    path migrates the store. The resolved dir only ever GROWS (appends
-    add part files); replacement happens by publishing a new version and
-    flipping the pointer, so a reader's resolved path stays valid for
-    ``$PYCAIM_STORE_GC_GRACE`` seconds after any retrain."""
-    import os
-
-    v = _codes_version(store_dir)
-    if v is not None:
-        return os.path.join(store_dir, f"codes_v{v}")
-    return os.path.join(store_dir, "codes")
+    path migrates the store. A version dir is immutable once published;
+    replacement publishes a new version and flips the pointer, so a
+    reader's resolved path stays valid for ``$PYCAIM_STORE_GC_GRACE``
+    seconds after any retrain."""
+    return _codes_dir(store_dir, _codes_pointer(store_dir))
 
 
 def _recover_codes(store_dir: str) -> None:
     """Write-path reconciliation for the coded corpus (caller holds the
-    store write lock): delete uncommitted ``codes_v{>current}`` strays
-    and legacy ``codes_next``/``codes_old*`` swap scaffolding, grace-
-    collect tombstoned old versions, and MIGRATE a legacy unversioned
-    ``codes`` dir to ``codes_v0`` + pointer. Since r18 (VERDICT r17
-    #6) the migration LINK-ASSEMBLES v0 from the live ``codes`` dir
-    (complete-or-absent: temp dir + atomic rename) and tombstones the
-    legacy dir after the pointer commits — the pre-r18 rename of live
-    files, and its documented FileNotFoundException window for a
-    mid-materialization legacy reader, is gone: the reader's resolved
-    path stays on disk for the grace period like any displaced
-    version."""
+    store write lock): reconcile ``codes_v*`` against the pointer, drop
+    legacy ``codes_next``/``codes_old*`` swap scaffolding, heal crashed
+    layer swaps, grace-collect tombstoned dirs, and MIGRATE a legacy
+    unversioned ``codes`` dir to a link-assembled ``codes_v0`` +
+    pointer (r18: never renamed; the legacy dir is tombstoned after the
+    pointer commits)."""
     import json
-    import os
     import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import _write_json_atomic
 
     if not os.path.isdir(store_dir):
         return
-    v = _codes_version(store_dir)
-    grace = float(os.environ.get("PYCAIM_STORE_GC_GRACE", "900"))
-    now = time.time()
+    ptr = _codes_pointer(store_dir)
+    versions = []
     for sib in os.listdir(store_dir):
         path = os.path.join(store_dir, sib)
         if sib == "codes_next" or sib.startswith("codes_old") \
                 or sib.endswith(".assembling"):
             shutil.rmtree(path, ignore_errors=True)
-            continue
-        if sib == "codes" and v is not None:
-            # Legacy dir on a MIGRATED store (r18 link-assembly keeps
-            # it for stale readers): tombstone idempotently — a crash
-            # between pointer commit and tombstone re-lays here — and
-            # collect past grace like any displaced version.
-            tomb = os.path.join(path, "_superseded.json")
-            if not os.path.exists(tomb):
-                _write_json_atomic(tomb, {"ts": now})
-            else:
-                try:
-                    with open(tomb) as f:
-                        ts = float(json.load(f).get("ts", now))
-                    if now - ts > grace:
-                        shutil.rmtree(path, ignore_errors=True)
-                except (OSError, ValueError, TypeError):
-                    pass
-            continue
-        if sib.startswith("codes_v"):
-            try:
-                n = int(sib[len("codes_v"):])
-            except ValueError:
-                continue
-            if v is not None and n > v:
-                shutil.rmtree(path, ignore_errors=True)
-            elif v is not None and n < v:
-                tomb = os.path.join(path, "_superseded.json")
-                if not os.path.exists(tomb):
-                    _write_json_atomic(tomb, {"ts": now})
-                else:
-                    try:
-                        with open(tomb) as f:
-                            ts = float(json.load(f).get("ts", now))
-                        if now - ts > grace:
-                            shutil.rmtree(path, ignore_errors=True)
-                    except (OSError, ValueError, TypeError):
-                        pass
-    # Layer swap scaffolding + two-phase retirement (r18) for BOTH
-    # layer families (delete layers, append layers), mirroring the
-    # minhash store's layer recovery: roll a complete orphaned
-    # ``<key>.next`` forward, drop incomplete ones, re-lay missing
-    # ``.old-`` tombstones, collect tombstoned layers past grace.
-    for root, marker in (("codes_deletes", "ids"),
-                         ("codes_append", "codes")):
+        elif sib == "codes":
+            # On a MIGRATED store the legacy dir ranks below every
+            # version: tombstoned (idempotently), then grace-collected.
+            versions.append((-1, path))
+        elif sib.startswith("codes_v") and sib[len("codes_v"):].isdigit():
+            versions.append((int(sib[len("codes_v"):]), path))
+    grace = commit.store_grace()
+    if ptr is not None:
+        commit.reconcile_versions(versions, ptr["version"])
+        for n, path in versions:
+            if n < ptr["version"]:
+                commit.collect_if_aged(path, grace, data=True)
+    # Both layer families: heal swaps, re-lay tombstones on ``.old-``
+    # debris and on layers the pointer has folded (the ``app_folded``
+    # skip in `_codes_frame` keeps reads correct meanwhile), collect.
+    for root, marker, key in (("codes_deletes", "ids", "del_folded"),
+                              ("codes_append", "codes", "app_folded")):
         layer_root = os.path.join(store_dir, root)
-        if not os.path.isdir(layer_root):
-            continue
-        # One pointer parse per root (it cannot change under the write
-        # lock the caller holds), not one per layer key.
-        folded = set(
-            _codes_del_manifest(store_dir)
-            if root == "codes_deletes"
-            else _codes_app_manifest(store_dir)
+        commit.recover_layers(
+            layer_root, marker, set((ptr or {}).get(key, ()))
         )
-        for k in os.listdir(layer_root):
-            d = os.path.join(layer_root, k)
-            if k.endswith(".next"):
-                layer = d[: -len(".next")]
-                if not os.path.exists(layer) and os.path.exists(
-                    os.path.join(d, marker, "_SUCCESS")
-                ):
-                    os.rename(d, layer)
-                else:
-                    shutil.rmtree(d, ignore_errors=True)
-                continue
-            tomb = os.path.join(d, "superseded.json")
-            if (".old-" in k or k in folded) and not os.path.exists(
-                tomb
-            ):
-                # .old- swap debris, or a layer the pointer has folded
-                # whose tombstone write was lost to a crash: re-lay it
-                # (the app_folded skip in `_codes_frame` keeps reads
-                # correct meanwhile).
-                _write_json_atomic(tomb, {"ts": now})
-            elif os.path.exists(tomb):
-                try:
-                    with open(tomb) as f:
-                        ts = float(json.load(f).get("ts", now))
-                    if now - ts > grace:
-                        shutil.rmtree(d, ignore_errors=True)
-                except (OSError, ValueError, TypeError):
-                    pass
-        try:
-            if not os.listdir(layer_root):
-                os.rmdir(layer_root)
-        except OSError:
-            pass
+        commit.collect_layers(layer_root, grace)
+
     # Legacy append manifest (pre-r18 appends added part files to the
     # live version dir with ``append_keys.json`` as the replay guard —
     # those rows are physically in the base already): fold the keys
@@ -966,58 +896,41 @@ def _recover_codes(store_dir: str) -> None:
                 keys = list(json.load(f))
         except (OSError, ValueError):
             return
-        ptr_path = os.path.join(store_dir, "codes_current.json")
-        with open(ptr_path) as f:
-            doc = json.load(f)
+        doc = _codes_pointer(store_dir)
         prior = list(doc.get("app_folded", ()))
         doc["app_folded"] = prior + [k for k in keys if k not in prior]
-        _write_json_atomic(ptr_path, doc)
+        commit.write_json_atomic(
+            os.path.join(store_dir, "codes_current.json"), doc
+        )
         os.remove(legacy_app)
 
-    if v is not None:
+    if ptr is not None:
         _fold_legacy_append_manifest()
+        return
     # Pointer-less stores: crash-idempotent forward completion (mirrors
-    # the minhash base migration). A legacy ``codes`` dir is
-    # LINK-ASSEMBLED into ``codes_v0`` (r18 — never renamed); a
-    # COMPLETE pointer-less v0 (crashed migration — or a build that
-    # crashed between its v0 write and its pointer commit) gets the
-    # pointer it was about to receive; an INCOMPLETE one is a build
-    # stray — delete it, the next build re-derives. The pre-fix rule
-    # deleted every pointer-less codes_v* dir, which turned a crash
-    # between the migration and its pointer write into DATA LOSS of
-    # the only coded corpus.
-    if v is None:
-        legacy = os.path.join(store_dir, "codes")
-        v0 = os.path.join(store_dir, "codes_v0")
-        stray = v0 + ".assembling"
-        shutil.rmtree(stray, ignore_errors=True)
-        if os.path.exists(legacy) and not os.path.exists(v0):
-            os.makedirs(stray)
-            for fn in os.listdir(legacy):
-                full = os.path.join(legacy, fn)
-                if not os.path.isfile(full):
-                    continue
-                try:
-                    os.link(full, os.path.join(stray, fn))
-                except OSError:
-                    shutil.copy2(full, os.path.join(stray, fn))
-            os.rename(stray, v0)
-        if os.path.exists(os.path.join(v0, "_SUCCESS")):
-            _write_json_atomic(
-                os.path.join(store_dir, "codes_current.json"),
-                {"version": 0},
-            )
-            # The legacy manifest's keys are physically in the base —
-            # fold them NOW, or the very next append of a redelivered
-            # key would layer a duplicate slice on top.
-            _fold_legacy_append_manifest()
-            if os.path.isdir(legacy):
-                _write_json_atomic(
-                    os.path.join(legacy, "_superseded.json"),
-                    {"ts": now},
-                )
-        elif os.path.exists(v0):
-            shutil.rmtree(v0, ignore_errors=True)
+    # the minhash base migration). A COMPLETE pointer-less v0 (crashed
+    # migration, or a build that crashed between its v0 write and its
+    # pointer commit) gets the pointer it was about to receive; an
+    # INCOMPLETE one is a build stray — delete it, the next build
+    # re-derives. Deleting every pointer-less codes_v* dir instead would
+    # turn a crash between the migration and its pointer write into
+    # DATA LOSS of the only coded corpus.
+    legacy = os.path.join(store_dir, "codes")
+    v0 = os.path.join(store_dir, "codes_v0")
+    if os.path.exists(legacy) and not os.path.exists(v0):
+        commit.link_assemble(legacy, v0)
+    if os.path.exists(os.path.join(v0, "_SUCCESS")):
+        commit.write_json_atomic(
+            os.path.join(store_dir, "codes_current.json"), {"version": 0}
+        )
+        # The legacy manifest's keys are physically in the base —
+        # fold them NOW, or the very next append of a redelivered
+        # key would layer a duplicate slice on top.
+        _fold_legacy_append_manifest()
+        if os.path.isdir(legacy):
+            commit.tombstone(legacy, data=True)
+    elif os.path.exists(v0):
+        shutil.rmtree(v0, ignore_errors=True)
 
 
 def ivf_pq_index_build(
@@ -1042,26 +955,11 @@ def ivf_pq_index_build(
     n_cells/m/k_centroids/sample_size/iters/seed than the stored build
     raises instead of silently serving the stale index (ADVICE r9); a
     sidecar with no persisted params at all is likewise refused (ADVICE
-    r10). Concurrency (r15, hardened r16 — VERDICT r15 #3): write paths
-    serialize on the store's flock (`_store_write_lock`, double-checked
-    reuse after acquiring it), the npz sidecar and append manifest are
-    written atomically (temp + fsync + rename), and a retrain writes the
-    re-coded corpus as a NEW VERSION (``codes_v{N+1}``) committed by an
-    atomic flip of the ``codes_current.json`` pointer — the superseded
-    version is tombstoned in place and collected after
-    ``$PYCAIM_STORE_GC_GRACE`` seconds, so a lockless reader that
-    resolved the old version keeps every file it resolved for the whole
-    grace period (r15's rename-instant residual is gone; this is the
-    same snapshot-pointer commit the minhash store base uses). Returns
+    r10). Write paths serialize on the store's flock (double-checked
+    reuse after acquiring it); a retrain writes the re-coded corpus as a
+    NEW VERSION ``codes_v{N+1}`` committed by a flip of the
+    ``codes_current.json`` pointer (``operators/commit.py``). Returns
     (centroids, codebooks)."""
-    import os
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
     params = {
         "n_cells": n_cells,
         "m": m,
@@ -1117,7 +1015,7 @@ def ivf_pq_index_build(
     got = _try_reuse()
     if got is not None:
         return got
-    with _store_write_lock(store_dir):
+    with commit.store_lock(store_dir):
         # Double-checked: a concurrent build may have completed while we
         # waited on the lock — seeded training is deterministic, so
         # re-validating and serving its result is exact, not approximate.
@@ -1156,53 +1054,39 @@ def ivf_pq_index_build(
         for layer in _codes_append_dirs(store_dir) + _codes_delete_dirs(
             store_dir
         ):
-            _write_json_atomic(
-                os.path.join(layer, "superseded.json"),
-                {"ts": time.time()},
-            )
+            commit.tombstone(layer)
         manifest = os.path.join(store_dir, "append_keys.json")
         if os.path.exists(manifest):
             os.remove(manifest)
         old_v = _codes_version(store_dir)
         new_v = 0 if old_v is None else old_v + 1
-        new_codes = os.path.join(store_dir, f"codes_v{new_v}")
         _ivf_pq_encode(emb, centroids, codebooks).write.mode(
             "overwrite"
-        ).parquet(new_codes)
-        os.makedirs(store_dir, exist_ok=True)
-        tmp = npz + ".tmp"
-        with open(tmp, "wb") as f:
-            np.savez(
+        ).parquet(os.path.join(store_dir, f"codes_v{new_v}"))
+        # The sidecar is staged (written + fsynced) BEFORE the pointer
+        # flip and published after it. The reverse order would let a
+        # crash between the two pair new centroids with old codes, and
+        # `_try_reuse` would accept them because the params match; this
+        # order leaves at worst the old npz beside the new codes for one
+        # load, which the params re-validate.
+        tmp = commit.stage_file(
+            npz,
+            lambda f: np.savez(
                 f,
                 centroids=centroids,
                 codebooks=codebooks,
                 params=np.array([params[key] for key in _INDEX_PARAM_KEYS]),
-            )
-            # Same durability discipline as _write_json_atomic (ADVICE
-            # r15): os.replace of an unsynced tmp can surface an empty or
-            # torn npz after power loss, breaking the temp+rename
-            # atomicity claim this sidecar family documents.
-            f.flush()
-            os.fsync(f.fileno())
-        # Commit: flip the codes pointer (atomic), publish the matching
-        # sidecar, tombstone the superseded version for grace collection.
-        # A reader interleaving between the two publishes can pair the
-        # old npz with the new codes for one load — benign for a reuse
-        # check (params re-validate) and the only sub-instant left; the
-        # old VERSION DIR itself now outlives any such reader by the
-        # grace period instead of being deleted under it.
-        _write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"),
-            {"version": new_v},
+            ),
+            mode="wb",
         )
-        os.replace(tmp, npz)
+        commit.write_json_atomic(
+            os.path.join(store_dir, "codes_current.json"), {"version": new_v}
+        )
+        commit.publish_file(tmp, npz)
         if old_v is not None:
             old_dir = os.path.join(store_dir, f"codes_v{old_v}")
             if os.path.isdir(old_dir):
-                _write_json_atomic(
-                    os.path.join(old_dir, "_superseded.json"),
-                    {"ts": time.time()},
-                )
+                commit.tombstone(old_dir, data=True)
     return centroids, codebooks
 
 
@@ -1216,104 +1100,58 @@ def ivf_pq_index_append(
     production practice (the codebooks model the corpus distribution, not
     its membership; periodic retraining is a separate offline job). r18:
     the slice commits as an APPEND LAYER ``codes_append/<key>/codes``
-    (one atomic dir rename — the key is the idempotence unit), read by
+    (write-aside swap — the key is the idempotence unit), read by
     `_codes_frame` alongside the base and folded into the next codes
     version by `ivf_pq_codes_vacuum`, which records the key in the
     pointer's ``app_folded`` manifest. This retires the pre-r18 shape
     (part files appended into the live version dir + a separate
-    ``append_keys.json``), whose documented crash window — codes
-    written, manifest write lost — double-indexed a redelivered slice:
-    now a crash before the rename leaves only an invisible ``.next``
-    stray, and a crash after it leaves a committed layer whose key
-    redelivery overwrites in place (write-aside), never duplicates.
-    Runs under the store write lock; legacy manifests are folded into
-    the pointer by `_recover_codes` on the next write path. The ANN
-    half of the daily ingest loop — new documents become searchable as
-    soon as their slice is appended, no index rebuild."""
-    import os
-    import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
+    ``append_keys.json``), whose crash window — codes written, manifest
+    write lost — double-indexed a redelivered slice. Runs under the
+    store write lock; legacy manifests are folded into the pointer by
+    `_recover_codes` on the next write path. The ANN half of the daily
+    ingest loop — new documents become searchable as soon as their
+    slice is appended, no index rebuild."""
+    with commit.store_lock(store_dir):
         _recover_codes(store_dir)
         if ingest_key in _codes_app_manifest(store_dir):
             return  # already folded into a committed codes version
         with np.load(os.path.join(store_dir, "index.npz")) as idx:
             centroids, codebooks = idx["centroids"], idx["codebooks"]
-        # r18: the slice lands as an APPEND LAYER
-        # ``codes_append/<key>/codes`` committed by one atomic dir
-        # rename — the key IS the idempotence unit, so the pre-r18
-        # crash window (codes part files appended into the live
-        # version dir, manifest write lost to a crash → redelivery
-        # double-indexed the slice) is structurally gone. Readers
-        # union base + live layers (`_codes_frame`); a vacuum folds
-        # layers into the next codes version and records the key in
-        # the pointer's ``app_folded`` manifest. Redelivery of an
-        # unfolded key overwrites via write-aside, same as every
-        # layer family.
-        layer = os.path.join(store_dir, "codes_append", ingest_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        _ivf_pq_encode(new_emb, centroids, codebooks).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(fresh, "codes"))
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"),
-                {"ts": time.time()},
-            )
-        os.rename(fresh, layer)
+        commit.swap_layer(
+            os.path.join(store_dir, "codes_append", ingest_key),
+            lambda fresh: _ivf_pq_encode(
+                new_emb, centroids, codebooks
+            ).write.mode("overwrite").parquet(os.path.join(fresh, "codes")),
+        )
 
 
 def _codes_append_dirs(store_dir: str) -> list[str]:
     """Live append layers of the coded corpus (r18):
     ``codes_append/<key>/codes`` — complete and untombstoned."""
-    root = os.path.join(store_dir, "codes_append")
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        os.path.join(root, k)
-        for k in os.listdir(root)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(root, k, "codes", "_SUCCESS"))
-        and not os.path.exists(os.path.join(root, k, "superseded.json"))
+    return commit.live_layers(
+        os.path.join(store_dir, "codes_append"), "codes"
     )
 
 
 def _codes_app_manifest(store_dir: str) -> list[str]:
     """Append keys a vacuum has folded into a committed codes version —
     carried in ``codes_current.json`` as ``app_folded``."""
-    import json
-
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            return list(json.load(f).get("app_folded", ()))
-    except (OSError, ValueError, AttributeError):
-        return []
+    return list((_codes_pointer(store_dir) or {}).get("app_folded", ()))
 
 
 def _codes_frame(spark, store_dir: str):
     """The live coded corpus: the pointed base version UNIONED with
     every live append layer whose key the pointer has NOT folded — the
-    read view every stored probe and vacuum uses. The ``app_folded``
-    skip is load-bearing independently of the tombstones (same rule as
-    the minhash read view): a vacuum that crashed between its pointer
-    flip and its layer tombstoning leaves a folded layer looking live,
-    and unioning it against the base that already contains its rows
-    would double-count the slice."""
-    folded = set(_codes_app_manifest(store_dir))
-    coded = spark.read.parquet(_codes_path(store_dir))
+    read view every stored probe and vacuum uses. The version and the
+    ``app_folded`` skip set come from ONE pointer parse: a vacuum that
+    commits between two parses would pair the old version with the new
+    skip set and count a folded layer twice. The skip is load-bearing
+    independently of the tombstones (same rule as the minhash read
+    view): a vacuum that crashed between its pointer flip and its layer
+    tombstoning leaves a folded layer looking live."""
+    ptr = _codes_pointer(store_dir)
+    folded = set((ptr or {}).get("app_folded", ()))
+    coded = spark.read.parquet(_codes_dir(store_dir, ptr))
     for layer in _codes_append_dirs(store_dir):
         if os.path.basename(layer) in folded:
             continue
@@ -1327,46 +1165,20 @@ def _codes_delete_dirs(store_dir: str) -> list[str]:
     """Live delete layers of the coded corpus (r18):
     ``codes_deletes/<key>/ids`` — complete and untombstoned, same
     liveness rule as every layer family in the repo."""
-    root = os.path.join(store_dir, "codes_deletes")
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        os.path.join(root, k)
-        for k in os.listdir(root)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(root, k, "ids", "_SUCCESS"))
-        and not os.path.exists(os.path.join(root, k, "superseded.json"))
-    )
+    return commit.live_layers(os.path.join(store_dir, "codes_deletes"), "ids")
 
 
 def _codes_deleted_ids(spark, store_dir: str):
     """Union of live delete layers' ids as a one-column
     ``neighbor_id`` DataFrame (the codes table's id column), or None.
     Bounded by deletions since the last vacuum."""
-    dirs = _codes_delete_dirs(store_dir)
-    if not dirs:
-        return None
-    out = None
-    for d in dirs:
-        ids = spark.read.parquet(os.path.join(d, "ids"))
-        out = ids if out is None else out.unionByName(ids)
-    return out.distinct()
+    return commit.union_layer_ids(spark, _codes_delete_dirs(store_dir))
 
 
 def _codes_del_manifest(store_dir: str) -> list[str]:
     """Delete keys a vacuum has applied physically — the
     replay-idempotency manifest, carried in ``codes_current.json``."""
-    import json
-
-    path = os.path.join(store_dir, "codes_current.json")
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            return list(json.load(f).get("del_folded", ()))
-    except (OSError, ValueError, AttributeError):
-        return []
+    return list((_codes_pointer(store_dir) or {}).get("del_folded", ()))
 
 
 def ivf_pq_index_delete(
@@ -1379,44 +1191,28 @@ def ivf_pq_index_delete(
     """DELETE vectors from a persisted IVF-PQ index (r18) — the ANN
     twin of `operators/dedup.minhash_signature_store_delete`: after
     this commit the vectors are never returned as neighbors. The ids
-    land as a keyed delete layer (write-aside + rename, ADVICE r15
-    discipline); probes apply them logically (anti-join the codes
-    scan), `ivf_pq_codes_vacuum` applies them physically and records
-    the key in the pointer's ``del_folded`` manifest so a replayed
-    delete is a no-op. Note the scope: this guards the STORE — a
-    later RETRAIN re-encodes whatever corpus it is given, so purge the
-    source corpus too (the layout's CDC delete) before retraining."""
-    import shutil
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
+    land as a keyed delete layer (write-aside swap); probes apply them
+    logically (anti-join the codes scan), `ivf_pq_codes_vacuum` applies
+    them physically and records the key in the pointer's
+    ``del_folded`` manifest so a replayed delete is a no-op. Note the
+    scope: this guards the STORE — a later RETRAIN re-encodes whatever
+    corpus it is given, so purge the source corpus too (the layout's
+    CDC delete) before retraining."""
+    with commit.store_lock(store_dir):
         _recover_codes(store_dir)
         if delete_key in _codes_del_manifest(store_dir):
             return
-        layer = os.path.join(store_dir, "codes_deletes", delete_key)
-        fresh = layer + ".next"
-        shutil.rmtree(fresh, ignore_errors=True)
-        (
-            vec_ids.select(
-                F.col(id_col).cast("long").alias("neighbor_id")
-            )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(fresh, "ids"))
+        commit.swap_layer(
+            os.path.join(store_dir, "codes_deletes", delete_key),
+            lambda fresh: (
+                vec_ids.select(
+                    F.col(id_col).cast("long").alias("neighbor_id")
+                )
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(os.path.join(fresh, "ids"))
+            ),
         )
-        if os.path.exists(layer):
-            old = f"{layer}.old-{int(time.time() * 1000)}"
-            os.rename(layer, old)
-            _write_json_atomic(
-                os.path.join(old, "superseded.json"),
-                {"ts": time.time()},
-            )
-        os.rename(fresh, layer)
 
 
 def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
@@ -1426,76 +1222,48 @@ def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
     append keys, ``del_folded`` delete keys — replay of either is a
     no-op), then tombstone the displaced version and the applied
     layers (two-phase grace GC, collected by `_recover_codes` on later
-    write passes). A lockless reader that resolved version N keeps its
-    files for the grace period — the same snapshot-commit contract as
-    every store."""
-    import time
-
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
-
-    with _store_write_lock(store_dir):
+    write passes)."""
+    with commit.store_lock(store_dir):
         _recover_codes(store_dir)
         del_layers = _codes_delete_dirs(store_dir)
         app_layers = _codes_append_dirs(store_dir)
         if not del_layers and not app_layers:
             return
-        v = _codes_version(store_dir)
-        if v is None:
+        ptr = _codes_pointer(store_dir)
+        if ptr is None:
             raise RuntimeError(
                 f"IVF-PQ store at {store_dir} has pending layers but no "
                 "committed codes pointer — build the index first"
             )
+        v = ptr["version"]
         cur = _codes_frame(spark, store_dir)
         if del_layers:
-            dels = None
-            for d in del_layers:
-                ids = spark.read.parquet(os.path.join(d, "ids"))
-                dels = ids if dels is None else dels.unionByName(ids)
             cur = cur.join(
-                F.broadcast(dels.distinct()), "neighbor_id", "left_anti"
+                F.broadcast(commit.union_layer_ids(spark, del_layers)),
+                "neighbor_id", "left_anti",
             )
         cur.write.mode("overwrite").parquet(
             os.path.join(store_dir, f"codes_v{v + 1}")
         )
-
-        def _keys(layers):
-            return [
-                os.path.basename(d)
-                for d in sorted(
-                    layers, key=lambda p: (os.path.getmtime(p), p)
-                )
-            ]
-
-        prior_del = _codes_del_manifest(store_dir)
-        prior_app = _codes_app_manifest(store_dir)
         doc = {"version": v + 1}
-        del_folded = prior_del + [
-            k for k in _keys(del_layers) if k not in prior_del
-        ]
-        app_folded = prior_app + [
-            k for k in _keys(app_layers) if k not in prior_app
-        ]
+        del_folded = commit.fold_manifest(
+            list(ptr.get("del_folded", ())), del_layers
+        )
+        app_folded = commit.fold_manifest(
+            list(ptr.get("app_folded", ())), app_layers
+        )
         if del_folded:
             doc["del_folded"] = del_folded
         if app_folded:
             doc["app_folded"] = app_folded
-        _write_json_atomic(
+        commit.write_json_atomic(
             os.path.join(store_dir, "codes_current.json"), doc
         )
-        now = time.time()
-        _write_json_atomic(
-            os.path.join(
-                store_dir, f"codes_v{v}", "_superseded.json"
-            ),
-            {"ts": now},
+        commit.tombstone(
+            os.path.join(store_dir, f"codes_v{v}"), data=True
         )
         for d in del_layers + app_layers:
-            _write_json_atomic(
-                os.path.join(d, "superseded.json"), {"ts": now}
-            )
+            commit.tombstone(d)
 
 
 def ivf_pq_topk_stored(

@@ -19,6 +19,7 @@ from pycaim_spark.catalog import (
     register_temp_views,
 )
 from pycaim_spark.functions.exact import cents, fsum
+from pycaim_spark.operators import commit
 from pycaim_spark.registry import register
 from pycaim_spark.session import configure_session
 
@@ -184,10 +185,10 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     (tools/make_scaled_sf.py) produce a fresh slug instead of serving the
     previous corpus.
 
-    Concurrency + GC (round 13, hardened round 14 per ADVICE r13, reusing
-    the signature store's pattern — operators/dedup.py
-    `_store_write_lock`): the WARM path (``_SUCCESS`` present and the
-    table already in this session's catalog) is lock-free — the slug is
+    Concurrency + GC (round 13, hardened round 14 per ADVICE r13, on the
+    shared commit protocol of operators/commit.py): the WARM path
+    (``_SUCCESS`` present and the table already in this session's
+    catalog) is lock-free — the slug is
     content-addressed by (sf_dir, buckets, per-file fingerprint), so a
     catalog entry with this name can only ever point at these exact
     files, and taking the root flock on every warm attach would park
@@ -202,7 +203,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     of a superseded slug would crash any in-flight scan mid-query
     instead of merely letting it return stale rows. Phase 1 (at
     supersede time, under the lock): drop the slug from THIS session's
-    catalog and tombstone it with ``superseded.json``. Phase 2 (every
+    catalog and tombstone it. Phase 2 (every
     later cold build, under the lock): rmtree slugs whose tombstone —
     or, for marker-less legacy/crashed-build slugs, whose dir mtime —
     is older than $PYCAIM_LAYOUT_GC_GRACE (default 900 s). Residual
@@ -216,10 +217,6 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     the lock (same caveat as the signature store)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -239,7 +236,6 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
         name = f"tpch_b_{table}_{slug}"
         slug_dir = os.path.join(layout_root, slug)
         path = os.path.join(slug_dir, table)
-        tomb = os.path.join(slug_dir, "superseded.json")
         # Lock-free warm fast path (ADVICE r13): content-addressed slug +
         # immutable files once _SUCCESS exists, so no lock is needed to
         # re-serve an attach this session already made. A visible
@@ -252,12 +248,12 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
         # no longer tombstone each other.
         if (
             os.path.exists(os.path.join(path, "_SUCCESS"))
-            and not os.path.exists(tomb)
+            and not commit.tombstoned(slug_dir)
             and spark.catalog.tableExists(name)
         ):
             out[table] = spark.table(name)
             continue
-        with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+        with commit.store_lock(layout_root), slug_write_lock(slug_dir):
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 # Cold build. A concurrent builder that lost the lock race
                 # lands in the re-attach branch below instead (the
@@ -272,7 +268,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(
+                commit.write_json_atomic(
                     os.path.join(slug_dir, "source.json"),
                     {"sf_dir": abs_sf, "table": table, "buckets": buckets,
                      "fp": fp},
@@ -296,7 +292,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
                 # r13: marker-less slugs were otherwise never collected).
                 marker = os.path.join(slug_dir, "source.json")
                 if not os.path.exists(marker):
-                    _write_json_atomic(
+                    commit.write_json_atomic(
                         marker,
                         {"sf_dir": abs_sf, "table": table,
                          "buckets": buckets, "fp": fp},
@@ -307,8 +303,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
             # fingerprint, so its files are not stale for this caller,
             # and leaving the tombstone would let a later GC pass delete
             # a slug this catalog entry actively serves.
-            if os.path.exists(tomb):
-                os.remove(tomb)
+            commit.clear_tombstone(slug_dir)
         out[table] = spark.table(name)
     return out["lineitem"], out["orders"]
 
@@ -320,7 +315,7 @@ def _gc_superseded_layouts(
     """Two-phase layout GC, called under the layout-root flock from a
     cold build (see `_bucketed_orderkey_layout`'s docstring for the
     reader-safety rationale). Phase 1 tombstones superseded same-source
-    slugs (``superseded.json`` + DROP from this session's catalog);
+    slugs (and DROPs them from this session's catalog);
     phase 2 deletes slugs whose tombstone — or dir mtime, for slugs with
     no ``source.json`` marker at all (pre-r13 builds, or builds that
     crashed before writing the marker) — is older than
@@ -331,16 +326,12 @@ def _gc_superseded_layouts(
     import shutil
     import time
 
-    from pycaim_spark.operators.dedup import _write_json_atomic
-
-    grace = float(os.environ.get("PYCAIM_LAYOUT_GC_GRACE", "900"))
-    now = time.time()
+    grace = commit.layout_grace()
     for sib in os.listdir(layout_root):
         sib_dir = os.path.join(layout_root, sib)
         if sib == keep_slug or not os.path.isdir(sib_dir):
             continue
         marker = os.path.join(sib_dir, "source.json")
-        tomb = os.path.join(sib_dir, "superseded.json")
         meta = None
         if os.path.exists(marker):
             try:
@@ -364,7 +355,7 @@ def _gc_superseded_layouts(
             meta is not None
             and (meta.get("sf_dir"), meta.get("table")) == (abs_sf, table)
             and (fp is None or meta.get("fp") is None or meta["fp"] != fp)
-            and not os.path.exists(tomb)
+            and not commit.tombstoned(sib_dir)
         ):
             # Every catalog table this slug ever attached carries the
             # slug as its name suffix (tpch_b_/tpch_ia_/tpch_ic_/
@@ -381,22 +372,19 @@ def _gc_superseded_layouts(
                 t = row.tableName
                 if t.endswith(f"_{sib}") and not row.isTemporary:
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _write_json_atomic(tomb, {"ts": now})
+            commit.tombstone(sib_dir)
             continue  # freshly tombstoned: full grace ahead of it
-        # Phase 2: delete past-grace tombstones and aged marker-less dirs.
-        ts = None
-        if os.path.exists(tomb):
-            try:
-                with open(tomb) as f:
-                    ts = float(json.load(f).get("ts", now))
-            except (OSError, ValueError, TypeError):
-                ts = None  # unreadable tombstone: leave for a later pass
+        # Phase 2: delete past-grace tombstones and aged marker-less dirs
+        # (an unreadable tombstone is left for a later pass).
+        age = None
+        if commit.tombstoned(sib_dir):
+            age = commit.tombstone_age(sib_dir)
         elif meta is None:
             try:
-                ts = os.path.getmtime(sib_dir)
+                age = time.time() - os.path.getmtime(sib_dir)
             except OSError:
-                ts = None
-        if ts is not None and now - ts > grace:
+                age = None
+        if age is not None and age > grace:
             # Per-slug locking (r18): a sibling slug's MOTIONS hold
             # only their slug lock, not the root flock we hold — so
             # the delete TRY-acquires the sibling's lock and skips it
@@ -551,10 +539,6 @@ def _incremental_orderkey_layout(
     versa. Returns (lineitem_df, orders_df) for the requested state."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -605,7 +589,7 @@ def _incremental_orderkey_layout(
         if (
             os.path.exists(want_success)
             and os.path.exists(append_marker)
-            and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+            and not commit.tombstoned(slug_dir)
             and (
                 not compacted
                 or cptr is None
@@ -616,7 +600,7 @@ def _incremental_orderkey_layout(
             out[table] = spark.table(want_name)
             continue
         full = load_table(spark, sf_dir, table)
-        with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+        with commit.store_lock(layout_root), slug_write_lock(slug_dir):
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 import shutil
 
@@ -691,7 +675,7 @@ def _incremental_orderkey_layout(
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(
+                commit.write_json_atomic(
                     os.path.join(slug_dir, "source.json"),
                     {"sf_dir": abs_sf, "table": f"{table}#{ns}",
                      "buckets": buckets, "fp": fp},
@@ -720,7 +704,7 @@ def _incremental_orderkey_layout(
                     .option("path", path)
                     .saveAsTable(name)
                 )
-                _write_json_atomic(append_marker, {"appended": True})
+                commit.write_json_atomic(append_marker, {"appended": True})
             if compacted:
                 cdir, cptr = resolve_layout_rel(slug_dir, crel)
                 if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
@@ -779,9 +763,7 @@ def _incremental_orderkey_layout(
             # call re-derived from the CURRENT fingerprint is valid by
             # construction — clear any tombstone so GC can't delete a
             # layout the catalog is actively serving.
-            tomb = os.path.join(slug_dir, "superseded.json")
-            if os.path.exists(tomb):
-                os.remove(tomb)
+            commit.clear_tombstone(slug_dir)
         out[table] = spark.table(want_name)
     return out.get("lineitem"), out.get("orders")
 
@@ -1018,7 +1000,7 @@ def _upserted_orderkey_layout(
     if (
         _current(ptr)
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
         and _ATTACHED.get(uname) == cur_dir
         and spark.catalog.tableExists(uname)
     ):
@@ -1252,9 +1234,7 @@ def _upserted_orderkey_layout(
             (ptr or {}).get("ddl") or base_ddl, key,
             final_rb["to"] if final_complete else buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return lib, spark.table(uname)
 
 
@@ -1354,7 +1334,7 @@ def _upsert_stream_inplace(
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -1487,9 +1467,7 @@ def _upsert_stream_inplace(
             spark, tname, cur_dir,
             (ptr or {}).get("ddl") or base_ddl, key, buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return spark.table(tname)
 
 
@@ -2113,7 +2091,6 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     import hashlib
     import shutil
 
-    from pycaim_spark.operators.dedup import _write_json_atomic
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         resolve_layout_rel,
@@ -2160,7 +2137,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
         # A missing checkpoint means the stream's cursor is gone — the
         # warm claim "every file was processed" can't be made from the
         # pointer alone, so run the stream: it re-creates the
@@ -2245,7 +2222,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
                 shutil.move(part, dst)
                 shutil.rmtree(tmp, ignore_errors=True)
                 os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
-            _write_json_atomic(feed_spec, specs)
+            commit.write_json_atomic(feed_spec, specs)
         feed_schema = spark.read.parquet(
             os.path.join(feed, "batch-0.parquet")
         ).schema
@@ -2278,9 +2255,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
             spark, tname, cur_dir,
             (ptr or {}).get("ddl") or base_ddl, key, buckets,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return spark.table(tname)
 
 
@@ -2560,7 +2535,7 @@ def _split_orderkey_layout(
         _rb(ptr).get("done") == want_done
         and _rb(ptr).get("to") == n_to
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -2637,9 +2612,7 @@ def _split_orderkey_layout(
             if os.path.isdir(old_dir) and old_dir != cur_dir:
                 tombstone_layout_dir(old_dir)
         _attach(cur_dir, done)
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return spark.table(tname)
 
 
@@ -2811,7 +2784,7 @@ def _coalesce_orderkey_layout(
         and state.get("to") == buckets
         and sorted(state.get("done", [])) == want_done
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
         and _ATTACHED.get(tname) == cur_dir
         and spark.catalog.tableExists(tname)
     ):
@@ -2897,9 +2870,7 @@ def _coalesce_orderkey_layout(
             spark, tname, cur_dir, base_ddl, key,
             buckets if complete else n_from, bucketed=complete,
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return spark.table(tname)
 
 
@@ -2970,10 +2941,6 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
     one). Returns (slug_dir, ddl)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         publish_layout_version,
@@ -3001,10 +2968,10 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
     if (
         ptr is not None
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
     ):
         return slug_dir, ddl
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         if not (
@@ -3027,7 +2994,7 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
                 extra={"batch": None, "ddl": ddl},
                 stats_cols=("o_orderdate", "o_orderkey"),
             )
-            _write_json_atomic(
+            commit.write_json_atomic(
                 os.path.join(slug_dir, "source.json"),
                 {"sf_dir": abs_sf, "table": f"orders#{ns}",
                  "buckets": files, "fp": fp},
@@ -3035,9 +3002,7 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
             _gc_superseded_layouts(
                 spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
             )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return slug_dir, ddl
 
 
@@ -3137,10 +3102,6 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
     Returns (slug_dir, ddl)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import (
         gc_layout_versions,
         publish_layout_version,
@@ -3168,10 +3129,10 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
     if (
         ptr is not None
         and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not os.path.exists(os.path.join(slug_dir, "superseded.json"))
+        and not commit.tombstoned(slug_dir)
     ):
         return slug_dir, ddl
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
         gc_layout_versions(slug_dir)
         cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
         if not (
@@ -3217,7 +3178,7 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
                 extra={"batch": None, "ddl": ddl},
                 stats_cols=("o_custkey", "o_orderdate", "o_orderkey"),
             )
-            _write_json_atomic(
+            commit.write_json_atomic(
                 os.path.join(slug_dir, "source.json"),
                 {"sf_dir": abs_sf, "table": f"orders#{ns}",
                  "buckets": files, "fp": fp},
@@ -3225,9 +3186,7 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
             _gc_superseded_layouts(
                 spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
             )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return slug_dir, ddl
 
 
@@ -3325,10 +3284,6 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
     hash folds BOTH source fingerprints. Returns (slug_dir, slug)."""
     import hashlib
 
-    from pycaim_spark.operators.dedup import (
-        _store_write_lock,
-        _write_json_atomic,
-    )
     from pycaim_spark.operators.layout import slug_write_lock
     from pycaim_spark.queries.relational import _SCRATCH
 
@@ -3346,11 +3301,9 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
         os.path.exists(os.path.join(slug_dir, f"{t}_c", "_SUCCESS"))
         for t in ("orders", "lineitem")
     )
-    if done and not os.path.exists(
-        os.path.join(slug_dir, "superseded.json")
-    ):
+    if done and not commit.tombstoned(slug_dir):
         return slug_dir, slug
-    with _store_write_lock(layout_root), slug_write_lock(slug_dir):
+    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
         for table, key in (
             ("orders", "o_orderkey"), ("lineitem", "l_orderkey"),
         ):
@@ -3369,7 +3322,7 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
                 .saveAsTable(tmp_name)
             )
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        _write_json_atomic(
+        commit.write_json_atomic(
             os.path.join(slug_dir, "source.json"),
             {"sf_dir": abs_sf, "table": "orders#mrc",
              "buckets": buckets, "fp": fps},
@@ -3377,9 +3330,7 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
         _gc_superseded_layouts(
             spark, layout_root, slug, abs_sf, "orders#mrc", fps
         )
-        tomb = os.path.join(slug_dir, "superseded.json")
-        if os.path.exists(tomb):
-            os.remove(tomb)
+        commit.clear_tombstone(slug_dir)
     return slug_dir, slug
 
 
