@@ -93,6 +93,18 @@ def resolve_layout_rel(slug_dir: str, rel: str) -> tuple[str, dict | None]:
     return os.path.join(slug_dir, rel), None
 
 
+def rebucket_complete(ptr: dict | None) -> bool:
+    """True when the pointer records a FINISHED re-bucket: every output
+    unit ``range(min(from, to))`` of its ``rebucket`` record is in
+    ``done``. A finished rel is a valid bucketed table at ``to``
+    buckets; one mid-re-bucket mixes two bucket schemes and is neither
+    attached bucketed nor used as a merge base."""
+    rb = (ptr or {}).get("rebucket") or None
+    return bool(rb) and sorted(rb.get("done", [])) == list(
+        range(min(rb["from"], rb["to"]))
+    )
+
+
 def _stat_json(v):
     """JSON-encode one footer statistic. Timestamps/dates become ISO
     strings — fixed-format same-zone ISO-8601 compares lexicographically

@@ -69,8 +69,6 @@ EXECUTES_AT_BUILD = {
 BUILD_JOBS_OK = {
     "join_dpp",               # writes the status-partitioned fact, then
                               # reads it back (partition discovery)
-    "layout_time_travel",     # reads the as-of snapshot dir it resolved
-    "layout_time_travel_ts",  # (spark.read.parquet footer-schema job)
     "layout_zorder_skipping", # collects the custkey min/max that size the
                               # query rectangle
     "sim_ivf",                # train the ANN index per call from

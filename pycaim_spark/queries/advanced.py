@@ -9,7 +9,11 @@ applies identically; the SQL parser feeds the same Catalyst pipeline).
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
 
 import pyspark.sql.functions as F
 
@@ -20,6 +24,21 @@ from pycaim_spark.catalog import (
 )
 from pycaim_spark.functions.exact import cents, fsum
 from pycaim_spark.operators import commit
+from pycaim_spark.operators.layout import (
+    gc_layout_versions,
+    load_layout_pointer,
+    publish_layout_version,
+    rebucket_complete,
+    resolve_layout_rel,
+    rewrite_layout_pointer,
+    slug_write_lock,
+    tombstone_layout_dir,
+)
+from pycaim_spark.operators.merge import (
+    bucket_files,
+    delta_touched_buckets,
+    plan_bucket_local_merge,
+)
 from pycaim_spark.registry import register
 from pycaim_spark.session import configure_session
 
@@ -148,7 +167,183 @@ def tpch_q5(spark, sf_dir):
     return spark.sql(_Q5_SQL)
 
 
-def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
+# --- The slug lifecycle every bucketed-layout builder below shares ------
+# A layout slug is a content-addressed dir under the scratch root. A
+# builder checks it warm without a lock (`_warm`), otherwise builds it
+# cold under the root flock (`_cold_build`); a motion on a built slug
+# runs under its slug lock (`_slug_motion`) and commits each rel
+# version through `_publish`. Builders keep only their own Spark writes,
+# CDC/split/coalesce semantics and pointer-state conditions.
+
+#: Default bucket count of the orderkey layouts.
+_BUCKETS = 32
+#: The two facts the orderkey layouts bucket, with their bucket keys.
+_FACTS = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
+
+
+def _layout_slug(sf_dir, n: int, ns: str | None = None,
+                 tables: tuple[str, ...] = ("orders",)):
+    """The content address of a layout slug:
+    ``md5("{abs sf_dir}:{n}[:{ns}]:{fp}")[:8]``, where ``n`` is the
+    bucket (or file) count, ``ns`` the namespace that keeps derived
+    layouts of the same source apart, and ``fp`` the source tables'
+    file fingerprints, ``:``-joined when one slug spans several tables.
+    Returns (slug, slug_dir, fp)."""
+    from pycaim_spark.queries.relational import _SCRATCH
+
+    abs_sf = os.path.abspath(sf_dir)
+    fp = ":".join(
+        _layout_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
+        for t in tables
+    )
+    ident = f"{abs_sf}:{n}:{fp}" if ns is None else f"{abs_sf}:{n}:{ns}:{fp}"
+    slug = hashlib.md5(ident.encode()).hexdigest()[:8]
+    return slug, os.path.join(_SCRATCH, "bucketed_tpch", slug), fp
+
+
+def _warm(spark, slug_dir, *data_dirs, name=None, attached=True) -> bool:
+    """The lock-free warm check, around which each builder puts its own
+    pointer-state condition: every data dir has ``_SUCCESS``, the slug
+    carries no tombstone (a visible one must route through the locked
+    path, which clears it, or a later GC pass would delete files this
+    session serves) and, when ``name`` is given, the catalog table
+    exists and (``attached``) this session attached it over the first
+    data dir."""
+    return (
+        all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in data_dirs)
+        and not commit.tombstoned(slug_dir)
+        and (
+            name is None
+            or (
+                (not attached or _ATTACHED.get(name) == data_dirs[0])
+                and spark.catalog.tableExists(name)
+            )
+        )
+    )
+
+
+def _drop_stage(spark, sname: str, stage: str) -> None:
+    """Drop a motion's stage table and its dir (unpublished by
+    construction)."""
+    spark.sql(f"DROP TABLE IF EXISTS {sname}")
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def _slug_motion(spark, slug_dir, rel=None, stage=None):
+    """The motion preamble: take the slug write lock, run the version
+    GC and crash sweep, wipe the motion's ``stage`` = (table, dir)
+    leftovers, then re-resolve ``rel`` under the lock. Yields
+    (current dir, pointer), or None without ``rel``."""
+    with slug_write_lock(slug_dir):
+        gc_layout_versions(slug_dir)
+        if stage is not None:
+            _drop_stage(spark, *stage)
+        yield resolve_layout_rel(slug_dir, rel) if rel else None
+
+
+def _cold_build(spark, slug_dir, fp, source: str, n: int, sf_dir,
+                built, build, attach=None) -> None:
+    """The cold build of a slug: root flock → slug motion preamble →
+    re-test ``built()`` (the double-check: a concurrent builder that
+    lost the lock race finds the winner's files) → ``build()`` →
+    ``source.json`` provenance marker → `_gc_superseded_layouts` →
+    ``attach()`` → clear the slug tombstone. A built slug without a
+    marker (a pre-r13 build, or a crash before the marker) gets it
+    backfilled so GC can reason about it. Clearing the tombstone
+    resurrects a slug this caller re-derived from the CURRENT
+    fingerprint: its files are valid by construction, and a left
+    tombstone would let a later GC pass delete a layout the catalog
+    serves."""
+    root = os.path.dirname(slug_dir)
+    abs_sf = os.path.abspath(sf_dir)
+    marker = os.path.join(slug_dir, "source.json")
+    meta = {"sf_dir": abs_sf, "table": source, "buckets": n, "fp": fp}
+    with commit.store_lock(root), _slug_motion(spark, slug_dir):
+        if not built():
+            build()
+            commit.write_json_atomic(marker, meta)
+            _gc_superseded_layouts(
+                spark, root, os.path.basename(slug_dir), abs_sf, source, fp
+            )
+        elif not os.path.exists(marker):
+            commit.write_json_atomic(marker, meta)
+        if attach is not None:
+            attach()
+        commit.clear_tombstone(slug_dir)
+
+
+def _publish(spark, slug_dir, rel, cur, extra: dict, *, src_dir=None,
+             skip=(), staged=(), carry_stats=None, stage=None,
+             retire: bool = True):
+    """The publish step of a motion: publish ``rel``'s next version from
+    ``src_dir`` (default: the displaced dir) minus ``skip`` plus
+    ``staged``, with ``extra`` as the commit record and the displaced
+    pointer's ``retained`` pins carried forward unless ``extra`` sets
+    its own; then drop the ``stage`` and tombstone the displaced dir
+    (``retire=False`` leaves that to the caller). ``cur`` is the
+    (dir, pointer) the motion resolved under its lock. Returns
+    (version dir, pointer)."""
+    old_dir, old_ptr = cur
+    retained = (old_ptr or {}).get("retained")
+    if retained and "retained" not in extra:
+        extra["retained"] = list(retained)
+    vdir, ptr = publish_layout_version(
+        slug_dir, rel, src_dir=old_dir if src_dir is None else src_dir,
+        skip_names=set(skip), staged_files=list(staged), extra=extra,
+        stats_cols=_LAYOUT_STATS_COLS, carry_stats=carry_stats,
+    )
+    if stage is not None:
+        _drop_stage(spark, *stage)
+    if retire and os.path.isdir(old_dir) and old_dir != vdir:
+        tombstone_layout_dir(old_dir)
+    return vdir, ptr
+
+
+def _merged_files(plan: dict):
+    """(displaced file names, staged paths) of a bucket-local merge."""
+    return (
+        {
+            os.path.basename(f)
+            for b in plan["touched"] for f in plan["live"].get(b, [])
+        },
+        [f for fs in plan["staged"].values() for f in fs],
+    )
+
+
+def _ddl(fields) -> str:
+    """DDL column list of a schema (or of an iterable of its fields)."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+
+
+def _save_bucketed(df, n: int, key: str, path: str, table: str,
+                   mode: str = "overwrite") -> None:
+    """Write ``df`` as catalog table ``table`` at ``path``, bucketed and
+    sorted on ``key`` into ``n`` buckets; the ``repartition(n, key)``
+    first makes each bucket exactly one file."""
+    (
+        df.repartition(n, F.col(key))
+        .write.mode(mode)
+        .bucketBy(n, key)
+        .sortBy(key)
+        .option("path", path)
+        .saveAsTable(table)
+    )
+
+
+def _bucket_clause(key: str, buckets: int) -> str:
+    return f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
+
+
+def _create_table(spark, name, ddl, path, clause="") -> None:
+    """Attach an external parquet table over ``path``; ``clause`` is
+    its `_bucket_clause`, or empty for a plain table."""
+    spark.sql(
+        f"CREATE TABLE {name} ({ddl}) USING PARQUET {clause}LOCATION '{path}'"
+    )
+
+
+def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = _BUCKETS):
     """PERSISTED lineitem/orders layout bucketed (and per-bucket sorted)
     on orderkey — the standard 100 TB answer to a recurring fact-fact
     join: pay one shuffle at ingest, then every orderkey join is a
@@ -215,26 +410,13 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
     is the protection. flock is host-local; on an object store the
     build is a table-format snapshot commit and the catalog provides
     the lock (same caveat as the signature store)."""
-    import hashlib
-
-    from pycaim_spark.operators.layout import slug_write_lock
-    from pycaim_spark.queries.relational import _SCRATCH
-
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
-
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
     out = {}
-    for table, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        fp = _layout_fingerprint(src)
-        slug = hashlib.md5(
-            f"{abs_sf}:{buckets}:{fp}".encode()
-        ).hexdigest()[:8]
+    for table, key in _FACTS:
+        slug, slug_dir, fp = _layout_slug(sf_dir, buckets, tables=(table,))
         name = f"tpch_b_{table}_{slug}"
-        slug_dir = os.path.join(layout_root, slug)
         path = os.path.join(slug_dir, table)
         # Lock-free warm fast path (ADVICE r13): content-addressed slug +
         # immutable files once _SUCCESS exists, so no lock is needed to
@@ -246,64 +428,28 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = 32):
         # fingerprint, so its files are valid by construction. Same-bytes
         # bucket-count variants are SIBLINGS since r16 (fp-keyed GC) and
         # no longer tombstone each other.
-        if (
-            os.path.exists(os.path.join(path, "_SUCCESS"))
-            and not commit.tombstoned(slug_dir)
-            and spark.catalog.tableExists(name)
-        ):
-            out[table] = spark.table(name)
-            continue
-        with commit.store_lock(layout_root), slug_write_lock(slug_dir):
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                # Cold build. A concurrent builder that lost the lock race
-                # lands in the re-attach branch below instead (the
-                # _SUCCESS re-test above IS the double-check).
+        if not _warm(spark, slug_dir, path, name=name, attached=False):
+
+            def build():
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
-                (
-                    load_table(spark, sf_dir, table)
-                    .repartition(buckets, F.col(key))
-                    .write.mode("overwrite")
-                    .bucketBy(buckets, key)
-                    .sortBy(key)
-                    .option("path", path)
-                    .saveAsTable(name)
+                _save_bucketed(
+                    load_table(spark, sf_dir, table), buckets, key, path,
+                    name,
                 )
-                commit.write_json_atomic(
-                    os.path.join(slug_dir, "source.json"),
-                    {"sf_dir": abs_sf, "table": table, "buckets": buckets,
-                     "fp": fp},
-                )
-                _gc_superseded_layouts(
-                    spark, layout_root, slug, abs_sf, table, fp
-                )
-            if not spark.catalog.tableExists(name):
-                df = load_table(spark, sf_dir, table)
-                ddl = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in df.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {buckets} BUCKETS LOCATION '{path}'"
-                )
-                # Backfill the provenance marker for pre-r13 (marker-less)
-                # slugs on attach, so GC can reason about them (ADVICE
-                # r13: marker-less slugs were otherwise never collected).
-                marker = os.path.join(slug_dir, "source.json")
-                if not os.path.exists(marker):
-                    commit.write_json_atomic(
-                        marker,
-                        {"sf_dir": abs_sf, "table": table,
-                         "buckets": buckets, "fp": fp},
+
+            def attach():
+                if not spark.catalog.tableExists(name):
+                    _create_table(
+                        spark, name,
+                        _ddl(load_table(spark, sf_dir, table).schema),
+                        path, _bucket_clause(key, buckets),
                     )
-            # Resurrect a tombstoned-but-not-yet-collected slug we are
-            # (re-)serving (e.g. a raced supersede within the grace
-            # period): the slug was computed from the CURRENT
-            # fingerprint, so its files are not stale for this caller,
-            # and leaving the tombstone would let a later GC pass delete
-            # a slug this catalog entry actively serves.
-            commit.clear_tombstone(slug_dir)
+
+            _cold_build(
+                spark, slug_dir, fp, table, buckets, sf_dir,
+                built=lambda: os.path.exists(os.path.join(path, "_SUCCESS")),
+                build=build, attach=attach,
+            )
         out[table] = spark.table(name)
     return out["lineitem"], out["orders"]
 
@@ -323,7 +469,6 @@ def _gc_superseded_layouts(
     what keeps an in-progress concurrent build safe from the marker-less
     sweep: its slug dir is seconds old."""
     import json
-    import shutil
     import time
 
     grace = commit.layout_grace()
@@ -392,10 +537,7 @@ def _gc_superseded_layouts(
             # tombstone at motion end; an abandoned slug collects on a
             # later pass). Blocking here would invert the root→slug
             # lock order and risk a cycle; try-lock cannot.
-            from pycaim_spark.operators.layout import (
-                remove_slug_lock_file,
-                slug_write_lock,
-            )
+            from pycaim_spark.operators.layout import remove_slug_lock_file
 
             with slug_write_lock(sib_dir, blocking=False) as lk:
                 if lk.acquired:
@@ -427,11 +569,7 @@ def _attach_rel_table(
     attaches a plain parquet table (the half-split re-bucket state,
     where the dir mixes two bucket schemes and Spark must not trust
     either)."""
-    cluster = (
-        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
-        if bucketed
-        else ""
-    )
+    cluster = _bucket_clause(key, buckets) if bucketed else ""
     spec = cluster + ddl
     if (
         _ATTACHED.get(name) == path
@@ -440,10 +578,7 @@ def _attach_rel_table(
     ):
         return
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-        f"{cluster}LOCATION '{path}'"
-    )
+    _create_table(spark, name, ddl, path, cluster)
     _ATTACHED[name] = path
     _ATTACHED_SPEC[name] = spec
 
@@ -463,26 +598,11 @@ def _rebuild_pristine_rel(
     so previously-pinned snapshots become ordinary tombstones and
     grace-collect; `layout_time_travel` self-heals by replaying and
     re-pinning). Returns (new version dir, new pointer)."""
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        publish_layout_version,
-        resolve_layout_rel,
-        tombstone_layout_dir,
-    )
-
     tmp = os.path.join(slug_dir, f"{rel}_rebuild_stage")
     tmp_name = f"tpch_rebuild_{rel}_{slug}"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        spark.read.parquet(src_parquet_dir)
-        .repartition(buckets, F.col(key))
-        .write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", tmp)
-        .saveAsTable(tmp_name)
+    _drop_stage(spark, tmp_name, tmp)
+    _save_bucketed(
+        spark.read.parquet(src_parquet_dir), buckets, key, tmp, tmp_name
     )
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
     old_dir, _old = resolve_layout_rel(slug_dir, rel)
@@ -496,7 +616,7 @@ def _rebuild_pristine_rel(
 
 
 def _incremental_orderkey_layout(
-    spark, sf_dir, buckets: int = 32, compacted: bool = False,
+    spark, sf_dir, buckets: int = _BUCKETS, compacted: bool = False,
     ns: str = "incr", tables: tuple[str, ...] = ("lineitem", "orders"),
 ):
     """Incremental lifecycle for the orderkey-bucketed layout (round 14):
@@ -537,31 +657,19 @@ def _incremental_orderkey_layout(
     mutates the compacted table other queries serve), so the main
     layout's GC never treats these as superseding its slugs and vice
     versa. Returns (lineitem_df, orders_df) for the requested state."""
-    import hashlib
-
-    from pycaim_spark.operators.layout import slug_write_lock
-    from pycaim_spark.queries.relational import _SCRATCH
-
     # The warm path reads no fixture table, so load_table's runtime confs
     # are applied here for every layout query built on this helper.
     configure_session(spark)
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
     out = {}
-    for table, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+    for table, key in _FACTS:
         if table not in tables:
             continue
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        fp = _layout_fingerprint(src)
-        slug = hashlib.md5(
-            f"{abs_sf}:{buckets}:{ns}:{fp}".encode()
-        ).hexdigest()[:8]
+        slug, slug_dir, fp = _layout_slug(sf_dir, buckets, ns, (table,))
         name = f"tpch_ia_{table}_{slug}"
         cname = f"tpch_ic_{table}_{slug}"
-        slug_dir = os.path.join(layout_root, slug)
         path = os.path.join(slug_dir, table)
         cpath = os.path.join(slug_dir, f"{table}_c")
         append_marker = os.path.join(slug_dir, f"append_{table}.json")
@@ -571,11 +679,8 @@ def _incremental_orderkey_layout(
         # atomic `{table}_c_current.json` pointer (operators/layout.py),
         # so "the compacted state" is whatever the pointer resolves to —
         # the plain dir only for never-upserted slugs.
-        from pycaim_spark.operators.layout import resolve_layout_rel
-
         crel = f"{table}_c"
         cdir, cptr = resolve_layout_rel(slug_dir, crel)
-        want_success = os.path.join(cdir if compacted else path, "_SUCCESS")
         # Lock-free warm fast path, as in _bucketed_orderkey_layout; the
         # appended state additionally requires the append marker (the
         # base build's _SUCCESS alone is the pre-append state). The
@@ -584,186 +689,128 @@ def _incremental_orderkey_layout(
         # these entries would otherwise keep serving a slug another
         # process tombstoned — never passing through the locked path
         # that resurrects it — until GC deletes the files under the
-        # actively-served table; a visible tombstone must route through
-        # the locked path below, which clears it.
-        if (
-            os.path.exists(want_success)
-            and os.path.exists(append_marker)
-            and not commit.tombstoned(slug_dir)
-            and (
-                not compacted
-                or cptr is None
-                or _ATTACHED.get(cname) == cdir
-            )
-            and spark.catalog.tableExists(want_name)
+        # actively-served table.
+        if os.path.exists(append_marker) and _warm(
+            spark, slug_dir, cdir if compacted else path, name=want_name,
+            attached=compacted and cptr is not None,
         ):
             out[table] = spark.table(want_name)
             continue
         full = load_table(spark, sf_dir, table)
-        with commit.store_lock(layout_root), slug_write_lock(slug_dir):
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                import shutil
 
-                spark.sql(f"DROP TABLE IF EXISTS {name}")
-                # A base rebuild invalidates everything DERIVED from the
-                # old base (r14 ADVICE): a surviving append marker would
-                # make the `not exists(append_marker)` guard below skip
-                # re-inserting the delta — the layout would silently
-                # serve the ~86% base as the full corpus — and a
-                # surviving compacted rewrite would serve the old bytes.
-                if os.path.exists(append_marker):
-                    os.remove(append_marker)
-                spark.sql(f"DROP TABLE IF EXISTS {cname}")
-                shutil.rmtree(cpath, ignore_errors=True)
-                # ... and the UPSERT derivatives of the compacted state
-                # (ADVICE r15): surviving upsert markers would warm-path
-                # a stale orders_u* clone (or, in-place, skip re-merging
-                # the rebuilt compacted table). Markers first (so a crash
-                # mid-cleanup fails closed: no marker → full re-derive),
-                # then tables, then dirs; the globs are no-ops for
-                # tables that never had an upsert.
-                import glob as _glob
-
-                for um in _glob.glob(
-                    os.path.join(slug_dir, "upsert*_orders.json")
+        def build():
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            # A base rebuild invalidates everything DERIVED from the
+            # old base (r14 ADVICE): a surviving append marker would
+            # make the `not exists(append_marker)` guard below skip
+            # re-inserting the delta — the layout would silently
+            # serve the ~86% base as the full corpus — and a
+            # surviving compacted rewrite would serve the old bytes.
+            if os.path.exists(append_marker):
+                os.remove(append_marker)
+            spark.sql(f"DROP TABLE IF EXISTS {cname}")
+            shutil.rmtree(cpath, ignore_errors=True)
+            # ... and the UPSERT derivatives of the compacted state
+            # (ADVICE r15): surviving upsert markers would warm-path
+            # a stale orders_u* clone (or, in-place, skip re-merging
+            # the rebuilt compacted table). Markers first (so a crash
+            # mid-cleanup fails closed: no marker → full re-derive),
+            # then tables, then dirs; the globs are no-ops for
+            # tables that never had an upsert.
+            for um in glob.glob(
+                os.path.join(slug_dir, "upsert*_orders.json")
+            ):
+                sfx = os.path.basename(um)[
+                    len("upsert"):-len("_orders.json")
+                ]
+                for t in (
+                    f"tpch_iu{sfx}_orders_{slug}",
+                    f"tpch_iu{sfx}_stage_orders_{slug}",
+                    # stream stage too (ADVICE r16 #5: the wipe was
+                    # asymmetric with the merge path's cleanup)
+                    f"tpch_iu{sfx}_stream_stage_orders_{slug}",
                 ):
-                    sfx = os.path.basename(um)[
-                        len("upsert"):-len("_orders.json")
-                    ]
-                    for t in (
-                        f"tpch_iu{sfx}_orders_{slug}",
-                        f"tpch_iu{sfx}_stage_orders_{slug}",
-                        # stream stage too (ADVICE r16 #5: the wipe was
-                        # asymmetric with the merge path's cleanup)
-                        f"tpch_iu{sfx}_stream_stage_orders_{slug}",
-                    ):
-                        spark.sql(f"DROP TABLE IF EXISTS {t}")
-                    os.remove(um)
-                # r17 snapshot-pointer era: the rebuild also invalidates
-                # rel POINTERS and version dirs derived from the old
-                # base. Dirs are TOMBSTONED FIRST (never rmtree'd —
-                # another session's lockless reader may still hold
-                # them, VERDICT r16 #2; `gc_layout_versions` collects
-                # them after grace), and only then the pointers are
-                # removed: a crash between the two leaves tombstoned
-                # dirs with their grace window intact, whereas the
-                # reverse order would leave pointer-less untombstoned
-                # version dirs that the unpointed-sweep deletes
-                # immediately — under a reader that resolved them
-                # before the pointer vanished.
-                from pycaim_spark.operators.layout import (
-                    tombstone_layout_dir as _tomb_dir,
-                )
+                    spark.sql(f"DROP TABLE IF EXISTS {t}")
+                os.remove(um)
+            # r17 snapshot-pointer era: the rebuild also invalidates
+            # rel POINTERS and version dirs derived from the old
+            # base. Dirs are TOMBSTONED FIRST (never rmtree'd —
+            # another session's lockless reader may still hold
+            # them, VERDICT r16 #2; `gc_layout_versions` collects
+            # them after grace), and only then the pointers are
+            # removed: a crash between the two leaves tombstoned
+            # dirs with their grace window intact, whereas the
+            # reverse order would leave pointer-less untombstoned
+            # version dirs that the unpointed-sweep deletes
+            # immediately — under a reader that resolved them
+            # before the pointer vanished.
+            for ud in glob.glob(
+                os.path.join(slug_dir, f"{table}_c_v[0-9]*")
+            ) + glob.glob(
+                os.path.join(slug_dir, "orders_u*")
+            ) + glob.glob(os.path.join(slug_dir, "orders_c_old-*")):
+                if os.path.isdir(ud):
+                    tombstone_layout_dir(ud)
+            for pf in glob.glob(os.path.join(slug_dir, "*_current.json")):
+                os.remove(pf)
+            _save_bucketed(
+                full.filter(F.col(key) % 7 != 0), buckets, key, path, name
+            )
 
-                for ud in _glob.glob(
-                    os.path.join(slug_dir, f"{table}_c_v[0-9]*")
-                ) + _glob.glob(
-                    os.path.join(slug_dir, "orders_u*")
-                ) + _glob.glob(os.path.join(slug_dir, "orders_c_old-*")):
-                    if os.path.isdir(ud):
-                        _tomb_dir(ud)
-                for pf in _glob.glob(
-                    os.path.join(slug_dir, "*_current.json")
-                ):
-                    os.remove(pf)
-                (
-                    full.filter(F.col(key) % 7 != 0)
-                    .repartition(buckets, F.col(key))
-                    .write.mode("overwrite")
-                    .bucketBy(buckets, key)
-                    .sortBy(key)
-                    .option("path", path)
-                    .saveAsTable(name)
-                )
-                commit.write_json_atomic(
-                    os.path.join(slug_dir, "source.json"),
-                    {"sf_dir": abs_sf, "table": f"{table}#{ns}",
-                     "buckets": buckets, "fp": fp},
-                )
-                _gc_superseded_layouts(
-                    spark, layout_root, slug, abs_sf, f"{table}#{ns}",
-                    fp,
-                )
+        def attach():
             if not spark.catalog.tableExists(name):
-                ddl = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in full.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {buckets} BUCKETS LOCATION '{path}'"
+                _create_table(
+                    spark, name, _ddl(full.schema), path,
+                    _bucket_clause(key, buckets),
                 )
             if not os.path.exists(append_marker):
-                (
-                    full.filter(F.col(key) % 7 == 0)
-                    .repartition(buckets, F.col(key))
-                    .write.mode("append")
-                    .bucketBy(buckets, key)
-                    .sortBy(key)
-                    .option("path", path)
-                    .saveAsTable(name)
+                _save_bucketed(
+                    full.filter(F.col(key) % 7 == 0), buckets, key, path,
+                    name, mode="append",
                 )
                 commit.write_json_atomic(append_marker, {"appended": True})
-            if compacted:
-                cdir, cptr = resolve_layout_rel(slug_dir, crel)
-                if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
-                    if cptr is not None:
-                        # Pointer to a missing/broken version dir: crash
-                        # debris (the publish machinery tombstones a dir
-                        # before any reader could lose it, so a live
-                        # pointer normally always resolves). Drop the
-                        # pointer and rebuild the plain dir.
-                        os.remove(
-                            os.path.join(slug_dir, f"{crel}_current.json")
-                        )
-                        if os.path.isdir(cdir):
-                            from pycaim_spark.operators.layout import (
-                                tombstone_layout_dir as _tomb_cdir,
-                            )
+            if not compacted:
+                return
+            cdir, cptr = resolve_layout_rel(slug_dir, crel)
+            if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
+                if cptr is not None:
+                    # Pointer to a missing/broken version dir: crash
+                    # debris (the publish machinery tombstones a dir
+                    # before any reader could lose it, so a live
+                    # pointer normally always resolves). Drop the
+                    # pointer and rebuild the plain dir.
+                    os.remove(os.path.join(slug_dir, f"{crel}_current.json"))
+                    tombstone_layout_dir(cdir)
+                    cptr = None
+                spark.sql(f"DROP TABLE IF EXISTS {cname}")
+                _save_bucketed(
+                    spark.read.parquet(path), buckets, key, cpath, cname
+                )
+                cdir = cpath
+            # A versioned compacted state may carry an EVOLVED schema
+            # (the schema-evolution MERGE arm records its DDL in the
+            # pointer); attach with it so the new column survives
+            # re-attachment from a fresh session. A rel MID-re-bucket
+            # mixes two bucket schemes — attach PLAIN (correct for
+            # any state); a COMPLETED re-bucket is a valid bucketed
+            # table at its finer count, so attach with that trust
+            # (the composed migrate-then-CDC lifecycle keeps its
+            # Exchange-free plans on warm serves).
+            crb = (cptr or {}).get("rebucket") or None
+            crb_done = rebucket_complete(cptr)
+            _attach_rel_table(
+                spark, cname, cdir,
+                (cptr.get("ddl") if cptr else None) or _ddl(full.schema),
+                key,
+                crb["to"] if crb_done else buckets,
+                bucketed=crb_done or not crb,
+            )
 
-                            _tomb_cdir(cdir)
-                        cdir, cptr = cpath, None
-                    spark.sql(f"DROP TABLE IF EXISTS {cname}")
-                    (
-                        spark.read.parquet(path)
-                        .repartition(buckets, F.col(key))
-                        .write.mode("overwrite")
-                        .bucketBy(buckets, key)
-                        .sortBy(key)
-                        .option("path", cpath)
-                        .saveAsTable(cname)
-                    )
-                    cdir = cpath
-                base_ddl = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in full.schema.fields
-                )
-                # A versioned compacted state may carry an EVOLVED schema
-                # (the schema-evolution MERGE arm records its DDL in the
-                # pointer); attach with it so the new column survives
-                # re-attachment from a fresh session. A rel MID-re-bucket
-                # mixes two bucket schemes — attach PLAIN (correct for
-                # any state); a COMPLETED re-bucket is a valid bucketed
-                # table at its finer count, so attach with that trust
-                # (the composed migrate-then-CDC lifecycle keeps its
-                # Exchange-free plans on warm serves).
-                crb = (cptr or {}).get("rebucket") or None
-                crb_done = bool(crb) and sorted(
-                    crb.get("done", [])
-                ) == list(range(min(crb["from"], crb["to"])))
-                _attach_rel_table(
-                    spark, cname, cdir,
-                    (cptr.get("ddl") if cptr else None) or base_ddl,
-                    key,
-                    crb["to"] if crb_done else buckets,
-                    bucketed=crb_done or not crb,
-                )
-            # Same resurrection rule as the one-shot layout: a slug this
-            # call re-derived from the CURRENT fingerprint is valid by
-            # construction — clear any tombstone so GC can't delete a
-            # layout the catalog is actively serving.
-            commit.clear_tombstone(slug_dir)
+        _cold_build(
+            spark, slug_dir, fp, f"{table}#{ns}", buckets, sf_dir,
+            built=lambda: os.path.exists(os.path.join(path, "_SUCCESS")),
+            build=build, attach=attach,
+        )
         out[table] = spark.table(want_name)
     return out.get("lineitem"), out.get("orders")
 
@@ -841,10 +888,41 @@ _UPSERT_INS_OFFSET = 1_000_000_000
 _LAYOUT_STATS_COLS = ("o_orderkey", "o_orderdate")
 
 
+def _cdc_updates(df, upd_pred: str):
+    """A CDC batch's update rows: ``upd_pred`` matches, o_orderdate
+    shifted +30 days."""
+    return df.filter(F.expr(upd_pred)).withColumn(
+        "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 30 DAY")
+    )
+
+
+def _cdc_inserts(full, ins_pred: str):
+    """A CDC batch's insert rows: ``ins_pred`` matches, cloned under
+    ``o_orderkey + 10^9``."""
+    return full.filter(F.expr(ins_pred)).withColumn(
+        "o_orderkey", F.col("o_orderkey") + F.lit(_UPSERT_INS_OFFSET)
+    )
+
+
+def _cdc_batch(full, upd_pred, del_pred, ins_pred, buckets: int):
+    """(insert rows or None, touched buckets) of a predicate-derived CDC
+    batch over ``full``: the update/delete keys plus the inserts' new
+    keys, hashed to ``buckets``."""
+    key = "o_orderkey"
+    cdc_keys = full.filter(F.expr(f"({upd_pred}) OR ({del_pred})")).select(
+        key
+    )
+    ins_rows = None
+    if ins_pred is not None:
+        ins_rows = _cdc_inserts(full, ins_pred)
+        cdc_keys = cdc_keys.unionByName(ins_rows.select(key))
+    return ins_rows, delta_touched_buckets(cdc_keys, key, buckets)
+
+
 def _upserted_orderkey_layout(
     spark,
     sf_dir,
-    buckets: int = 32,
+    buckets: int = _BUCKETS,
     upd_pred: str = _UPSERT_UPD,
     del_pred: str = _UPSERT_DEL,
     ins_pred: str | None = _UPSERT_INS,
@@ -921,26 +999,6 @@ def _upserted_orderkey_layout(
     of the table staged for the same 15-key batch). Returns
     (lineitem_df, orders_upserted_df).
     """
-    import glob as _glob
-    import hashlib
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        load_layout_pointer,
-        publish_layout_version,
-        resolve_layout_rel,
-        rewrite_layout_pointer,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import (
-        bucket_files,
-        delta_touched_buckets,
-        plan_bucket_local_merge,
-    )
-    from pycaim_spark.queries.relational import _SCRATCH
-
     ns = f"ip{suffix}" if inplace else "incr"
     # lineitem always comes from the SHARED compacted layout (the merge
     # never touches it; co-located SMJs only require both sides bucketed
@@ -954,13 +1012,7 @@ def _upserted_orderkey_layout(
         spark, sf_dir, buckets=buckets, compacted=True, ns=ns,
         tables=("orders",),
     )
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:{ns}:{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
+    slug, slug_dir, _fp = _layout_slug(sf_dir, buckets, ns)
     rel = "orders_c" if inplace else f"orders_u{suffix}"
     uname = (
         f"tpch_ic_orders_{slug}" if inplace
@@ -968,10 +1020,7 @@ def _upserted_orderkey_layout(
     )
     key = "o_orderkey"
     full = load_table(spark, sf_dir, "orders")
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    base_ddl = _ddl(full.schema)
 
     def _base_state():
         """The upstream rel's committed identity (ADVICE r16 #3): a
@@ -997,32 +1046,26 @@ def _upserted_orderkey_layout(
     cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
     # Lock-free warm fast path: committed pointer records this exact
     # batch, version dir intact, session attached over it.
-    if (
-        _current(ptr)
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-        and _ATTACHED.get(uname) == cur_dir
-        and spark.catalog.tableExists(uname)
-    ):
+    if _current(ptr) and _warm(spark, slug_dir, cur_dir, name=uname):
         return lib, spark.table(uname)
 
-    stage = os.path.join(slug_dir, f"orders_u{suffix}_stage")
-    sname = f"tpch_iu{suffix}_stage_orders_{slug}"
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    stage = (
+        f"tpch_iu{suffix}_stage_orders_{slug}",
+        os.path.join(slug_dir, f"orders_u{suffix}_stage"),
+    )
+    with _slug_motion(spark, slug_dir, rel) as (cur_dir, ptr):
         if not _current(ptr):
             # Stage leftovers are unpublished by construction — wipe
             # before re-deriving (ADVICE r16 #5: cleanup symmetric
             # across every branch).
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            shutil.rmtree(stage, ignore_errors=True)
+            _drop_stage(spark, *stage)
             legacy_marker = os.path.join(
                 slug_dir, f"upsert{suffix}_orders.json"
             )
             legacy_pending = os.path.join(
                 slug_dir, f"upsert_pending{suffix}_orders.json"
             )
+
             def _rb_state(p):
                 """(record, complete, effective bucket count) of a
                 source state. A COMPLETED re-bucket is a fully valid
@@ -1033,9 +1076,7 @@ def _upserted_orderkey_layout(
                 parent's key range and resurrect deleted keys — never a
                 valid base."""
                 rb = (p or {}).get("rebucket") or None
-                complete = bool(rb) and sorted(
-                    rb.get("done", [])
-                ) == list(range(min(rb["from"], rb["to"])))
+                complete = rebucket_complete(p)
                 return rb, complete, (rb["to"] if complete else buckets)
 
             # In-place staleness: a pointer committing a DIFFERENT batch
@@ -1068,7 +1109,7 @@ def _upserted_orderkey_layout(
             for lm in (legacy_marker, legacy_pending):
                 if os.path.exists(lm):
                     os.remove(lm)
-            for od in _glob.glob(
+            for od in glob.glob(
                 os.path.join(slug_dir, f"orders_u{suffix}_old-*")
             ):
                 shutil.rmtree(od, ignore_errors=True)
@@ -1094,16 +1135,17 @@ def _upserted_orderkey_layout(
             # over the raw corpus so the DuckDB oracle can reproduce the
             # identical batch in SQL; production callers hand
             # `plan_bucket_local_merge` their CDC stream's DataFrames.
-            cdc_keys = full.filter(
-                F.expr(f"({upd_pred}) OR ({del_pred})")
-            ).select(key)
-            ins_rows = None
-            if ins_pred is not None:
-                ins_rows = full.filter(F.expr(ins_pred)).withColumn(
-                    key, F.col(key) + F.lit(_UPSERT_INS_OFFSET)
-                )
-                cdc_keys = cdc_keys.unionByName(ins_rows.select(key))
-            touched = delta_touched_buckets(cdc_keys, key, eff_buckets)
+            ins_rows, touched = _cdc_batch(
+                full, upd_pred, del_pred, ins_pred, eff_buckets
+            )
+            # The own rel's displaced state (in-place: the source) and
+            # the commit record shared by both branches. A completed
+            # migration record travels with the table: attach logic
+            # keeps trusting the finer count across sessions and
+            # further CDC batches.
+            own = (cur_dir, ptr)
+            extra = {"batch": batch_spec, "touched": touched,
+                     "ddl": src_ddl}
             if not touched:
                 # Empty CDC batch at this scale (ADVICE r15): commit the
                 # no-op so re-runs warm-path.
@@ -1120,25 +1162,12 @@ def _upserted_orderkey_layout(
                         slug_dir, newptr["dir"]
                     )
                 else:
-                    old_own = resolve_layout_rel(slug_dir, rel)[0]
-                    extra = {"batch": batch_spec, "touched": [],
-                             "ddl": src_ddl}
-                    prior_ret = list(
-                        (load_layout_pointer(slug_dir, rel) or {})
-                        .get("retained") or []
-                    )
-                    if prior_ret:
-                        extra["retained"] = prior_ret
                     if rb_complete:
                         extra["rebucket"] = rb
-                    cur_dir, ptr = publish_layout_version(
-                        slug_dir, rel, src_dir=src_dir,
-                        skip_names=set(), staged_files=[],
-                        extra=extra, stats_cols=_LAYOUT_STATS_COLS,
+                    cur_dir, ptr = _publish(
+                        spark, slug_dir, rel, own, extra, src_dir=src_dir,
                         carry_stats=(src_ptr or {}).get("files"),
                     )
-                    if os.path.isdir(old_own) and old_own != cur_dir:
-                        tombstone_layout_dir(old_own)
             else:
                 live = bucket_files(src_dir)
                 touched_files = [
@@ -1149,10 +1178,7 @@ def _upserted_orderkey_layout(
                     if touched_files
                     else spark.createDataFrame([], src_ddl)
                 )
-                updates = cur.filter(F.expr(upd_pred)).withColumn(
-                    "o_orderdate",
-                    F.col("o_orderdate") + F.expr("INTERVAL 30 DAY"),
-                )
+                updates = _cdc_updates(cur, upd_pred)
                 if add_col is not None:
                     updates = updates.withColumn(
                         add_col[0], F.expr(add_col[1])
@@ -1178,61 +1204,28 @@ def _upserted_orderkey_layout(
                     buckets=eff_buckets,
                     upserts=upserts,
                     deletes=cur.filter(F.expr(del_pred)).select(key),
-                    stage_path=stage,
-                    stage_table=sname,
+                    stage_path=stage[1],
+                    stage_table=stage[0],
                     touched=touched,
                     evolve_schema=evolving,
                 )
-                ddl = src_ddl
                 if add_col is not None:
-                    newf = [
+                    extra["ddl"] += ", " + _ddl(
                         f for f in upserts.schema.fields
                         if f.name == add_col[0]
-                    ][0]
-                    ddl += f", {newf.name} {newf.dataType.simpleString()}"
-                staged_flat = [
-                    f for fs in plan["staged"].values() for f in fs
-                ]
-                replaced = {
-                    os.path.basename(f)
-                    for b in touched
-                    for f in live.get(b, [])
-                }
-                old_own = resolve_layout_rel(slug_dir, rel)[0]
-                extra = {"batch": batch_spec, "touched": touched,
-                         "ddl": ddl}
-                # Retention pins continue with the history they pin
-                # (time travel, r17): a CDC batch on top of a rel with
-                # retained snapshots must not unpin them.
-                prior_ret = list(
-                    (load_layout_pointer(slug_dir, rel) or {})
-                    .get("retained") or []
-                )
-                if prior_ret:
-                    extra["retained"] = prior_ret
+                    )
                 if rb_complete:
-                    # The completed migration record travels with the
-                    # table: attach logic keeps trusting the finer count
-                    # across sessions and further CDC batches.
                     extra["rebucket"] = rb
-                cur_dir, ptr = publish_layout_version(
-                    slug_dir, rel, src_dir=src_dir,
-                    skip_names=replaced, staged_files=staged_flat,
-                    extra=extra, stats_cols=_LAYOUT_STATS_COLS,
-                    carry_stats=(src_ptr or {}).get("files"),
+                skip, staged = _merged_files(plan)
+                cur_dir, ptr = _publish(
+                    spark, slug_dir, rel, own, extra, src_dir=src_dir,
+                    skip=skip, staged=staged,
+                    carry_stats=(src_ptr or {}).get("files"), stage=stage,
                 )
-                spark.sql(f"DROP TABLE IF EXISTS {sname}")
-                shutil.rmtree(stage, ignore_errors=True)
-                if os.path.isdir(old_own) and old_own != cur_dir:
-                    tombstone_layout_dir(old_own)
-        final_rb = (ptr or {}).get("rebucket") or None
-        final_complete = bool(final_rb) and sorted(
-            final_rb.get("done", [])
-        ) == list(range(min(final_rb["from"], final_rb["to"])))
         _attach_rel_table(
             spark, uname, cur_dir,
             (ptr or {}).get("ddl") or base_ddl, key,
-            final_rb["to"] if final_complete else buckets,
+            ptr["rebucket"]["to"] if rebucket_complete(ptr) else buckets,
         )
         commit.clear_tombstone(slug_dir)
     return lib, spark.table(uname)
@@ -1243,7 +1236,7 @@ def _upsert_stream_inplace(
     sf_dir,
     batches: list[tuple[str, str, str, str | None]],
     suffix: str = "st",
-    buckets: int = 32,
+    buckets: int = _BUCKETS,
     retain: bool = False,
 ):
     '''A STREAM of CDC batches applied IN PLACE to one bucketed table —
@@ -1281,45 +1274,18 @@ def _upsert_stream_inplace(
     is rewriting the pointer without that version, after which normal
     tombstone+grace GC collects it. Retention covers versions >= 1;
     the pre-history plain dir (version 0) expires on grace as always.'''
-    import hashlib
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        rewrite_layout_pointer,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import (
-        bucket_files,
-        delta_touched_buckets,
-        plan_bucket_local_merge,
-    )
-    from pycaim_spark.queries.relational import _SCRATCH
-
     ns = f"ip{suffix}"
     _incremental_orderkey_layout(
         spark, sf_dir, buckets=buckets, compacted=True, ns=ns,
         tables=("orders",),
     )
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:{ns}:{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
+    slug, slug_dir, _fp = _layout_slug(sf_dir, buckets, ns)
     rel = "orders_c"
     tname = f"tpch_ic_orders_{slug}"
     specs = [list(b) for b in batches]
     key = "o_orderkey"
     full = load_table(spark, sf_dir, "orders")
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    base_ddl = _ddl(full.schema)
 
     def _applied(p):
         return list((p or {}).get("applied") or [])
@@ -1333,27 +1299,21 @@ def _upsert_stream_inplace(
         and ptr is not None
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-        and _ATTACHED.get(tname) == cur_dir
-        and spark.catalog.tableExists(tname)
+        and _warm(spark, slug_dir, cur_dir, name=tname)
     ):
         return spark.table(tname)
 
-    stage = os.path.join(slug_dir, f"orders_u{suffix}_stream_stage")
-    sname = f"tpch_iu{suffix}_stream_stage_orders_{slug}"
+    stage = (
+        f"tpch_iu{suffix}_stream_stage_orders_{slug}",
+        os.path.join(slug_dir, f"orders_u{suffix}_stream_stage"),
+    )
     legacy_manifest = os.path.join(
         slug_dir, f"upsertstream{suffix}_orders.json"
     )
     legacy_pending = os.path.join(
         slug_dir, f"upsertstream_pending{suffix}_orders.json"
     )
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        # Stage leftovers are unpublished by construction.
-        spark.sql(f"DROP TABLE IF EXISTS {sname}")
-        shutil.rmtree(stage, ignore_errors=True)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    with _slug_motion(spark, slug_dir, rel, stage) as (cur_dir, ptr):
         applied = _applied(ptr)
         hist = [a["batch"] for a in applied]
         if (
@@ -1385,16 +1345,9 @@ def _upsert_stream_inplace(
                 os.remove(lm)
         for spec in specs[len(applied):]:
             batch_key, upd_pred, del_pred, ins_pred = spec
-            cdc_keys = full.filter(
-                F.expr(f"({upd_pred}) OR ({del_pred})")
-            ).select(key)
-            ins_rows = None
-            if ins_pred is not None:
-                ins_rows = full.filter(F.expr(ins_pred)).withColumn(
-                    key, F.col(key) + F.lit(_UPSERT_INS_OFFSET)
-                )
-                cdc_keys = cdc_keys.unionByName(ins_rows.select(key))
-            touched = delta_touched_buckets(cdc_keys, key, buckets)
+            ins_rows, touched = _cdc_batch(
+                full, upd_pred, del_pred, ins_pred, buckets
+            )
             cur_v = ptr["version"] if ptr else 0
             entry = {"key": batch_key, "batch": spec, "touched": touched,
                      "version": cur_v if not touched else cur_v + 1}
@@ -1415,10 +1368,7 @@ def _upsert_stream_inplace(
                 if touched_files
                 else spark.createDataFrame([], full.schema)
             )
-            updates = cur.filter(F.expr(upd_pred)).withColumn(
-                "o_orderdate",
-                F.col("o_orderdate") + F.expr("INTERVAL 30 DAY"),
-            )
+            updates = _cdc_updates(cur, upd_pred)
             upserts = (
                 updates if ins_rows is None
                 else updates.unionByName(ins_rows)
@@ -1431,37 +1381,22 @@ def _upsert_stream_inplace(
                 buckets=buckets,
                 upserts=upserts,
                 deletes=cur.filter(F.expr(del_pred)).select(key),
-                stage_path=stage,
-                stage_table=sname,
+                stage_path=stage[1],
+                stage_table=stage[0],
                 touched=touched,
             )
-            staged_flat = [
-                f for fs in plan["staged"].values() for f in fs
-            ]
-            replaced = {
-                os.path.basename(f)
-                for b in touched
-                for f in live.get(b, [])
-            }
-            old_dir = cur_dir
             extra = {"applied": applied + [entry], "batch": None,
                      "ddl": base_ddl}
-            prior_retained = list((ptr or {}).get("retained") or [])
             if retain:
                 extra["retained"] = sorted(
-                    set(prior_retained) | {entry["version"]}
+                    set((ptr or {}).get("retained") or [])
+                    | {entry["version"]}
                 )
-            elif prior_retained:
-                extra["retained"] = prior_retained
-            cur_dir, ptr = publish_layout_version(
-                slug_dir, rel, src_dir=cur_dir, skip_names=replaced,
-                staged_files=staged_flat,
-                extra=extra, stats_cols=_LAYOUT_STATS_COLS,
+            skip, staged = _merged_files(plan)
+            cur_dir, ptr = _publish(
+                spark, slug_dir, rel, (cur_dir, ptr), extra, skip=skip,
+                staged=staged, stage=stage,
             )
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            shutil.rmtree(stage, ignore_errors=True)
-            if os.path.isdir(old_dir) and old_dir != cur_dir:
-                tombstone_layout_dir(old_dir)
             applied = applied + [entry]
         _attach_rel_table(
             spark, tname, cur_dir,
@@ -1513,6 +1448,38 @@ _UPSERT_Q3_SQL = _UPSERT_ORDV_SQL + """
       AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
     GROUP BY l_orderkey, o_orderdate
     """
+
+#: The audit aggregate every CDC gate shares: per-priority row counts
+#: (inserts +, deletes −), an exact money sum (any row change moves it),
+#: MAX(o_orderkey) (≥ 10^9 iff an insert survived) and the inserted-row
+#: count. `_audit` is its Spark side.
+_AUDIT_SELECT = """
+    SELECT o_orderpriority,
+           COUNT(*) AS n_orders,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
+               AS total_price,
+           MAX(o_orderkey) AS max_key,
+           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
+               AS n_inserted
+    FROM ordv
+"""
+_AUDIT_SQL = _UPSERT_ORDV_SQL + _AUDIT_SELECT + """
+    GROUP BY o_orderpriority
+"""
+
+
+def _audit(orders):
+    """The audit aggregate over an upserted orders frame; money sums
+    in fixed-point cents (functions/exact.py), the oracle keeps the
+    bit-identical decimal form."""
+    return orders.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        fsum(cents("o_totalprice"), 2, "total_price"),
+        F.max("o_orderkey").alias("max_key"),
+        F.count(
+            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
+        ).alias("n_inserted"),
+    )
 
 
 def _q3_upserted_body(spark, sf_dir, lib, ou):
@@ -1578,17 +1545,7 @@ def tpch_q3_layout_upserted(spark, sf_dir):
 @register(
     "layout_upsert_audit",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_SQL,
 )
 def layout_upsert_audit(spark, sf_dir):
     """Full-table audit of the upserted orders state — the gate that
@@ -1604,14 +1561,7 @@ def layout_upsert_audit(spark, sf_dir):
     ISOLATE_r11.json `tpch_fixedpoint_paired_series`), the oracle keeps
     the bit-identical decimal form."""
     _, ou = _upserted_orderkey_layout(spark, sf_dir, with_lineitem=False)
-    return ou.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    return _audit(ou)
 
 
 #: Second CDC batch: delete original keys ≡0 (mod 307). The `< 10^9`
@@ -1620,22 +1570,22 @@ def layout_upsert_audit(spark, sf_dir):
 #: guarantees batch 1's inserted clones survive into the audit.
 _UPSERT_B2_DEL = "o_orderkey % 307 = 0 AND o_orderkey < 1000000000"
 
+#: The audit over both batches, and the two-batch stream itself: batch 1
+#: (update + delete + insert), then batch 2 (the deletes above).
+_AUDIT_B2_SQL = _UPSERT_ORDV_SQL + _AUDIT_SELECT + f"""
+    WHERE NOT ({_UPSERT_B2_DEL})
+    GROUP BY o_orderpriority
+"""
+_TWO_BATCHES = [
+    ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
+    ("b2", "1 = 0", _UPSERT_B2_DEL, None),
+]
+
 
 @register(
     "layout_upsert_second_batch",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + f"""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    WHERE NOT ({_UPSERT_B2_DEL})
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_B2_SQL,
 )
 def layout_upsert_second_batch(spark, sf_dir):
     """SUCCESSIVE CDC batches composed through the bucket-local motion —
@@ -1656,58 +1606,36 @@ def layout_upsert_second_batch(spark, sf_dir):
         upd_pred="1 = 0", del_pred=_UPSERT_B2_DEL, ins_pred=None,
         with_lineitem=False,
     )
-    return ou2.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    return _audit(ou2)
 
 
 @register(
     "layout_upsert_inplace_stream",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + f"""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    WHERE NOT ({_UPSERT_B2_DEL})
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_B2_SQL,
 )
 def layout_upsert_inplace_stream(spark, sf_dir):
     """The same two-batch CDC composition as `layout_upsert_second_batch`
     executed as an IN-PLACE STREAM (`_upsert_stream_inplace`): batch 1
     (update+delete+insert) and batch 2 (deletes) merge successively into
-    ONE table, each batch committed to an ordered applied-manifest and
-    individually crash-journaled (pending + undo dir roll an uncommitted
-    batch back; a committed batch's cleanup is finished). The cloned
+    ONE table, each batch committed as its own snapshot-pointer version
+    with the ordered applied manifest folded inside the pointer (a crash
+    before the flip leaves only an unpointed dir the next writer
+    deletes; nothing is rolled back). The cloned
     chain and this stream are the two composition styles a production
     CDC pipeline chooses between, and both gate against the SAME DuckDB
     two-batch oracle — a divergence between them (e.g. batch 2 merging
     against the wrong base state) hash-fails one of the twins."""
-    ou = _upsert_stream_inplace(
-        spark, sf_dir,
-        batches=[
-            ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
-            ("b2", "1 = 0", _UPSERT_B2_DEL, None),
-        ],
+    return _audit(_upsert_stream_inplace(spark, sf_dir, batches=_TWO_BATCHES))
+
+
+def _retained_stream(spark, sf_dir, suffix: str) -> str:
+    """Run the retained two-batch in-place stream in namespace
+    ``ip{suffix}`` (warm when committed); returns its slug dir."""
+    _upsert_stream_inplace(
+        spark, sf_dir, batches=_TWO_BATCHES, suffix=suffix, retain=True
     )
-    return ou.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    return _layout_slug(sf_dir, _BUCKETS, f"ip{suffix}")[1]
 
 
 def _heal_or_invalidate(slug_dir, rel, resolve):
@@ -1723,12 +1651,6 @@ def _heal_or_invalidate(slug_dir, rel, resolve):
     NOT touched. Returns None after marking the pointer invalid — the
     caller then replays the stream outside the lock (the stream takes
     the same slug lock itself)."""
-    from pycaim_spark.operators.layout import (
-        load_layout_pointer,
-        rewrite_layout_pointer,
-        slug_write_lock,
-    )
-
     with slug_write_lock(slug_dir):
         try:
             return resolve()
@@ -1742,17 +1664,7 @@ def _heal_or_invalidate(slug_dir, rel, resolve):
 @register(
     "layout_time_travel",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_SQL,
 )
 def layout_time_travel(spark, sf_dir):
     """TIME TRAVEL over the versioned layout (r17): after a two-batch
@@ -1770,31 +1682,11 @@ def layout_time_travel(spark, sf_dir):
     not an unbounded log. The version to read comes from the applied
     manifest (each batch entry records the version it published), so
     the query is stable across pristine rebuilds that shift version
-    numbers."""
-    import hashlib
+    numbers. The snapshot is read with the pointer's committed DDL, so
+    the build infers no footer schema."""
+    from pycaim_spark.operators.layout import resolve_layout_rel_version
 
-    from pycaim_spark.operators.layout import (
-        load_layout_pointer,
-        resolve_layout_rel_version,
-    )
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    _upsert_stream_inplace(
-        spark, sf_dir,
-        batches=[
-            ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
-            ("b2", "1 = 0", _UPSERT_B2_DEL, None),
-        ],
-        suffix="tt",
-        retain=True,
-    )
-    ns = "iptt"
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:32:{ns}:"
-        f"{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(_SCRATCH, "bucketed_tpch", slug)
+    slug_dir = _retained_stream(spark, sf_dir, "tt")
 
     def _as_of_b1_path():
         ptr = load_layout_pointer(slug_dir, "orders_c")
@@ -1804,7 +1696,7 @@ def layout_time_travel(spark, sf_dir):
         return ptr, resolve_layout_rel_version(slug_dir, "orders_c", v)
 
     try:
-        _ptr, path = _as_of_b1_path()
+        ptr, path = _as_of_b1_path()
     except FileNotFoundError:
         # The pinned snapshot was unpinned and collected (an operator
         # dropped retention): self-heal by forcing a pristine replay of
@@ -1818,26 +1710,10 @@ def layout_time_travel(spark, sf_dir):
             # Replay outside the slug lock: the stream takes it
             # itself (flock on a second fd of the same file
             # self-deadlocks).
-            _upsert_stream_inplace(
-                spark, sf_dir,
-                batches=[
-                    ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
-                    ("b2", "1 = 0", _UPSERT_B2_DEL, None),
-                ],
-                suffix="tt",
-                retain=True,
-            )
+            _retained_stream(spark, sf_dir, "tt")
             healed = _as_of_b1_path()
-        _ptr, path = healed
-    as_of_b1 = spark.read.parquet(path)
-    return as_of_b1.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+        ptr, path = healed
+    return _audit(spark.read.schema(ptr["ddl"]).parquet(path))
 
 
 @register(
@@ -1868,27 +1744,9 @@ def layout_history_query(spark, sf_dir):
     doctrine, one source of truth. Timestamp resolution on top of the
     same records (`resolve_layout_rel_asof_ts`) is pinned by
     tests/test_storage.py test_layout_history_and_asof_ts."""
-    import hashlib
-
     from pycaim_spark.operators.layout import layout_history
-    from pycaim_spark.queries.relational import _SCRATCH
 
-    _upsert_stream_inplace(
-        spark, sf_dir,
-        batches=[
-            ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
-            ("b2", "1 = 0", _UPSERT_B2_DEL, None),
-        ],
-        suffix="hi",
-        retain=True,
-    )
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:32:iphi:"
-        f"{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(_SCRATCH, "bucketed_tpch", slug)
-    hist = layout_history(slug_dir, "orders_c")
+    hist = layout_history(_retained_stream(spark, sf_dir, "hi"), "orders_c")
     return spark.createDataFrame(
         [(i + 1, rec["kind"], rec["key"]) for i, rec in enumerate(hist)],
         "ordinal bigint, kind string, batch_key string",
@@ -1898,17 +1756,7 @@ def layout_history_query(spark, sf_dir):
 @register(
     "layout_time_travel_ts",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_SQL,
 )
 def layout_time_travel_ts(spark, sf_dir):
     """TIME TRAVEL BY TIMESTAMP (r18, VERDICT r17 #5): read the
@@ -1920,45 +1768,22 @@ def layout_time_travel_ts(spark, sf_dir):
     single-batch post-CDC state — identical to `layout_time_travel`'s
     version-number gate, so the two resolution paths are pinned to the
     same frame: a timestamp resolution that leaks batch 2's deletes
-    (rounding up) or misses batch 1 (rounding down) hash-fails."""
-    import hashlib
-
+    (rounding up) or misses batch 1 (rounding down) hash-fails. Read
+    with the pointer's committed DDL, like `layout_time_travel`."""
     from pycaim_spark.operators.layout import (
         layout_history,
         resolve_layout_rel_asof_ts,
     )
-    from pycaim_spark.queries.relational import _SCRATCH
 
-    _upsert_stream_inplace(
-        spark, sf_dir,
-        batches=[
-            ("b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS),
-            ("b2", "1 = 0", _UPSERT_B2_DEL, None),
-        ],
-        suffix="hi",
-        retain=True,
-    )
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:32:iphi:"
-        f"{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(_SCRATCH, "bucketed_tpch", slug)
+    slug_dir = _retained_stream(spark, sf_dir, "hi")
     [b1_ts] = [
         rec["ts"] for rec in layout_history(slug_dir, "orders_c")
         if rec["key"] == "b1"
     ]
-    as_of = spark.read.parquet(
+    ddl = load_layout_pointer(slug_dir, "orders_c")["ddl"]
+    return _audit(spark.read.schema(ddl).parquet(
         resolve_layout_rel_asof_ts(slug_dir, "orders_c", b1_ts)
-    )
-    return as_of.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    ))
 
 
 def _cdc_sink_apply_micro_batch(
@@ -1983,20 +1808,6 @@ def _cdc_sink_apply_micro_batch(
     CDC batch as its own sequential merge+publish in feed (spec) order;
     each gets its own manifest entry and snapshot commit. The
     distinct-key collect is bounded by the number of feed batches."""
-    import shutil as _shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import (
-        bucket_files,
-        plan_bucket_local_merge,
-    )
-
     bkeys = [
         r.batch_key
         for r in bdf.select("batch_key").distinct().collect()
@@ -2005,16 +1816,13 @@ def _cdc_sink_apply_micro_batch(
         return  # empty micro-batch
     spec_by_key = {s[0]: s for s in specs}
     order = {s[0]: i for i, s in enumerate(specs)}
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    with _slug_motion(spark, slug_dir, rel) as (cur_dir, ptr):
         applied = list((ptr or {}).get("applied") or [])
         for bkey in sorted(bkeys, key=lambda k: order[k]):
             if any(a["key"] == bkey for a in applied):
                 continue  # redelivery (checkpoint lost/crashed): no-op
             sub = bdf.filter(F.col("batch_key") == bkey)
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            _shutil.rmtree(stage, ignore_errors=True)
+            _drop_stage(spark, sname, stage)
             ups = sub.filter(F.col("op").isin("U", "I")).select(*columns)
             dels = sub.filter(F.col("op") == "D").select(key)
             plan = plan_bucket_local_merge(
@@ -2033,31 +1841,17 @@ def _cdc_sink_apply_micro_batch(
                 "batch": spec_by_key[bkey],
                 "touched": plan["touched"],
             }
-            staged_flat = [
-                f for fs in plan["staged"].values() for f in fs
-            ]
-            live = bucket_files(cur_dir)
-            replaced = {
-                os.path.basename(f)
-                for b in plan["touched"]
-                for f in live.get(b, [])
-            }
-            old_dir = cur_dir
-            cur_dir, ptr = publish_layout_version(
-                slug_dir, rel, src_dir=cur_dir, skip_names=replaced,
-                staged_files=staged_flat,
-                extra={"applied": applied + [entry], "batch": None,
-                       "ddl": base_ddl},
-                stats_cols=_LAYOUT_STATS_COLS,
+            skip, staged = _merged_files(plan)
+            cur_dir, ptr = _publish(
+                spark, slug_dir, rel, (cur_dir, ptr),
+                {"applied": applied + [entry], "batch": None,
+                 "ddl": base_ddl},
+                skip=skip, staged=staged, stage=(sname, stage),
             )
             applied = applied + [entry]
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            _shutil.rmtree(stage, ignore_errors=True)
-            if os.path.isdir(old_dir) and old_dir != cur_dir:
-                tombstone_layout_dir(old_dir)
 
 
-def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
+def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = _BUCKETS,
                               suffix: str = "cd"):
     """Structured Streaming foreachBatch CDC sink over the bucket-local
     MERGE core (VERDICT r16 #4) — the layout-side twin of the signature
@@ -2087,34 +1881,14 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     staleness (fixture predicates changed) rebuilds feed + checkpoint +
     pristine table under the slug lock (tombstone-not-rmtree for the table,
     like every divergence path since r17)."""
-    import glob as _glob
-    import hashlib
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        resolve_layout_rel,
-        slug_write_lock,
-    )
-    from pycaim_spark.queries.relational import _SCRATCH
-
     configure_session(spark)
-    specs = [
-        ["cdc-b1", _UPSERT_UPD, _UPSERT_DEL, _UPSERT_INS],
-        ["cdc-b2", "1 = 0", _UPSERT_B2_DEL, None],
-    ]
+    specs = [[f"cdc-{k}", *rest] for k, *rest in _TWO_BATCHES]
     ns = f"ip{suffix}"
     _incremental_orderkey_layout(
         spark, sf_dir, buckets=buckets, compacted=True, ns=ns,
         tables=("orders",),
     )
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:{ns}:{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
+    slug, slug_dir, _fp = _layout_slug(sf_dir, buckets, ns)
     rel = "orders_c"
     tname = f"tpch_ic_orders_{slug}"
     feed = os.path.join(slug_dir, "cdc_feed")
@@ -2122,10 +1896,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
     feed_spec = os.path.join(slug_dir, "cdc_feed_spec.json")
     key = "o_orderkey"
     full = load_table(spark, sf_dir, "orders")
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    base_ddl = _ddl(full.schema)
 
     def _applied(p):
         return list((p or {}).get("applied") or [])
@@ -2136,8 +1907,6 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
         and ptr is not None
         and ptr.get("batch") is None
         and not ptr.get("rebucket")
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
         # A missing checkpoint means the stream's cursor is gone — the
         # warm claim "every file was processed" can't be made from the
         # pointer alone, so run the stream: it re-creates the
@@ -2145,14 +1914,11 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
         # no-ops each one (the redelivery-idempotence path, pinned by
         # tests/test_storage.py test_stream_cdc_sink_redelivery_and_twin).
         and os.path.isdir(ckpt)
-        and _ATTACHED.get(tname) == cur_dir
-        and spark.catalog.tableExists(tname)
+        and _warm(spark, slug_dir, cur_dir, name=tname)
     ):
         return spark.table(tname)
 
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    with _slug_motion(spark, slug_dir, rel) as (cur_dir, ptr):
         applied = _applied(ptr)
         hist = [a["batch"] for a in applied]
         cur_spec = None
@@ -2191,23 +1957,14 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
             t0 = _time.time() - 1000
             for i, (bkey, upd, dele, ins) in enumerate(specs):
                 parts = [
-                    full.filter(F.expr(upd))
-                    .withColumn(
-                        "o_orderdate",
-                        F.col("o_orderdate") + F.expr("INTERVAL 30 DAY"),
-                    )
-                    .withColumn("op", F.lit("U")),
+                    _cdc_updates(full, upd).withColumn("op", F.lit("U")),
                     full.filter(F.expr(dele)).withColumn(
                         "op", F.lit("D")
                     ),
                 ]
                 if ins is not None:
                     parts.append(
-                        full.filter(F.expr(ins))
-                        .withColumn(
-                            key, F.col(key) + F.lit(_UPSERT_INS_OFFSET)
-                        )
-                        .withColumn("op", F.lit("I"))
+                        _cdc_inserts(full, ins).withColumn("op", F.lit("I"))
                     )
                 bdf = parts[0]
                 for p in parts[1:]:
@@ -2217,7 +1974,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
                 )
                 tmp = os.path.join(slug_dir, f"cdc_feed_tmp_{i}")
                 bdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-                part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+                part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
                 dst = os.path.join(feed, f"batch-{i}.parquet")
                 shutil.move(part, dst)
                 shutil.rmtree(tmp, ignore_errors=True)
@@ -2262,18 +2019,7 @@ def _stream_cdc_feed_and_sink(spark, sf_dir, buckets: int = 32,
 @register(
     "stream_cdc_upsert",
     tags=("composite", "storage", "stream"),
-    oracle=_UPSERT_ORDV_SQL + f"""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    WHERE NOT ({_UPSERT_B2_DEL})
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_B2_SQL,
 )
 def stream_cdc_upsert(spark, sf_dir):
     """The SAME two-batch CDC composition as `layout_upsert_second_batch`
@@ -2289,14 +2035,7 @@ def stream_cdc_upsert(spark, sf_dir):
     contract end-to-end: the delta arrives as DataFrames and the touched
     buckets are computed from the delta's keys alone."""
     ou = _stream_cdc_feed_and_sink(spark, sf_dir)
-    return ou.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    return _audit(ou)
 
 
 #: Schema-evolution CDC batch (VERDICT r16 #3): the update+insert rows
@@ -2429,11 +2168,12 @@ def layout_upsert_evolve_second(spark, sf_dir):
 def tpch_q3_layout_upserted_inplace(spark, sf_dir):
     """TPC-H Q3 over the IN-PLACE upsert arm (VERDICT r15 #2): the same
     CDC batch MERGEd directly into the compacted orders table of a
-    private layout namespace — no copytree clone anywhere in the motion,
-    so its bytes accounting is the one that scales (the cloned arm
-    copies the full table as fixture scaffolding before touching ~19% of
-    it). Crash safety comes from the journaled undo-log swap instead of
-    the pristine-clone re-derive (see `_upserted_orderkey_layout`).
+    private layout namespace. Both arms commit through the snapshot
+    pointer: the next version hard-links the untouched buckets' files
+    and moves in the staged rewrites, so neither copies table bytes (the
+    cloned arm's clone of its base rel is hard links too). Crash safety
+    is the pointer flip plus tombstone-and-grace GC of the displaced
+    version (see `_upserted_orderkey_layout`).
     Identical oracle and query body as tpch_q3_layout_upserted: both
     arms must produce the same post-MERGE table."""
     lib, ou = _upserted_orderkey_layout(spark, sf_dir, inplace=True)
@@ -2481,31 +2221,12 @@ def _split_orderkey_layout(
     gates never flip one layout's state back and forth; the full phase
     executes both passes, exercising the progressive chain end-to-end.
     Returns the orders DataFrame over the current migration state."""
-    import hashlib
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import bucket_files
-    from pycaim_spark.queries.relational import _SCRATCH
-
     ns = f"ip{suffix}"
     _incremental_orderkey_layout(
         spark, sf_dir, buckets=buckets, compacted=True, ns=ns,
         tables=("orders",),
     )
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:{ns}:{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
+    slug, slug_dir, _fp = _layout_slug(sf_dir, buckets, ns)
     rel = "orders_c"
     tname = f"tpch_rb_orders_{slug}"
     n_to = buckets * factor
@@ -2514,40 +2235,24 @@ def _split_orderkey_layout(
                        if full_split else [])
     want_done = sorted(p for g in passes for p in g)
     key = "o_orderkey"
-    full = load_table(spark, sf_dir, "orders")
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    base_ddl = _ddl(load_table(spark, sf_dir, "orders").schema)
 
     def _rb(p):
         return (p or {}).get("rebucket") or {}
-
-    def _attach(cur_dir, done):
-        complete = done == sorted(range(buckets))
-        _attach_rel_table(
-            spark, tname, cur_dir, base_ddl, key,
-            n_to if complete else buckets, bucketed=complete,
-        )
 
     cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
     if (
         _rb(ptr).get("done") == want_done
         and _rb(ptr).get("to") == n_to
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-        and _ATTACHED.get(tname) == cur_dir
-        and spark.catalog.tableExists(tname)
+        and _warm(spark, slug_dir, cur_dir, name=tname)
     ):
         return spark.table(tname)
 
-    stage = os.path.join(slug_dir, f"orders_split{suffix}_stage")
-    sname = f"tpch_rb{suffix}_stage_orders_{slug}"
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {sname}")
-        shutil.rmtree(stage, ignore_errors=True)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    stage = (
+        f"tpch_rb{suffix}_stage_orders_{slug}",
+        os.path.join(slug_dir, f"orders_split{suffix}_stage"),
+    )
+    with _slug_motion(spark, slug_dir, rel, stage) as (cur_dir, ptr):
         state = _rb(ptr)
         if ptr is not None and (
             ptr.get("batch") is not None
@@ -2567,16 +2272,11 @@ def _split_orderkey_layout(
                 continue
             live = bucket_files(cur_dir)
             parent_files = [f for b in todo for f in live.get(b, [])]
-            (
-                spark.read.parquet(*parent_files)
-                .repartition(n_to, F.col(key))
-                .write.mode("overwrite")
-                .bucketBy(n_to, key)
-                .sortBy(key)
-                .option("path", stage)
-                .saveAsTable(sname)
+            _save_bucketed(
+                spark.read.parquet(*parent_files), n_to, key, stage[1],
+                stage[0],
             )
-            staged = bucket_files(stage)
+            staged = bucket_files(stage[1])
             allowed = {
                 p + j * buckets for p in todo for j in range(factor)
             }
@@ -2589,32 +2289,21 @@ def _split_orderkey_layout(
                     "aborting before mis-placing rows"
                 )
             done = sorted(done + todo)
-            old_dir = cur_dir
-            cur_dir, ptr = publish_layout_version(
-                slug_dir, rel, src_dir=cur_dir,
-                skip_names={os.path.basename(f) for f in parent_files},
-                staged_files=[
-                    f for fs in staged.values() for f in fs
-                ],
-                stats_cols=_LAYOUT_STATS_COLS,
-                extra={
-                    "batch": None, "ddl": base_ddl,
-                    "rebucket": {"from": buckets, "to": n_to,
-                                 "done": done},
-                    **(
-                        {"retained": ptr["retained"]}
-                        if (ptr or {}).get("retained") else {}
-                    ),
-                },
+            cur_dir, ptr = _publish(
+                spark, slug_dir, rel, (cur_dir, ptr),
+                {"batch": None, "ddl": base_ddl,
+                 "rebucket": {"from": buckets, "to": n_to, "done": done}},
+                skip={os.path.basename(f) for f in parent_files},
+                staged=[f for fs in staged.values() for f in fs],
+                stage=stage,
             )
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            shutil.rmtree(stage, ignore_errors=True)
-            if os.path.isdir(old_dir) and old_dir != cur_dir:
-                tombstone_layout_dir(old_dir)
-        _attach(cur_dir, done)
+        complete = done == sorted(range(buckets))
+        _attach_rel_table(
+            spark, tname, cur_dir, base_ddl, key,
+            n_to if complete else buckets, bucketed=complete,
+        )
         commit.clear_tombstone(slug_dir)
     return spark.table(tname)
-
 
 @register(
     "tpch_q3_layout_split_half",
@@ -2659,17 +2348,7 @@ def tpch_q3_layout_split_full(spark, sf_dir):
 @register(
     "layout_split_then_upsert",
     tags=("composite", "storage"),
-    oracle=_UPSERT_ORDV_SQL + """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_price,
-           MAX(o_orderkey) AS max_key,
-           COUNT(CASE WHEN o_orderkey >= 1000000000 THEN 1 END)
-               AS n_inserted
-    FROM ordv
-    GROUP BY o_orderpriority
-    """,
+    oracle=_AUDIT_SQL,
 )
 def layout_split_then_upsert(spark, sf_dir):
     """The composed MIGRATE-THEN-CDC lifecycle: a completed re-bucket
@@ -2685,23 +2364,8 @@ def layout_split_then_upsert(spark, sf_dir):
     must be invisible, the merge exact. Guarded the other way too: an
     INCOMPLETE re-bucket is never a valid merge base
     (tests/test_storage.py test_upsert_refuses_mid_rebucket_base)."""
-    import hashlib
-
-    from pycaim_spark.operators.layout import load_layout_pointer
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{_SPLIT_FROM}:ipspu:"
-        f"{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(_SCRATCH, "bucketed_tpch", slug)
-    ptr = load_layout_pointer(slug_dir, "orders_c")
-    rb = (ptr or {}).get("rebucket") or None
-    rb_done = bool(rb) and sorted(rb.get("done", [])) == list(
-        range(min(rb["from"], rb["to"]))
-    )
-    if not rb_done:
+    slug_dir = _layout_slug(sf_dir, _SPLIT_FROM, "ipspu")[1]
+    if not rebucket_complete(load_layout_pointer(slug_dir, "orders_c")):
         # (Re-)run the migration only when the composed state isn't
         # already committed — the upsert's pointer carries the completed
         # rebucket record forward, and re-running the split over a
@@ -2713,14 +2377,7 @@ def layout_split_then_upsert(spark, sf_dir):
         spark, sf_dir, suffix="spu", inplace=True, with_lineitem=False,
         buckets=_SPLIT_FROM,
     )
-    return ou.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fsum(cents("o_totalprice"), 2, "total_price"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count(
-            F.when(F.col("o_orderkey") >= _UPSERT_INS_OFFSET, 1)
-        ).alias("n_inserted"),
-    )
+    return _audit(ou)
 
 
 def _coalesce_orderkey_layout(
@@ -2740,27 +2397,7 @@ def _coalesce_orderkey_layout(
     base: a completed split to factor·n (or its own partial progress) —
     anything else raises; the round-trip query orchestrates the
     sequence."""
-    import hashlib
-    import shutil
-
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import bucket_files
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    ns = f"ip{suffix}"
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:{ns}:{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
+    slug, slug_dir, _fp = _layout_slug(sf_dir, buckets, f"ip{suffix}")
     rel = "orders_c"
     tname = f"tpch_rb_orders_{slug}"
     n_from = buckets * factor  # coalescing FROM the split count
@@ -2768,11 +2405,7 @@ def _coalesce_orderkey_layout(
               list(range(buckets // 2, buckets))]
     want_done = list(range(buckets))
     key = "o_orderkey"
-    full = load_table(spark, sf_dir, "orders")
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    base_ddl = _ddl(load_table(spark, sf_dir, "orders").schema)
 
     def _rb(p):
         return (p or {}).get("rebucket") or {}
@@ -2783,20 +2416,15 @@ def _coalesce_orderkey_layout(
         state.get("from") == n_from
         and state.get("to") == buckets
         and sorted(state.get("done", [])) == want_done
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-        and _ATTACHED.get(tname) == cur_dir
-        and spark.catalog.tableExists(tname)
+        and _warm(spark, slug_dir, cur_dir, name=tname)
     ):
         return spark.table(tname)
 
-    stage = os.path.join(slug_dir, f"orders_coalesce{suffix}_stage")
-    sname = f"tpch_rb{suffix}_cstage_orders_{slug}"
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {sname}")
-        shutil.rmtree(stage, ignore_errors=True)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+    stage = (
+        f"tpch_rb{suffix}_cstage_orders_{slug}",
+        os.path.join(slug_dir, f"orders_coalesce{suffix}_stage"),
+    )
+    with _slug_motion(spark, slug_dir, rel, stage) as (cur_dir, ptr):
         state = _rb(ptr)
         if ptr is None or ptr.get("batch") is not None:
             raise RuntimeError(
@@ -2824,16 +2452,11 @@ def _coalesce_orderkey_layout(
                 for j in range(factor)
                 for f in live.get(p + j * buckets, [])
             ]
-            (
-                spark.read.parquet(*child_files)
-                .repartition(buckets, F.col(key))
-                .write.mode("overwrite")
-                .bucketBy(buckets, key)
-                .sortBy(key)
-                .option("path", stage)
-                .saveAsTable(sname)
+            _save_bucketed(
+                spark.read.parquet(*child_files), buckets, key, stage[1],
+                stage[0],
             )
-            staged = bucket_files(stage)
+            staged = bucket_files(stage[1])
             stray = sorted(set(staged) - set(todo))
             if stray:
                 raise AssertionError(
@@ -2843,28 +2466,14 @@ def _coalesce_orderkey_layout(
                     "— aborting before mis-placing rows"
                 )
             done = sorted(done + todo)
-            old_dir = cur_dir
-            cur_dir, ptr = publish_layout_version(
-                slug_dir, rel, src_dir=cur_dir,
-                skip_names={os.path.basename(f) for f in child_files},
-                staged_files=[
-                    f for fs in staged.values() for f in fs
-                ],
-                stats_cols=_LAYOUT_STATS_COLS,
-                extra={
-                    "batch": None, "ddl": base_ddl,
-                    "rebucket": {"from": n_from, "to": buckets,
-                                 "done": done},
-                    **(
-                        {"retained": ptr["retained"]}
-                        if (ptr or {}).get("retained") else {}
-                    ),
-                },
+            cur_dir, ptr = _publish(
+                spark, slug_dir, rel, (cur_dir, ptr),
+                {"batch": None, "ddl": base_ddl,
+                 "rebucket": {"from": n_from, "to": buckets, "done": done}},
+                skip={os.path.basename(f) for f in child_files},
+                staged=[f for fs in staged.values() for f in fs],
+                stage=stage,
             )
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            shutil.rmtree(stage, ignore_errors=True)
-            if os.path.isdir(old_dir) and old_dir != cur_dir:
-                tombstone_layout_dir(old_dir)
         complete = done == want_done
         _attach_rel_table(
             spark, tname, cur_dir, base_ddl, key,
@@ -2872,7 +2481,6 @@ def _coalesce_orderkey_layout(
         )
         commit.clear_tombstone(slug_dir)
     return spark.table(tname)
-
 
 @register(
     "tpch_q3_layout_rebucket_roundtrip",
@@ -2890,17 +2498,7 @@ def tpch_q3_layout_rebucket_roundtrip(spark, sf_dir):
     split); its per-output locality (output p reads only children
     {p, p+8}) is asserted in the motion and file-pinned in
     tests/test_storage.py."""
-    import hashlib
-
-    from pycaim_spark.operators.layout import load_layout_pointer
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    slug = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{_SPLIT_FROM}:ipco:"
-        f"{_layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(_SCRATCH, "bucketed_tpch", slug)
+    slug_dir = _layout_slug(sf_dir, _SPLIT_FROM, "ipco")[1]
     ptr = load_layout_pointer(slug_dir, "orders_c")
     state = (ptr or {}).get("rebucket") or {}
     roundtrip_done = (
@@ -2915,9 +2513,7 @@ def tpch_q3_layout_rebucket_roundtrip(spark, sf_dir):
         _split_orderkey_layout(
             spark, sf_dir, full_split=True, suffix="co"
         )
-        ou = _coalesce_orderkey_layout(spark, sf_dir, suffix="co")
-    else:
-        ou = _coalesce_orderkey_layout(spark, sf_dir, suffix="co")
+    ou = _coalesce_orderkey_layout(spark, sf_dir, suffix="co")
     li = load_table(spark, sf_dir, "lineitem")
     return _q3_over_layout(spark, sf_dir, li, ou)
 
@@ -2939,70 +2535,53 @@ def _date_clustered_orders_layout(spark, sf_dir, files: int = 16):
     content-addressed like every layout fixture (corpus regeneration
     produces a fresh slug; `_gc_superseded_layouts` retires the old
     one). Returns (slug_dir, ddl)."""
-    import hashlib
 
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        slug_write_lock,
+    def write(full, stage):
+        (
+            full.repartitionByRange(files, F.col("o_orderdate"))
+            .sortWithinPartitions("o_orderdate")
+            .write.mode("overwrite")
+            .parquet(stage)
+        )
+
+    return _clustered_orders_layout(
+        spark, sf_dir, files, "dc", "orders_d",
+        ("o_orderdate", "o_orderkey"), write,
     )
-    from pycaim_spark.queries.relational import _SCRATCH
 
-    ns = "dc"
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    fp = _layout_fingerprint(src)
-    slug = hashlib.md5(
-        f"{abs_sf}:{files}:{ns}:{fp}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
-    rel = "orders_d"
+
+def _clustered_orders_layout(spark, sf_dir, files, ns, rel, stats_cols,
+                             write):
+    """The cold build shared by the clustered orders rels: ``write(full,
+    stage)`` lays the corpus out in ``files`` files, which publish as
+    version 1 of ``rel`` with per-file stats on ``stats_cols``. Returns
+    (slug_dir, ddl)."""
+    slug, slug_dir, fp = _layout_slug(sf_dir, files, ns)
     full = load_table(spark, sf_dir, "orders")
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
+    ddl = _ddl(full.schema)
     cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
-    if (
-        ptr is not None
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-    ):
+    if ptr is not None and _warm(spark, slug_dir, cur_dir):
         return slug_dir, ddl
-    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
-        if not (
-            ptr is not None
-            and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        ):
-            import shutil
 
-            stage = os.path.join(slug_dir, f"{rel}_stage")
-            shutil.rmtree(stage, ignore_errors=True)
-            os.makedirs(slug_dir, exist_ok=True)
-            (
-                full.repartitionByRange(files, F.col("o_orderdate"))
-                .sortWithinPartitions("o_orderdate")
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            publish_layout_version(
-                slug_dir, rel, src_dir=None, prebuilt_dir=stage,
-                extra={"batch": None, "ddl": ddl},
-                stats_cols=("o_orderdate", "o_orderkey"),
-            )
-            commit.write_json_atomic(
-                os.path.join(slug_dir, "source.json"),
-                {"sf_dir": abs_sf, "table": f"orders#{ns}",
-                 "buckets": files, "fp": fp},
-            )
-            _gc_superseded_layouts(
-                spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
-            )
-        commit.clear_tombstone(slug_dir)
+    def built():
+        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
+        return ptr is not None and os.path.exists(
+            os.path.join(cur_dir, "_SUCCESS")
+        )
+
+    def build():
+        stage = os.path.join(slug_dir, f"{rel}_stage")
+        shutil.rmtree(stage, ignore_errors=True)
+        os.makedirs(slug_dir, exist_ok=True)
+        write(full, stage)
+        publish_layout_version(
+            slug_dir, rel, src_dir=None, prebuilt_dir=stage,
+            extra={"batch": None, "ddl": ddl}, stats_cols=stats_cols,
+        )
+
+    _cold_build(
+        spark, slug_dir, fp, f"orders#{ns}", files, sf_dir, built, build
+    )
     return slug_dir, ddl
 
 
@@ -3100,94 +2679,42 @@ def _zorder_orders_layout(spark, sf_dir, files: int = 16):
     Both dimensions normalize to 16-bit grid coordinates from their
     corpus min/max (two driver scalars — one tiny agg at build time).
     Returns (slug_dir, ddl)."""
-    import hashlib
 
-    from pycaim_spark.operators.layout import (
-        gc_layout_versions,
-        publish_layout_version,
-        resolve_layout_rel,
-        slug_write_lock,
-    )
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    ns = "zo"
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    fp = _layout_fingerprint(src)
-    slug = hashlib.md5(
-        f"{abs_sf}:{files}:{ns}:{fp}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
-    rel = "orders_z"
-    full = load_table(spark, sf_dir, "orders")
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in full.schema.fields
-    )
-    cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
-    if (
-        ptr is not None
-        and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        and not commit.tombstoned(slug_dir)
-    ):
-        return slug_dir, ddl
-    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
-        cur_dir, ptr = resolve_layout_rel(slug_dir, rel)
-        if not (
-            ptr is not None
-            and os.path.exists(os.path.join(cur_dir, "_SUCCESS"))
-        ):
-            import shutil
-
-            lo = full.agg(
-                F.min("o_custkey").alias("cmin"),
-                F.max("o_custkey").alias("cmax"),
-                F.min(F.unix_date(F.col("o_orderdate").cast("date")))
-                .alias("dmin"),
-                F.max(F.unix_date(F.col("o_orderdate").cast("date")))
-                .alias("dmax"),
-            ).first()
-            cspan = max(int(lo.cmax - lo.cmin), 1)
-            dspan = max(int(lo.dmax - lo.dmin), 1)
-            cx = (
-                (F.col("o_custkey") - F.lit(int(lo.cmin)))
-                * F.lit(65535) / F.lit(cspan)
-            ).cast("long")
-            dy = (
-                (
-                    F.unix_date(F.col("o_orderdate").cast("date"))
-                    - F.lit(int(lo.dmin))
-                )
-                * F.lit(65535) / F.lit(dspan)
-            ).cast("long")
-            stage = os.path.join(slug_dir, f"{rel}_stage")
-            shutil.rmtree(stage, ignore_errors=True)
-            os.makedirs(slug_dir, exist_ok=True)
+    def write(full, stage):
+        lo = full.agg(
+            F.min("o_custkey").alias("cmin"),
+            F.max("o_custkey").alias("cmax"),
+            F.min(F.unix_date(F.col("o_orderdate").cast("date")))
+            .alias("dmin"),
+            F.max(F.unix_date(F.col("o_orderdate").cast("date")))
+            .alias("dmax"),
+        ).first()
+        cspan = max(int(lo.cmax - lo.cmin), 1)
+        dspan = max(int(lo.dmax - lo.dmin), 1)
+        cx = (
+            (F.col("o_custkey") - F.lit(int(lo.cmin)))
+            * F.lit(65535) / F.lit(cspan)
+        ).cast("long")
+        dy = (
             (
-                full.withColumn("_z", _zvalue(cx, dy))
-                .repartitionByRange(files, F.col("_z"))
-                .sortWithinPartitions("_z")
-                .drop("_z")
-                .write.mode("overwrite")
-                .parquet(stage)
+                F.unix_date(F.col("o_orderdate").cast("date"))
+                - F.lit(int(lo.dmin))
             )
-            publish_layout_version(
-                slug_dir, rel, src_dir=None, prebuilt_dir=stage,
-                extra={"batch": None, "ddl": ddl},
-                stats_cols=("o_custkey", "o_orderdate", "o_orderkey"),
-            )
-            commit.write_json_atomic(
-                os.path.join(slug_dir, "source.json"),
-                {"sf_dir": abs_sf, "table": f"orders#{ns}",
-                 "buckets": files, "fp": fp},
-            )
-            _gc_superseded_layouts(
-                spark, layout_root, slug, abs_sf, f"orders#{ns}", fp
-            )
-        commit.clear_tombstone(slug_dir)
-    return slug_dir, ddl
+            * F.lit(65535) / F.lit(dspan)
+        ).cast("long")
+        (
+            full.withColumn("_z", _zvalue(cx, dy))
+            .repartitionByRange(files, F.col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(stage)
+        )
+
+    return _clustered_orders_layout(
+        spark, sf_dir, files, "zo", "orders_z",
+        ("o_custkey", "o_orderdate", "o_orderkey"), write,
+    )
 
 
 #: The z-order demo rectangle: the lower quarter of the customer range
@@ -3282,55 +2809,33 @@ def _multirel_slug_layout(spark, sf_dir, buckets: int = 8):
     layout fixture content-addresses one table per slug; a multi-table
     transaction needs both rels under one commit scope, so this slug's
     hash folds BOTH source fingerprints. Returns (slug_dir, slug)."""
-    import hashlib
-
-    from pycaim_spark.operators.layout import slug_write_lock
-    from pycaim_spark.queries.relational import _SCRATCH
-
-    layout_root = os.path.join(_SCRATCH, "bucketed_tpch")
-    abs_sf = os.path.abspath(sf_dir)
-    fps = ":".join(
-        _layout_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in ("orders", "lineitem")
+    rels = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+    slug, slug_dir, fps = _layout_slug(
+        sf_dir, buckets, "mrc", tuple(t for t, _ in rels)
     )
-    slug = hashlib.md5(
-        f"{abs_sf}:{buckets}:mrc:{fps}".encode()
-    ).hexdigest()[:8]
-    slug_dir = os.path.join(layout_root, slug)
-    done = all(
-        os.path.exists(os.path.join(slug_dir, f"{t}_c", "_SUCCESS"))
-        for t in ("orders", "lineitem")
-    )
-    if done and not commit.tombstoned(slug_dir):
+    paths = [os.path.join(slug_dir, f"{t}_c") for t, _ in rels]
+    if _warm(spark, slug_dir, *paths):
         return slug_dir, slug
-    with commit.store_lock(layout_root), slug_write_lock(slug_dir):
-        for table, key in (
-            ("orders", "o_orderkey"), ("lineitem", "l_orderkey"),
-        ):
-            path = os.path.join(slug_dir, f"{table}_c")
+
+    def build():
+        for (table, key), path in zip(rels, paths):
             if os.path.exists(os.path.join(path, "_SUCCESS")):
                 continue
             tmp_name = f"tpch_mrc_{table}_{slug}"
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-            (
-                load_table(spark, sf_dir, table)
-                .repartition(buckets, F.col(key))
-                .write.mode("overwrite")
-                .bucketBy(buckets, key)
-                .sortBy(key)
-                .option("path", path)
-                .saveAsTable(tmp_name)
+            _save_bucketed(
+                load_table(spark, sf_dir, table), buckets, key, path,
+                tmp_name,
             )
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        commit.write_json_atomic(
-            os.path.join(slug_dir, "source.json"),
-            {"sf_dir": abs_sf, "table": "orders#mrc",
-             "buckets": buckets, "fp": fps},
-        )
-        _gc_superseded_layouts(
-            spark, layout_root, slug, abs_sf, "orders#mrc", fps
-        )
-        commit.clear_tombstone(slug_dir)
+
+    _cold_build(
+        spark, slug_dir, fps, "orders#mrc", buckets, sf_dir,
+        built=lambda: all(
+            os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths
+        ),
+        build=build,
+    )
     return slug_dir, slug
 
 
@@ -3361,19 +2866,9 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
     mid-commit reader view. Returns {rel: data dir} per the committed
     slug commit."""
     from pycaim_spark.operators.layout import (
-        gc_layout_versions,
         load_slug_commit,
-        publish_layout_version,
         publish_slug_commit,
-        resolve_layout_rel,
         resolve_slug_commit,
-        slug_write_lock,
-        tombstone_layout_dir,
-    )
-    from pycaim_spark.operators.merge import (
-        bucket_files,
-        delta_touched_buckets,
-        plan_bucket_local_merge,
     )
 
     slug_dir, slug = _multirel_slug_layout(spark, sf_dir, buckets)
@@ -3384,8 +2879,7 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
             return resolve_slug_commit(slug_dir)
         except FileNotFoundError:
             pass  # a named version expired: re-derive under the lock
-    with slug_write_lock(slug_dir):
-        gc_layout_versions(slug_dir)
+    with _slug_motion(spark, slug_dir):
         rec = load_slug_commit(slug_dir)
         if rec is not None and rec.get("batch") == spec:
             try:
@@ -3407,11 +2901,7 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
                     spark, slug_dir, rel,
                     os.path.join(slug_dir, rel), key, buckets, slug,
                 )
-            full = load_table(spark, sf_dir, table)
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in full.schema.fields
-            )
+            ddl = _ddl(load_table(spark, sf_dir, table).schema)
             dels = (
                 spark.read.schema(ddl).parquet(cur_dir)
                 .filter(F.col(key) % _MULTIREL_DEL == 0)
@@ -3425,24 +2915,13 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
                 buckets=buckets, upserts=None, deletes=dels,
                 stage_path=stage, stage_table=sname, touched=touched,
             )
-            live = bucket_files(cur_dir)
-            replaced = {
-                os.path.basename(f)
-                for b in plan["touched"] for f in live.get(b, [])
-            }
+            skip, staged = _merged_files(plan)
             old_dir = cur_dir
-            cur_dir, ptr = publish_layout_version(
-                slug_dir, rel, src_dir=old_dir, skip_names=replaced,
-                staged_files=[
-                    f for fs in plan["staged"].values() for f in fs
-                ],
-                extra={"batch": spec, "ddl": ddl},
-                stats_cols=_LAYOUT_STATS_COLS,
+            cur_dir, ptr = _publish(
+                spark, slug_dir, rel, (cur_dir, ptr),
+                {"batch": spec, "ddl": ddl}, skip=skip, staged=staged,
+                stage=(sname, stage), retire=False,
             )
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-            import shutil as _shutil
-
-            _shutil.rmtree(stage, ignore_errors=True)
             new_versions[rel] = ptr["version"]
             # The PLAIN builder dir is this slug's pristine base — the
             # source `_rebuild_pristine_rel` re-derives from on a spec
@@ -3498,18 +2977,11 @@ def layout_multirel_commit(spark, sf_dir):
     the two-sided delete in SQL — any partial or skewed application
     hash-fails."""
     dirs = _multirel_delete_commit(spark, sf_dir)
-    o_full = load_table(spark, sf_dir, "orders")
-    li_full = load_table(spark, sf_dir, "lineitem")
-    o_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in o_full.schema.fields
+    o, li = (
+        spark.read.schema(_ddl(load_table(spark, sf_dir, t).schema))
+        .parquet(dirs[f"{t}_c"])
+        for t in ("orders", "lineitem")
     )
-    l_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in li_full.schema.fields
-    )
-    o = spark.read.schema(o_ddl).parquet(dirs["orders_c"])
-    li = spark.read.schema(l_ddl).parquet(dirs["lineitem_c"])
     oa = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders")
     )

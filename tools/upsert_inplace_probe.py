@@ -59,15 +59,9 @@ def _mb(paths):
 
 
 def _slug(sf_dir, buckets, ns):
-    import hashlib
-
     from pycaim_spark.queries import advanced
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    return hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{buckets}:{ns}:"
-        f"{advanced._layout_fingerprint(src)}".encode()
-    ).hexdigest()[:8]
+    return advanced._layout_slug(sf_dir, buckets, ns)[0]
 
 
 def _measure_version(slug_dir, rel):
