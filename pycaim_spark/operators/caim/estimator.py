@@ -55,6 +55,10 @@ except ImportError:  # pragma: no cover - fallback for exotic installs
 _cloudpickle.register_pickle_by_value(_core_mod)
 _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
+#: The pre-pointer histogram store: one plain ``hist/`` dir. This code
+#: does not read it.
+_LEGACY = ("hist",)
+
 
 class _CaimParams(Params):
     inputCols = Param(
@@ -90,6 +94,17 @@ class _CaimParams(Params):
                          strategy="histogram")
 
 
+def _melt(dataset: DataFrame, cols: list[str], label: str) -> DataFrame:
+    """Step 1: melt the feature columns JVM-side into ``(feature, value,
+    label)`` rows with one ``stack(n, 'f1', f1, 'f2', f2, ...)``
+    projection, dropping rows with a null value or label."""
+    stack_args = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
+    return dataset.select(
+        F.expr(f"stack({len(cols)}, {stack_args}) AS (feature, value)"),
+        F.col(label).cast("string").alias("label"),
+    ).filter(F.col("value").isNotNull() & F.col("label").isNotNull())
+
+
 def melted_histogram(dataset: DataFrame, cols: list[str], label: str) -> DataFrame:
     """Steps 1–2 of the Strategy-B fit as a standalone frame: melt the
     feature columns JVM-side and collapse to the ``(feature, value,
@@ -98,13 +113,10 @@ def melted_histogram(dataset: DataFrame, cols: list[str], label: str) -> DataFra
     what :func:`caim_incremental_fit` persists and folds delta slices
     into (the agg_incremental_merge pattern applied to the reference-core
     operator)."""
-    stack_args = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
-    melted = dataset.select(
-        F.expr(f"stack({len(cols)}, {stack_args}) AS (feature, value)"),
-        F.col(label).cast("string").alias("label"),
-    ).filter(F.col("value").isNotNull() & F.col("label").isNotNull())
-    return melted.groupBy("feature", "value", "label").agg(
-        F.count(F.lit(1)).alias("cnt")
+    return (
+        _melt(dataset, cols, label)
+        .groupBy("feature", "value", "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -161,8 +173,8 @@ def caim_incremental_fit(
     displaced version tombstoned and grace-collected. The base histogram
     commits as its own version before the first merge, so a merge that
     crashes leaves the base (or the last merged state) in place, and a
-    re-delivered slice merges into it. A pointer-less plain ``hist/``
-    (the pre-pointer layout) reads as version 0."""
+    re-delivered slice merges into it. A dir holding the pre-pointer
+    plain ``hist/`` raises `commit.LegacyFormatError` untouched."""
     import os
 
     from pycaim_spark.operators import commit
@@ -175,33 +187,31 @@ def caim_incremental_fit(
         commit.write_json_atomic(ptr_path, {"version": n})
 
     ptr_path = os.path.join(store_dir, "hist_current.json")
-    legacy = os.path.join(store_dir, "hist")
     with commit.store_lock(store_dir):
+        entries = os.listdir(store_dir)
+        commit.refuse_legacy(store_dir, entries, _LEGACY)
         ptr = commit.load_pointer(ptr_path)
         hist_vs = [
             (int(d[len("hist_v"):]), os.path.join(store_dir, d))
-            for d in os.listdir(store_dir)
+            for d in entries
             if d.startswith("hist_v") and d[len("hist_v"):].isdigit()
         ]
         if ptr is not None:
             v = ptr["version"]
-            olds = hist_vs + ([(-1, legacy)] if os.path.isdir(legacy) else [])
-            commit.reconcile_versions(olds, v)
-            for n, path in olds:
+            commit.reconcile_versions(hist_vs, v)
+            for n, path in hist_vs:
                 if n < v:
                     commit.collect_if_aged(path, commit.store_grace(), data=True)
-            cur = version(v)
         else:
             # No pointer: every hist_v* is an unpublished write.
             commit.reconcile_versions(hist_vs, -1)
-            v, cur = 0, legacy
-            if not os.path.exists(os.path.join(legacy, "_SUCCESS")):
-                if base_dataset is None:
-                    raise ValueError(
-                        f"no histogram store at {store_dir} and no base"
-                    )
-                cur = version(0)
-                publish(melted_histogram(base_dataset, cols, label), 0)
+            if base_dataset is None:
+                raise ValueError(
+                    f"no histogram store at {store_dir} and no base"
+                )
+            v = 0
+            publish(melted_histogram(base_dataset, cols, label), 0)
+        cur = version(v)
         merged = (
             spark.read.parquet(cur)
             .unionByName(melted_histogram(delta_dataset, cols, label))
@@ -252,13 +262,6 @@ class CaimDiscretizer(Estimator, _CaimParams):
         label = self.getOrDefault(self.labelCol)
         max_cand = self.getOrDefault(self.maxCandidates)
 
-        # 1. Melt features JVM-side: stack(n, 'f1', f1, 'f2', f2, ...).
-        stack_args = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
-        melted = dataset.select(
-            F.expr(f"stack({len(cols)}, {stack_args}) AS (feature, value)"),
-            F.col(label).cast("string").alias("label"),
-        ).filter(F.col("value").isNotNull() & F.col("label").isNotNull())
-
         if self.getOrDefault(self.strategy) == "jobs":
             # Strategy A: distributed greedy per feature, one Spark job per
             # accepted cut (see strategy_a.py) — nothing single-node.
@@ -266,6 +269,7 @@ class CaimDiscretizer(Estimator, _CaimParams):
                 fit_feature_distributed,
             )
 
+            melted = _melt(dataset, cols, label)
             cuts = {
                 c: fit_feature_distributed(
                     melted.filter(F.col("feature") == c).select("value", "label")
@@ -283,10 +287,7 @@ class CaimDiscretizer(Estimator, _CaimParams):
         # groupBy in fit_from_histogram inserts its own hash exchange on
         # `feature` — an explicit repartition would add a redundant one).
         cuts = fit_from_histogram(
-            melted.groupBy("feature", "value", "label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            ),
-            max_cand,
+            melted_histogram(dataset, cols, label), max_cand
         )
         model = CaimDiscretizerModel(
             cuts=cuts, outputSuffix=self.getOrDefault(self.outputSuffix)

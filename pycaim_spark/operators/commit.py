@@ -48,10 +48,15 @@ down, so their tombstone is the plain ``superseded.json`` beside them.
 Pass ``data=True`` for the first kind.
 
 **Link assembly.** A version built from another dir's files (a layout
-MERGE reuses untouched buckets; a legacy store migrates to ``*_v0``)
-hard-links them (`link_files`, falling back to a copy across
-filesystems) and never renames live files, so a reader of the source
-keeps scanning intact inodes.
+MERGE reuses untouched buckets) hard-links them (`link_files`, falling
+back to a copy across filesystems) and never renames live files, so a
+reader of the source keeps scanning intact inodes.
+
+**Retired formats.** The pre-pointer layouts (unversioned base dirs,
+commit journals, sidecar manifests, marker files) are not read, healed
+or migrated. A write path's recovery step lists its dir under the writer
+lock and `refuse_legacy` raises `LegacyFormatError` on such an entry,
+without touching the dir: every store is a rebuildable cache.
 
 **Locks.** Writers serialize on an exclusive ``flock`` (`FileLock`);
 readers take none. Acquisition re-checks the lock file's inode, so a
@@ -64,6 +69,7 @@ are manifest entries, and the catalog provides the lock.
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import shutil
@@ -116,6 +122,26 @@ def load_pointer(path: str, key: str = "version", kind=int) -> dict | None:
         return doc if isinstance(doc.get(key), kind) else None
     except (OSError, ValueError, AttributeError):
         return None
+
+
+# -- retired formats -------------------------------------------------------
+
+class LegacyFormatError(RuntimeError):
+    """A store dir holds an entry of an on-disk format this code no
+    longer reads."""
+
+
+def refuse_legacy(store_dir: str, entries, legacy: tuple[str, ...]) -> None:
+    """Raise `LegacyFormatError` if a name in ``entries`` (a listing of
+    ``store_dir``) matches one of the store's ``legacy`` patterns
+    (`fnmatch` syntax). Never modifies the dir."""
+    for name in sorted(entries):
+        if any(fnmatch.fnmatchcase(name, pat) for pat in legacy):
+            raise LegacyFormatError(
+                f"{store_dir} holds {name!r}, an entry of a retired "
+                "pre-pointer on-disk format that this code does not "
+                "read: delete it and rebuild"
+            )
 
 
 # -- writer lock ------------------------------------------------------------
@@ -259,17 +285,6 @@ def link_files(src: str, dst: str, skip=None) -> None:
             os.link(full, os.path.join(dst, fn))
         except OSError:
             shutil.copy2(full, os.path.join(dst, fn))
-
-
-def link_assemble(src: str, dst: str) -> None:
-    """Publish ``dst`` as a link-copy of ``src``, complete or absent:
-    files are linked into ``dst + ".assembling"`` and the dir is renamed
-    into place."""
-    stray = dst + ".assembling"
-    shutil.rmtree(stray, ignore_errors=True)
-    os.makedirs(stray)
-    link_files(src, stray)
-    os.rename(stray, dst)
 
 
 # -- keyed layers -----------------------------------------------------------

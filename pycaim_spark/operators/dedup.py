@@ -17,7 +17,6 @@ through the shared protocol in ``operators/commit.py``: versioned
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 import pandas as pd
@@ -981,20 +980,9 @@ def _store_manifest_ordered(store_dir: str) -> list[str]:
     (``minhash_store_manifest_gc``) must use this order: arbitrary ingest
     keys don't sort chronologically ('day10' < 'day2' lexicographically),
     and GC'ing the wrong end shrinks the replay-idempotency window
-    (ADVICE r11). Since r16 the manifest travels INSIDE the snapshot
-    pointer (one atomic document with the base version — see
-    `_commit_pointer`); ``folded_keys.json`` is read only for legacy
-    stores the next write path hasn't migrated yet."""
-    import json as _json
-
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        return list(ptr.get("folded", ()))
-    path = os.path.join(store_dir, "folded_keys.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return list(_json.load(f))
-    return []
+    (ADVICE r11). The manifest travels INSIDE the snapshot pointer (one
+    atomic document with the base version — see `_commit_pointer`)."""
+    return list((_load_pointer(store_dir) or {}).get("folded", ()))
 
 
 def _store_manifest(store_dir: str) -> set[str]:
@@ -1018,8 +1006,8 @@ def minhash_signature_store_append(
     of the daily loop: probe the slice, keep the survivors, append them
     so TOMORROW's slice dedups against today's. Idempotent per
     ``ingest_key``: the layer dir is overwritten on re-delivery, and a
-    key the compactor has already folded into the base (the manifest,
-    ``folded_keys.json``) is skipped entirely — replaying a processed
+    key the compactor has already folded into the base (the pointer's
+    ``folded`` manifest) is skipped entirely — replaying a processed
     day is a no-op, the same batch-id discipline as the streaming upsert
     sink (streaming/runner.py). Layers hold RAW band rows (the LSM log);
     ``minhash_signature_store_compact`` folds them into the
@@ -1093,23 +1081,10 @@ def _store_gc_superseded(store_dir: str) -> None:
     as ``_superseded.json`` — the underscore prefix keeps it invisible
     to a stale reader's parquet scan of that very dir."""
     grace = commit.store_grace()
-    # Tombstoned LEGACY dirs (r18: the migration link-assembles v0 and
-    # tombstones the unversioned base instead of renaming it) collect
-    # on the same grace as any displaced version.
-    for path in [p for _k, _n, p in _version_dirs(store_dir)] + \
-            _legacy_dirs(store_dir):
+    for _k, _n, path in _version_dirs(store_dir, os.listdir(store_dir)):
         commit.collect_if_aged(path, grace, data=True)
     for root in ("append", "deletes"):
         commit.collect_layers(os.path.join(store_dir, root), grace)
-
-
-def _legacy_dirs(store_dir: str) -> list[str]:
-    """The pre-r16 unversioned base and its journal-era swap dirs."""
-    return [
-        os.path.join(store_dir, d) + sfx
-        for d in ("sets", "buckets")
-        for sfx in ("", "_next", "_old")
-    ]
 
 
 def _merge_bucket_layers(
@@ -1159,14 +1134,11 @@ def _store_write_lock(store_dir: str) -> commit.FileLock:
     return commit.store_lock(store_dir)
 
 
-# Importable under its historical name.
-_write_json_atomic = commit.write_json_atomic
-
-
 def _load_pointer(store_dir: str) -> dict | None:
     """Parse the store's snapshot pointer ``current.json`` —
     ``{"version": N, "folded": [...]}``; ``None`` if absent or
-    unparseable (a legacy or unbuilt store)."""
+    unparseable (an unbuilt store, or a build that crashed before its
+    pointer write)."""
     return commit.load_pointer(os.path.join(store_dir, "current.json"))
 
 
@@ -1194,12 +1166,13 @@ def _versioned(store_dir: str, name: str, version: int) -> str:
     return os.path.join(store_dir, f"{name}_v{version}")
 
 
-def _version_dirs(store_dir: str) -> list[tuple[str, int, str]]:
-    """All on-disk versioned base dirs as (kind, version, path)."""
+def _version_dirs(
+    store_dir: str, entries: list[str]
+) -> list[tuple[str, int, str]]:
+    """The versioned base dirs among ``entries`` (a listing of
+    ``store_dir``) as (kind, version, path)."""
     out = []
-    if not os.path.isdir(store_dir):
-        return out
-    for d in os.listdir(store_dir):
+    for d in entries:
         for kind in ("sets", "buckets"):
             prefix = f"{kind}_v"
             if d.startswith(prefix):
@@ -1213,24 +1186,13 @@ def _version_dirs(store_dir: str) -> list[tuple[str, int, str]]:
     return out
 
 
-def _load_journal(store_dir: str) -> list[str] | None:
-    """Parse the compaction commit journal; ``None`` if absent OR
-    unparseable. The journal is written atomically (temp + rename), so a
-    truncated file can only be a pre-atomic-write artifact or torn
-    storage — and treating it as absent is SAFE: the swap renames only
-    start after the journal is durably in place, so no journal ⇒ the old
-    base and every append layer are intact ⇒ roll back (ADVICE r10: a
-    truncated journal must not strand the store)."""
-    import json as _json
-
-    journal = os.path.join(store_dir, "compact_journal.json")
-    if not os.path.exists(journal):
-        return None
-    try:
-        with open(journal) as f:
-            return _json.load(f)
-    except ValueError:
-        return None
+#: Top-level entries of the pre-pointer store formats (the unversioned
+#: base, its journal-era swap dirs and manifests, the link-assembly
+#: strays of the one-time migration). This code reads none of them.
+_LEGACY = (
+    "sets", "buckets", "*_next", "*_old", "*.assembling",
+    "compact_journal.json", "folded_keys.json",
+)
 
 
 def _recover_layer_swaps(store_dir: str) -> None:
@@ -1245,10 +1207,16 @@ def _recover_store_swap(store_dir: str) -> None:
     top of every WRITE path, under ``_store_write_lock`` — probes stay
     read-only, ADVICE r10).
 
-    Since r16 the base is VERSIONED (``sets_v{N}``/``buckets_v{N}``)
-    behind the atomic ``current.json`` snapshot pointer, so recovery is
-    a pure reconciliation with no roll-forward/roll-back decision tree:
+    A dir holding a `_LEGACY` entry raises `commit.LegacyFormatError`
+    before anything is touched. Otherwise the base is VERSIONED
+    (``sets_v{N}``/``buckets_v{N}``) behind the atomic ``current.json``
+    snapshot pointer, so recovery is a pure reconciliation with no
+    roll-forward/roll-back decision tree:
 
+    - no pointer: the store is unbuilt, or its build crashed before the
+      pointer write. A COMPLETE ``*_v0`` pair is that build's output and
+      gets the pointer it was about to receive; an incomplete pair is a
+      stray and is deleted (the next build re-derives it);
     - version dirs NEWER than the pointer are uncommitted compactor
       output (the pointer flip is the commit) — delete them; the
       compaction re-derives them bit-identically;
@@ -1256,116 +1224,24 @@ def _recover_store_swap(store_dir: str) -> None:
       (crash between pointer commit and phase-1 GC) get one, so grace
       collection proceeds;
     - append layers named in the pointer's ``folded`` list that missed
-      their tombstone get one (same crash window).
-
-    LEGACY stores (pre-r16: unversioned ``sets``/``buckets`` plus the
-    journal/next/old swap machinery) are first healed by the old
-    protocol — journal present → the ``*_next`` base is authoritative,
-    finish the renames; absent → delete strays — and then MIGRATED in
-    place: base dirs renamed to ``*_v0``, the folded manifest folded
-    into a version-0 pointer, ``folded_keys.json`` retired."""
+      their tombstone get one (same crash window)."""
     import shutil
 
+    entries = os.listdir(store_dir)
+    commit.refuse_legacy(store_dir, entries, _LEGACY)
     _recover_layer_swaps(store_dir)
     ptr = _load_pointer(store_dir)
     if ptr is None:
-        journal = os.path.join(store_dir, "compact_journal.json")
-        folded = _load_journal(store_dir)
-        dirs = [os.path.join(store_dir, d) for d in ("sets", "buckets")]
-        if folded is None:
-            # No (or torn) journal: ADVICE r10 doctrine — renames only
-            # started after an atomic journal write, so the unversioned
-            # base + layers are intact and *_next/*_old are debris.
-            if os.path.exists(journal):
-                os.remove(journal)
-            for cur in dirs:
-                for stray in (cur + "_next", cur + "_old"):
-                    if os.path.exists(stray):
-                        shutil.rmtree(stray)
-        else:
-            # Valid journal: the folded base is authoritative, but the
-            # legacy binary may have crashed at ANY point of its rename
-            # sequence, so per dir the folded content is in *_next
-            # (rename not yet executed) or already in the unversioned
-            # dir (rename consumed the next). The per-dir source rule
-            # below handles every mix — including one-renamed-one-not,
-            # where choosing next-if-complete-else-cur yields the
-            # consistent POST-fold pair. An incomplete *_next (no
-            # _SUCCESS — impossible under the legacy protocol's
-            # write-journal-after-next-completes invariant, so only a
-            # corrupted store) is treated as absent: the unversioned
-            # dir serves, strictly safer than the legacy heal's rename
-            # of the torn dir over it. The journal itself is consumed
-            # only after the migration commits (below), preserving the
-            # folded-keys manifest the r17 heal wrote to
-            # folded_keys.json — dropping it would leave the
-            # physically-folded layers live with an empty skip set and
-            # double-count their rows through the layered probe.
-            for cur in dirs:
-                nxt = cur + "_next"
-                if os.path.exists(nxt) and not os.path.exists(
-                    os.path.join(nxt, "_SUCCESS")
-                ):
-                    shutil.rmtree(nxt)
-        # Migrate a healed legacy base to the versioned layout, written
-        # as a crash-idempotent FORWARD COMPLETION (a crash anywhere
-        # must not strand or delete data). r18 (VERDICT r17 #6): v0 is
-        # LINK-ASSEMBLED from the live legacy dir — with a journal,
-        # from its *_next twin, which the legacy commit point made
-        # authoritative — never renamed (layout.py's pattern), so a
-        # lockless reader mid-materialization on a legacy store keeps
-        # scanning intact files; the legacy dirs are TOMBSTONED after
-        # the pointer commits and grace-collected. The assembly is
-        # complete-or-absent (temp dir + atomic rename), so a
-        # pointer-less COMPLETE v0 pair is a crashed migration →
-        # commit it; an incomplete pair can only be a direct v0 build
-        # that crashed before its pointer → delete the strays, the
-        # next build re-derives. Legacy READERS resolve through
-        # `_store_read_view`'s fallback + stability loop and settle on
-        # the pointer once it lands; their resolved legacy paths stay
-        # on disk for the grace period. The pre-r18 honesty note (the
-        # one-time migration rename window) is gone — there is no
-        # rename of live files anywhere in this store family.
-        v0 = [d + "_v0" for d in dirs]
-        for cur, nxt in zip(dirs, v0):
-            src = (
-                cur + "_next"
-                if folded is not None
-                and os.path.exists(os.path.join(cur + "_next", "_SUCCESS"))
-                else cur
-            )
-            if os.path.exists(src) and not os.path.exists(nxt):
-                commit.link_assemble(src, nxt)
-        manifest = os.path.join(store_dir, "folded_keys.json")
-        if all(
-            os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0
-        ):
-            legacy_folded = list(folded) if folded is not None else []
-            if folded is None and os.path.exists(manifest):
-                import json as _json
-
-                with open(manifest) as f:
-                    legacy_folded = list(_json.load(f))
-            _commit_pointer(store_dir, 0, legacy_folded)
-            if os.path.exists(manifest):
-                os.remove(manifest)
-            if folded is not None:
-                _tombstone_folded_layers(store_dir, keys=set(folded))
-                if os.path.exists(journal):
-                    os.remove(journal)
-            # Phase-1 GC of the superseded legacy dirs;
-            # `_store_gc_superseded` collects them after grace, like any
-            # displaced version.
-            for d in _legacy_dirs(store_dir):
-                if os.path.isdir(d):
-                    commit.tombstone(d, data=True)
+        v0 = [_versioned(store_dir, d, 0) for d in ("sets", "buckets")]
+        if all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0):
+            _commit_pointer(store_dir, 0, [])
         else:
             for d in v0:
-                if os.path.exists(d):
-                    shutil.rmtree(d)
+                shutil.rmtree(d, ignore_errors=True)
         return
     commit.reconcile_versions(
-        [(n, p) for _k, n, p in _version_dirs(store_dir)], ptr["version"]
+        [(n, p) for _k, n, p in _version_dirs(store_dir, entries)],
+        ptr["version"],
     )
     # Delete layers the pointer has folded (``del_folded``) whose
     # tombstone write was lost to a crash: re-lay it so grace
@@ -1376,17 +1252,6 @@ def _recover_store_swap(store_dir: str) -> None:
         {os.path.basename(d) for d in _store_delete_dirs(store_dir)}
         & set(ptr.get("del_folded", ())),
     )
-    # Legacy scaffolding outliving a crash between the migration's
-    # pointer commit and its phase-1 tombstoning (r18): the pointer
-    # supersedes the unversioned dirs by definition — re-lay their
-    # tombstones idempotently; `.assembling` strays are unpublished.
-    for d in ("sets", "buckets"):
-        shutil.rmtree(
-            os.path.join(store_dir, d) + "_v0.assembling", ignore_errors=True
-        )
-    for legacy in _legacy_dirs(store_dir):
-        if os.path.isdir(legacy) and not commit.tombstoned(legacy, data=True):
-            commit.tombstone(legacy, data=True)
     _tombstone_folded_layers(store_dir, keys=set(ptr.get("folded", ())))
 
 
@@ -1394,66 +1259,33 @@ def _store_read_view(store_dir: str) -> tuple[str, str, set[str]]:
     """Resolve a CONSISTENT read-only view of the store: returns
     (sets_path, buckets_path, folded_keys_to_skip).
 
-    Since r16 (VERDICT r15 #3) this is a SNAPSHOT-POINTER read: one
-    atomic parse of ``current.json`` yields the base version AND the
-    folded-layer skip set together, and the resolved ``sets_v{N}``/
-    ``buckets_v{N}`` dirs are IMMUTABLE once published — a compaction
-    that commits version N+1 while this reader is still materializing
-    only flips the pointer and tombstones version N, whose files stay on
-    disk for ``$PYCAIM_STORE_GC_GRACE`` seconds (the version tombstone
-    lives INSIDE the dir as underscore-prefixed ``_superseded.json``,
-    invisible to the parquet scan). That closes the last lockless-reader
-    window this store family had: pre-r16 the base swap renamed the
-    CURRENT dirs, so a reader that resolved before a commit could take
-    FileNotFoundException mid-scan and needed a documented re-plan
-    remedy; now every resolved path outlives the reader by a grace
-    period, the same contract the append layers have had since r15 —
+    This is a SNAPSHOT-POINTER read: one atomic parse of
+    ``current.json`` yields the base version AND the folded-layer skip
+    set together, and the resolved ``sets_v{N}``/``buckets_v{N}`` dirs
+    are IMMUTABLE once published — a compaction that commits version
+    N+1 while this reader is still materializing only flips the pointer
+    and tombstones version N, whose files stay on disk for
+    ``$PYCAIM_STORE_GC_GRACE`` seconds (the version tombstone lives
+    INSIDE the dir as underscore-prefixed ``_superseded.json``,
+    invisible to the parquet scan). Every resolved path outlives the
+    reader by a grace period, the same contract the append layers have —
     the exact lifetime semantics a table-format snapshot commit provides
     in deployment. A reader stale by MORE than the grace period (scan
     paused ~15 min across a commit) is the residual, governed by the
-    grace knob like every two-phase GC in this repo.
-
-    Legacy stores (no pointer yet — migrated lazily by the next write
-    path's `_recover_store_swap`) fall back to the pre-r16 resolution:
-    journal present → the ``*_next`` base is authoritative and its
-    folded layers are skipped; absent → the unversioned dirs, with a
-    stability loop re-resolving until the journal state and dir
-    existence agree (a mid-migration reader re-enters here and settles
-    on the post-migration pointer). Since r18 (VERDICT r17 #6) the
-    one-time legacy→versioned migration LINK-ASSEMBLES ``*_v0`` from
-    the live unversioned dirs and tombstones them after the pointer
-    commits — the pre-r18 rename of live files (and its documented
-    FileNotFoundException window for a mid-materialization legacy
-    reader) is gone: a legacy reader's resolved paths now outlive the
-    migration by the grace period, so the "no reader-visible rename
-    anywhere" claim holds for EVERY store, born versioned or legacy."""
-    for attempt in range(20):
-        ptr = _load_pointer(store_dir)
-        if ptr is not None:
-            v = ptr["version"]
-            return (
-                _versioned(store_dir, "sets", v),
-                _versioned(store_dir, "buckets", v),
-                set(ptr.get("folded", ())),
-            )
-        folded = _load_journal(store_dir)
-        paths = []
-        for d in ("sets", "buckets"):
-            cur = os.path.join(store_dir, d)
-            nxt = cur + "_next"
-            paths.append(
-                nxt if folded is not None and os.path.exists(nxt) else cur
-            )
-        # Stability check: a swap that landed mid-resolution could pair
-        # one pre-swap path with one post-swap path (old sets + new
-        # buckets double-counts folded layers through skip_keys=∅).
-        # Accept only a resolution whose journal state is unchanged and
-        # whose dirs all exist after resolving.
-        if all(os.path.exists(p) for p in paths) and \
-                _load_journal(store_dir) == folded:
-            break
-        time.sleep(0.05)
-    return paths[0], paths[1], set(folded or ())
+    grace knob like every two-phase GC in this repo. A store with no
+    pointer has no committed snapshot to read and raises."""
+    ptr = _load_pointer(store_dir)
+    if ptr is None:
+        raise FileNotFoundError(
+            f"signature store at {store_dir} has no committed snapshot "
+            "(no current.json): build it first"
+        )
+    v = ptr["version"]
+    return (
+        _versioned(store_dir, "sets", v),
+        _versioned(store_dir, "buckets", v),
+        set(ptr.get("folded", ())),
+    )
 
 
 def minhash_signature_store_compact(spark, store_dir: str) -> None:
@@ -1488,8 +1320,7 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
         ptr = _load_pointer(store_dir)
         if ptr is None:
             # Live append layers but no committed base snapshot (a base
-            # build that never completed, or a legacy migration that
-            # removed incomplete v0 dirs): there is nothing to fold
+            # build that never completed): there is nothing to fold
             # INTO. Fail with the actual condition instead of the
             # opaque 'NoneType not subscriptable' (ADVICE r16).
             raise RuntimeError(
@@ -1623,21 +1454,14 @@ def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
 
 def _manifest_gc_locked(store_dir: str, keep_last: int) -> int:
     """GC body, caller holds the write lock (compaction tail-calls this
-    inside its own lock — flock on the same fd is not reentrant). On a
-    pointer-committed store the trim rewrites the pointer in place
-    (same base version, shorter folded list — still one atomic doc);
-    the legacy-file branch only runs for unmigrated stores."""
+    inside its own lock — flock on the same fd is not reentrant). The
+    trim rewrites the pointer in place (same base version, shorter
+    folded list — still one atomic doc)."""
     keys = _store_manifest_ordered(store_dir)
     if len(keys) <= keep_last:
         return 0
     kept = keys[-keep_last:] if keep_last > 0 else []
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        _commit_pointer(store_dir, ptr["version"], kept)
-    else:
-        commit.write_json_atomic(
-            os.path.join(store_dir, "folded_keys.json"), kept
-        )
+    _commit_pointer(store_dir, _load_pointer(store_dir)["version"], kept)
     return len(keys) - len(kept)
 
 

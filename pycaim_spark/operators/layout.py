@@ -38,6 +38,11 @@ from pycaim_spark.operators.merge import mv_with_crc
 
 _VDIR_RE = re.compile(r"^(.+)_v(\d+)$")
 
+#: Slug entries of the r16 layout formats: the CDC marker files
+#: (``upsert{sfx}_orders.json`` and its pending and stream variants) and
+#: the ``{rel}_old-{ms}`` undo dirs. This code reads none of them.
+_LEGACY = ("upsert*_orders.json", "*_old-*")
+
 
 def _slug_lock_path(slug_dir: str) -> str:
     slug_dir = os.path.abspath(slug_dir)
@@ -317,23 +322,27 @@ def gc_layout_versions(slug_dir: str) -> None:
       normal grace window, retention pins respected at collection)
       rather than deleted. A pointer FILE that exists but fails to
       parse makes us skip the rel entirely (fail-safe: never delete on
-      ambiguity);
-    - legacy r16 undo dirs (``*_old-*`` with a plain layer tombstone)
-      are collected past the same grace.
+      ambiguity).
+
+    A slug holding a `_LEGACY` entry raises `commit.LegacyFormatError`
+    before anything is touched. Every motion and cold build runs this
+    sweep first (`_slug_motion`), so none of them starts on a slug a
+    pre-pointer build left behind.
     """
     if not os.path.isdir(slug_dir):
         return
+    entries = os.listdir(slug_dir)
+    commit.refuse_legacy(slug_dir, entries, _LEGACY)
     grace = commit.layout_grace()
-    for d in os.listdir(slug_dir):
+    for d in entries:
         p = os.path.join(slug_dir, d)
         if not os.path.isdir(p):
             continue
-        data = commit.tombstoned(p, data=True)
-        if data or ("_old-" in d and commit.tombstoned(p)):
+        if commit.tombstoned(p, data=True):
             if _gc_retained(slug_dir, p, d):
                 continue  # pinned snapshot (time travel): never collect
             m = _VDIR_RE.match(d)
-            if m and data:
+            if m:
                 ptr = load_layout_pointer(slug_dir, m.group(1))
                 if ptr is not None and ptr.get("dir") == d:
                     # The rel's pointer still references this dir: the
@@ -341,7 +350,7 @@ def gc_layout_versions(slug_dir: str) -> None:
                     # resurrect the LIVE state rather than collect it.
                     commit.clear_tombstone(p, data=True)
                     continue
-            commit.collect_if_aged(p, grace, data=data)
+            commit.collect_if_aged(p, grace, data=True)
             continue
         if d.endswith("_stage") or "_feed_tmp_" in d:
             # Stage/scratch dirs only live inside a locked writer's own

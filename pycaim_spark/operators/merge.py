@@ -140,11 +140,11 @@ def plan_bucket_local_merge(
 
     Returns ``{"touched": [...], "live": {bucket: [files]},
     "staged": {bucket: [files]}}``. Empty-delta batches return
-    ``touched == []`` with nothing staged. The staged table
-    (``stage_table`` at ``stage_path``) is left in place for the caller
-    to swap from and then drop."""
-    import shutil
-
+    ``touched == []`` with nothing staged. Precondition: the caller
+    hands over a WIPED stage — no ``stage_table`` in the catalog and no
+    dir at ``stage_path`` (every motion wipes it under its slug lock,
+    `_slug_motion`/`_drop_stage`). The staged table is left in place for
+    the caller to swap from and then drop."""
     key_sets = []
     if upserts is not None:
         key_sets.append(upserts.select(key))
@@ -182,9 +182,6 @@ def plan_bucket_local_merge(
         merged = merged.unionByName(
             upserts, allowMissingColumns=evolve_schema
         )
-
-    spark.sql(f"DROP TABLE IF EXISTS {stage_table}")
-    shutil.rmtree(stage_path, ignore_errors=True)
     (
         merged.repartition(buckets, F.col(key))
         .write.mode("overwrite")

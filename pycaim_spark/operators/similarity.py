@@ -813,58 +813,60 @@ _INDEX_ALGO_VERSION = 3
 def _codes_pointer(store_dir: str) -> dict | None:
     """One parse of the coded-corpus snapshot pointer
     ``codes_current.json`` — ``{"version": N[, "del_folded": [...]]
-    [, "app_folded": [...]]}``; None = legacy/unbuilt store."""
+    [, "app_folded": [...]]}``; None = unbuilt store."""
     return commit.load_pointer(os.path.join(store_dir, "codes_current.json"))
 
 
 def _codes_version(store_dir: str) -> int | None:
-    """The pointed codes version; ``None`` = legacy/unbuilt store."""
+    """The pointed codes version; ``None`` = unbuilt store."""
     ptr = _codes_pointer(store_dir)
     return None if ptr is None else ptr["version"]
 
 
-def _codes_dir(store_dir: str, ptr: dict | None) -> str:
-    if ptr is not None:
-        return os.path.join(store_dir, f"codes_v{ptr['version']}")
-    return os.path.join(store_dir, "codes")
+def _codes_dir(store_dir: str, ptr: dict) -> str:
+    return os.path.join(store_dir, f"codes_v{ptr['version']}")
 
 
-def _codes_path(store_dir: str) -> str:
+def _codes_path(store_dir: str) -> str | None:
     """Resolve the live coded-corpus dir: ``codes_v{N}`` behind the
-    pointer, or the legacy unversioned ``codes`` until the next write
-    path migrates the store. A version dir is immutable once published;
-    replacement publishes a new version and flips the pointer, so a
-    reader's resolved path stays valid for ``$PYCAIM_STORE_GC_GRACE``
-    seconds after any retrain."""
-    return _codes_dir(store_dir, _codes_pointer(store_dir))
+    pointer, or None for an unbuilt store. A version dir is immutable
+    once published; replacement publishes a new version and flips the
+    pointer, so a reader's resolved path stays valid for
+    ``$PYCAIM_STORE_GC_GRACE`` seconds after any retrain."""
+    ptr = _codes_pointer(store_dir)
+    return None if ptr is None else _codes_dir(store_dir, ptr)
+
+
+#: Top-level entries of the pre-pointer codes formats (the unversioned
+#: ``codes`` dir, its swap dirs, the migration's link-assembly strays
+#: and the in-base append manifest). This code reads none of them.
+_LEGACY = (
+    "codes", "codes_next", "codes_old*", "*.assembling", "append_keys.json",
+)
 
 
 def _recover_codes(store_dir: str) -> None:
     """Write-path reconciliation for the coded corpus (caller holds the
-    store write lock): reconcile ``codes_v*`` against the pointer, drop
-    legacy ``codes_next``/``codes_old*`` swap scaffolding, heal crashed
-    layer swaps, grace-collect tombstoned dirs, and MIGRATE a legacy
-    unversioned ``codes`` dir to a link-assembled ``codes_v0`` +
-    pointer (r18: never renamed; the legacy dir is tombstoned after the
-    pointer commits)."""
-    import json
+    store write lock): raise `commit.LegacyFormatError` on a `_LEGACY`
+    entry before anything is touched, reconcile ``codes_v*`` against
+    the pointer, heal crashed layer swaps and grace-collect tombstoned
+    dirs. With no pointer, a COMPLETE ``codes_v0`` is a build that
+    crashed between its v0 write and its pointer commit: it gets the
+    pointer it was about to receive (deleting it would lose the only
+    coded corpus). An INCOMPLETE one is a build stray and is deleted;
+    the next build re-derives it."""
     import shutil
 
     if not os.path.isdir(store_dir):
         return
+    entries = os.listdir(store_dir)
+    commit.refuse_legacy(store_dir, entries, _LEGACY)
     ptr = _codes_pointer(store_dir)
-    versions = []
-    for sib in os.listdir(store_dir):
-        path = os.path.join(store_dir, sib)
-        if sib == "codes_next" or sib.startswith("codes_old") \
-                or sib.endswith(".assembling"):
-            shutil.rmtree(path, ignore_errors=True)
-        elif sib == "codes":
-            # On a MIGRATED store the legacy dir ranks below every
-            # version: tombstoned (idempotently), then grace-collected.
-            versions.append((-1, path))
-        elif sib.startswith("codes_v") and sib[len("codes_v"):].isdigit():
-            versions.append((int(sib[len("codes_v"):]), path))
+    versions = [
+        (int(sib[len("codes_v"):]), os.path.join(store_dir, sib))
+        for sib in entries
+        if sib.startswith("codes_v") and sib[len("codes_v"):].isdigit()
+    ]
     grace = commit.store_grace()
     if ptr is not None:
         commit.reconcile_versions(versions, ptr["version"])
@@ -881,55 +883,14 @@ def _recover_codes(store_dir: str) -> None:
             layer_root, marker, set((ptr or {}).get(key, ()))
         )
         commit.collect_layers(layer_root, grace)
-
-    # Legacy append manifest (pre-r18 appends added part files to the
-    # live version dir with ``append_keys.json`` as the replay guard —
-    # those rows are physically in the base already): fold the keys
-    # into the pointer's ``app_folded`` and retire the file, so
-    # redelivered keys keep no-op'ing under the new scheme.
-    def _fold_legacy_append_manifest():
-        legacy_app = os.path.join(store_dir, "append_keys.json")
-        if not os.path.exists(legacy_app):
-            return
-        try:
-            with open(legacy_app) as f:
-                keys = list(json.load(f))
-        except (OSError, ValueError):
-            return
-        doc = _codes_pointer(store_dir)
-        prior = list(doc.get("app_folded", ()))
-        doc["app_folded"] = prior + [k for k in keys if k not in prior]
-        commit.write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"), doc
-        )
-        os.remove(legacy_app)
-
     if ptr is not None:
-        _fold_legacy_append_manifest()
         return
-    # Pointer-less stores: crash-idempotent forward completion (mirrors
-    # the minhash base migration). A COMPLETE pointer-less v0 (crashed
-    # migration, or a build that crashed between its v0 write and its
-    # pointer commit) gets the pointer it was about to receive; an
-    # INCOMPLETE one is a build stray — delete it, the next build
-    # re-derives. Deleting every pointer-less codes_v* dir instead would
-    # turn a crash between the migration and its pointer write into
-    # DATA LOSS of the only coded corpus.
-    legacy = os.path.join(store_dir, "codes")
     v0 = os.path.join(store_dir, "codes_v0")
-    if os.path.exists(legacy) and not os.path.exists(v0):
-        commit.link_assemble(legacy, v0)
     if os.path.exists(os.path.join(v0, "_SUCCESS")):
         commit.write_json_atomic(
             os.path.join(store_dir, "codes_current.json"), {"version": 0}
         )
-        # The legacy manifest's keys are physically in the base —
-        # fold them NOW, or the very next append of a redelivered
-        # key would layer a duplicate slice on top.
-        _fold_legacy_append_manifest()
-        if os.path.isdir(legacy):
-            commit.tombstone(legacy, data=True)
-    elif os.path.exists(v0):
+    else:
         shutil.rmtree(v0, ignore_errors=True)
 
 
@@ -977,11 +938,11 @@ def ivf_pq_index_build(
         params-less or hyperparameter-mismatched stores. Read-only, so
         the common serve path stays lock-free (np reads the whole npz
         eagerly, and atomic replace means it is never torn)."""
+        codes = _codes_path(store_dir)
         if not (
-            os.path.exists(npz)
-            and os.path.exists(
-                os.path.join(_codes_path(store_dir), "_SUCCESS")
-            )
+            codes is not None
+            and os.path.exists(npz)
+            and os.path.exists(os.path.join(codes, "_SUCCESS"))
         ):
             return None
         with np.load(npz) as idx:
@@ -1022,8 +983,7 @@ def ivf_pq_index_build(
         got = _try_reuse()
         if got is not None:
             return got
-        # Reconcile crash strays, grace-collect tombstoned versions, and
-        # migrate a legacy unversioned store to the pointer layout.
+        # Reconcile crash strays and grace-collect tombstoned versions.
         _recover_codes(store_dir)
         sample = np.stack(
             emb.orderBy("vec_id")
@@ -1049,15 +1009,11 @@ def ivf_pq_index_build(
         # contains — deletion intents target the OLD membership and do
         # not survive a retrain: purge the source corpus instead, per
         # ivf_pq_index_delete's scope note) and the fresh pointer
-        # carries no app_folded/del_folded. Legacy append_keys.json is
-        # retired the same way.
+        # carries no app_folded/del_folded.
         for layer in _codes_append_dirs(store_dir) + _codes_delete_dirs(
             store_dir
         ):
             commit.tombstone(layer)
-        manifest = os.path.join(store_dir, "append_keys.json")
-        if os.path.exists(manifest):
-            os.remove(manifest)
         old_v = _codes_version(store_dir)
         new_v = 0 if old_v is None else old_v + 1
         _ivf_pq_encode(emb, centroids, codebooks).write.mode(
@@ -1103,12 +1059,8 @@ def ivf_pq_index_append(
     (write-aside swap — the key is the idempotence unit), read by
     `_codes_frame` alongside the base and folded into the next codes
     version by `ivf_pq_codes_vacuum`, which records the key in the
-    pointer's ``app_folded`` manifest. This retires the pre-r18 shape
-    (part files appended into the live version dir + a separate
-    ``append_keys.json``), whose crash window — codes written, manifest
-    write lost — double-indexed a redelivered slice. Runs under the
-    store write lock; legacy manifests are folded into the pointer by
-    `_recover_codes` on the next write path. The ANN half of the daily
+    pointer's ``app_folded`` manifest, so a redelivered slice is never
+    indexed twice. Runs under the store write lock. The ANN half of the daily
     ingest loop — new documents become searchable as soon as their
     slice is appended, no index rebuild."""
     with commit.store_lock(store_dir):

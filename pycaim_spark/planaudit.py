@@ -69,8 +69,6 @@ EXECUTES_AT_BUILD = {
 BUILD_JOBS_OK = {
     "join_dpp",               # writes the status-partitioned fact, then
                               # reads it back (partition discovery)
-    "layout_zorder_skipping", # collects the custkey min/max that size the
-                              # query rectangle
     "sim_ivf",                # train the ANN index per call from
     "sim_pq",                 # driver-side collects (sim_ivf_pq_stored
     "sim_ivf_pq",             # is the persisted, train-once form)

@@ -249,7 +249,7 @@ def _cold_build(spark, slug_dir, fp, source: str, n: int, sf_dir,
     lost the lock race finds the winner's files) → ``build()`` →
     ``source.json`` provenance marker → `_gc_superseded_layouts` →
     ``attach()`` → clear the slug tombstone. A built slug without a
-    marker (a pre-r13 build, or a crash before the marker) gets it
+    marker (a crash between the build and the marker) gets it
     backfilled so GC can reason about it. Clearing the tombstone
     resurrects a slug this caller re-derived from the CURRENT
     fingerprint: its files are valid by construction, and a left
@@ -291,7 +291,7 @@ def _publish(spark, slug_dir, rel, cur, extra: dict, *, src_dir=None,
     vdir, ptr = publish_layout_version(
         slug_dir, rel, src_dir=old_dir if src_dir is None else src_dir,
         skip_names=set(skip), staged_files=list(staged), extra=extra,
-        stats_cols=_LAYOUT_STATS_COLS, carry_stats=carry_stats,
+        stats_cols=_stats_cols(rel), carry_stats=carry_stats,
     )
     if stage is not None:
         _drop_stage(spark, *stage)
@@ -400,7 +400,7 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = _BUCKETS):
     supersede time, under the lock): drop the slug from THIS session's
     catalog and tombstone it. Phase 2 (every
     later cold build, under the lock): rmtree slugs whose tombstone —
-    or, for marker-less legacy/crashed-build slugs, whose dir mtime —
+    or, for marker-less crashed-build slugs, whose dir mtime —
     is older than $PYCAIM_LAYOUT_GC_GRACE (default 900 s). Residual
     reader-crash mode: a scan that STARTS against a tombstoned slug
     after its grace expires (only reachable from a session that cached
@@ -421,9 +421,9 @@ def _bucketed_orderkey_layout(spark, sf_dir, buckets: int = _BUCKETS):
         # Lock-free warm fast path (ADVICE r13): content-addressed slug +
         # immutable files once _SUCCESS exists, so no lock is needed to
         # re-serve an attach this session already made. A visible
-        # tombstone (another process superseded this slug — a legacy
-        # marker-less supersede, or a stale-fingerprint sweep that raced
-        # this caller's regeneration) sends us through the locked path,
+        # tombstone (another process superseded this slug — a
+        # stale-fingerprint sweep that raced this caller's
+        # regeneration) sends us through the locked path,
         # which resurrects it — the slug came from the CURRENT
         # fingerprint, so its files are valid by construction. Same-bytes
         # bucket-count variants are SIBLINGS since r16 (fp-keyed GC) and
@@ -463,8 +463,8 @@ def _gc_superseded_layouts(
     reader-safety rationale). Phase 1 tombstones superseded same-source
     slugs (and DROPs them from this session's catalog);
     phase 2 deletes slugs whose tombstone — or dir mtime, for slugs with
-    no ``source.json`` marker at all (pre-r13 builds, or builds that
-    crashed before writing the marker) — is older than
+    no ``source.json`` marker at all (builds that crashed before writing
+    the marker) — is older than
     $PYCAIM_LAYOUT_GC_GRACE seconds (default 900). The mtime age test is
     what keeps an in-progress concurrent build safe from the marker-less
     sweep: its slug dir is seconds old."""
@@ -493,13 +493,11 @@ def _gc_superseded_layouts(
         # whenever two counts were in use at once. A changed fingerprint
         # (corpus regenerated) supersedes EVERY bucket variant — their
         # content-addressed slugs can never be served again, so they are
-        # pure garbage. Legacy markers without an ``fp`` field keep the
-        # old supersede-on-sight semantics (at worst one tombstone/
-        # resurrect round-trip, which the locked path already handles).
+        # pure garbage.
         if (
             meta is not None
             and (meta.get("sf_dir"), meta.get("table")) == (abs_sf, table)
-            and (fp is None or meta.get("fp") is None or meta["fp"] != fp)
+            and (fp is None or meta.get("fp") != fp)
             and not commit.tombstoned(sib_dir)
         ):
             # Every catalog table this slug ever attached carries the
@@ -608,7 +606,7 @@ def _rebuild_pristine_rel(
     old_dir, _old = resolve_layout_rel(slug_dir, rel)
     vdir, ptr = publish_layout_version(
         slug_dir, rel, src_dir=None, prebuilt_dir=tmp,
-        extra={"batch": None}, stats_cols=_LAYOUT_STATS_COLS,
+        extra={"batch": None}, stats_cols=_stats_cols(rel),
     )
     if os.path.isdir(old_dir) and old_dir != vdir:
         tombstone_layout_dir(old_dir)
@@ -710,29 +708,7 @@ def _incremental_orderkey_layout(
                 os.remove(append_marker)
             spark.sql(f"DROP TABLE IF EXISTS {cname}")
             shutil.rmtree(cpath, ignore_errors=True)
-            # ... and the UPSERT derivatives of the compacted state
-            # (ADVICE r15): surviving upsert markers would warm-path
-            # a stale orders_u* clone (or, in-place, skip re-merging
-            # the rebuilt compacted table). Markers first (so a crash
-            # mid-cleanup fails closed: no marker → full re-derive),
-            # then tables, then dirs; the globs are no-ops for
-            # tables that never had an upsert.
-            for um in glob.glob(
-                os.path.join(slug_dir, "upsert*_orders.json")
-            ):
-                sfx = os.path.basename(um)[
-                    len("upsert"):-len("_orders.json")
-                ]
-                for t in (
-                    f"tpch_iu{sfx}_orders_{slug}",
-                    f"tpch_iu{sfx}_stage_orders_{slug}",
-                    # stream stage too (ADVICE r16 #5: the wipe was
-                    # asymmetric with the merge path's cleanup)
-                    f"tpch_iu{sfx}_stream_stage_orders_{slug}",
-                ):
-                    spark.sql(f"DROP TABLE IF EXISTS {t}")
-                os.remove(um)
-            # r17 snapshot-pointer era: the rebuild also invalidates
+            # The rebuild also invalidates
             # rel POINTERS and version dirs derived from the old
             # base. Dirs are TOMBSTONED FIRST (never rmtree'd —
             # another session's lockless reader may still hold
@@ -746,9 +722,7 @@ def _incremental_orderkey_layout(
             # before the pointer vanished.
             for ud in glob.glob(
                 os.path.join(slug_dir, f"{table}_c_v[0-9]*")
-            ) + glob.glob(
-                os.path.join(slug_dir, "orders_u*")
-            ) + glob.glob(os.path.join(slug_dir, "orders_c_old-*")):
+            ) + glob.glob(os.path.join(slug_dir, "orders_u*")):
                 if os.path.isdir(ud):
                     tombstone_layout_dir(ud)
             for pf in glob.glob(os.path.join(slug_dir, "*_current.json")):
@@ -883,9 +857,17 @@ _UPSERT_INS_OFFSET = 1_000_000_000
 #: manifest (r18): the sort key plus the dominant query predicate
 #: column. Carry-forward in `publish_layout_version` keeps each CDC
 #: publish O(delta) — only staged files' footers are read; the first
-#: stats-enabled publish of a legacy rel footer-reads every file once
-#: (the same one-time cost as a table format's stats backfill).
+#: publish over a plain bucketed dir footer-reads every file once (the
+#: same one-time cost as a table format's stats backfill).
 _LAYOUT_STATS_COLS = ("o_orderkey", "o_orderdate")
+
+
+def _stats_cols(rel: str) -> tuple[str, ...]:
+    """The stats columns ``rel``'s publishes record. Every rel is named
+    after its source table: the orders rels carry `_LAYOUT_STATS_COLS`,
+    and a lineitem rel has neither column, so its publishes read no
+    footer and commit no stats."""
+    return _LAYOUT_STATS_COLS if rel.startswith("orders") else ()
 
 
 def _cdc_updates(df, upd_pred: str):
@@ -1059,12 +1041,6 @@ def _upserted_orderkey_layout(
             # before re-deriving (ADVICE r16 #5: cleanup symmetric
             # across every branch).
             _drop_stage(spark, *stage)
-            legacy_marker = os.path.join(
-                slug_dir, f"upsert{suffix}_orders.json"
-            )
-            legacy_pending = os.path.join(
-                slug_dir, f"upsert_pending{suffix}_orders.json"
-            )
 
             def _rb_state(p):
                 """(record, complete, effective bucket count) of a
@@ -1082,37 +1058,15 @@ def _upserted_orderkey_layout(
             # In-place staleness: a pointer committing a DIFFERENT batch
             # means the current version is a mutated state with no
             # pristine copy — rebuild pristine into a fresh version
-            # (tombstone-not-rmtree, VERDICT r16 #2). Pointer-less dirs
-            # carrying r16 legacy markers are mutated by the OLD
-            # machinery: same remedy, then the markers are retired.
+            # (tombstone-not-rmtree, VERDICT r16 #2).
             rb, rb_complete, _eff = _rb_state(ptr)
-            if inplace and (
-                (
-                    ptr is not None
-                    and (
-                        ptr.get("batch") is not None
-                        or (rb and not rb_complete)
-                    )
-                )
-                or (
-                    ptr is None
-                    and (
-                        os.path.exists(legacy_marker)
-                        or os.path.exists(legacy_pending)
-                    )
-                )
+            if inplace and ptr is not None and (
+                ptr.get("batch") is not None or (rb and not rb_complete)
             ):
                 cur_dir, ptr = _rebuild_pristine_rel(
                     spark, slug_dir, rel,
                     os.path.join(slug_dir, "orders"), key, buckets, slug,
                 )
-            for lm in (legacy_marker, legacy_pending):
-                if os.path.exists(lm):
-                    os.remove(lm)
-            for od in glob.glob(
-                os.path.join(slug_dir, f"orders_u{suffix}_old-*")
-            ):
-                shutil.rmtree(od, ignore_errors=True)
             if inplace:
                 src_dir, src_ptr = cur_dir, ptr
             else:
@@ -1307,32 +1261,18 @@ def _upsert_stream_inplace(
         f"tpch_iu{suffix}_stream_stage_orders_{slug}",
         os.path.join(slug_dir, f"orders_u{suffix}_stream_stage"),
     )
-    legacy_manifest = os.path.join(
-        slug_dir, f"upsertstream{suffix}_orders.json"
-    )
-    legacy_pending = os.path.join(
-        slug_dir, f"upsertstream_pending{suffix}_orders.json"
-    )
     with _slug_motion(spark, slug_dir, rel, stage) as (cur_dir, ptr):
         applied = _applied(ptr)
         hist = [a["batch"] for a in applied]
         if (
             (hist and hist != specs[: len(hist)])
-            # a pointer committing a single-batch spec, a rel
+            # a pointer committing a single-batch spec, or a rel
             # mid-re-bucket (mixed bucket schemes — merging at the old
-            # count against it would drop keys), or a pointer-less dir
-            # mutated by the r16 machinery (legacy manifest), is not a
-            # valid stream base either
+            # count against it would drop keys), is not a valid stream
+            # base either
             or (
                 ptr is not None
                 and (ptr.get("batch") is not None or ptr.get("rebucket"))
-            )
-            or (
-                ptr is None
-                and (
-                    os.path.exists(legacy_manifest)
-                    or os.path.exists(legacy_pending)
-                )
             )
         ):
             cur_dir, ptr = _rebuild_pristine_rel(
@@ -1340,9 +1280,6 @@ def _upsert_stream_inplace(
                 key, buckets, slug,
             )
             applied = []
-        for lm in (legacy_manifest, legacy_pending):
-            if os.path.exists(lm):
-                os.remove(lm)
         for spec in specs[len(applied):]:
             batch_key, upd_pred, del_pred, ins_pred = spec
             ins_rows, touched = _cdc_batch(
@@ -2761,15 +2698,19 @@ def layout_zorder_skipping(spark, sf_dir):
     from pycaim_spark.operators.layout import prune_layout_files
 
     slug_dir, ddl = _zorder_orders_layout(spark, sf_dir)
-    full = load_table(spark, sf_dir, "orders")
-    mm = full.agg(
-        F.min("o_custkey").alias("cmin"), F.max("o_custkey").alias("cmax")
-    ).first()
+    # The rectangle's custkey range is the corpus min/max, read from the
+    # pointer manifest's per-file [min, max] (the rel holds the whole
+    # corpus): sizing it launches no Spark job.
+    spans = [
+        st["o_custkey"]
+        for st in load_layout_pointer(slug_dir, "orders_z")["files"].values()
+        if "o_custkey" in st
+    ]
+    cmin = min(lo for lo, _hi in spans)
+    cmax = max(hi for _lo, hi in spans)
     import math
 
-    cbound = int(mm.cmin) + int(
-        math.floor((int(mm.cmax) - int(mm.cmin)) / 4.0)
-    )
+    cbound = cmin + int(math.floor((cmax - cmin) / 4.0))
     kept_c, _sc, _ = prune_layout_files(
         slug_dir, "orders_z", "o_custkey", lo=None, hi=cbound
     )
@@ -2910,6 +2851,7 @@ def _multirel_delete_commit(spark, sf_dir, buckets: int = 8):
             touched = delta_touched_buckets(dels, key, buckets)
             stage = os.path.join(slug_dir, f"{rel}_mr_stage")
             sname = f"tpch_mrs_{table}_{slug}"
+            _drop_stage(spark, sname, stage)
             plan = plan_bucket_local_merge(
                 spark, path=cur_dir, schema=ddl, key=key,
                 buckets=buckets, upserts=None, deletes=dels,

@@ -1066,130 +1066,6 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     assert _load_pointer(store)["version"] == 1  # no spurious recompact
 
 
-def test_store_legacy_migration_torn_journal_and_manifest_gc(
-    spark, tmp_path
-):
-    """LEGACY-store handling after the r16 pointer re-base: a pre-r16
-    store (unversioned ``sets``/``buckets``, ``folded_keys.json``, maybe
-    a torn ``compact_journal.json`` + stray ``sets_next`` from a crashed
-    journal-era compaction) must (a) keep serving correct verdicts
-    through the read view's legacy fallback, treating the torn journal
-    as absent (ADVICE r10 doctrine: renames only started after an atomic
-    journal write, so old base + layers are intact), and (b) be healed
-    AND migrated in place by the next write path — base renamed to
-    ``*_v0``, manifest folded into the pointer, journal-era artifacts
-    gone. Plus the manifest GC contract: trim to the newest keep_last
-    keys; a retained key still no-ops on replay; a GC'd key re-appends
-    (the documented replay-window trade)."""
-    import os
-
-    from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
-        minhash_signature_store_build,
-        minhash_signature_store_compact,
-        minhash_store_manifest_gc,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
-        "doc_id long, text string",
-    )
-    s2 = spark.createDataFrame(
-        [(20, "second slice also completely novel words throughout here")],
-        "doc_id long, text string",
-    )
-    probe = spark.createDataFrame(
-        [(30, "first fresh slice with its very own vocabulary entire")],
-        "doc_id long, text string",
-    )
-    store = str(tmp_path / "store")
-    minhash_signature_store_build(base, store)
-    minhash_signature_store_append(spark, store, s1, "day1")
-    expected = {(r.doc_id, r.dup_of, r.is_new)
-                for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
-    assert (30, 10, 0) in expected
-
-    # Down-migrate to the PRE-r16 on-disk layout (what a real legacy
-    # store looks like), plus a torn journal and a half-written _next
-    # dir from a crashed journal-era compaction.
-    import json as _json
-
-    from pycaim_spark.operators.dedup import _load_pointer
-    os.rename(os.path.join(store, "sets_v0"), os.path.join(store, "sets"))
-    os.rename(os.path.join(store, "buckets_v0"),
-              os.path.join(store, "buckets"))
-    os.remove(os.path.join(store, "current.json"))
-    with open(os.path.join(store, "folded_keys.json"), "w") as f:
-        _json.dump([], f)
-    with open(os.path.join(store, "compact_journal.json"), "w") as f:
-        f.write('["day1", "da')  # truncated mid-write
-    os.makedirs(os.path.join(store, "sets_next"))
-
-    # (a) probe: legacy fallback, torn journal treated as absent.
-    torn = {(r.doc_id, r.dup_of, r.is_new)
-            for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
-    assert torn == expected
-    assert os.path.exists(os.path.join(store, "compact_journal.json"))
-    assert _load_pointer(store) is None
-
-    # (b) the next write path heals AND migrates: journal-era
-    # artifacts gone, base versioned, manifest inside the pointer —
-    # verdicts unchanged (this compact then folds day1 into v1). r18:
-    # the legacy dirs are LINK-ASSEMBLED into v0 and kept TOMBSTONED
-    # for stale readers (never renamed), then grace-collected by a
-    # later write pass.
-    minhash_signature_store_compact(spark, store)
-    for legacy in ("compact_journal.json", "sets_next",
-                   "folded_keys.json"):
-        assert not os.path.exists(os.path.join(store, legacy)), legacy
-    for legacy in ("sets", "buckets"):
-        p = os.path.join(store, legacy)
-        assert os.path.isdir(p), \
-            f"{legacy}: migration must not rename the live legacy dir"
-        assert os.path.exists(os.path.join(p, "_superseded.json"))
-    old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
-    os.environ["PYCAIM_STORE_GC_GRACE"] = "0"
-    try:
-        minhash_signature_store_compact(spark, store)  # no-op + GC pass
-    finally:
-        if old_grace is None:
-            os.environ.pop("PYCAIM_STORE_GC_GRACE", None)
-        else:
-            os.environ["PYCAIM_STORE_GC_GRACE"] = old_grace
-    for legacy in ("sets", "buckets"):
-        assert not os.path.exists(os.path.join(store, legacy)), \
-            f"{legacy}: tombstoned legacy dir collects past grace"
-    ptr = _load_pointer(store)
-    assert ptr == {"version": 1, "folded": ["day1"]}
-    assert expected == {(r.doc_id, r.dup_of, r.is_new)
-                        for r in incremental_minhash_dedup_layered(spark, store, probe).collect()}
-
-    # manifest GC: day1 was folded by the compact above; add + fold day2
-    minhash_signature_store_append(spark, store, s2, "day2")
-    minhash_signature_store_compact(spark, store)
-    assert minhash_store_manifest_gc(store, keep_last=5) == 0
-    assert minhash_store_manifest_gc(store, keep_last=1) == 1  # drops day1
-    # retained key still replay-safe; GC'd key re-appends as documented
-    from pycaim_spark.operators.dedup import _store_layer_dirs
-    minhash_signature_store_append(spark, store, s2, "day2")
-    assert _store_layer_dirs(store) == []
-    minhash_signature_store_append(spark, store, s1, "day1")
-    # the re-appended layer is LIVE again — a tombstone surviving from
-    # its folded incarnation would both hide the rewrite from probes and
-    # let a later GC pass delete it (r15 resurrection contract)
-    assert _store_layer_dirs(store) == [
-        os.path.join(store, "append", "day1")
-    ]
-    assert not os.path.exists(
-        os.path.join(store, "append", "day1", "superseded.json")
-    )
-
-
 def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
     """ADVICE r11: (a) manifest GC recency is FOLD order, not
     lexicographic key order — with keys 'day2' (older) and 'day10'
@@ -1354,14 +1230,12 @@ def test_store_two_phase_gc_protects_concurrent_readers(
 
 
 def test_store_migration_crash_forward_completion(spark, tmp_path):
-    """r16 self-review: the legacy→versioned migration is two renames
-    plus a pointer write, and a crash BETWEEN them must neither strand
-    the store (pointer-less v0 dirs that the legacy read fallback can't
-    see) nor delete the only base. Recovery forward-completes: complete
-    pointer-less v0 dirs get the pointer they were about to receive
-    (true for a crashed migration AND for a build that crashed between
-    its v0 writes and its pointer commit — rename preserves _SUCCESS);
-    an incomplete pointer-less v0 pair is a build stray and is deleted.
+    """A build that crashed between its v0 writes and its pointer
+    commit must neither strand the store (pointer-less v0 dirs no
+    reader resolves) nor lose the only base. Recovery forward-completes:
+    complete pointer-less v0 dirs get the pointer they were about to
+    receive; an incomplete pointer-less v0 pair is a build stray and is
+    deleted.
     Same contract for the IVF-PQ codes dir, where the pre-fix rule
     deleted every pointer-less codes_v* — data loss."""
     import os
@@ -1395,17 +1269,15 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
                 for r in incremental_minhash_dedup_layered(
                     spark, store, probe).collect()}
 
-    # Crash state A: renames done, pointer write never happened.
+    # Crash state A: v0 written, pointer write never happened.
     os.remove(os.path.join(store, "current.json"))
-    # Crash state A': HALF-migrated — one dir still on its legacy name.
-    os.rename(_versioned(store, "sets", 0), os.path.join(store, "sets"))
     minhash_signature_store_append(spark, store, s1, "day1")  # write path
     assert _load_pointer(store) == {"version": 0, "folded": []}
     assert os.path.exists(
         os.path.join(_versioned(store, "sets", 0), "_SUCCESS"))
     # Pre-append the probe doc was novel; after the healed store took
     # the day-1 layer it dups against doc 10 — both reads prove the
-    # base survived the half-migration intact.
+    # base survived the crash intact.
     assert expected == {(30, None, 1)}
     healed = {(r.doc_id, r.dup_of, r.is_new)
               for r in incremental_minhash_dedup_layered(
@@ -1827,124 +1699,6 @@ def test_incremental_clusters_match_full_reclustering(spark):
     assert expected_remaps, "fixture must exercise the merge case"
 
 
-def test_legacy_store_mid_migration_reader_survives(spark, tmp_path):
-    """r18 (VERDICT r17 #6): the one-time legacy→versioned migration no
-    longer renames the live unversioned dirs — v0 is link-assembled and
-    the legacy dirs are tombstoned in place. A reader that resolved the
-    LEGACY paths and built its lazy plan BEFORE the migration must
-    materialize successfully AFTER it (this was the last documented
-    reader-visible rename window in the repo); the tombstoned legacy
-    dirs collect only past grace on a later write pass. Same contract
-    for the IVF-PQ codes migration."""
-    import os
-
-    import numpy as np
-
-    from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_read_view,
-        incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
-        minhash_signature_store_build,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
-        "doc_id long, text string",
-    )
-    probe = spark.createDataFrame(
-        [(30, "first fresh slice with its very own vocabulary entire")],
-        "doc_id long, text string",
-    )
-    store = str(tmp_path / "store")
-    minhash_signature_store_build(base, store)
-    # Down-migrate to the pre-r16 legacy shape (hard links preserve the
-    # parquet bytes; the rename here is test scaffolding, not product
-    # code).
-    os.rename(os.path.join(store, "sets_v0"), os.path.join(store, "sets"))
-    os.rename(os.path.join(store, "buckets_v0"),
-              os.path.join(store, "buckets"))
-    os.remove(os.path.join(store, "current.json"))
-
-    # The stale reader: resolve the LEGACY view, build the lazy plan.
-    sets_p, buckets_p, skip = _store_read_view(store)
-    assert sets_p.endswith("/sets") and skip == set()
-    stale_df = incremental_minhash_dedup_layered(spark, store, probe)
-
-    # The next write path migrates (link-assemble v0 + pointer +
-    # legacy tombstones) and takes the day-1 layer.
-    minhash_signature_store_append(spark, store, s1, "day1")
-    assert _load_pointer(store) == {"version": 0, "folded": []}
-    for legacy in ("sets", "buckets"):
-        p = os.path.join(store, legacy)
-        assert os.path.isdir(p), "legacy dir must survive the migration"
-        assert os.path.exists(os.path.join(p, "_superseded.json"))
-
-    # The stale reader's materialization SUCCEEDS against the
-    # tombstoned-but-intact legacy paths — pre-r18 this exact line
-    # could take FileNotFoundException at the rename instant. The
-    # pre-migration view has no day-1 layer, so the probe is novel.
-    stale = {(r.doc_id, r.dup_of, r.is_new) for r in stale_df.collect()}
-    assert stale == {(30, None, 1)}
-    fresh = {(r.doc_id, r.dup_of, r.is_new)
-             for r in incremental_minhash_dedup_layered(
-                 spark, store, probe).collect()}
-    assert fresh == {(30, 10, 0)}
-
-    # Grace expiry: a later write pass collects the legacy dirs.
-    old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
-    os.environ["PYCAIM_STORE_GC_GRACE"] = "0"
-    try:
-        minhash_signature_store_append(spark, store, s1, "day1")  # no-op
-    finally:
-        if old_grace is None:
-            os.environ.pop("PYCAIM_STORE_GC_GRACE", None)
-        else:
-            os.environ["PYCAIM_STORE_GC_GRACE"] = old_grace
-    for legacy in ("sets", "buckets"):
-        assert not os.path.exists(os.path.join(store, legacy))
-
-    # IVF-PQ codes: same no-rename migration.
-    from pycaim_spark.operators.similarity import (
-        _codes_path,
-        _codes_version,
-        ivf_pq_index_append,
-        ivf_pq_index_build,
-    )
-
-    rng = np.random.default_rng(7)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(40, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ann = str(tmp_path / "ann")
-    ivf_pq_index_build(emb, ann, n_cells=4, m=4, k_centroids=8,
-                       sample_size=40)
-    os.rename(os.path.join(ann, "codes_v0"), os.path.join(ann, "codes"))
-    os.remove(os.path.join(ann, "codes_current.json"))
-    legacy_codes = spark.read.parquet(_codes_path(ann))  # lazy, legacy
-    n0 = None
-    extra = spark.createDataFrame(
-        [(100 + i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(5, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ivf_pq_index_append(extra, ann, "day1")  # migrates, then appends
-    assert _codes_version(ann) == 0
-    assert os.path.isdir(os.path.join(ann, "codes")), \
-        "codes migration must not rename the live legacy dir"
-    n0 = legacy_codes.count()  # stale reader materializes post-migration
-    assert n0 == 40
-    from pycaim_spark.operators.similarity import _codes_frame
-
-    assert _codes_frame(spark, ann).count() == 45
-
-
 def test_store_delete_lifecycle(spark, tmp_path):
     """r18 signature-store DELETION (the right-to-be-forgotten motion):
     logical phase — a probe never returns a deleted doc as dup target,
@@ -2177,54 +1931,6 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     assert not os.path.isdir(os.path.join(store, "codes_deletes"))
 
 
-def test_ivf_pq_legacy_append_manifest_folds(spark, tmp_path):
-    """r18: a pre-r18 store whose appends live as part files in the
-    base version dir with ``append_keys.json`` as the replay guard must
-    keep its replay idempotence under the layer scheme — the next write
-    path folds the legacy keys into the pointer's app_folded and
-    retires the file, so a redelivered legacy key never lands as a
-    (duplicate) layer."""
-    import os
-
-    import numpy as np
-
-    from pycaim_spark.operators.dedup import _write_json_atomic
-    from pycaim_spark.operators.similarity import (
-        _codes_app_manifest,
-        _codes_append_dirs,
-        _codes_frame,
-        ivf_pq_index_append,
-        ivf_pq_index_build,
-    )
-
-    rng = np.random.default_rng(31)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(40, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    store = str(tmp_path / "ann")
-    ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
-                       sample_size=40)
-    n0 = _codes_frame(spark, store).count()
-    # Fabricate the legacy shape: day0's rows are (by construction of
-    # the pre-r18 path) already inside the base; only the manifest
-    # records the key.
-    _write_json_atomic(os.path.join(store, "append_keys.json"), ["day0"])
-
-    day0 = spark.createDataFrame(
-        [(200 + i, [float(x) for x in v])
-         for i, v in enumerate(rng.normal(size=(5, 8)))],
-        "vec_id long, embedding array<float>",
-    )
-    ivf_pq_index_append(day0, store, "day0")  # redelivered legacy key
-    assert not os.path.exists(os.path.join(store, "append_keys.json"))
-    assert _codes_app_manifest(store) == ["day0"]
-    assert _codes_append_dirs(store) == [], \
-        "a folded legacy key must not re-land as a layer"
-    assert _codes_frame(spark, store).count() == n0
-
-
 def test_delete_candidate_slot_not_displaced(spark, tmp_path):
     """r18 self-review #4: a deleted id that ranks inside the capped
     min-id candidate prefix must not displace a genuine near-duplicate
@@ -2261,106 +1967,6 @@ def test_delete_candidate_slot_not_displaced(spark, tmp_path):
         ).collect()
     }
     assert got == {(30, 2, 0)}, got
-
-
-def test_legacy_post_swap_journal_crash_preserves_folded_keys(
-    spark, tmp_path
-):
-    """r18 self-review #2: a LEGACY store whose journal-era compaction
-    crashed AFTER its renames consumed the *_next dirs (journal valid,
-    next absent, unversioned base = the folded content, folded layer
-    still on disk) must migrate with the journal's folded-keys
-    manifest intact — dropping it would leave the physically-folded
-    layer live with an empty skip set and double-count its rows. Also
-    covers the MID-rename state (one dir consumed, the other's next
-    still present): the per-dir next-if-complete-else-cur source rule
-    assembles the consistent post-fold pair."""
-    import json
-    import os
-    import shutil
-
-    from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _store_layer_dirs,
-        _store_read_view,
-        incremental_minhash_dedup_layered,
-        minhash_signature_store_append,
-        minhash_signature_store_build,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, "first fresh slice with its very own vocabulary entirely")],
-        "doc_id long, text string",
-    )
-    probe = spark.createDataFrame(
-        [(30, "first fresh slice with its very own vocabulary entire")],
-        "doc_id long, text string",
-    )
-    # Reference store F: the post-fold content (base ∪ s1 in the base).
-    folded_ref = str(tmp_path / "folded_ref")
-    minhash_signature_store_build(base.unionByName(s1), folded_ref)
-    # Reference store B: pre-fold base + the day1 append layer.
-    layer_ref = str(tmp_path / "layer_ref")
-    minhash_signature_store_build(base, layer_ref)
-    minhash_signature_store_append(spark, layer_ref, s1, "day1")
-    expected = {
-        (r.doc_id, r.dup_of, r.is_new)
-        for r in incremental_minhash_dedup_layered(
-            spark, folded_ref, probe
-        ).collect()
-    }
-    assert expected == {(30, 10, 0)}
-
-    def _mk_target(name, consume_buckets_rename):
-        t = str(tmp_path / name)
-        os.makedirs(t)
-        # sets rename CONSUMED: unversioned sets = folded content.
-        shutil.copytree(os.path.join(folded_ref, "sets_v0"),
-                        os.path.join(t, "sets"))
-        if consume_buckets_rename:
-            shutil.copytree(os.path.join(folded_ref, "buckets_v0"),
-                            os.path.join(t, "buckets"))
-        else:
-            # MID-rename: buckets_next (folded) still present, the
-            # unversioned buckets still pre-fold.
-            shutil.copytree(os.path.join(folded_ref, "buckets_v0"),
-                            os.path.join(t, "buckets_next"))
-            shutil.copytree(os.path.join(layer_ref, "buckets_v0"),
-                            os.path.join(t, "buckets"))
-        shutil.copytree(os.path.join(layer_ref, "append", "day1"),
-                        os.path.join(t, "append", "day1"))
-        with open(os.path.join(t, "compact_journal.json"), "w") as f:
-            json.dump(["day1"], f)
-        return t
-
-    for name, consumed in (("post_swap", True), ("mid_rename", False)):
-        t = _mk_target(name, consumed)
-        # The write path heals + migrates (the re-delivered folded key
-        # must no-op, NOT re-append).
-        minhash_signature_store_append(spark, t, s1, "day1")
-        ptr = _load_pointer(t)
-        assert ptr == {"version": 0, "folded": ["day1"]}, (name, ptr)
-        assert not os.path.exists(
-            os.path.join(t, "compact_journal.json")
-        ), name
-        assert _store_layer_dirs(t) == [], \
-            f"{name}: the folded layer must be tombstoned, not live"
-        sets_path, _bk, skip = _store_read_view(t)
-        ids = [r.id for r in spark.read.parquet(sets_path)
-               .select("id").collect()]
-        assert sorted(ids) == sorted(set(ids)) == [1, 10], \
-            f"{name}: folded base must hold each doc exactly once"
-        got = {
-            (r.doc_id, r.dup_of, r.is_new)
-            for r in incremental_minhash_dedup_layered(
-                spark, t, probe
-            ).collect()
-        }
-        assert got == expected, name
 
 
 def test_retrain_discards_pending_delete_layers(spark, tmp_path):

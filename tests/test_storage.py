@@ -1546,14 +1546,11 @@ def test_layout_time_travel_retention_and_unpin(spark, sf_dir):
         "the displaced snapshot is tombstoned AND pinned"
 
     # Zero-grace GC: the pinned snapshot survives; an unpinned
-    # tombstoned junk dir is collected.
-    junk = os.path.join(slug_dir, "orders_c_old-424242")
+    # tombstoned version below the pointer is collected.
+    assert 0 < ptr["version"] and 0 not in ptr["retained"]
+    junk = os.path.join(slug_dir, "orders_c_v0")
     os.makedirs(junk, exist_ok=True)
     tombstone_layout_dir(junk)
-    os.rename(
-        os.path.join(junk, "_superseded.json"),
-        os.path.join(junk, "superseded.json"),
-    )
     old_grace = os.environ.get("PYCAIM_LAYOUT_GC_GRACE")
     os.environ["PYCAIM_LAYOUT_GC_GRACE"] = "0"
     try:
