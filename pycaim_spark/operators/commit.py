@@ -58,6 +58,23 @@ or migrated. A write path's recovery step lists its dir under the writer
 lock and `refuse_legacy` raises `LegacyFormatError` on such an entry,
 without touching the dir: every store is a rebuildable cache.
 
+**LSM stores.** The signature store and the IVF-PQ codes have one
+shape: a pointed base version, keyed append layers, keyed delete layers
+and a fold (compaction) that applies the layers to a new base. Each
+store describes its dirs and pointer keys in one `LsmStore` constant;
+the shape itself is implemented once, here. `read_view` is the
+lockless reader: ONE pointer parse gives the version, the base dirs and
+both manifests, then the live append layers the pointer has not folded
+and the live delete layers are listed, so a fold committing mid-read is
+seen wholly or not at all. `recover` opens every write path under the
+lock: refuse retired entries, heal swaps, re-lay the folded layers'
+tombstones, commit a complete pointer-less ``*_v0`` or reconcile
+versions, collect aged dirs. `put_layer` is the one keyed-layer motion
+(appends and deletes of both stores). `fold_view` and `fold_commit`
+bracket a fold's Spark writes: the pointer flip with both manifests
+folded, then tombstones on the applied layers and the displaced base.
+`write_pointer` is the only writer of these pointers.
+
 **Locks.** Writers serialize on an exclusive ``flock`` (`FileLock`);
 readers take none. Acquisition re-checks the lock file's inode, so a
 waiter blocked on a file that was unlinked (a collected slug's lock)
@@ -74,6 +91,7 @@ import json
 import os
 import shutil
 import time
+from typing import NamedTuple
 
 _LAYER_TOMB = "superseded.json"
 _DATA_TOMB = "_superseded.json"
@@ -385,3 +403,199 @@ def fold_manifest(prior: list[str], layers: list[str]) -> list[str]:
         for p in sorted(layers, key=lambda p: (os.path.getmtime(p), p))
     ]
     return prior + [k for k in keys if k not in prior]
+
+
+# -- LSM stores -------------------------------------------------------------
+
+class Layers(NamedTuple):
+    """One keyed layer family: ``<root>/<key>/<marker>/`` dirs, and the
+    pointer key of the manifest listing the keys a fold has applied.
+    ``keep_empty`` writes that key even when its list is empty."""
+
+    root: str
+    marker: str
+    manifest: str
+    keep_empty: bool = False
+
+    def live(self, store_dir: str) -> list[str]:
+        return live_layers(os.path.join(store_dir, self.root), self.marker)
+
+
+class LsmStore(NamedTuple):
+    """What an LSM store is on disk: its ``pointer`` file, its base
+    ``{kind}_v{N}`` dir kinds, its append and delete layer families, the
+    pointer's manifest keys in on-disk ``order`` and its `refuse_legacy`
+    patterns."""
+
+    pointer: str
+    base: tuple[str, ...]
+    append: Layers
+    delete: Layers
+    order: tuple[str, str]
+    legacy: tuple[str, ...]
+
+
+class LsmView(NamedTuple):
+    """A store as of one pointer parse. ``version`` is None for a store
+    with no committed snapshot, whose ``base`` is then empty."""
+
+    version: int | None
+    base: dict[str, str]
+    appends: list[str]
+    deletes: list[str]
+    folded: list[str]
+    del_folded: list[str]
+
+    def frame(self, spark, kind: str):
+        """The base ``kind`` dir unioned with every append layer's."""
+        out = spark.read.parquet(self.base[kind])
+        for layer in self.appends:
+            out = out.unionByName(spark.read.parquet(os.path.join(layer, kind)))
+        return out
+
+    def pending(self, spark, sub: str):
+        """The union of the append layers' ``sub`` dirs, or None."""
+        out = None
+        for layer in self.appends:
+            df = spark.read.parquet(os.path.join(layer, sub))
+            out = df if out is None else out.unionByName(df)
+        return out
+
+    def deleted_ids(self, spark):
+        return union_layer_ids(spark, self.deletes)
+
+
+def base_dirs(spec: LsmStore, store_dir: str, version: int) -> dict[str, str]:
+    return {k: os.path.join(store_dir, f"{k}_v{version}") for k in spec.base}
+
+
+def read_view(spec: LsmStore, store_dir: str,
+              missing_ok: bool = False) -> LsmView:
+    """The lockless read view: the pointed version, its base dirs and
+    both manifests from ONE pointer parse, then the live append layers
+    the pointer has not folded and the live delete layers. Raises
+    FileNotFoundError on a store with no pointer unless ``missing_ok``."""
+    ptr = load_pointer(os.path.join(store_dir, spec.pointer))
+    if ptr is None and not missing_ok:
+        raise FileNotFoundError(
+            f"{store_dir} has no committed snapshot (no {spec.pointer}): "
+            "build it first"
+        )
+    ptr = ptr or {}
+    version = ptr.get("version")
+    folded = list(ptr.get(spec.append.manifest, ()))
+    return LsmView(
+        version,
+        {} if version is None else base_dirs(spec, store_dir, version),
+        [d for d in spec.append.live(store_dir)
+         if os.path.basename(d) not in folded],
+        spec.delete.live(store_dir),
+        folded,
+        list(ptr.get(spec.delete.manifest, ())),
+    )
+
+
+def write_pointer(spec: LsmStore, store_dir: str, version: int,
+                  folded=(), del_folded=()) -> None:
+    """THE commit of an LSM store: the version and both manifests in one
+    atomic document, keys in the store's on-disk order, an empty
+    manifest omitted unless its family sets ``keep_empty``."""
+    doc = {"version": version}
+    lists = {spec.append.manifest: (spec.append, folded),
+             spec.delete.manifest: (spec.delete, del_folded)}
+    for key in spec.order:
+        layers, keys = lists[key]
+        if keys or layers.keep_empty:
+            doc[key] = list(keys)
+    write_json_atomic(os.path.join(store_dir, spec.pointer), doc)
+
+
+def _version_dirs(spec: LsmStore, store_dir: str, entries):
+    out = []
+    for name in entries:
+        kind, _, n = name.rpartition("_v")
+        if kind in spec.base and n.isdigit():
+            out.append((int(n), os.path.join(store_dir, name)))
+    return out
+
+
+def recover(spec: LsmStore, store_dir: str) -> None:
+    """Write-path reconciliation, at the top of every motion under the
+    writer lock: raise `LegacyFormatError` on a retired entry before
+    touching anything, heal crashed layer swaps and re-lay the
+    tombstones of layers the pointer has folded, then either give a
+    COMPLETE pointer-less ``*_v0`` base (a build that crashed before its
+    pointer write) the pointer it was about to receive and delete an
+    incomplete one, or `reconcile_versions` against the pointer;
+    finally `collect`."""
+    entries = os.listdir(store_dir)
+    refuse_legacy(store_dir, entries, spec.legacy)
+    ptr = load_pointer(os.path.join(store_dir, spec.pointer))
+    for layers in (spec.append, spec.delete):
+        recover_layers(os.path.join(store_dir, layers.root), layers.marker,
+                       set((ptr or {}).get(layers.manifest, ())))
+    if ptr is not None:
+        reconcile_versions(_version_dirs(spec, store_dir, entries),
+                           ptr["version"])
+    else:
+        v0 = base_dirs(spec, store_dir, 0).values()
+        if all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0):
+            write_pointer(spec, store_dir, 0)
+        else:
+            for d in v0:
+                shutil.rmtree(d, ignore_errors=True)
+    collect(spec, store_dir)
+
+
+def collect(spec: LsmStore, store_dir: str) -> None:
+    """Phase 2 over the store: delete tombstoned base versions and
+    layers older than `store_grace`. Caller holds the writer lock."""
+    grace = store_grace()
+    for _n, path in _version_dirs(spec, store_dir, os.listdir(store_dir)):
+        collect_if_aged(path, grace, data=True)
+    for layers in (spec.append, spec.delete):
+        collect_layers(os.path.join(store_dir, layers.root), grace)
+
+
+def put_layer(spec: LsmStore, store_dir: str, layers: Layers, key: str,
+              write) -> None:
+    """The keyed-layer motion (an append or a delete): under the writer
+    lock and after `recover`, skip a key the pointer's manifest already
+    holds (a replay of a folded key), else `swap_layer` ``write``'s
+    content in as ``<root>/<key>``."""
+    with store_lock(store_dir):
+        recover(spec, store_dir)
+        ptr = load_pointer(os.path.join(store_dir, spec.pointer)) or {}
+        if key in ptr.get(layers.manifest, ()):
+            return
+        swap_layer(os.path.join(store_dir, layers.root, key), write)
+
+
+def fold_view(spec: LsmStore, store_dir: str) -> LsmView | None:
+    """The view a compaction folds (caller holds the writer lock, after
+    `recover`): None when no layer is pending; raises when layers are
+    pending but no base is committed to fold them into."""
+    view = read_view(spec, store_dir, missing_ok=True)
+    if not view.appends and not view.deletes:
+        return None
+    if view.version is None:
+        raise RuntimeError(
+            f"{store_dir} has pending layers but no committed base "
+            f"({spec.pointer} missing): build the store before compacting"
+        )
+    return view
+
+
+def fold_commit(spec: LsmStore, store_dir: str, view: LsmView) -> None:
+    """Commit a compaction of ``view`` whose ``version + 1`` base dirs
+    are written: flip the pointer with both manifests folded (fold
+    order), then tombstone the applied layers and the displaced base."""
+    write_pointer(
+        spec, store_dir, view.version + 1,
+        fold_manifest(view.folded, view.appends),
+        fold_manifest(view.del_folded, view.deletes),
+    )
+    for layer in view.appends + view.deletes:
+        tombstone(layer)
+    for path in view.base.values():
+        tombstone(path, data=True)

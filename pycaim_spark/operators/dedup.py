@@ -493,6 +493,20 @@ def _with_top_candidates(df: DataFrame, cands_col: str, cap: int) -> DataFrame:
     return df.withColumn("top_cands", _top(F.col(cands_col)))
 
 
+def _check_probe_cap(max_candidates_per_doc: int) -> None:
+    """The layered-probe merge (``_incremental_matches`` extra_buckets)
+    is only equivalent to a compacted-store probe when the probe cap
+    fits inside the store cap: a wider probe would see ids the stored
+    per-bucket prefix already dropped, so its verdicts silently diverge
+    from the post-compaction ones (ADVICE r11). Fail loud."""
+    if max_candidates_per_doc > BUCKET_STORE_CAP:
+        raise ValueError(
+            f"max_candidates_per_doc={max_candidates_per_doc} exceeds "
+            f"BUCKET_STORE_CAP={BUCKET_STORE_CAP}: probe verdicts would "
+            "diverge between layered and compacted store states"
+        )
+
+
 def _incremental_matches(
     b_sets: DataFrame,
     store_buckets: DataFrame,
@@ -519,17 +533,7 @@ def _incremental_matches(
     for the 50 k-doc sf10 delta, ISOLATE_r9.json ``incremental_probe_shape``
     — while the bucket-array form carries the same information in
     |delta| × bands rows and ranks candidates with in-row array ops."""
-    if max_candidates_per_doc > BUCKET_STORE_CAP:
-        # The layered-probe merge (extra_buckets path below) is only
-        # equivalent to a compacted-store probe when the probe cap fits
-        # inside the store cap: a wider probe would see ids the stored
-        # per-bucket prefix already dropped, so its verdicts silently
-        # diverge from the post-compaction ones (ADVICE r11). Fail loud.
-        raise ValueError(
-            f"max_candidates_per_doc={max_candidates_per_doc} exceeds "
-            f"BUCKET_STORE_CAP={BUCKET_STORE_CAP}: probe verdicts would "
-            "diverge between layered and compacted store states"
-        )
+    _check_probe_cap(max_candidates_per_doc)
     d_sets = _shingle_sets(
         delta_docs, text_col, id_col, shingle_n, repartition=False
     )
@@ -781,6 +785,28 @@ def incremental_cluster_assignments(
     return delta_rows.unionByName(remap_rows)
 
 
+#: Top-level entries of the pre-pointer store formats (the unversioned
+#: base, its journal-era swap dirs and manifests, the link-assembly
+#: strays of the one-time migration). This code reads none of them.
+_LEGACY = (
+    "sets", "buckets", "*_next", "*_old", "*.assembling",
+    "compact_journal.json", "folded_keys.json",
+)
+
+#: The signature store on disk (``operators/commit.py`` LSM store):
+#: ``sets_v{N}``/``buckets_v{N}`` behind ``current.json``
+#: (``{"version": N, "folded": [...][, "del_folded": [...]]}``),
+#: ``append/<key>/{sets,bands}`` and ``deletes/<key>/ids`` layers.
+SIGNATURE_STORE = commit.LsmStore(
+    pointer="current.json",
+    base=("sets", "buckets"),
+    append=commit.Layers("append", "bands", "folded", keep_empty=True),
+    delete=commit.Layers("deletes", "ids", "del_folded"),
+    order=("folded", "del_folded"),
+    legacy=_LEGACY,
+)
+
+
 def minhash_signature_store_build(
     base_docs: DataFrame,
     store_dir: str,
@@ -805,36 +831,32 @@ def minhash_signature_store_build(
     folded into the bucket arrays at the periodic compaction (at 100 TB:
     partition the store by ingest date — the LSM pattern).
     """
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        ptr = _load_pointer(store_dir)
-        if ptr is not None:
-            sets_dir = _versioned(store_dir, "sets", ptr["version"])
-            buckets_dir = _versioned(store_dir, "buckets", ptr["version"])
-            if os.path.exists(
-                os.path.join(sets_dir, "_SUCCESS")
-            ) and os.path.exists(os.path.join(buckets_dir, "_SUCCESS")):
-                return
+    with commit.store_lock(store_dir):
+        commit.recover(SIGNATURE_STORE, store_dir)
+        view = commit.read_view(SIGNATURE_STORE, store_dir, missing_ok=True)
+        if view.version is not None and all(
+            os.path.exists(os.path.join(d, "_SUCCESS"))
+            for d in view.base.values()
+        ):
+            return
         # Fresh build (or a corrupted current version — rebuild beside
         # it): write the base under the NEXT version and commit by
         # pointer flip, folded reset to the passed corpus's truth.
-        v = ptr["version"] + 1 if ptr is not None else 0
-        sets_dir = _versioned(store_dir, "sets", v)
-        buckets_dir = _versioned(store_dir, "buckets", v)
+        v = 0 if view.version is None else view.version + 1
+        dirs = commit.base_dirs(SIGNATURE_STORE, store_dir, v)
         b_sets = _shingle_sets(
             base_docs, text_col, id_col, shingle_n, repartition=False
         )
-        b_sets.write.mode("overwrite").parquet(sets_dir)
+        b_sets.write.mode("overwrite").parquet(dirs["sets"])
         spark = base_docs.sparkSession
         (
             _band_buckets(
-                _band_rows(spark.read.parquet(sets_dir), num_hashes, seed)
+                _band_rows(spark.read.parquet(dirs["sets"]), num_hashes, seed)
             )
             .write.mode("overwrite")
-            .parquet(buckets_dir)
+            .parquet(dirs["buckets"])
         )
-        _commit_pointer(store_dir, v, [])
+        commit.write_pointer(SIGNATURE_STORE, store_dir, v)
 
 
 def incremental_minhash_dedup_stored(
@@ -855,40 +877,58 @@ def incremental_minhash_dedup_stored(
     index and shingle sets stream map-side against the broadcast delta.
     Same probe, same verdicts as ``incremental_minhash_dedup`` (asserted
     in tests/test_llm_ops.py); what changes is what the run touches.
-    Read-only: resolves a consistent view even of a mid-swap store
-    (``_store_read_view``) instead of mutating it (ADVICE r10)."""
-    sets_path, buckets_path, _ = _store_read_view(store_dir)
-    b_sets = spark.read.parquet(sets_path)
-    store_buckets = spark.read.parquet(buckets_path)
-    # Pending deletions (r18) apply logically, in two layers: the
-    # sets-side anti-join guarantees a deleted id never VERIFIES as a
-    # match, and the pre-cap candidate filter (deleted_ids) keeps a
-    # deleted id from occupying a capped candidate slot that would
-    # displace a genuine near-duplicate until compaction. Broadcast/
-    # literal-bounded by deletes since the last compaction.
-    dels = _store_deleted_ids(spark, store_dir)
+
+    The probe reads the store's one read view (`commit.read_view`):
+    the pointed base plus every un-compacted append layer, so a slice
+    ingested this morning dedups against a slice appended an hour ago
+    without waiting for compaction. Layer band rows are
+    bucket-aggregated on the fly and probed ALONGSIDE the base buckets —
+    both sides stream through broadcast hash joins against the delta
+    and merge per hit (``_incremental_matches`` ``extra_buckets``;
+    merge-stable cap), so the base bucket index never shuffles here (a
+    pre-join ``_merge_bucket_layers`` full-outer would reshuffle the
+    whole base index per probe; that merge runs only inside compaction).
+    Verdicts equal a probe of the compacted store, asserted in
+    tests/test_llm_ops.py. Read-only: a mid-swap store resolves to the
+    base the pointer names plus only the layers it does NOT already
+    contain, instead of being healed in place (ADVICE r10)."""
+    _check_probe_cap(max_candidates_per_doc)
+    view = commit.read_view(SIGNATURE_STORE, store_dir)
+    b_sets = view.frame(spark, "sets")
+    store_buckets = spark.read.parquet(view.base["buckets"])
+    pending = view.pending(spark, "bands")
+    # Pending deletions (r18) apply logically, in two layers, to base
+    # AND layer signatures: the sets-side anti-join guarantees a deleted
+    # id never VERIFIES as a match, and the pre-cap candidate filter
+    # (deleted_ids) keeps a deleted id from occupying a capped candidate
+    # slot that would displace a genuine near-duplicate until
+    # compaction. Broadcast/literal-bounded by deletes since the last
+    # compaction.
+    dels = view.deleted_ids(spark)
     if dels is not None:
         b_sets = b_sets.join(F.broadcast(dels), "id", "left_anti")
     return _incremental_probe(
         b_sets, store_buckets, delta_docs, text_col, id_col, shingle_n,
         num_hashes, max_jaccard_dist, seed, max_candidates_per_doc,
+        extra_buckets=None if pending is None else _band_buckets(pending),
         deleted_ids=_deleted_ids_for_probe(dels),
     )
 
 
+#: The layered probe is the stored probe; the name stays importable.
+incremental_minhash_dedup_layered = incremental_minhash_dedup_stored
+
+
+def _store_layer_dirs(store_dir: str) -> list[str]:
+    """Live append layers: complete (``bands/_SUCCESS``) and not
+    tombstoned, whether or not the pointer has folded their key."""
+    return SIGNATURE_STORE.append.live(store_dir)
+
+
 def _store_delete_dirs(store_dir: str) -> list[str]:
     """Live DELETE layers (r18): ``deletes/<key>/ids`` parquet dirs,
-    complete (``ids/_SUCCESS``) and not tombstoned — same liveness rule
-    as the append layers, same write-aside swap scaffolding exclusions."""
-    return commit.live_layers(os.path.join(store_dir, "deletes"), "ids")
-
-
-def _store_deleted_ids(spark, store_dir: str):
-    """The union of every live delete layer's ids as a one-column
-    ``id`` DataFrame, or None when no deletes are pending. Bounded by
-    deletions since the last compaction (compaction applies them
-    physically and retires the layers), so probes can broadcast it."""
-    return commit.union_layer_ids(spark, _store_delete_dirs(store_dir))
+    complete (``ids/_SUCCESS``) and not tombstoned."""
+    return SIGNATURE_STORE.delete.live(store_dir)
 
 
 #: Above this many pending deleted ids the probes skip the exact
@@ -911,16 +951,6 @@ def _deleted_ids_for_probe(dels) -> list[int] | None:
     return [r.id for r in rows]
 
 
-def _store_del_manifest(store_dir: str) -> list[str]:
-    """Delete keys already APPLIED by a compaction, in fold order —
-    the replay-idempotency manifest for deletions, carried inside the
-    snapshot pointer (``del_folded``) like the append manifest."""
-    ptr = _load_pointer(store_dir)
-    if ptr is not None:
-        return list(ptr.get("del_folded", ()))
-    return []
-
-
 def minhash_signature_store_delete(
     spark,
     store_dir: str,
@@ -934,9 +964,10 @@ def minhash_signature_store_delete(
     a new document identical to a deleted one is NOVEL.
 
     LSM shape, mirroring the append path: the ids land as a DELETE
-    LAYER ``deletes/<key>/ids`` (write-aside + rename swap, ADVICE r15
-    discipline — a redelivered key never mutates files a lockless
-    reader resolved). Probes apply live delete layers LOGICALLY in two
+    LAYER ``deletes/<key>/ids`` (`commit.put_layer`: write-aside +
+    rename swap, ADVICE r15 discipline — a redelivered key never
+    mutates files a lockless reader resolved). Probes apply live delete
+    layers LOGICALLY in two
     interlocking layers: the sets-side anti-join guarantees a deleted
     id never VERIFIES as a match, and the pre-cap candidate filter
     (`_incremental_matches` ``deleted_ids``) removes deleted ids from
@@ -957,37 +988,15 @@ def minhash_signature_store_delete(
     row. Cost: O(delete batch) now, O(store) at the next compaction
     (the physical pass — at 100 TB the same rewrite a table-format
     purge pays)."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        if delete_key in _store_del_manifest(store_dir):
-            return  # already physically applied by a compaction
-        commit.swap_layer(
-            os.path.join(store_dir, "deletes", delete_key),
-            lambda fresh: (
-                doc_ids.select(F.col(id_col).cast("long").alias("id"))
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(os.path.join(fresh, "ids"))
-            ),
-        )
-
-
-def _store_manifest_ordered(store_dir: str) -> list[str]:
-    """Ingest keys already folded into the base layer, in FOLD ORDER
-    (oldest first) — the order the compactor wrote them, which is layer
-    append-time order, NOT lexicographic key order. Recency decisions
-    (``minhash_store_manifest_gc``) must use this order: arbitrary ingest
-    keys don't sort chronologically ('day10' < 'day2' lexicographically),
-    and GC'ing the wrong end shrinks the replay-idempotency window
-    (ADVICE r11). The manifest travels INSIDE the snapshot pointer (one
-    atomic document with the base version — see `_commit_pointer`)."""
-    return list((_load_pointer(store_dir) or {}).get("folded", ()))
-
-
-def _store_manifest(store_dir: str) -> set[str]:
-    """Ingest keys already folded into the base layer by compaction."""
-    return set(_store_manifest_ordered(store_dir))
+    commit.put_layer(
+        SIGNATURE_STORE, store_dir, SIGNATURE_STORE.delete, delete_key,
+        lambda fresh: (
+            doc_ids.select(F.col(id_col).cast("long").alias("id"))
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(os.path.join(fresh, "ids"))
+        ),
+    )
 
 
 def minhash_signature_store_append(
@@ -1005,86 +1014,33 @@ def minhash_signature_store_append(
     as a new LAYER ``append/<ingest_key>/{sets,bands}`` — the write half
     of the daily loop: probe the slice, keep the survivors, append them
     so TOMORROW's slice dedups against today's. Idempotent per
-    ``ingest_key``: the layer dir is overwritten on re-delivery, and a
-    key the compactor has already folded into the base (the pointer's
+    ``ingest_key``: the layer is swapped in write-aside on re-delivery
+    (`commit.put_layer` — never in place, ADVICE r15: a stale lockless
+    reader may have resolved the old layer's part files), and a key the
+    compactor has already folded into the base (the pointer's
     ``folded`` manifest) is skipped entirely — replaying a processed
     day is a no-op, the same batch-id discipline as the streaming upsert
     sink (streaming/runner.py). Layers hold RAW band rows (the LSM log);
     ``minhash_signature_store_compact`` folds them into the
     bucket-aggregated base."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        if ingest_key in _store_manifest(store_dir):
-            return
 
-        # Write-ASIDE, never in place (ADVICE r15): a redelivered key may
-        # land on a live or tombstoned-in-grace layer whose part files a
-        # stale lockless reader resolved; mode("overwrite") there would
-        # delete them under it.
-        def write(fresh):
-            a_sets = _shingle_sets(
-                accepted_docs, text_col, id_col, shingle_n, repartition=False
+    def write(fresh):
+        a_sets = _shingle_sets(
+            accepted_docs, text_col, id_col, shingle_n, repartition=False
+        )
+        a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
+        (
+            _band_rows(
+                spark.read.parquet(os.path.join(fresh, "sets")),
+                num_hashes, seed,
             )
-            a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
-            (
-                _band_rows(
-                    spark.read.parquet(os.path.join(fresh, "sets")),
-                    num_hashes, seed,
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(fresh, "bands"))
-            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(fresh, "bands"))
+        )
 
-        commit.swap_layer(os.path.join(store_dir, "append", ingest_key), write)
-
-
-def _store_layer_dirs(store_dir: str) -> list[str]:
-    """Live append layers: complete (``bands/_SUCCESS``) and not
-    tombstoned. The tombstone check is load-bearing independently of the
-    folded-keys manifest: a folded layer awaits grace-period deletion on
-    disk (two-phase GC, r15) and its key can be TRIMMED from the manifest
-    by ``minhash_store_manifest_gc`` before the dir is collected — without
-    this check the trimmed-but-undeleted layer would re-enter probes and
-    compactions as a live layer and double-count its rows."""
-    return commit.live_layers(os.path.join(store_dir, "append"), "bands")
-
-
-def _tombstone_folded_layers(
-    store_dir: str, keys: set[str] | None = None
-) -> None:
-    """Phase 1 of the store's two-phase layer GC (r15 — ports the
-    bucketed layout's reader-grace pattern, advanced.py
-    `_gc_superseded_layouts`, after a live cross-process crash: a
-    lockless reader that resolved its view pre-compaction took
-    PATH_NOT_FOUND mid-scan when the old compaction ``rmtree``'d the
-    append layers it was still reading). Folded layers are tombstoned IN
-    PLACE (``superseded.json`` with a timestamp) so every file path a
-    stale reader already resolved stays valid; enumeration
-    (`_store_layer_dirs`) hides tombstoned layers from new readers and
-    compactions. ``keys`` limits the sweep to the named ingest keys —
-    REQUIRED when called from recovery (r16): recovery replays the last
-    commit's phase 1 from the pointer's folded list, and an unrestricted
-    sweep there would tombstone live layers appended after that commit.
-    Caller holds the store write lock."""
-    commit.tombstone_layers(os.path.join(store_dir, "append"), keys)
-
-
-def _store_gc_superseded(store_dir: str) -> None:
-    """Phase 2: delete tombstoned layers AND superseded base versions
-    older than ``$PYCAIM_STORE_GC_GRACE`` seconds (default 900 — same
-    default as the layout's ``$PYCAIM_LAYOUT_GC_GRACE``; any reader that
-    resolved its view more than a grace period ago has finished or was
-    abandoned). Runs from every write path under the store write lock;
-    an unreadable tombstone is left for a later pass rather than guessed
-    at. Old base versions carry their tombstone INSIDE the parquet dir
-    as ``_superseded.json`` — the underscore prefix keeps it invisible
-    to a stale reader's parquet scan of that very dir."""
-    grace = commit.store_grace()
-    for _k, _n, path in _version_dirs(store_dir, os.listdir(store_dir)):
-        commit.collect_if_aged(path, grace, data=True)
-    for root in ("append", "deletes"):
-        commit.collect_layers(os.path.join(store_dir, root), grace)
+    commit.put_layer(
+        SIGNATURE_STORE, store_dir, SIGNATURE_STORE.append, ingest_key, write
+    )
 
 
 def _merge_bucket_layers(
@@ -1128,224 +1084,39 @@ def _merge_bucket_layers(
     )
 
 
-def _store_write_lock(store_dir: str) -> commit.FileLock:
-    """The store's writer lock (``store.lock``), held for the whole body
-    of every WRITE path; probes take none and read one pointer parse."""
-    return commit.store_lock(store_dir)
-
-
-def _load_pointer(store_dir: str) -> dict | None:
-    """Parse the store's snapshot pointer ``current.json`` —
-    ``{"version": N, "folded": [...]}``; ``None`` if absent or
-    unparseable (an unbuilt store, or a build that crashed before its
-    pointer write)."""
-    return commit.load_pointer(os.path.join(store_dir, "current.json"))
-
-
-def _commit_pointer(
-    store_dir: str, version: int, folded: list[str],
-    del_folded: list[str] | None = None,
-) -> None:
-    """Atomically publish a new base snapshot: one fsynced rename flips
-    every reader from (sets_v{N}, buckets_v{N}, folded_N) to version
-    N+1's triple — base paths and the folded-layer skip set travel in
-    the SAME document, so no interleaving can pair a new base with a
-    stale skip set (the double-count mode the old journal stability loop
-    defended against). ``del_folded`` (r18) is the applied-deletion
-    manifest — delete keys a compaction has folded physically, the
-    replay-idempotency guard for `minhash_signature_store_delete` —
-    carried in the same atomic document; omitted while empty so
-    pre-r18 pointer shapes stay bit-stable."""
-    doc = {"version": version, "folded": list(folded)}
-    if del_folded:
-        doc["del_folded"] = list(del_folded)
-    commit.write_json_atomic(os.path.join(store_dir, "current.json"), doc)
-
-
-def _versioned(store_dir: str, name: str, version: int) -> str:
-    return os.path.join(store_dir, f"{name}_v{version}")
-
-
-def _version_dirs(
-    store_dir: str, entries: list[str]
-) -> list[tuple[str, int, str]]:
-    """The versioned base dirs among ``entries`` (a listing of
-    ``store_dir``) as (kind, version, path)."""
-    out = []
-    for d in entries:
-        for kind in ("sets", "buckets"):
-            prefix = f"{kind}_v"
-            if d.startswith(prefix):
-                try:
-                    out.append(
-                        (kind, int(d[len(prefix):]),
-                         os.path.join(store_dir, d))
-                    )
-                except ValueError:
-                    pass
-    return out
-
-
-#: Top-level entries of the pre-pointer store formats (the unversioned
-#: base, its journal-era swap dirs and manifests, the link-assembly
-#: strays of the one-time migration). This code reads none of them.
-_LEGACY = (
-    "sets", "buckets", "*_next", "*_old", "*.assembling",
-    "compact_journal.json", "folded_keys.json",
-)
-
-
-def _recover_layer_swaps(store_dir: str) -> None:
-    """Heal crashed write-aside swaps of both layer families
-    (`commit.recover_layers`). Caller holds the store write lock."""
-    for root, marker in (("append", "bands"), ("deletes", "ids")):
-        commit.recover_layers(os.path.join(store_dir, root), marker)
-
-
-def _recover_store_swap(store_dir: str) -> None:
-    """Reconcile a store's on-disk state after any crash (runs at the
-    top of every WRITE path, under ``_store_write_lock`` — probes stay
-    read-only, ADVICE r10).
-
-    A dir holding a `_LEGACY` entry raises `commit.LegacyFormatError`
-    before anything is touched. Otherwise the base is VERSIONED
-    (``sets_v{N}``/``buckets_v{N}``) behind the atomic ``current.json``
-    snapshot pointer, so recovery is a pure reconciliation with no
-    roll-forward/roll-back decision tree:
-
-    - no pointer: the store is unbuilt, or its build crashed before the
-      pointer write. A COMPLETE ``*_v0`` pair is that build's output and
-      gets the pointer it was about to receive; an incomplete pair is a
-      stray and is deleted (the next build re-derives it);
-    - version dirs NEWER than the pointer are uncommitted compactor
-      output (the pointer flip is the commit) — delete them; the
-      compaction re-derives them bit-identically;
-    - version dirs OLDER than the pointer that missed their tombstone
-      (crash between pointer commit and phase-1 GC) get one, so grace
-      collection proceeds;
-    - append layers named in the pointer's ``folded`` list that missed
-      their tombstone get one (same crash window)."""
-    import shutil
-
-    entries = os.listdir(store_dir)
-    commit.refuse_legacy(store_dir, entries, _LEGACY)
-    _recover_layer_swaps(store_dir)
-    ptr = _load_pointer(store_dir)
-    if ptr is None:
-        v0 = [_versioned(store_dir, d, 0) for d in ("sets", "buckets")]
-        if all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0):
-            _commit_pointer(store_dir, 0, [])
-        else:
-            for d in v0:
-                shutil.rmtree(d, ignore_errors=True)
-        return
-    commit.reconcile_versions(
-        [(n, p) for _k, n, p in _version_dirs(store_dir, entries)],
-        ptr["version"],
-    )
-    # Delete layers the pointer has folded (``del_folded``) whose
-    # tombstone write was lost to a crash: re-lay it so grace
-    # collection proceeds — probes stay correct meanwhile (re-filtering
-    # already-removed ids is a no-op).
-    commit.tombstone_layers(
-        os.path.join(store_dir, "deletes"),
-        {os.path.basename(d) for d in _store_delete_dirs(store_dir)}
-        & set(ptr.get("del_folded", ())),
-    )
-    _tombstone_folded_layers(store_dir, keys=set(ptr.get("folded", ())))
-
-
-def _store_read_view(store_dir: str) -> tuple[str, str, set[str]]:
-    """Resolve a CONSISTENT read-only view of the store: returns
-    (sets_path, buckets_path, folded_keys_to_skip).
-
-    This is a SNAPSHOT-POINTER read: one atomic parse of
-    ``current.json`` yields the base version AND the folded-layer skip
-    set together, and the resolved ``sets_v{N}``/``buckets_v{N}`` dirs
-    are IMMUTABLE once published — a compaction that commits version
-    N+1 while this reader is still materializing only flips the pointer
-    and tombstones version N, whose files stay on disk for
-    ``$PYCAIM_STORE_GC_GRACE`` seconds (the version tombstone lives
-    INSIDE the dir as underscore-prefixed ``_superseded.json``,
-    invisible to the parquet scan). Every resolved path outlives the
-    reader by a grace period, the same contract the append layers have —
-    the exact lifetime semantics a table-format snapshot commit provides
-    in deployment. A reader stale by MORE than the grace period (scan
-    paused ~15 min across a commit) is the residual, governed by the
-    grace knob like every two-phase GC in this repo. A store with no
-    pointer has no committed snapshot to read and raises."""
-    ptr = _load_pointer(store_dir)
-    if ptr is None:
-        raise FileNotFoundError(
-            f"signature store at {store_dir} has no committed snapshot "
-            "(no current.json): build it first"
-        )
-    v = ptr["version"]
-    return (
-        _versioned(store_dir, "sets", v),
-        _versioned(store_dir, "buckets", v),
-        set(ptr.get("folded", ())),
-    )
-
-
 def minhash_signature_store_compact(spark, store_dir: str) -> None:
     """Fold every live append layer into a NEW base version and commit
     it with one atomic pointer flip — the LSM compaction, re-based on
     the r16 snapshot-pointer layout (VERDICT r15 #3). The merged base is
     written to ``sets_v{N+1}``/``buckets_v{N+1}`` beside the live
-    version; ``current.json`` is then rewritten atomically with the new
-    version AND the updated folded-keys manifest in one document (so no
-    reader can pair the new base with a stale skip set); finally the
-    folded layers and the old version dirs are TOMBSTONED in place and
-    collected by `_store_gc_superseded` after ``$PYCAIM_STORE_GC_GRACE``
-    seconds — a lockless reader that resolved version N keeps every one
-    of its files for the whole grace period (r15 reproduced the crash
-    this prevents for layers; r16 extends the same lifetime to the base,
-    deleting the FileNotFoundException window the journal-era swap had).
-    A process crash anywhere is reconciled by `_recover_store_swap`: the
-    pointer flip IS the commit, so pre-flip crashes leave uncommitted
-    ``*_v{N+1}`` strays (deleted, re-derived next time) and post-flip
-    crashes leave missing tombstones (re-laid idempotently). Scope
-    (ADVICE r10): the pointer is fsynced, the parquet part files are the
-    filesystem's durability contract, not this function's. Concurrency:
-    runs under the store's exclusive write lock, so a second concurrent
-    compaction blocks and then no-ops (no layers left to fold)."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
-        layers = _store_layer_dirs(store_dir)
-        del_layers = _store_delete_dirs(store_dir)
-        if not layers and not del_layers:
+    version; `commit.fold_commit` then rewrites ``current.json``
+    atomically with the new version AND both updated manifests in one
+    document (so no reader can pair the new base with a stale skip set),
+    and TOMBSTONES the folded layers and the old version dirs in place;
+    they are collected after ``$PYCAIM_STORE_GC_GRACE`` seconds — a
+    lockless reader that resolved version N keeps every one of its files
+    for the whole grace period (r15 reproduced the crash this prevents:
+    an immediate ``rmtree`` of the append layers gave a concurrent
+    probe PATH_NOT_FOUND mid-scan). A process crash anywhere is
+    reconciled by `commit.recover`: the pointer flip IS the commit, so
+    pre-flip crashes leave uncommitted ``*_v{N+1}`` strays (deleted,
+    re-derived next time) and post-flip crashes leave missing tombstones
+    (re-laid idempotently). Scope (ADVICE r10): the pointer is fsynced,
+    the parquet part files are the filesystem's durability contract, not
+    this function's. Concurrency: runs under the store's exclusive write
+    lock, so a second concurrent compaction blocks and then no-ops (no
+    layers left to fold)."""
+    with commit.store_lock(store_dir):
+        commit.recover(SIGNATURE_STORE, store_dir)
+        view = commit.fold_view(SIGNATURE_STORE, store_dir)
+        if view is None:
             return
-        ptr = _load_pointer(store_dir)
-        if ptr is None:
-            # Live append layers but no committed base snapshot (a base
-            # build that never completed): there is nothing to fold
-            # INTO. Fail with the actual condition instead of the
-            # opaque 'NoneType not subscriptable' (ADVICE r16).
-            raise RuntimeError(
-                f"signature store at {store_dir} has append layers but "
-                "no committed base snapshot (current.json missing) — "
-                "build the base (minhash_signature_store) before "
-                "compacting"
-            )
-        v = ptr["version"]
-        sets_dir = _versioned(store_dir, "sets", v)
-        buckets_dir = _versioned(store_dir, "buckets", v)
-        merged_sets = spark.read.parquet(sets_dir)
-        pending = None
-        for l in layers:
-            merged_sets = merged_sets.unionByName(
-                spark.read.parquet(os.path.join(l, "sets"))
-            )
-            bands = spark.read.parquet(os.path.join(l, "bands"))
-            pending = bands if pending is None else pending.unionByName(bands)
-        merged_buckets = (
-            _merge_bucket_layers(spark.read.parquet(buckets_dir), pending)
-            if pending is not None
-            else spark.read.parquet(buckets_dir)
-        )
-        if del_layers:
+        merged_sets = view.frame(spark, "sets")
+        pending = view.pending(spark, "bands")
+        merged_buckets = spark.read.parquet(view.base["buckets"])
+        if pending is not None:
+            merged_buckets = _merge_bucket_layers(merged_buckets, pending)
+        if view.deletes:
             # PHYSICAL deletion fold (r18): drop deleted docs from the
             # sets side and filter them out of every bucket's member
             # array (explode → anti-mark → re-aggregate under the same
@@ -1357,7 +1128,7 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
             # deleted docs, except where a deleted id had evicted
             # another past BUCKET_STORE_CAP (cap 1024 — a documented,
             # fixture-unreachable approximation).
-            dels = commit.union_layer_ids(spark, del_layers)
+            dels = view.deleted_ids(spark)
             merged_sets = merged_sets.join(
                 F.broadcast(dels), "id", "left_anti"
             )
@@ -1391,33 +1162,11 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
                 )
                 .filter(F.size("ids") > 0)
             )
-        merged_sets.write.mode("overwrite").parquet(
-            _versioned(store_dir, "sets", v + 1)
-        )
-        merged_buckets.write.mode("overwrite").parquet(
-            _versioned(store_dir, "buckets", v + 1)
-        )
-        # Both manifests are kept in FOLD order (`commit.fold_manifest`).
-        folded = commit.fold_manifest(_store_manifest_ordered(store_dir), layers)
-        del_folded = commit.fold_manifest(
-            _store_del_manifest(store_dir), del_layers
-        )
-        # THE commit: new base + both manifests become visible together.
-        _commit_pointer(store_dir, v + 1, folded, del_folded=del_folded)
-        # Two-phase GC (r15): the old immediate `rmtree(append)` here
-        # crashed a concurrent lockless reader mid-scan (reproduced:
-        # pytest's dedup_stream_ingest PATH_NOT_FOUND while verify_sweep
-        # compacted the shared store). Tombstone in place — folded layers,
-        # applied delete layers AND the superseded base version; collect
-        # past grace on later write passes.
-        _tombstone_folded_layers(
-            store_dir, keys={os.path.basename(l) for l in layers}
-        )
-        for dl in del_layers:
-            commit.tombstone(dl)
-        for old in (sets_dir, buckets_dir):
-            commit.tombstone(old, data=True)
-        _store_gc_superseded(store_dir)
+        new = commit.base_dirs(SIGNATURE_STORE, store_dir, view.version + 1)
+        merged_sets.write.mode("overwrite").parquet(new["sets"])
+        merged_buckets.write.mode("overwrite").parquet(new["buckets"])
+        commit.fold_commit(SIGNATURE_STORE, store_dir, view)
+        commit.collect(SIGNATURE_STORE, store_dir)
         # Housekeeping on the compaction cadence (VERDICT r11 #5): trim
         # the manifest to the newest $PYCAIM_STORE_GC_KEEP folded keys
         # (default 128 — generous vs. any sane upstream redelivery
@@ -1431,7 +1180,7 @@ def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
     """Trim the folded-keys manifest to its ``keep_last`` most recently
     FOLDED ingest keys and return how many were dropped. Recency is fold
     order (the order the compactor appended them — layer append-time
-    order, ``_store_manifest_ordered``), never lexicographic key order:
+    order, `commit.fold_manifest`), never lexicographic key order:
     arbitrary keys don't sort chronologically ('day10' < 'day2'), and
     dropping the wrong end would shrink the replay-idempotency window
     for the keys most likely to be redelivered (ADVICE r11).
@@ -1445,77 +1194,26 @@ def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
     this is housekeeping, not a scale requirement. Runs automatically at
     the end of every compaction with ``$PYCAIM_STORE_GC_KEEP`` (default
     128, generous vs. any sane redelivery horizon); this standalone entry
-    point exists for explicit housekeeping with a tighter window."""
-    with _store_write_lock(store_dir):
-        _recover_store_swap(store_dir)
-        _store_gc_superseded(store_dir)
+    point exists for explicit housekeeping with a tighter window. The
+    applied-deletion manifest is never trimmed."""
+    with commit.store_lock(store_dir):
+        commit.recover(SIGNATURE_STORE, store_dir)
         return _manifest_gc_locked(store_dir, keep_last)
 
 
 def _manifest_gc_locked(store_dir: str, keep_last: int) -> int:
     """GC body, caller holds the write lock (compaction tail-calls this
     inside its own lock — flock on the same fd is not reentrant). The
-    trim rewrites the pointer in place (same base version, shorter
-    folded list — still one atomic doc)."""
-    keys = _store_manifest_ordered(store_dir)
-    if len(keys) <= keep_last:
+    trim rewrites the pointer through `commit.write_pointer`: same base
+    version, shorter folded list, the delete manifest carried over."""
+    view = commit.read_view(SIGNATURE_STORE, store_dir, missing_ok=True)
+    if len(view.folded) <= keep_last:
         return 0
-    kept = keys[-keep_last:] if keep_last > 0 else []
-    _commit_pointer(store_dir, _load_pointer(store_dir)["version"], kept)
-    return len(keys) - len(kept)
-
-
-def incremental_minhash_dedup_layered(
-    spark,
-    store_dir: str,
-    delta_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 8,
-    max_jaccard_dist: float = 0.8,
-    seed: int = 42,
-    max_candidates_per_doc: int = 64,
-) -> DataFrame:
-    """The stored probe, but against base + any un-compacted append
-    layers — so a slice ingested this morning dedups against a slice
-    appended an hour ago without waiting for compaction. Layer band rows
-    are bucket-aggregated on the fly and probed ALONGSIDE the base
-    buckets — both sides stream through broadcast hash joins against the
-    delta and merge per hit (``_incremental_matches`` ``extra_buckets``;
-    merge-stable cap), so the base bucket index never shuffles here (the
-    old pre-join ``_merge_bucket_layers`` full-outer reshuffled the
-    whole base index per probe — caught by the r11 per-batch stream plan
-    assert; that merge now runs only inside compaction, where it
-    belongs). Verdicts equal a probe of the compacted store, asserted in
-    tests/test_llm_ops.py. Read-only: a mid-swap store resolves via
-    ``_store_read_view`` — the new base plus only the layers it does NOT
-    already contain — instead of being healed in place (ADVICE r10)."""
-    sets_path, buckets_path, skip_keys = _store_read_view(store_dir)
-    b_sets = spark.read.parquet(sets_path)
-    store_buckets = spark.read.parquet(buckets_path)
-    pending = None
-    for l in _store_layer_dirs(store_dir):
-        if os.path.basename(l) in skip_keys:
-            continue
-        b_sets = b_sets.unionByName(
-            spark.read.parquet(os.path.join(l, "sets"))
-        )
-        bands = spark.read.parquet(os.path.join(l, "bands"))
-        pending = bands if pending is None else pending.unionByName(bands)
-    # Pending deletions (r18): sets-side anti-join + pre-cap candidate
-    # filter — see `incremental_minhash_dedup_stored`. Applies to base
-    # AND layer signatures (a doc appended then deleted must not match
-    # either).
-    dels = _store_deleted_ids(spark, store_dir)
-    if dels is not None:
-        b_sets = b_sets.join(F.broadcast(dels), "id", "left_anti")
-    return _incremental_probe(
-        b_sets, store_buckets, delta_docs, text_col, id_col, shingle_n,
-        num_hashes, max_jaccard_dist, seed, max_candidates_per_doc,
-        extra_buckets=None if pending is None else _band_buckets(pending),
-        deleted_ids=_deleted_ids_for_probe(dels),
+    kept = view.folded[-keep_last:] if keep_last > 0 else []
+    commit.write_pointer(
+        SIGNATURE_STORE, store_dir, view.version, kept, view.del_folded
     )
+    return len(view.folded) - len(kept)
 
 
 def stream_ingest_dedup(
@@ -1562,7 +1260,7 @@ def stream_ingest_dedup(
     verdicts_dir = os.path.join(work_dir, "verdicts")
 
     def _probe_and_append(batch_df, batch_id):
-        v = incremental_minhash_dedup_layered(
+        v = incremental_minhash_dedup_stored(
             spark, store, batch_df, text_col=text_col, id_col=id_col
         )
         if plan_sink is not None:

@@ -810,33 +810,6 @@ _INDEX_PARAM_KEYS = (
 _INDEX_ALGO_VERSION = 3
 
 
-def _codes_pointer(store_dir: str) -> dict | None:
-    """One parse of the coded-corpus snapshot pointer
-    ``codes_current.json`` — ``{"version": N[, "del_folded": [...]]
-    [, "app_folded": [...]]}``; None = unbuilt store."""
-    return commit.load_pointer(os.path.join(store_dir, "codes_current.json"))
-
-
-def _codes_version(store_dir: str) -> int | None:
-    """The pointed codes version; ``None`` = unbuilt store."""
-    ptr = _codes_pointer(store_dir)
-    return None if ptr is None else ptr["version"]
-
-
-def _codes_dir(store_dir: str, ptr: dict) -> str:
-    return os.path.join(store_dir, f"codes_v{ptr['version']}")
-
-
-def _codes_path(store_dir: str) -> str | None:
-    """Resolve the live coded-corpus dir: ``codes_v{N}`` behind the
-    pointer, or None for an unbuilt store. A version dir is immutable
-    once published; replacement publishes a new version and flips the
-    pointer, so a reader's resolved path stays valid for
-    ``$PYCAIM_STORE_GC_GRACE`` seconds after any retrain."""
-    ptr = _codes_pointer(store_dir)
-    return None if ptr is None else _codes_dir(store_dir, ptr)
-
-
 #: Top-level entries of the pre-pointer codes formats (the unversioned
 #: ``codes`` dir, its swap dirs, the migration's link-assembly strays
 #: and the in-base append manifest). This code reads none of them.
@@ -844,54 +817,19 @@ _LEGACY = (
     "codes", "codes_next", "codes_old*", "*.assembling", "append_keys.json",
 )
 
-
-def _recover_codes(store_dir: str) -> None:
-    """Write-path reconciliation for the coded corpus (caller holds the
-    store write lock): raise `commit.LegacyFormatError` on a `_LEGACY`
-    entry before anything is touched, reconcile ``codes_v*`` against
-    the pointer, heal crashed layer swaps and grace-collect tombstoned
-    dirs. With no pointer, a COMPLETE ``codes_v0`` is a build that
-    crashed between its v0 write and its pointer commit: it gets the
-    pointer it was about to receive (deleting it would lose the only
-    coded corpus). An INCOMPLETE one is a build stray and is deleted;
-    the next build re-derives it."""
-    import shutil
-
-    if not os.path.isdir(store_dir):
-        return
-    entries = os.listdir(store_dir)
-    commit.refuse_legacy(store_dir, entries, _LEGACY)
-    ptr = _codes_pointer(store_dir)
-    versions = [
-        (int(sib[len("codes_v"):]), os.path.join(store_dir, sib))
-        for sib in entries
-        if sib.startswith("codes_v") and sib[len("codes_v"):].isdigit()
-    ]
-    grace = commit.store_grace()
-    if ptr is not None:
-        commit.reconcile_versions(versions, ptr["version"])
-        for n, path in versions:
-            if n < ptr["version"]:
-                commit.collect_if_aged(path, grace, data=True)
-    # Both layer families: heal swaps, re-lay tombstones on ``.old-``
-    # debris and on layers the pointer has folded (the ``app_folded``
-    # skip in `_codes_frame` keeps reads correct meanwhile), collect.
-    for root, marker, key in (("codes_deletes", "ids", "del_folded"),
-                              ("codes_append", "codes", "app_folded")):
-        layer_root = os.path.join(store_dir, root)
-        commit.recover_layers(
-            layer_root, marker, set((ptr or {}).get(key, ()))
-        )
-        commit.collect_layers(layer_root, grace)
-    if ptr is not None:
-        return
-    v0 = os.path.join(store_dir, "codes_v0")
-    if os.path.exists(os.path.join(v0, "_SUCCESS")):
-        commit.write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"), {"version": 0}
-        )
-    else:
-        shutil.rmtree(v0, ignore_errors=True)
+#: The IVF-PQ coded corpus on disk (``operators/commit.py`` LSM store):
+#: ``codes_v{N}`` behind ``codes_current.json``
+#: (``{"version": N[, "del_folded": [...]][, "app_folded": [...]]}``),
+#: ``codes_append/<key>/codes`` and ``codes_deletes/<key>/ids`` layers,
+#: and the ``index.npz`` sidecar beside them.
+CODES_STORE = commit.LsmStore(
+    pointer="codes_current.json",
+    base=("codes",),
+    append=commit.Layers("codes_append", "codes", "app_folded"),
+    delete=commit.Layers("codes_deletes", "ids", "del_folded"),
+    order=("del_folded", "app_folded"),
+    legacy=_LEGACY,
+)
 
 
 def ivf_pq_index_build(
@@ -938,7 +876,9 @@ def ivf_pq_index_build(
         params-less or hyperparameter-mismatched stores. Read-only, so
         the common serve path stays lock-free (np reads the whole npz
         eagerly, and atomic replace means it is never torn)."""
-        codes = _codes_path(store_dir)
+        codes = commit.read_view(
+            CODES_STORE, store_dir, missing_ok=True
+        ).base.get("codes")
         if not (
             codes is not None
             and os.path.exists(npz)
@@ -984,7 +924,7 @@ def ivf_pq_index_build(
         if got is not None:
             return got
         # Reconcile crash strays and grace-collect tombstoned versions.
-        _recover_codes(store_dir)
+        commit.recover(CODES_STORE, store_dir)
         sample = np.stack(
             emb.orderBy("vec_id")
             .limit(sample_size)
@@ -1010,15 +950,13 @@ def ivf_pq_index_build(
         # not survive a retrain: purge the source corpus instead, per
         # ivf_pq_index_delete's scope note) and the fresh pointer
         # carries no app_folded/del_folded.
-        for layer in _codes_append_dirs(store_dir) + _codes_delete_dirs(
-            store_dir
-        ):
+        view = commit.read_view(CODES_STORE, store_dir, missing_ok=True)
+        for layer in view.appends + view.deletes:
             commit.tombstone(layer)
-        old_v = _codes_version(store_dir)
-        new_v = 0 if old_v is None else old_v + 1
+        new_v = 0 if view.version is None else view.version + 1
         _ivf_pq_encode(emb, centroids, codebooks).write.mode(
             "overwrite"
-        ).parquet(os.path.join(store_dir, f"codes_v{new_v}"))
+        ).parquet(commit.base_dirs(CODES_STORE, store_dir, new_v)["codes"])
         # The sidecar is staged (written + fsynced) BEFORE the pointer
         # flip and published after it. The reverse order would let a
         # crash between the two pair new centroids with old codes, and
@@ -1035,12 +973,9 @@ def ivf_pq_index_build(
             ),
             mode="wb",
         )
-        commit.write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"), {"version": new_v}
-        )
+        commit.write_pointer(CODES_STORE, store_dir, new_v)
         commit.publish_file(tmp, npz)
-        if old_v is not None:
-            old_dir = os.path.join(store_dir, f"codes_v{old_v}")
+        for old_dir in view.base.values():
             if os.path.isdir(old_dir):
                 commit.tombstone(old_dir, data=True)
     return centroids, codebooks
@@ -1056,81 +991,25 @@ def ivf_pq_index_append(
     production practice (the codebooks model the corpus distribution, not
     its membership; periodic retraining is a separate offline job). r18:
     the slice commits as an APPEND LAYER ``codes_append/<key>/codes``
-    (write-aside swap — the key is the idempotence unit), read by
-    `_codes_frame` alongside the base and folded into the next codes
-    version by `ivf_pq_codes_vacuum`, which records the key in the
-    pointer's ``app_folded`` manifest, so a redelivered slice is never
-    indexed twice. Runs under the store write lock. The ANN half of the daily
+    (`commit.put_layer` write-aside swap — the key is the idempotence
+    unit), read by the store's read view (`commit.read_view`) alongside
+    the base and folded into the next codes version by
+    `ivf_pq_codes_vacuum`, which records the key in the pointer's
+    ``app_folded`` manifest, so a redelivered slice is never indexed
+    twice. Runs under the store write lock. The ANN half of the daily
     ingest loop — new documents become searchable as soon as their
     slice is appended, no index rebuild."""
-    with commit.store_lock(store_dir):
-        _recover_codes(store_dir)
-        if ingest_key in _codes_app_manifest(store_dir):
-            return  # already folded into a committed codes version
+
+    def write(fresh):
         with np.load(os.path.join(store_dir, "index.npz")) as idx:
             centroids, codebooks = idx["centroids"], idx["codebooks"]
-        commit.swap_layer(
-            os.path.join(store_dir, "codes_append", ingest_key),
-            lambda fresh: _ivf_pq_encode(
-                new_emb, centroids, codebooks
-            ).write.mode("overwrite").parquet(os.path.join(fresh, "codes")),
-        )
+        _ivf_pq_encode(new_emb, centroids, codebooks).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(fresh, "codes"))
 
-
-def _codes_append_dirs(store_dir: str) -> list[str]:
-    """Live append layers of the coded corpus (r18):
-    ``codes_append/<key>/codes`` — complete and untombstoned."""
-    return commit.live_layers(
-        os.path.join(store_dir, "codes_append"), "codes"
+    commit.put_layer(
+        CODES_STORE, store_dir, CODES_STORE.append, ingest_key, write
     )
-
-
-def _codes_app_manifest(store_dir: str) -> list[str]:
-    """Append keys a vacuum has folded into a committed codes version —
-    carried in ``codes_current.json`` as ``app_folded``."""
-    return list((_codes_pointer(store_dir) or {}).get("app_folded", ()))
-
-
-def _codes_frame(spark, store_dir: str):
-    """The live coded corpus: the pointed base version UNIONED with
-    every live append layer whose key the pointer has NOT folded — the
-    read view every stored probe and vacuum uses. The version and the
-    ``app_folded`` skip set come from ONE pointer parse: a vacuum that
-    commits between two parses would pair the old version with the new
-    skip set and count a folded layer twice. The skip is load-bearing
-    independently of the tombstones (same rule as the minhash read
-    view): a vacuum that crashed between its pointer flip and its layer
-    tombstoning leaves a folded layer looking live."""
-    ptr = _codes_pointer(store_dir)
-    folded = set((ptr or {}).get("app_folded", ()))
-    coded = spark.read.parquet(_codes_dir(store_dir, ptr))
-    for layer in _codes_append_dirs(store_dir):
-        if os.path.basename(layer) in folded:
-            continue
-        coded = coded.unionByName(
-            spark.read.parquet(os.path.join(layer, "codes"))
-        )
-    return coded
-
-
-def _codes_delete_dirs(store_dir: str) -> list[str]:
-    """Live delete layers of the coded corpus (r18):
-    ``codes_deletes/<key>/ids`` — complete and untombstoned, same
-    liveness rule as every layer family in the repo."""
-    return commit.live_layers(os.path.join(store_dir, "codes_deletes"), "ids")
-
-
-def _codes_deleted_ids(spark, store_dir: str):
-    """Union of live delete layers' ids as a one-column
-    ``neighbor_id`` DataFrame (the codes table's id column), or None.
-    Bounded by deletions since the last vacuum."""
-    return commit.union_layer_ids(spark, _codes_delete_dirs(store_dir))
-
-
-def _codes_del_manifest(store_dir: str) -> list[str]:
-    """Delete keys a vacuum has applied physically — the
-    replay-idempotency manifest, carried in ``codes_current.json``."""
-    return list((_codes_pointer(store_dir) or {}).get("del_folded", ()))
 
 
 def ivf_pq_index_delete(
@@ -1150,21 +1029,15 @@ def ivf_pq_index_delete(
     scope: this guards the STORE — a later RETRAIN re-encodes whatever
     corpus it is given, so purge the source corpus too (the layout's
     CDC delete) before retraining."""
-    with commit.store_lock(store_dir):
-        _recover_codes(store_dir)
-        if delete_key in _codes_del_manifest(store_dir):
-            return
-        commit.swap_layer(
-            os.path.join(store_dir, "codes_deletes", delete_key),
-            lambda fresh: (
-                vec_ids.select(
-                    F.col(id_col).cast("long").alias("neighbor_id")
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(os.path.join(fresh, "ids"))
-            ),
-        )
+    commit.put_layer(
+        CODES_STORE, store_dir, CODES_STORE.delete, delete_key,
+        lambda fresh: (
+            vec_ids.select(F.col(id_col).cast("long").alias("neighbor_id"))
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(os.path.join(fresh, "ids"))
+        ),
+    )
 
 
 def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
@@ -1173,49 +1046,23 @@ def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
     pointer with BOTH applied manifests folded inside (``app_folded``
     append keys, ``del_folded`` delete keys — replay of either is a
     no-op), then tombstone the displaced version and the applied
-    layers (two-phase grace GC, collected by `_recover_codes` on later
+    layers (two-phase grace GC, collected by `commit.recover` on later
     write passes)."""
     with commit.store_lock(store_dir):
-        _recover_codes(store_dir)
-        del_layers = _codes_delete_dirs(store_dir)
-        app_layers = _codes_append_dirs(store_dir)
-        if not del_layers and not app_layers:
+        commit.recover(CODES_STORE, store_dir)
+        view = commit.fold_view(CODES_STORE, store_dir)
+        if view is None:
             return
-        ptr = _codes_pointer(store_dir)
-        if ptr is None:
-            raise RuntimeError(
-                f"IVF-PQ store at {store_dir} has pending layers but no "
-                "committed codes pointer — build the index first"
-            )
-        v = ptr["version"]
-        cur = _codes_frame(spark, store_dir)
-        if del_layers:
+        cur = view.frame(spark, "codes")
+        if view.deletes:
             cur = cur.join(
-                F.broadcast(commit.union_layer_ids(spark, del_layers)),
-                "neighbor_id", "left_anti",
+                F.broadcast(view.deleted_ids(spark)), "neighbor_id",
+                "left_anti",
             )
         cur.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"codes_v{v + 1}")
+            commit.base_dirs(CODES_STORE, store_dir, view.version + 1)["codes"]
         )
-        doc = {"version": v + 1}
-        del_folded = commit.fold_manifest(
-            list(ptr.get("del_folded", ())), del_layers
-        )
-        app_folded = commit.fold_manifest(
-            list(ptr.get("app_folded", ())), app_layers
-        )
-        if del_folded:
-            doc["del_folded"] = del_folded
-        if app_folded:
-            doc["app_folded"] = app_folded
-        commit.write_json_atomic(
-            os.path.join(store_dir, "codes_current.json"), doc
-        )
-        commit.tombstone(
-            os.path.join(store_dir, f"codes_v{v}"), data=True
-        )
-        for d in del_layers + app_layers:
-            commit.tombstone(d)
+        commit.fold_commit(CODES_STORE, store_dir, view)
 
 
 def ivf_pq_topk_stored(
@@ -1248,8 +1095,9 @@ def ivf_pq_topk_stored(
     # deletions apply logically until a vacuum folds them — a deleted
     # vector filtered from the codes scan can never be a candidate,
     # whatever version the pointer serves.
-    coded = _codes_frame(emb.sparkSession, store_dir)
-    dels = _codes_deleted_ids(emb.sparkSession, store_dir)
+    view = commit.read_view(CODES_STORE, store_dir)
+    coded = view.frame(emb.sparkSession, "codes")
+    dels = view.deleted_ids(emb.sparkSession)
     if dels is not None:
         coded = coded.join(F.broadcast(dels), "neighbor_id", "left_anti")
     return _ivf_pq_query(

@@ -456,7 +456,9 @@ def dedup_incremental_clusters(spark, sf_dir):
     import os
 
     from pycaim_spark.catalog import parquet_row_count
+    from pycaim_spark.operators import commit
     from pycaim_spark.operators.dedup import (
+        SIGNATURE_STORE,
         incremental_cluster_assignments,
         minhash_clusters,
         minhash_signature_store_build,
@@ -477,15 +479,13 @@ def dedup_incremental_clusters(spark, sf_dir):
         minhash_clusters(base).select("doc_id", "cluster_id").write.mode(
             "overwrite"
         ).parquet(assign_store)
-    from pycaim_spark.operators.dedup import _store_read_view
-
-    sets_path, buckets_path, _ = _store_read_view(sig_store)
+    view = commit.read_view(SIGNATURE_STORE, sig_store)
     return incremental_cluster_assignments(
         base,
         delta,
         spark.read.parquet(assign_store),
-        b_sets=spark.read.parquet(sets_path),
-        store_buckets=spark.read.parquet(buckets_path),
+        b_sets=spark.read.parquet(view.base["sets"]),
+        store_buckets=spark.read.parquet(view.base["buckets"]),
     )
 
 
@@ -551,7 +551,7 @@ def dedup_incremental_append(spark, sf_dir):
 
     from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -568,12 +568,12 @@ def dedup_incremental_append(spark, sf_dir):
         f"_{parquet_row_count(sf_dir, 'documents')}",
     )
     minhash_signature_store_build(base, store)
-    v1 = incremental_minhash_dedup_layered(spark, store, s1)
+    v1 = incremental_minhash_dedup_stored(spark, store, s1)
     accepted = s1.join(
         v1.filter(F.col("is_new") == 1).select("doc_id"), "doc_id"
     )
     minhash_signature_store_append(spark, store, accepted, "day1")
-    v2 = incremental_minhash_dedup_layered(spark, store, s2).localCheckpoint(
+    v2 = incremental_minhash_dedup_stored(spark, store, s2).localCheckpoint(
         eager=True
     )
     minhash_signature_store_compact(spark, store)
@@ -609,7 +609,7 @@ def dedup_store_delete(spark, sf_dir):
 
     from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_build,
         minhash_signature_store_compact,
         minhash_signature_store_delete,
@@ -631,7 +631,7 @@ def dedup_store_delete(spark, sf_dir):
         "del-batch-1",
     )
     minhash_signature_store_compact(spark, store)
-    return incremental_minhash_dedup_layered(spark, store, delta)
+    return incremental_minhash_dedup_stored(spark, store, delta)
 
 
 @register(
@@ -1055,7 +1055,9 @@ def sim_ann_index_append(spark, sf_dir):
     import shutil
 
     from pycaim_spark.catalog import parquet_row_count
+    from pycaim_spark.operators import commit
     from pycaim_spark.operators.similarity import (
+        CODES_STORE,
         _ivf_pq_query,
         ivf_pq_index_append,
         ivf_pq_index_build,
@@ -1075,9 +1077,7 @@ def sim_ann_index_append(spark, sf_dir):
         base, store, n_cells=32, m=8, k_centroids=32
     )
     ivf_pq_index_append(delta, store, "day1")
-    from pycaim_spark.operators.similarity import _codes_frame
-
-    coded = _codes_frame(spark, store)
+    coded = commit.read_view(CODES_STORE, store).frame(spark, "codes")
     return _ivf_pq_query(
         emb, coded, centroids, codebooks, nprobe=12, k=5, n_queries=10,
         n_candidates=256,

@@ -7,6 +7,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from pycaim_spark.operators import commit
+from pycaim_spark.operators.dedup import SIGNATURE_STORE
+from pycaim_spark.operators.similarity import CODES_STORE
 from pycaim_spark.registry import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
@@ -969,9 +972,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
         _store_layer_dirs,
-        _versioned,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -994,7 +995,8 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     )
     store = str(tmp_path / "store")
     minhash_signature_store_build(base, store)
-    assert _load_pointer(store) == {"version": 0, "folded": []}
+    assert commit.load_pointer(os.path.join(store, "current.json")) == {
+        "version": 0, "folded": []}
     minhash_signature_store_append(spark, store, s1, "day1")
     expected = {(r.doc_id, r.dup_of, r.is_new)
                 for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
@@ -1003,37 +1005,36 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     # (a) crash BEFORE the pointer flip: a stray uncommitted v1 dir. The
     # probe IGNORES it (pointer still names v0; read-only, ADVICE r10);
     # the next write path deletes it.
-    os.makedirs(_versioned(store, "sets", 1))
+    os.makedirs(commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
     after_stray = {(r.doc_id, r.dup_of, r.is_new)
                    for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
     assert after_stray == expected
-    assert os.path.exists(_versioned(store, "sets", 1))
+    assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
     minhash_signature_store_append(spark, store, s1, "day1")  # re-delivery
-    assert not os.path.exists(_versioned(store, "sets", 1))
+    assert not os.path.exists(
+        commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
 
     # (b) crash AFTER the flip, before phase-1 GC: the commit landed —
     # pointer at v1 with day1 folded — but no tombstone was laid on the
     # old version or the folded layer.
-    import pycaim_spark.operators.dedup as dd
+    def crashing_tombstone(path, data=False):
+        # recovery lays no tombstone on this state; the first tombstone
+        # is the fold commit's own, right after its pointer flip
+        raise OSError("simulated crash post-commit")
 
-    def crashing_tombstones(store_dir, keys=None):
-        # recovery replays phase 1 with the pointer's folded set (empty
-        # pre-commit) — only the compaction's own call carries keys
-        if keys:
-            raise OSError("simulated crash post-commit")
-
-    monkeypatch.setattr(dd, "_tombstone_folded_layers", crashing_tombstones)
+    monkeypatch.setattr(commit, "tombstone", crashing_tombstone)
     import pytest as _pytest
     with _pytest.raises(OSError, match="simulated crash"):
         minhash_signature_store_compact(spark, store)
     monkeypatch.undo()
-    ptr = _load_pointer(store)
+    ptr = commit.load_pointer(os.path.join(store, "current.json"))
     assert ptr["version"] == 1 and ptr["folded"] == ["day1"]
     assert not os.path.exists(
         os.path.join(store, "append", "day1", "superseded.json")
     )
     assert not os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_superseded.json")
+        os.path.join(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"],
+                     "_superseded.json")
     )
 
     # A probe of the post-commit state reads the NEW base and skips the
@@ -1042,7 +1043,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     mid = {(r.doc_id, r.dup_of, r.is_new)
            for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
     assert mid == expected
-    assert os.path.exists(_versioned(store, "sets", 0))
+    assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"])
 
     # The next WRITE-path operation reconciles: old version + folded
     # layer tombstoned (files intact for stale readers — two-phase GC),
@@ -1055,15 +1056,19 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
         os.path.join(store, "append", "day1", "superseded.json")
     )
     assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_superseded.json")
+        os.path.join(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"],
+                     "_superseded.json")
     )
-    assert os.path.exists(_versioned(store, "sets", 0))  # grace-protected
+    # grace-protected
+    assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"])
     assert _store_layer_dirs(store) == []
     # the manifest survived the crash inside the pointer: replaying the
     # folded key is a no-op
     minhash_signature_store_append(spark, store, s1, "day1")
     assert _store_layer_dirs(store) == []
-    assert _load_pointer(store)["version"] == 1  # no spurious recompact
+    # no spurious recompact
+    assert commit.load_pointer(
+        os.path.join(store, "current.json"))["version"] == 1
 
 
 def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
@@ -1078,7 +1083,6 @@ def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
 
     from pycaim_spark.operators.dedup import (
         BUCKET_STORE_CAP,
-        _store_manifest_ordered,
         incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1114,11 +1118,11 @@ def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
     os.utime(os.path.join(store, "append", "day2"), (1_000_000, 1_000_000))
     os.utime(os.path.join(store, "append", "day10"), (2_000_000, 2_000_000))
     minhash_signature_store_compact(spark, store)
-    assert _store_manifest_ordered(store) == ["day2", "day10"]
+    assert commit.read_view(SIGNATURE_STORE, store).folded == ["day2", "day10"]
     assert minhash_store_manifest_gc(store, keep_last=1) == 1
     # fold-order recency keeps day10 (the newest fold), drops day2 —
     # lexicographic recency would have kept day2
-    assert _store_manifest_ordered(store) == ["day10"]
+    assert commit.read_view(SIGNATURE_STORE, store).folded == ["day10"]
     from pycaim_spark.operators.dedup import _store_layer_dirs
     minhash_signature_store_append(spark, store, s2, "day10")  # no-op
     assert _store_layer_dirs(store) == []
@@ -1143,7 +1147,7 @@ def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
     # (c) compaction runs GC itself under its write lock
     monkeypatch.setenv("PYCAIM_STORE_GC_KEEP", "1")
     minhash_signature_store_compact(spark, store)
-    assert _store_manifest_ordered(store) == ["day2"]
+    assert commit.read_view(SIGNATURE_STORE, store).folded == ["day2"]
 
 
 def test_store_two_phase_gc_protects_concurrent_readers(
@@ -1244,8 +1248,6 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
-        _versioned,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1272,9 +1274,10 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     # Crash state A: v0 written, pointer write never happened.
     os.remove(os.path.join(store, "current.json"))
     minhash_signature_store_append(spark, store, s1, "day1")  # write path
-    assert _load_pointer(store) == {"version": 0, "folded": []}
-    assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 0), "_SUCCESS"))
+    assert commit.load_pointer(os.path.join(store, "current.json")) == {
+        "version": 0, "folded": []}
+    assert os.path.exists(os.path.join(
+        commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"], "_SUCCESS"))
     # Pre-append the probe doc was novel; after the healed store took
     # the day-1 layer it dups against doc 10 — both reads prove the
     # base survived the crash intact.
@@ -1286,20 +1289,19 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
 
     # Crash state B: incomplete pointer-less v0 pair = build stray.
     store_b = str(tmp_path / "store_b")
-    os.makedirs(_versioned(store_b, "sets", 0))
-    os.makedirs(_versioned(store_b, "buckets", 0))
+    os.makedirs(commit.base_dirs(SIGNATURE_STORE, store_b, 0)["sets"])
+    os.makedirs(commit.base_dirs(SIGNATURE_STORE, store_b, 0)["buckets"])
     minhash_signature_store_build(base, store_b)
-    ptr = _load_pointer(store_b)
+    ptr = commit.load_pointer(os.path.join(store_b, "current.json"))
     assert ptr is not None
     assert os.path.exists(os.path.join(
-        _versioned(store_b, "sets", ptr["version"]), "_SUCCESS"))
+        commit.base_dirs(SIGNATURE_STORE, store_b, ptr["version"])["sets"],
+        "_SUCCESS"))
 
     # IVF-PQ codes: same window — pointer removed after a completed
     # build must be forward-completed by the next write path, with the
     # coded corpus intact (the pre-fix recovery deleted it here).
     from pycaim_spark.operators.similarity import (
-        _codes_path,
-        _codes_version,
         ivf_pq_index_append,
         ivf_pq_index_build,
     )
@@ -1311,7 +1313,8 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     ann = str(tmp_path / "ann")
     ivf_pq_index_build(emb, ann, n_cells=4, m=4, k_centroids=8,
                        sample_size=40)
-    n0 = spark.read.parquet(_codes_path(ann)).count()
+    n0 = spark.read.parquet(
+        commit.read_view(CODES_STORE, ann).base["codes"]).count()
     os.remove(os.path.join(ann, "codes_current.json"))
     extra = spark.createDataFrame(
         [(100 + i, [float(x) for x in v])
@@ -1319,10 +1322,9 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     ivf_pq_index_append(extra, ann, "day1")
-    assert _codes_version(ann) == 0
-    from pycaim_spark.operators.similarity import _codes_frame
-
-    assert _codes_frame(spark, ann).count() == n0 + 5
+    assert commit.read_view(CODES_STORE, ann).version == 0
+    assert commit.read_view(CODES_STORE, ann).frame(
+        spark, "codes").count() == n0 + 5
 
     shutil.rmtree(store_b, ignore_errors=True)
 
@@ -1343,8 +1345,6 @@ def test_store_base_swap_mid_scan_reader_survives(
     import os
 
     from pycaim_spark.operators.dedup import (
-        _store_read_view,
-        _versioned,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1368,13 +1368,16 @@ def test_store_base_swap_mid_scan_reader_survives(
     minhash_signature_store_append(spark, store, s1, "day1")
 
     # The stale reader: resolve the view and BUILD the lazy plan now...
-    sets_v0, buckets_v0, skip = _store_read_view(store)
+    view = commit.read_view(SIGNATURE_STORE, store)
+    sets_v0, buckets_v0 = view.base["sets"], view.base["buckets"]
+    skip = set(view.folded)
     assert sets_v0.endswith("sets_v0") and skip == set()
     stale_df = incremental_minhash_dedup_layered(spark, store, probe)
 
     # ...the compactor commits version 1 in between...
     minhash_signature_store_compact(spark, store)
-    assert _store_read_view(store)[0].endswith("sets_v1")
+    assert commit.read_view(SIGNATURE_STORE, store).base["sets"].endswith(
+        "sets_v1")
 
     # ...and the stale reader's materialization SUCCEEDS against the
     # tombstoned-but-intact v0 paths — this exact line was the
@@ -1396,7 +1399,8 @@ def test_store_base_swap_mid_scan_reader_survives(
     assert not os.path.exists(sets_v0)
     assert not os.path.exists(buckets_v0)
     assert os.path.exists(
-        os.path.join(_versioned(store, "sets", 1), "_SUCCESS")
+        os.path.join(commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"],
+                     "_SUCCESS")
     )
     assert fresh == {(r.doc_id, r.dup_of, r.is_new)
                      for r in incremental_minhash_dedup_layered(
@@ -1428,9 +1432,8 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
     store = str(tmp_path / "ann")
     ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
                        sample_size=40)
-    from pycaim_spark.operators.similarity import _codes_path
-
-    base_n = spark.read.parquet(_codes_path(store)).count()
+    base_n = spark.read.parquet(
+        commit.read_view(CODES_STORE, store).base["codes"]).count()
 
     slices = {
         key: spark.createDataFrame(
@@ -1454,33 +1457,31 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
     for t in threads:
         t.join()
     assert not errs, errs
-    from pycaim_spark.operators.similarity import (
-        _codes_app_manifest,
-        _codes_append_dirs,
-        _codes_frame,
-    )
-
     assert sorted(
-        os.path.basename(d) for d in _codes_append_dirs(store)
+        os.path.basename(d) for d in CODES_STORE.append.live(store)
     ) == ["day1", "day2"], "both slices land as committed layers"
-    n = _codes_frame(spark, store).count()
+    n = commit.read_view(CODES_STORE, store).frame(spark, "codes").count()
     assert n == base_n + 10
     # replay of an unfolded key overwrites its layer in place: no
     # double indexing.
     for key in slices:
         ivf_pq_index_append(slices[key], store, key)
-    assert _codes_frame(spark, store).count() == n
+    assert commit.read_view(CODES_STORE, store).frame(
+        spark, "codes").count() == n
     # vacuum folds the layers into the next codes version and the
     # pointer manifest; replay then no-ops without touching disk.
     from pycaim_spark.operators.similarity import ivf_pq_codes_vacuum
 
     ivf_pq_codes_vacuum(spark, store)
-    assert sorted(_codes_app_manifest(store)) == ["day1", "day2"]
-    assert spark.read.parquet(_codes_path(store)).count() == n
+    assert sorted(
+        commit.read_view(CODES_STORE, store).folded) == ["day1", "day2"]
+    assert spark.read.parquet(
+        commit.read_view(CODES_STORE, store).base["codes"]).count() == n
     for key in slices:
         ivf_pq_index_append(slices[key], store, key)
-    assert _codes_append_dirs(store) == []
-    assert _codes_frame(spark, store).count() == n
+    assert CODES_STORE.append.live(store) == []
+    assert commit.read_view(CODES_STORE, store).frame(
+        spark, "codes").count() == n
 
 
 def test_ivf_pq_index_refuses_paramless_sidecar(spark, tmp_path):
@@ -1566,8 +1567,8 @@ def test_ann_index_append_makes_new_vectors_retrievable(spark, tmp_path):
     centroids, codebooks = ivf_pq_index_build(
         emb_base, store, n_cells=4, m=4, k_centroids=8, sample_size=60
     )
-    from pycaim_spark.operators.similarity import _codes_frame
-    coded = lambda: _codes_frame(spark, store)  # noqa: E731 — r18 layer-aware view
+    coded = lambda: commit.read_view(  # noqa: E731 — r18 layer-aware view
+        CODES_STORE, store).frame(spark, "codes")
 
     def probe():
         return {
@@ -1712,9 +1713,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _load_pointer,
         _store_delete_dirs,
-        _store_read_view,
         incremental_minhash_dedup_layered,
         minhash_signature_store_append,
         minhash_signature_store_build,
@@ -1763,9 +1762,10 @@ def test_store_delete_lifecycle(spark, tmp_path):
     # Physical fold: sets and bucket arrays drop id 1; the delete key
     # lands in the pointer manifest; the layer is tombstoned.
     minhash_signature_store_compact(spark, store)
-    ptr = _load_pointer(store)
+    ptr = commit.load_pointer(os.path.join(store, "current.json"))
     assert ptr["del_folded"] == ["gdpr1"]
-    sets_path, buckets_path, _ = _store_read_view(store)
+    view = commit.read_view(SIGNATURE_STORE, store)
+    sets_path, buckets_path = view.base["sets"], view.base["buckets"]
     assert spark.read.parquet(sets_path).filter("id = 1").count() == 0
     bk = spark.read.parquet(buckets_path)
     assert bk.filter(F.array_contains("ids", 1)).count() == 0
@@ -1777,7 +1777,8 @@ def test_store_delete_lifecycle(spark, tmp_path):
     # identical sets ids and bucket membership.
     twin = str(tmp_path / "twin")
     minhash_signature_store_build(base.filter("doc_id <> 1"), twin)
-    t_sets, t_buckets, _ = _store_read_view(twin)
+    twin_view = commit.read_view(SIGNATURE_STORE, twin)
+    t_sets, t_buckets = twin_view.base["sets"], twin_view.base["buckets"]
     assert (
         {r.id for r in spark.read.parquet(sets_path).select("id").collect()}
         == {r.id for r in spark.read.parquet(t_sets).select("id").collect()}
@@ -1816,7 +1817,8 @@ def test_store_delete_lifecycle(spark, tmp_path):
     )
     assert verdicts(probe10) == {(40, None, 1)}
     minhash_signature_store_compact(spark, store)
-    assert _load_pointer(store)["del_folded"] == ["gdpr1", "gdpr2"]
+    assert commit.load_pointer(
+        os.path.join(store, "current.json"))["del_folded"] == ["gdpr1", "gdpr2"]
     assert verdicts(probe10) == {(40, None, 1)}
     assert verdicts(probe2) == {(31, 2, 0)}
 
@@ -1847,10 +1849,6 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.similarity import (
-        _codes_delete_dirs,
-        _codes_del_manifest,
-        _codes_path,
-        _codes_version,
         ivf_pq_codes_vacuum,
         ivf_pq_index_delete,
         ivf_pq_topk_stored,
@@ -1894,15 +1892,16 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     assert not ({r.neighbor_id for r in filtered} & set(victims)), \
         "deleted vectors must never be returned as neighbors"
 
-    v0 = _codes_version(store)
+    v0 = commit.read_view(CODES_STORE, store).version
     ivf_pq_codes_vacuum(spark, store)
-    assert _codes_version(store) == v0 + 1
-    assert _codes_del_manifest(store) == ["gdpr-ann-1"]
-    codes = spark.read.parquet(_codes_path(store))
+    assert commit.read_view(CODES_STORE, store).version == v0 + 1
+    assert commit.read_view(CODES_STORE, store).del_folded == ["gdpr-ann-1"]
+    codes = spark.read.parquet(
+        commit.read_view(CODES_STORE, store).base["codes"])
     assert codes.filter(
         F.col("neighbor_id").isin([int(v) for v in victims])
     ).count() == 0
-    assert _codes_delete_dirs(store) == []
+    assert CODES_STORE.delete.live(store) == []
     after = ivf_pq_topk_stored(
         emb, store, n_cells=4, m=4, k_centroids=8, sample_size=60,
         n_queries=8, k=3,
@@ -1915,7 +1914,7 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "gdpr-ann-1",
     )
-    assert _codes_delete_dirs(store) == []
+    assert CODES_STORE.delete.live(store) == []
 
     # Two-phase retirement at zero grace: old version + layers collect.
     old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
@@ -1980,8 +1979,6 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.similarity import (
-        _codes_delete_dirs,
-        _codes_frame,
         ivf_pq_codes_vacuum,
         ivf_pq_index_build,
         ivf_pq_index_delete,
@@ -2007,7 +2004,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "stale-intent",
     )
-    assert _codes_delete_dirs(store)
+    assert CODES_STORE.delete.live(store)
 
     # RETRAIN: simulate the algo_version path (training code changed,
     # request unchanged) by doctoring the sidecar's stored version —
@@ -2028,11 +2025,12 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     os.replace(npz_path + ".tmp", npz_path)
     ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
                        sample_size=60)
-    assert _codes_delete_dirs(store) == [], \
+    assert CODES_STORE.delete.live(store) == [], \
         "a retrain must discard pending delete intents"
-    n = _codes_frame(spark, store).count()
+    n = commit.read_view(CODES_STORE, store).frame(spark, "codes").count()
     ivf_pq_codes_vacuum(spark, store)  # nothing pending: no-op
-    assert _codes_frame(spark, store).count() == n == 60, \
+    assert commit.read_view(CODES_STORE, store).frame(
+        spark, "codes").count() == n == 60, \
         "no vector of the retrain corpus may be filtered or removed"
     after = ivf_pq_topk_stored(
         emb, store, n_cells=4, m=4, k_centroids=8, sample_size=60,

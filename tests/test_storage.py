@@ -223,7 +223,7 @@ def test_bucketed_layout_concurrent_build_regen_gc(
     import time
     from concurrent.futures import ThreadPoolExecutor
 
-    from pycaim_spark.operators.dedup import _store_write_lock
+    from pycaim_spark.operators.commit import store_lock
     from pycaim_spark.queries.advanced import (
         _bucketed_orderkey_layout,
         _layout_fingerprint,
@@ -350,7 +350,7 @@ def test_bucketed_layout_concurrent_build_regen_gc(
 
         # (e) warm attach is lock-free: with the layout-root flock held
         # by "another process", the already-attached layout still serves.
-        with _store_write_lock(layout_root):
+        with store_lock(layout_root):
             with ThreadPoolExecutor(1) as ex:
                 fut = ex.submit(_bucketed_orderkey_layout, spark, corpus)
                 lib_warm, _ = fut.result(timeout=60)
