@@ -16,18 +16,19 @@ rewrites one small JSON pointer document (``current.json``,
 ``slug_commit.json``) with `write_json_atomic`: temp file, fsync,
 rename, directory fsync. A reader parses the pointer ONCE
 (`load_pointer`) and gets the old snapshot or the new one, never a mix:
-a version and the manifests that qualify it (folded layer keys, applied
-delete keys, the CDC batch record) travel in the same document. A
+a version and everything that qualifies it (live layers, folded layer
+keys, applied delete keys, the CDC batch record) travel in the same
+document. A
 reader that parses the same pointer twice can pair two commits.
 
-**Write-aside layer swap.** Keyed layers (an ingest slice, a delete
-batch) are never overwritten in place: `swap_layer` writes the fresh
-content to ``<key>.next``, renames a live ``<key>`` aside to
-``<key>.old-<ms>`` with a tombstone, then renames ``.next`` into place.
-A crash anywhere in that sequence is healed by `recover_layers` from the
-on-disk shapes alone: a complete orphaned ``.next`` rolls forward, any
-other ``.next`` is an uncommitted write and is deleted, and an ``.old-``
-that missed its tombstone gets one.
+**Immutable keyed layers.** Keyed layers (an ingest slice, a delete
+batch) are never overwritten or renamed: every write lands in a fresh
+``<key>.<seq>`` dir, named with a store-wide sequence number, and the
+pointer flip that names it is its commit. A redelivered key gets a new
+dir and the flip replaces the key's entry; the displaced dir is
+tombstoned after the flip, so a reader that resolved it keeps reading
+it. Recovery needs only the sequence numbers: a dir above the
+pointer's ``seq`` was never published and is deleted.
 
 **Two-phase GC.** Nothing a lockless reader may have resolved is deleted
 at commit time. Phase 1 tombstones the displaced dir in place; phase 2
@@ -62,18 +63,20 @@ without touching the dir: every store is a rebuildable cache.
 shape: a pointed base version, keyed append layers, keyed delete layers
 and a fold (compaction) that applies the layers to a new base. Each
 store describes its dirs and pointer keys in one `LsmStore` constant;
-the shape itself is implemented once, here. `read_view` is the
-lockless reader: ONE pointer parse gives the version, the base dirs and
-both manifests, then the live append layers the pointer has not folded
-and the live delete layers are listed, so a fold committing mid-read is
-seen wholly or not at all. `recover` opens every write path under the
-lock: refuse retired entries, heal swaps, re-lay the folded layers'
-tombstones, commit a complete pointer-less ``*_v0`` or reconcile
-versions, collect aged dirs. `put_layer` is the one keyed-layer motion
-(appends and deletes of both stores). `fold_view` and `fold_commit`
-bracket a fold's Spark writes: the pointer flip with both manifests
-folded, then tombstones on the applied layers and the displaced base.
-`write_pointer` is the only writer of these pointers.
+the shape itself is implemented once, here. The pointer names
+everything live: the base version, the live append and delete layers
+in append order, and both applied-key manifests. `read_view` is the
+lockless reader: ONE pointer parse is the whole view, with no listing
+and no marker probe, so any motion committing mid-read is seen wholly
+or not at all. `recover` opens every write path under the lock: refuse
+retired entries, commit a complete pointer-less ``*_v0`` or reconcile
+versions, reconcile layer dirs by sequence number, collect aged dirs.
+`put_layer` is the one keyed-layer motion (appends and deletes of both
+stores). A fold is `fold_view`, the store's Spark writes, then
+`fold_commit`: one `flip` to the new base with the layers' keys moved
+into the manifests. `flip` is the only retirement of a live dir (the
+tombstones follow the pointer write), and `write_pointer`, which takes
+the whole pointer record, is the only writer of these pointers.
 
 **Locks.** Writers serialize on an exclusive ``flock`` (`FileLock`);
 readers take none. Acquisition re-checks the lock file's inode, so a
@@ -99,20 +102,15 @@ _DATA_TOMB = "_superseded.json"
 
 # -- durable files ----------------------------------------------------------
 
-def stage_file(path: str, write, mode: str = "w") -> str:
-    """Write ``path + ".tmp"`` through ``write(f)`` and fsync it; return
-    the temp path. `publish_file` renames it into place. Split in two so
-    a sidecar can be staged before a pointer flip and published after."""
+def write_atomic(path: str, write, mode: str = "w") -> None:
+    """Write ``path`` durably through ``write(f)``: temp file, fsync,
+    rename, directory fsync. A reader or a crash recovery sees the old
+    content, the new content, or nothing, never a truncated file."""
     tmp = path + ".tmp"
     with open(tmp, mode) as f:
         write(f)
         f.flush()
         os.fsync(f.fileno())
-    return tmp
-
-
-def publish_file(tmp: str, path: str) -> None:
-    """Rename a staged file into place and fsync the directory entry."""
     os.rename(tmp, path)
     dfd = os.open(os.path.dirname(path), os.O_RDONLY)
     try:
@@ -122,9 +120,8 @@ def publish_file(tmp: str, path: str) -> None:
 
 
 def write_json_atomic(path: str, obj) -> None:
-    """Write JSON durably: a reader or a crash recovery sees the old
-    content, the new content, or nothing, never a truncated file."""
-    publish_file(stage_file(path, lambda f: json.dump(obj, f)), path)
+    """`write_atomic` of a JSON document."""
+    write_atomic(path, lambda f: json.dump(obj, f))
 
 
 def load_pointer(path: str, key: str = "version", kind=int) -> dict | None:
@@ -149,17 +146,20 @@ class LegacyFormatError(RuntimeError):
     longer reads."""
 
 
+def _retired(store_dir: str, name: str) -> LegacyFormatError:
+    return LegacyFormatError(
+        f"{store_dir} holds {name!r}, an entry of a retired on-disk "
+        "format that this code does not read: delete it and rebuild"
+    )
+
+
 def refuse_legacy(store_dir: str, entries, legacy: tuple[str, ...]) -> None:
     """Raise `LegacyFormatError` if a name in ``entries`` (a listing of
     ``store_dir``) matches one of the store's ``legacy`` patterns
     (`fnmatch` syntax). Never modifies the dir."""
     for name in sorted(entries):
         if any(fnmatch.fnmatchcase(name, pat) for pat in legacy):
-            raise LegacyFormatError(
-                f"{store_dir} holds {name!r}, an entry of a retired "
-                "pre-pointer on-disk format that this code does not "
-                "read: delete it and rebuild"
-            )
+            raise _retired(store_dir, name)
 
 
 # -- writer lock ------------------------------------------------------------
@@ -273,16 +273,19 @@ def collect_if_aged(path: str, grace: float, data: bool = False) -> bool:
 
 # -- versions ---------------------------------------------------------------
 
-def reconcile_versions(versions, current: int) -> None:
-    """Crash reconciliation of ``(n, path)`` version dirs against the
-    committed ``current``: above it is an unpublished write (delete);
-    below it and untombstoned is a displaced version whose tombstone was
-    lost (tombstone, so it enters its grace window)."""
+def reconcile_versions(versions, current: int, live=None,
+                       data: bool = True) -> None:
+    """Crash reconciliation of ``(n, path)`` dirs against the committed
+    ``current``: above it is an unpublished write (delete); at or below
+    it, not in ``live`` (default: ``current`` alone) and untombstoned is
+    a displaced dir whose tombstone was lost (tombstone, so it enters
+    its grace window)."""
+    live = {current} if live is None else live
     for n, path in versions:
         if n > current:
             shutil.rmtree(path, ignore_errors=True)
-        elif n < current and not tombstoned(path, data=True):
-            tombstone(path, data=True)
+        elif n not in live and not tombstoned(path, data):
+            tombstone(path, data)
 
 
 def link_files(src: str, dst: str, skip=None) -> None:
@@ -307,22 +310,6 @@ def link_files(src: str, dst: str, skip=None) -> None:
 
 # -- keyed layers -----------------------------------------------------------
 
-def live_layers(root: str, marker: str) -> list[str]:
-    """Live layers under ``root``: complete (``<key>/<marker>/_SUCCESS``),
-    untombstoned, and not swap scaffolding (``.next``/``.old-``), even
-    when a crash left scaffolding complete-looking."""
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        os.path.join(root, k)
-        for k in os.listdir(root)
-        if not k.endswith(".next")
-        and ".old-" not in k
-        and os.path.exists(os.path.join(root, k, marker, "_SUCCESS"))
-        and not tombstoned(os.path.join(root, k))
-    )
-
-
 def union_layer_ids(spark, layers: list[str]):
     """The distinct union of every layer's ``ids`` parquet, or None."""
     out = None
@@ -330,54 +317,6 @@ def union_layer_ids(spark, layers: list[str]):
         ids = spark.read.parquet(os.path.join(d, "ids"))
         out = ids if out is None else out.unionByName(ids)
     return None if out is None else out.distinct()
-
-
-def swap_layer(layer: str, write) -> None:
-    """Write-aside replace of one keyed layer: ``write(fresh)`` fills
-    ``<layer>.next``; a live ``<layer>`` is renamed to
-    ``<layer>.old-<ms>`` and tombstoned; then ``.next`` is renamed in.
-    A fresh dir carries no tombstone, so this also resurrects a key
-    whose old layer was retired. Caller holds the writer lock."""
-    fresh = layer + ".next"
-    shutil.rmtree(fresh, ignore_errors=True)
-    write(fresh)
-    if os.path.exists(layer):
-        old = f"{layer}.old-{int(time.time() * 1000)}"
-        os.rename(layer, old)
-        tombstone(old)
-    os.rename(fresh, layer)
-
-
-def recover_layers(root: str, marker: str, folded=()) -> None:
-    """Heal crashed `swap_layer` calls under ``root`` and re-lay lost
-    tombstones: on ``.old-`` dirs, and on layers whose key the pointer
-    lists in ``folded``. Caller holds the writer lock."""
-    if not os.path.isdir(root):
-        return
-    for k in os.listdir(root):
-        d = os.path.join(root, k)
-        if k.endswith(".next"):
-            layer = d[: -len(".next")]
-            if not os.path.exists(layer) and os.path.exists(
-                os.path.join(d, marker, "_SUCCESS")
-            ):
-                os.rename(d, layer)
-            else:
-                shutil.rmtree(d, ignore_errors=True)
-        elif (".old-" in k or k in folded) and not tombstoned(d):
-            tombstone(d)
-
-
-def tombstone_layers(root: str, keys=None) -> None:
-    """Tombstone the named layer dirs under ``root`` (every dir when
-    ``keys`` is None) that are not tombstoned yet."""
-    if not os.path.isdir(root):
-        return
-    for k in os.listdir(root):
-        d = os.path.join(root, k)
-        if (keys is None or k in keys) and os.path.isdir(d) \
-                and not tombstoned(d):
-            tombstone(d)
 
 
 def collect_layers(root: str, grace: float) -> None:
@@ -394,57 +333,64 @@ def collect_layers(root: str, grace: float) -> None:
         pass
 
 
-def fold_manifest(prior: list[str], layers: list[str]) -> list[str]:
-    """``prior`` plus the keys of ``layers`` in FOLD order: append time
-    (dir mtime), name as the tiebreak. Keys do not sort chronologically
-    ('day10' < 'day2'), and manifest trimming keeps the newest end."""
-    keys = [
-        os.path.basename(p)
-        for p in sorted(layers, key=lambda p: (os.path.getmtime(p), p))
-    ]
-    return prior + [k for k in keys if k not in prior]
-
-
 # -- LSM stores -------------------------------------------------------------
 
 class Layers(NamedTuple):
-    """One keyed layer family: ``<root>/<key>/<marker>/`` dirs, and the
-    pointer key of the manifest listing the keys a fold has applied.
-    ``keep_empty`` writes that key even when its list is empty."""
+    """One keyed layer family: immutable ``<root>/<key>.<seq>`` dirs, one
+    per write; the pointer key (``entries``) naming the live ones as
+    ``{key: seq}`` in append order; and the pointer key of the manifest
+    listing the keys a fold has applied."""
 
     root: str
-    marker: str
+    entries: str
     manifest: str
-    keep_empty: bool = False
-
-    def live(self, store_dir: str) -> list[str]:
-        return live_layers(os.path.join(store_dir, self.root), self.marker)
 
 
 class LsmStore(NamedTuple):
     """What an LSM store is on disk: its ``pointer`` file, its base
-    ``{kind}_v{N}`` dir kinds, its append and delete layer families, the
-    pointer's manifest keys in on-disk ``order`` and its `refuse_legacy`
-    patterns."""
+    ``{kind}_v{N}`` dir kinds, its append and delete layer families and
+    its `refuse_legacy` patterns."""
 
     pointer: str
     base: tuple[str, ...]
     append: Layers
     delete: Layers
-    order: tuple[str, str]
     legacy: tuple[str, ...]
 
 
-class LsmView(NamedTuple):
-    """A store as of one pointer parse. ``version`` is None for a store
-    with no committed snapshot, whose ``base`` is then empty."""
+def _layer_dirs(store_dir: str, layers: Layers, live: dict) -> list[str]:
+    return [os.path.join(store_dir, layers.root, f"{key}.{seq}")
+            for key, seq in live.items()]
 
+
+class LsmView(NamedTuple):
+    """A store as of one pointer parse: the pointer record (``version``,
+    the last layer sequence number ``seq``, the live layers of each
+    family and both applied manifests) and the dir it lives in.
+    ``version`` is None for a store with no committed snapshot."""
+
+    spec: LsmStore
+    store_dir: str
     version: int | None
-    base: dict[str, str]
-    appends: list[str]
-    deletes: list[str]
+    seq: int
+    app_layers: dict[str, int]
+    del_layers: dict[str, int]
     folded: list[str]
     del_folded: list[str]
+
+    @property
+    def base(self) -> dict[str, str]:
+        if self.version is None:
+            return {}
+        return base_dirs(self.spec, self.store_dir, self.version)
+
+    @property
+    def appends(self) -> list[str]:
+        return _layer_dirs(self.store_dir, self.spec.append, self.app_layers)
+
+    @property
+    def deletes(self) -> list[str]:
+        return _layer_dirs(self.store_dir, self.spec.delete, self.del_layers)
 
     def frame(self, spark, kind: str):
         """The base ``kind`` dir unioned with every append layer's."""
@@ -471,43 +417,53 @@ def base_dirs(spec: LsmStore, store_dir: str, version: int) -> dict[str, str]:
 
 def read_view(spec: LsmStore, store_dir: str,
               missing_ok: bool = False) -> LsmView:
-    """The lockless read view: the pointed version, its base dirs and
-    both manifests from ONE pointer parse, then the live append layers
-    the pointer has not folded and the live delete layers. Raises
-    FileNotFoundError on a store with no pointer unless ``missing_ok``."""
+    """The lockless read view: ONE pointer parse names the version, its
+    base dirs, every live layer and both manifests; nothing is listed or
+    probed. Raises FileNotFoundError on a store with no pointer unless
+    ``missing_ok``, and `LegacyFormatError` on a pointer of the retired
+    format that named no layers (it has no ``seq``)."""
     ptr = load_pointer(os.path.join(store_dir, spec.pointer))
-    if ptr is None and not missing_ok:
-        raise FileNotFoundError(
-            f"{store_dir} has no committed snapshot (no {spec.pointer}): "
-            "build it first"
-        )
-    ptr = ptr or {}
-    version = ptr.get("version")
-    folded = list(ptr.get(spec.append.manifest, ()))
+    if ptr is None:
+        if not missing_ok:
+            raise FileNotFoundError(
+                f"{store_dir} has no committed snapshot (no {spec.pointer}): "
+                "build it first"
+            )
+        return LsmView(spec, store_dir, None, 0, {}, {}, [], [])
+    if not isinstance(ptr.get("seq"), int):
+        raise _retired(store_dir, spec.pointer)
     return LsmView(
-        version,
-        {} if version is None else base_dirs(spec, store_dir, version),
-        [d for d in spec.append.live(store_dir)
-         if os.path.basename(d) not in folded],
-        spec.delete.live(store_dir),
-        folded,
-        list(ptr.get(spec.delete.manifest, ())),
+        spec, store_dir, ptr["version"], ptr["seq"],
+        ptr[spec.append.entries], ptr[spec.delete.entries],
+        ptr[spec.append.manifest], ptr[spec.delete.manifest],
     )
 
 
-def write_pointer(spec: LsmStore, store_dir: str, version: int,
-                  folded=(), del_folded=()) -> None:
-    """THE commit of an LSM store: the version and both manifests in one
-    atomic document, keys in the store's on-disk order, an empty
-    manifest omitted unless its family sets ``keep_empty``."""
-    doc = {"version": version}
-    lists = {spec.append.manifest: (spec.append, folded),
-             spec.delete.manifest: (spec.delete, del_folded)}
-    for key in spec.order:
-        layers, keys = lists[key]
-        if keys or layers.keep_empty:
-            doc[key] = list(keys)
-    write_json_atomic(os.path.join(store_dir, spec.pointer), doc)
+def write_pointer(view: LsmView) -> None:
+    """THE commit of an LSM store: the whole pointer record ``view`` in
+    one atomic document. Callers change a view with ``_replace``, so no
+    motion can drop a field it does not touch."""
+    spec = view.spec
+    write_json_atomic(os.path.join(view.store_dir, spec.pointer), {
+        "version": view.version,
+        "seq": view.seq,
+        spec.append.entries: view.app_layers,
+        spec.delete.entries: view.del_layers,
+        spec.append.manifest: view.folded,
+        spec.delete.manifest: view.del_folded,
+    })
+
+
+def flip(old: LsmView, new: LsmView) -> None:
+    """Commit ``new`` over ``old`` (caller holds the writer lock): write
+    the pointer, then tombstone every layer and base dir ``old`` names
+    and ``new`` does not. This is the only retirement of a live dir."""
+    write_pointer(new)
+    for path in set(old.appends + old.deletes) - set(new.appends + new.deletes):
+        tombstone(path)
+    for path in set(old.base.values()) - set(new.base.values()):
+        if os.path.isdir(path):
+            tombstone(path, data=True)
 
 
 def _version_dirs(spec: LsmStore, store_dir: str, entries):
@@ -519,31 +475,43 @@ def _version_dirs(spec: LsmStore, store_dir: str, entries):
     return out
 
 
+def _seq_dirs(root: str):
+    out = []
+    for name in os.listdir(root):
+        n = name.rpartition(".")[2]
+        out.append((int(n) if n.isdigit() else -1, os.path.join(root, name)))
+    return out
+
+
 def recover(spec: LsmStore, store_dir: str) -> None:
     """Write-path reconciliation, at the top of every motion under the
-    writer lock: raise `LegacyFormatError` on a retired entry before
-    touching anything, heal crashed layer swaps and re-lay the
-    tombstones of layers the pointer has folded, then either give a
-    COMPLETE pointer-less ``*_v0`` base (a build that crashed before its
-    pointer write) the pointer it was about to receive and delete an
-    incomplete one, or `reconcile_versions` against the pointer;
-    finally `collect`."""
+    writer lock: raise `LegacyFormatError` on a retired entry or pointer
+    before touching anything; then either give a COMPLETE pointer-less
+    ``*_v0`` base (a build that crashed before its pointer write) the
+    pointer it was about to receive and delete an incomplete one, or
+    `reconcile_versions` against the pointer; reconcile each layer
+    family's dirs by sequence number the same way (above the pointer's
+    ``seq``: never published, deleted; at or below it and not named:
+    tombstoned); finally `collect`."""
     entries = os.listdir(store_dir)
     refuse_legacy(store_dir, entries, spec.legacy)
-    ptr = load_pointer(os.path.join(store_dir, spec.pointer))
-    for layers in (spec.append, spec.delete):
-        recover_layers(os.path.join(store_dir, layers.root), layers.marker,
-                       set((ptr or {}).get(layers.manifest, ())))
-    if ptr is not None:
+    view = read_view(spec, store_dir, missing_ok=True)
+    if view.version is not None:
         reconcile_versions(_version_dirs(spec, store_dir, entries),
-                           ptr["version"])
+                           view.version)
     else:
         v0 = base_dirs(spec, store_dir, 0).values()
         if all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in v0):
-            write_pointer(spec, store_dir, 0)
+            write_pointer(view._replace(version=0))
         else:
             for d in v0:
                 shutil.rmtree(d, ignore_errors=True)
+    for layers, live in ((spec.append, view.app_layers),
+                         (spec.delete, view.del_layers)):
+        root = os.path.join(store_dir, layers.root)
+        if os.path.isdir(root):
+            reconcile_versions(_seq_dirs(root), view.seq,
+                               set(live.values()), data=False)
     collect(spec, store_dir)
 
 
@@ -559,43 +527,37 @@ def collect(spec: LsmStore, store_dir: str) -> None:
 
 def put_layer(spec: LsmStore, store_dir: str, layers: Layers, key: str,
               write) -> None:
-    """The keyed-layer motion (an append or a delete): under the writer
-    lock and after `recover`, skip a key the pointer's manifest already
-    holds (a replay of a folded key), else `swap_layer` ``write``'s
-    content in as ``<root>/<key>``."""
+    """The keyed-layer motion (an append or a delete) on a built store:
+    under the writer lock and after `recover`, skip a key the family's
+    manifest already holds (a replay of a folded key), else
+    ``write(dir)`` a fresh ``<root>/<key>.<seq>`` dir and `flip` the
+    pointer to name it, replacing the key's entry on a redelivery."""
     with store_lock(store_dir):
         recover(spec, store_dir)
-        ptr = load_pointer(os.path.join(store_dir, spec.pointer)) or {}
-        if key in ptr.get(layers.manifest, ()):
+        view = read_view(spec, store_dir)
+        field, applied = (("app_layers", view.folded) if layers == spec.append
+                          else ("del_layers", view.del_folded))
+        if key in applied:
             return
-        swap_layer(os.path.join(store_dir, layers.root, key), write)
+        seq = view.seq + 1
+        write(os.path.join(store_dir, layers.root, f"{key}.{seq}"))
+        live = {k: s for k, s in getattr(view, field).items() if k != key}
+        flip(view, view._replace(seq=seq, **{field: {**live, key: seq}}))
 
 
 def fold_view(spec: LsmStore, store_dir: str) -> LsmView | None:
     """The view a compaction folds (caller holds the writer lock, after
-    `recover`): None when no layer is pending; raises when layers are
-    pending but no base is committed to fold them into."""
+    `recover`), or None when no layer is live."""
     view = read_view(spec, store_dir, missing_ok=True)
-    if not view.appends and not view.deletes:
-        return None
-    if view.version is None:
-        raise RuntimeError(
-            f"{store_dir} has pending layers but no committed base "
-            f"({spec.pointer} missing): build the store before compacting"
-        )
-    return view
+    return view if view.app_layers or view.del_layers else None
 
 
-def fold_commit(spec: LsmStore, store_dir: str, view: LsmView) -> None:
+def fold_commit(view: LsmView) -> None:
     """Commit a compaction of ``view`` whose ``version + 1`` base dirs
-    are written: flip the pointer with both manifests folded (fold
-    order), then tombstone the applied layers and the displaced base."""
-    write_pointer(
-        spec, store_dir, view.version + 1,
-        fold_manifest(view.folded, view.appends),
-        fold_manifest(view.del_folded, view.deletes),
-    )
-    for layer in view.appends + view.deletes:
-        tombstone(layer)
-    for path in view.base.values():
-        tombstone(path, data=True)
+    are written: one `flip` to the new base with no live layer and both
+    manifests extended by the folded keys in append order."""
+    flip(view, view._replace(
+        version=view.version + 1, app_layers={}, del_layers={},
+        folded=view.folded + list(view.app_layers),
+        del_folded=view.del_folded + list(view.del_layers),
+    ))

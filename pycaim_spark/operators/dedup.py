@@ -10,8 +10,9 @@
 
 The persisted signature store (``minhash_signature_store_*``) commits
 through the shared protocol in ``operators/commit.py``: versioned
-``sets_v{N}``/``buckets_v{N}`` behind ``current.json``, write-aside
-``append/<key>`` and ``deletes/<key>`` layers, two-phase grace GC.
+``sets_v{N}``/``buckets_v{N}`` behind ``current.json``, immutable
+``app/<key>.<seq>`` and ``del/<key>.<seq>`` layers named by that
+pointer, two-phase grace GC.
 """
 
 from __future__ import annotations
@@ -785,24 +786,25 @@ def incremental_cluster_assignments(
     return delta_rows.unionByName(remap_rows)
 
 
-#: Top-level entries of the pre-pointer store formats (the unversioned
+#: Top-level entries of the retired store formats (the unversioned
 #: base, its journal-era swap dirs and manifests, the link-assembly
-#: strays of the one-time migration). This code reads none of them.
+#: strays of the one-time migration, and the listed layer roots of the
+#: format whose pointer named no layers). This code reads none of them.
 _LEGACY = (
     "sets", "buckets", "*_next", "*_old", "*.assembling",
-    "compact_journal.json", "folded_keys.json",
+    "compact_journal.json", "folded_keys.json", "append", "deletes",
 )
 
 #: The signature store on disk (``operators/commit.py`` LSM store):
-#: ``sets_v{N}``/``buckets_v{N}`` behind ``current.json``
-#: (``{"version": N, "folded": [...][, "del_folded": [...]]}``),
-#: ``append/<key>/{sets,bands}`` and ``deletes/<key>/ids`` layers.
+#: ``sets_v{N}``/``buckets_v{N}`` behind ``current.json`` (``{"version":
+#: N, "seq": S, "app_layers": {key: seq}, "del_layers": {key: seq},
+#: "folded": [...], "del_folded": [...]}``), and the layers it names,
+#: ``app/<key>.<seq>/{sets,bands}`` and ``del/<key>.<seq>/ids``.
 SIGNATURE_STORE = commit.LsmStore(
     pointer="current.json",
     base=("sets", "buckets"),
-    append=commit.Layers("append", "bands", "folded", keep_empty=True),
-    delete=commit.Layers("deletes", "ids", "del_folded"),
-    order=("folded", "del_folded"),
+    append=commit.Layers("app", "app_layers", "folded"),
+    delete=commit.Layers("del", "del_layers", "del_folded"),
     legacy=_LEGACY,
 )
 
@@ -841,9 +843,13 @@ def minhash_signature_store_build(
             return
         # Fresh build (or a corrupted current version — rebuild beside
         # it): write the base under the NEXT version and commit by
-        # pointer flip, folded reset to the passed corpus's truth.
-        v = 0 if view.version is None else view.version + 1
-        dirs = commit.base_dirs(SIGNATURE_STORE, store_dir, v)
+        # pointer flip, both manifests reset to the passed corpus's
+        # truth; live layers stay live.
+        new = view._replace(
+            version=0 if view.version is None else view.version + 1,
+            folded=[], del_folded=[],
+        )
+        dirs = new.base
         b_sets = _shingle_sets(
             base_docs, text_col, id_col, shingle_n, repartition=False
         )
@@ -856,7 +862,7 @@ def minhash_signature_store_build(
             .write.mode("overwrite")
             .parquet(dirs["buckets"])
         )
-        commit.write_pointer(SIGNATURE_STORE, store_dir, v)
+        commit.flip(view, new)
 
 
 def incremental_minhash_dedup_stored(
@@ -889,9 +895,9 @@ def incremental_minhash_dedup_stored(
     pre-join ``_merge_bucket_layers`` full-outer would reshuffle the
     whole base index per probe; that merge runs only inside compaction).
     Verdicts equal a probe of the compacted store, asserted in
-    tests/test_llm_ops.py. Read-only: a mid-swap store resolves to the
-    base the pointer names plus only the layers it does NOT already
-    contain, instead of being healed in place (ADVICE r10)."""
+    tests/test_llm_ops.py. Read-only: the one pointer parse names the
+    base and every live layer, so a motion committing mid-read is seen
+    wholly or not at all, and nothing is healed in place (ADVICE r10)."""
     _check_probe_cap(max_candidates_per_doc)
     view = commit.read_view(SIGNATURE_STORE, store_dir)
     b_sets = view.frame(spark, "sets")
@@ -915,20 +921,18 @@ def incremental_minhash_dedup_stored(
     )
 
 
-#: The layered probe is the stored probe; the name stays importable.
+# Kept only for perfbench/workloads.py (tests/test_perfbench_imports.py).
 incremental_minhash_dedup_layered = incremental_minhash_dedup_stored
 
 
 def _store_layer_dirs(store_dir: str) -> list[str]:
-    """Live append layers: complete (``bands/_SUCCESS``) and not
-    tombstoned, whether or not the pointer has folded their key."""
-    return SIGNATURE_STORE.append.live(store_dir)
+    # Kept only for perfbench/workloads.py (tests/test_perfbench_imports.py).
+    return commit.read_view(SIGNATURE_STORE, store_dir).appends
 
 
 def _store_delete_dirs(store_dir: str) -> list[str]:
-    """Live DELETE layers (r18): ``deletes/<key>/ids`` parquet dirs,
-    complete (``ids/_SUCCESS``) and not tombstoned."""
-    return SIGNATURE_STORE.delete.live(store_dir)
+    # Kept only for perfbench/workloads.py (tests/test_perfbench_imports.py).
+    return commit.read_view(SIGNATURE_STORE, store_dir).deletes
 
 
 #: Above this many pending deleted ids the probes skip the exact
@@ -964,10 +968,11 @@ def minhash_signature_store_delete(
     a new document identical to a deleted one is NOVEL.
 
     LSM shape, mirroring the append path: the ids land as a DELETE
-    LAYER ``deletes/<key>/ids`` (`commit.put_layer`: write-aside +
-    rename swap, ADVICE r15 discipline — a redelivered key never
-    mutates files a lockless reader resolved). Probes apply live delete
-    layers LOGICALLY in two
+    LAYER ``del/<key>.<seq>/ids`` (`commit.put_layer`: a fresh dir per
+    write, named by a pointer flip; a redelivered key gets a new dir
+    and its old one is tombstoned, never renamed or overwritten, so a
+    lockless reader that resolved it keeps reading it — ADVICE r15).
+    Probes apply live delete layers LOGICALLY in two
     interlocking layers: the sets-side anti-join guarantees a deleted
     id never VERIFIES as a match, and the pre-cap candidate filter
     (`_incremental_matches` ``deleted_ids``) removes deleted ids from
@@ -1011,12 +1016,13 @@ def minhash_signature_store_append(
     seed: int = 42,
 ) -> None:
     """Append an ACCEPTED ingest slice's signatures to a persisted store
-    as a new LAYER ``append/<ingest_key>/{sets,bands}`` — the write half
-    of the daily loop: probe the slice, keep the survivors, append them
-    so TOMORROW's slice dedups against today's. Idempotent per
-    ``ingest_key``: the layer is swapped in write-aside on re-delivery
-    (`commit.put_layer` — never in place, ADVICE r15: a stale lockless
-    reader may have resolved the old layer's part files), and a key the
+    as a new LAYER ``app/<ingest_key>.<seq>/{sets,bands}`` — the write
+    half of the daily loop: probe the slice, keep the survivors, append
+    them so TOMORROW's slice dedups against today's. Idempotent per
+    ``ingest_key``: a re-delivery writes a fresh dir and the pointer
+    flip replaces the key's entry (`commit.put_layer` — never in place,
+    ADVICE r15: a stale lockless reader may have resolved the old
+    layer's part files, which stay until grace), and a key the
     compactor has already folded into the base (the pointer's
     ``folded`` manifest) is skipped entirely — replaying a processed
     day is a no-op, the same batch-id discipline as the streaming upsert
@@ -1165,7 +1171,7 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
         new = commit.base_dirs(SIGNATURE_STORE, store_dir, view.version + 1)
         merged_sets.write.mode("overwrite").parquet(new["sets"])
         merged_buckets.write.mode("overwrite").parquet(new["buckets"])
-        commit.fold_commit(SIGNATURE_STORE, store_dir, view)
+        commit.fold_commit(view)
         commit.collect(SIGNATURE_STORE, store_dir)
         # Housekeeping on the compaction cadence (VERDICT r11 #5): trim
         # the manifest to the newest $PYCAIM_STORE_GC_KEEP folded keys
@@ -1179,8 +1185,8 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
 def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
     """Trim the folded-keys manifest to its ``keep_last`` most recently
     FOLDED ingest keys and return how many were dropped. Recency is fold
-    order (the order the compactor appended them — layer append-time
-    order, `commit.fold_manifest`), never lexicographic key order:
+    order (the order the compactor appended them — the pointer's layer
+    append order, `commit.fold_commit`), never lexicographic key order:
     arbitrary keys don't sort chronologically ('day10' < 'day2'), and
     dropping the wrong end would shrink the replay-idempotency window
     for the keys most likely to be redelivered (ADVICE r11).
@@ -1204,15 +1210,13 @@ def minhash_store_manifest_gc(store_dir: str, keep_last: int = 32) -> int:
 def _manifest_gc_locked(store_dir: str, keep_last: int) -> int:
     """GC body, caller holds the write lock (compaction tail-calls this
     inside its own lock — flock on the same fd is not reentrant). The
-    trim rewrites the pointer through `commit.write_pointer`: same base
-    version, shorter folded list, the delete manifest carried over."""
+    trim rewrites the pointer through `commit.write_pointer` with only
+    the folded list replaced: every other field is carried over."""
     view = commit.read_view(SIGNATURE_STORE, store_dir, missing_ok=True)
     if len(view.folded) <= keep_last:
         return 0
     kept = view.folded[-keep_last:] if keep_last > 0 else []
-    commit.write_pointer(
-        SIGNATURE_STORE, store_dir, view.version, kept, view.del_folded
-    )
+    commit.write_pointer(view._replace(folded=kept))
     return len(view.folded) - len(kept)
 
 

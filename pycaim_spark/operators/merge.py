@@ -201,14 +201,6 @@ def plan_bucket_local_merge(
     return {"touched": touched, "live": live, "staged": staged}
 
 
-def rm_with_crc(f: str) -> None:
-    """Remove a part file WITH its hidden ``.<name>.crc`` sidecar."""
-    os.remove(f)
-    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-
 def mv_with_crc(f: str, dst_dir: str) -> None:
     """Rename a part file into ``dst_dir`` WITH its crc sidecar."""
     base = os.path.basename(f)

@@ -38,16 +38,6 @@ DECODED_SCHEMA = (
 )
 
 
-def pack_expr(payload: bytes | None = None):
-    """Build the multimodal struct column from a binary payload column."""
-    return F.struct(
-        F.col("payload").alias("data"),
-        F.col("mime").alias("mime"),
-        F.col("uri").alias("uri"),
-        F.length(F.col("payload")).cast("long").alias("nbytes"),
-    )
-
-
 def _decode_fake_header(blob: bytes):
     """STUB decoder: parse the fake header; a real build calls the codec
     here (PIL.Image.open / soundfile / pyav) — deliberately the only line

@@ -12,9 +12,10 @@ the pair space never materializes.
 
 The persisted IVF-PQ store (``ivf_pq_index_*``, ``ivf_pq_codes_vacuum``)
 commits through the shared protocol in ``operators/commit.py``:
-``codes_v{N}`` behind ``codes_current.json``, write-aside
-``codes_append/<key>`` and ``codes_deletes/<key>`` layers, two-phase
-grace GC.
+``codes_v{N}`` (with its ``_index.npz`` sidecar inside) behind
+``codes_current.json``, immutable ``codes_app/<key>.<seq>`` and
+``codes_del/<key>.<seq>`` layers named by that pointer, two-phase grace
+GC.
 """
 
 from __future__ import annotations
@@ -47,11 +48,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Precompute the L2 norm once per vector — never inside a pair join."""
-    return df.withColumn("_norm", norm_expr(F.col(vec_col)))
-
-
 # SQL twins of the expressions above, for oracle construction.
 DOT_SQL = (
     "list_reduce(list_transform(list_zip({a}, {b}), "
@@ -63,21 +59,6 @@ NORM_SQL = "sqrt(" + DOT_SQL.format(a="{a}", b="{a}") + ")"
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Deterministic Gaussian hyperplanes for sign-LSH bucketing."""
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
-
-
-def lsh_signature_expr(vec_col: Column, planes: np.ndarray) -> Column:
-    """Sign-LSH bucket id: bit b set iff dot(v, plane_b) >= 0.
-
-    Cosine-preserving (random hyperplane LSH): vectors with high cosine
-    collide with high probability. Evaluated as codegen'd expressions over
-    literal plane arrays — no Python, no shuffle.
-    """
-    sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot_expr(vec_col, arr) >= 0).cast("long")
-        sig = sig + F.shiftleft(bit, b)
-    return sig
 
 
 def bucketed_cosine_neighbors(
@@ -790,7 +771,7 @@ def _ivf_pq_query(
     return _exact_rerank(emb, cand, q_rows, k)
 
 
-# Order of the persisted hyperparameter vector in index.npz["params"].
+# Order of the persisted hyperparameter vector in the sidecar's "params".
 _INDEX_PARAM_KEYS = (
     "n_cells", "m", "k_centroids", "sample_size", "iters", "seed",
     "algo_version",
@@ -810,26 +791,39 @@ _INDEX_PARAM_KEYS = (
 _INDEX_ALGO_VERSION = 3
 
 
-#: Top-level entries of the pre-pointer codes formats (the unversioned
-#: ``codes`` dir, its swap dirs, the migration's link-assembly strays
-#: and the in-base append manifest). This code reads none of them.
+#: Top-level entries of the retired codes formats (the unversioned
+#: ``codes`` dir, its swap dirs, the migration's link-assembly strays,
+#: the in-base append manifest, and the listed layer roots and
+#: top-level sidecar of the format whose pointer named no layers).
+#: This code reads none of them.
 _LEGACY = (
     "codes", "codes_next", "codes_old*", "*.assembling", "append_keys.json",
+    "codes_append", "codes_deletes", "index.npz",
 )
 
+#: The trained centroids, codebooks and build params of a codes
+#: version, inside ``codes_v{N}`` (Spark's scan skips ``_``-files), so
+#: one pointer parse resolves the arrays and the codes together.
+_SIDECAR = "_index.npz"
+
 #: The IVF-PQ coded corpus on disk (``operators/commit.py`` LSM store):
-#: ``codes_v{N}`` behind ``codes_current.json``
-#: (``{"version": N[, "del_folded": [...]][, "app_folded": [...]]}``),
-#: ``codes_append/<key>/codes`` and ``codes_deletes/<key>/ids`` layers,
-#: and the ``index.npz`` sidecar beside them.
+#: ``codes_v{N}`` behind ``codes_current.json`` (``{"version": N, "seq":
+#: S, "app_layers": {key: seq}, "del_layers": {key: seq}, "app_folded":
+#: [...], "del_folded": [...]}``), and the layers it names,
+#: ``codes_app/<key>.<seq>/codes`` and ``codes_del/<key>.<seq>/ids``.
 CODES_STORE = commit.LsmStore(
     pointer="codes_current.json",
     base=("codes",),
-    append=commit.Layers("codes_append", "codes", "app_folded"),
-    delete=commit.Layers("codes_deletes", "ids", "del_folded"),
-    order=("del_folded", "app_folded"),
+    append=commit.Layers("codes_app", "app_layers", "app_folded"),
+    delete=commit.Layers("codes_del", "del_layers", "del_folded"),
     legacy=_LEGACY,
 )
+
+
+def index_arrays(view: commit.LsmView) -> tuple[np.ndarray, np.ndarray]:
+    """The trained (centroids, codebooks) of ``view``'s codes version."""
+    with np.load(os.path.join(view.base["codes"], _SIDECAR)) as idx:
+        return idx["centroids"], idx["codebooks"]
 
 
 def ivf_pq_index_build(
@@ -843,9 +837,10 @@ def ivf_pq_index_build(
     seed: int = 42,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Build (or reuse) a PERSISTED IVF-PQ index at ``store_dir``: the
-    coded corpus as parquet plus an ``index.npz`` sidecar holding the
-    trained centroids/codebooks. Idempotent — if both artifacts exist the
-    build is skipped entirely, which is the deployment shape: at 100 TB
+    coded corpus as parquet plus an ``_index.npz`` sidecar inside the
+    same version dir holding the trained centroids/codebooks. Idempotent
+    — if the pointer names a version the build is skipped entirely,
+    which is the deployment shape: at 100 TB
     the index is built once (or incrementally per ingest slice) and every
     query run reads 8-byte codes instead of re-encoding the corpus.
     Training is seeded, so a rebuild reproduces the same index bit-(and
@@ -859,6 +854,15 @@ def ivf_pq_index_build(
     NEW VERSION ``codes_v{N+1}`` committed by a flip of the
     ``codes_current.json`` pointer (``operators/commit.py``). Returns
     (centroids, codebooks)."""
+    return _index_view(
+        emb, store_dir, n_cells, m, k_centroids, sample_size, iters, seed
+    )[1:]
+
+
+def _index_view(emb, store_dir, n_cells, m, k_centroids, sample_size,
+                iters, seed):
+    """`ivf_pq_index_build` that also returns the view its arrays came
+    from: (view, centroids, codebooks), all from ONE pointer parse."""
     params = {
         "n_cells": n_cells,
         "m": m,
@@ -868,24 +872,16 @@ def ivf_pq_index_build(
         "seed": seed,
         "algo_version": _INDEX_ALGO_VERSION,
     }
-    npz = os.path.join(store_dir, "index.npz")
 
-    def _try_reuse():
-        """Validate a persisted index against the requested params:
+    def _try_reuse(view):
+        """Validate ``view``'s sidecar against the requested params:
         arrays on a match, None when a (re)build is needed, ValueError on
         params-less or hyperparameter-mismatched stores. Read-only, so
         the common serve path stays lock-free (np reads the whole npz
-        eagerly, and atomic replace means it is never torn)."""
-        codes = commit.read_view(
-            CODES_STORE, store_dir, missing_ok=True
-        ).base.get("codes")
-        if not (
-            codes is not None
-            and os.path.exists(npz)
-            and os.path.exists(os.path.join(codes, "_SUCCESS"))
-        ):
+        eagerly, and a committed version dir is never rewritten)."""
+        if view.version is None:
             return None
-        with np.load(npz) as idx:
+        with np.load(os.path.join(view.base["codes"], _SIDECAR)) as idx:
             if "params" not in idx:
                 # ADVICE r10: a params-less sidecar is indistinguishable
                 # from a stale index — refuse rather than silently serve.
@@ -896,7 +892,7 @@ def ivf_pq_index_build(
                 )
             stored = dict(zip(_INDEX_PARAM_KEYS, idx["params"].tolist()))
             if stored == params:
-                return idx["centroids"], idx["codebooks"]
+                return view, idx["centroids"], idx["codebooks"]
             diff = {
                 key: (stored.get(key, "absent"), params[key])
                 for key in _INDEX_PARAM_KEYS
@@ -913,14 +909,16 @@ def ivf_pq_index_build(
             # with the same hyperparameters, replacing the stale index.
             return None
 
-    got = _try_reuse()
+    got = _try_reuse(commit.read_view(CODES_STORE, store_dir, missing_ok=True))
     if got is not None:
         return got
     with commit.store_lock(store_dir):
         # Double-checked: a concurrent build may have completed while we
         # waited on the lock — seeded training is deterministic, so
         # re-validating and serving its result is exact, not approximate.
-        got = _try_reuse()
+        got = _try_reuse(
+            commit.read_view(CODES_STORE, store_dir, missing_ok=True)
+        )
         if got is not None:
             return got
         # Reconcile crash strays and grace-collect tombstoned versions.
@@ -938,33 +936,27 @@ def ivf_pq_index_build(
         codebooks = _pq_train(
             sample - centroids[s_cells], m, k_centroids, iters, seed
         )
-        # A (re)build resets the store to exactly the passed corpus:
-        # the pointer flip below supersedes previously appended slices
-        # AND pending delete intents, so BOTH layer families are
-        # tombstoned (a surviving append layer would re-enter reads
-        # and its manifest key would no-op a re-delivered slice the
-        # rebuild just discarded — the r12 bug class; a surviving
-        # DELETE layer would silently filter, and the next vacuum
-        # physically remove, vectors the retrain corpus intentionally
-        # contains — deletion intents target the OLD membership and do
-        # not survive a retrain: purge the source corpus instead, per
-        # ivf_pq_index_delete's scope note) and the fresh pointer
-        # carries no app_folded/del_folded.
+        # A (re)build resets the store to exactly the passed corpus: its
+        # one pointer flip names no layer and empty manifests, so BOTH
+        # layer families are retired (a surviving append layer would
+        # re-enter reads and its manifest key would no-op a
+        # re-delivered slice the rebuild just discarded — the r12 bug
+        # class; a surviving DELETE layer would silently filter, and the
+        # next vacuum physically remove, vectors the retrain corpus
+        # intentionally contains — deletion intents target the OLD
+        # membership and do not survive a retrain: purge the source
+        # corpus instead, per ivf_pq_index_delete's scope note).
         view = commit.read_view(CODES_STORE, store_dir, missing_ok=True)
-        for layer in view.appends + view.deletes:
-            commit.tombstone(layer)
-        new_v = 0 if view.version is None else view.version + 1
-        _ivf_pq_encode(emb, centroids, codebooks).write.mode(
-            "overwrite"
-        ).parquet(commit.base_dirs(CODES_STORE, store_dir, new_v)["codes"])
-        # The sidecar is staged (written + fsynced) BEFORE the pointer
-        # flip and published after it. The reverse order would let a
-        # crash between the two pair new centroids with old codes, and
-        # `_try_reuse` would accept them because the params match; this
-        # order leaves at worst the old npz beside the new codes for one
-        # load, which the params re-validate.
-        tmp = commit.stage_file(
-            npz,
+        new = view._replace(
+            version=0 if view.version is None else view.version + 1,
+            app_layers={}, del_layers={}, folded=[], del_folded=[],
+        )
+        codes = new.base["codes"]
+        # The sidecar goes in first and the parquet write appends beside
+        # it, so the version's _SUCCESS marks both complete.
+        os.makedirs(codes)
+        commit.write_atomic(
+            os.path.join(codes, _SIDECAR),
             lambda f: np.savez(
                 f,
                 centroids=centroids,
@@ -973,12 +965,11 @@ def ivf_pq_index_build(
             ),
             mode="wb",
         )
-        commit.write_pointer(CODES_STORE, store_dir, new_v)
-        commit.publish_file(tmp, npz)
-        for old_dir in view.base.values():
-            if os.path.isdir(old_dir):
-                commit.tombstone(old_dir, data=True)
-    return centroids, codebooks
+        _ivf_pq_encode(emb, centroids, codebooks).write.mode(
+            "append"
+        ).parquet(codes)
+        commit.flip(view, new)
+    return new, centroids, codebooks
 
 
 def ivf_pq_index_append(
@@ -990,9 +981,10 @@ def ivf_pq_index_append(
     encode them with the STORED centroids/codebooks — the standard
     production practice (the codebooks model the corpus distribution, not
     its membership; periodic retraining is a separate offline job). r18:
-    the slice commits as an APPEND LAYER ``codes_append/<key>/codes``
-    (`commit.put_layer` write-aside swap — the key is the idempotence
-    unit), read by the store's read view (`commit.read_view`) alongside
+    the slice commits as an APPEND LAYER ``codes_app/<key>.<seq>/codes``
+    (`commit.put_layer`: a fresh dir named by a pointer flip — the key
+    is the idempotence unit), read by the store's read view
+    (`commit.read_view`) alongside
     the base and folded into the next codes version by
     `ivf_pq_codes_vacuum`, which records the key in the pointer's
     ``app_folded`` manifest, so a redelivered slice is never indexed
@@ -1001,8 +993,10 @@ def ivf_pq_index_append(
     slice is appended, no index rebuild."""
 
     def write(fresh):
-        with np.load(os.path.join(store_dir, "index.npz")) as idx:
-            centroids, codebooks = idx["centroids"], idx["codebooks"]
+        # put_layer holds the writer lock: this view is the one it flips.
+        centroids, codebooks = index_arrays(
+            commit.read_view(CODES_STORE, store_dir)
+        )
         _ivf_pq_encode(new_emb, centroids, codebooks).write.mode(
             "overwrite"
         ).parquet(os.path.join(fresh, "codes"))
@@ -1022,7 +1016,7 @@ def ivf_pq_index_delete(
     """DELETE vectors from a persisted IVF-PQ index (r18) — the ANN
     twin of `operators/dedup.minhash_signature_store_delete`: after
     this commit the vectors are never returned as neighbors. The ids
-    land as a keyed delete layer (write-aside swap); probes apply them
+    land as a keyed delete layer (`commit.put_layer`); probes apply them
     logically (anti-join the codes scan), `ivf_pq_codes_vacuum` applies
     them physically and records the key in the pointer's
     ``del_folded`` manifest so a replayed delete is a no-op. Note the
@@ -1047,7 +1041,8 @@ def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
     append keys, ``del_folded`` delete keys — replay of either is a
     no-op), then tombstone the displaced version and the applied
     layers (two-phase grace GC, collected by `commit.recover` on later
-    write passes)."""
+    write passes). The new version hard-links the trained sidecar first
+    and its parquet write appends beside it, as a retrain's does."""
     with commit.store_lock(store_dir):
         commit.recover(CODES_STORE, store_dir)
         view = commit.fold_view(CODES_STORE, store_dir)
@@ -1059,10 +1054,12 @@ def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
                 F.broadcast(view.deleted_ids(spark)), "neighbor_id",
                 "left_anti",
             )
-        cur.write.mode("overwrite").parquet(
-            commit.base_dirs(CODES_STORE, store_dir, view.version + 1)["codes"]
-        )
-        commit.fold_commit(CODES_STORE, store_dir, view)
+        new = commit.base_dirs(CODES_STORE, store_dir, view.version + 1)
+        os.makedirs(new["codes"])
+        commit.link_files(view.base["codes"], new["codes"],
+                          skip=lambda fn: fn != _SIDECAR)
+        cur.write.mode("append").parquet(new["codes"])
+        commit.fold_commit(view)
 
 
 def ivf_pq_topk_stored(
@@ -1088,14 +1085,13 @@ def ivf_pq_topk_stored(
     re-rank — the stage the IVF×PQ composition actually accelerates.
     Same seeded training → identical results to the inline operator
     (asserted in tests/test_llm_ops.py)."""
-    centroids, codebooks = ivf_pq_index_build(
+    # ONE pointer parse gives the arrays and the codes: base version ∪
+    # live append layers, with pending deletions applied logically
+    # until a vacuum folds them — a deleted vector filtered from the
+    # codes scan can never be a candidate, whatever version is served.
+    view, centroids, codebooks = _index_view(
         emb, store_dir, n_cells, m, k_centroids, sample_size, iters, seed
     )
-    # r18 read view: base version ∪ live append layers; pending
-    # deletions apply logically until a vacuum folds them — a deleted
-    # vector filtered from the codes scan can never be a candidate,
-    # whatever version the pointer serves.
-    view = commit.read_view(CODES_STORE, store_dir)
     coded = view.frame(emb.sparkSession, "codes")
     dels = view.deleted_ids(emb.sparkSession)
     if dels is not None:

@@ -1059,6 +1059,7 @@ def sim_ann_index_append(spark, sf_dir):
     from pycaim_spark.operators.similarity import (
         CODES_STORE,
         _ivf_pq_query,
+        index_arrays,
         ivf_pq_index_append,
         ivf_pq_index_build,
     )
@@ -1073,12 +1074,12 @@ def sim_ann_index_append(spark, sf_dir):
         f"_{parquet_row_count(sf_dir, 'embeddings')}",
     )
     shutil.rmtree(store, ignore_errors=True)
-    centroids, codebooks = ivf_pq_index_build(
-        base, store, n_cells=32, m=8, k_centroids=32
-    )
+    ivf_pq_index_build(base, store, n_cells=32, m=8, k_centroids=32)
     ivf_pq_index_append(delta, store, "day1")
-    coded = commit.read_view(CODES_STORE, store).frame(spark, "codes")
+    view = commit.read_view(CODES_STORE, store)
+    centroids, codebooks = index_arrays(view)
     return _ivf_pq_query(
-        emb, coded, centroids, codebooks, nprobe=12, k=5, n_queries=10,
+        emb, view.frame(spark, "codes"), centroids, codebooks, nprobe=12,
+        k=5, n_queries=10,
         n_candidates=256,
     )

@@ -1,15 +1,14 @@
 """On-disk format of the commit protocols, pinned step by step.
 
 The signature store, the IVF-PQ codes and the bucketed layout commit
-through pointer documents, write-aside layer swaps, tombstones and
-grace GC. These tests run each store through its motions with a long
-grace period and, after every step, compare the sorted relative file
-tree and every pointer document (``ts`` stripped) against a literal.
-A refactor of the commit code must leave both unchanged.
+through pointer documents, immutable sequence-numbered layer dirs,
+tombstones and grace GC. These tests run each store through its motions
+with a long grace period and, after every step, compare the sorted
+relative file tree and every pointer document (``ts`` stripped) against
+a literal. A refactor of the commit code must leave both unchanged.
 
 Parquet part-file names carry a random id, so they are folded to
-``part-*``; the write-aside swap's ``.old-<ms>`` suffix is folded to
-``.old-*``.
+``part-*``.
 """
 
 from __future__ import annotations
@@ -21,7 +20,6 @@ import re
 import numpy as np
 
 _PART = re.compile(r"^(\.?)part-[^/]*?(\.parquet(\.crc)?)$")
-_OLD = re.compile(r"\.old-\d+")
 
 
 def _tree(root: str) -> list[str]:
@@ -33,7 +31,7 @@ def _tree(root: str) -> list[str]:
         )]:
             name = _PART.sub(r"\1part-*\2", name)
             path = name if rel == "." else f"{rel}/{name}"
-            out.add(_OLD.sub(".old-*", path))
+            out.add(path)
     return sorted(out)
 
 
@@ -50,8 +48,7 @@ def _docs(root: str) -> dict:
                 doc = json.load(f)
             if isinstance(doc, dict):
                 assert isinstance(doc.pop("ts", 0.0), float)
-            rel = _OLD.sub(".old-*", os.path.relpath(path, root))
-            out[rel] = doc
+            out[os.path.relpath(path, root)] = doc
     return out
 
 
@@ -84,40 +81,52 @@ def test_signature_store_format(spark, tmp_path, monkeypatch):
         "sets_v0/_SUCCESS", "sets_v0/part-*.parquet",
         "store.lock",
     ]
-    assert _docs(store) == {"current.json": {"version": 0, "folded": []}}
+    empty = {"app_layers": {}, "del_layers": {}, "folded": [],
+             "del_folded": []}
+    assert _docs(store) == {"current.json": {"version": 0, "seq": 0, **empty}}
+
+    def layer(d):
+        return [
+            f"{d}/bands/._SUCCESS.crc", f"{d}/bands/.part-*.parquet.crc",
+            f"{d}/bands/_SUCCESS", f"{d}/bands/part-*.parquet",
+            f"{d}/sets/._SUCCESS.crc", f"{d}/sets/.part-*.parquet.crc",
+            f"{d}/sets/_SUCCESS", f"{d}/sets/part-*.parquet",
+        ]
 
     minhash_signature_store_append(spark, store, day1, "day1")
-    layer = [
-        "append/day1/bands/._SUCCESS.crc",
-        "append/day1/bands/.part-*.parquet.crc",
-        "append/day1/bands/_SUCCESS", "append/day1/bands/part-*.parquet",
-        "append/day1/sets/._SUCCESS.crc",
-        "append/day1/sets/.part-*.parquet.crc",
-        "append/day1/sets/_SUCCESS", "append/day1/sets/part-*.parquet",
-    ]
-    assert [p for p in _tree(store) if p.startswith("append/")] == layer
+    assert [p for p in _tree(store) if p.startswith("app/")] == layer(
+        "app/day1.1")
+    assert _docs(store) == {"current.json": {
+        "version": 0, "seq": 1, **empty, "app_layers": {"day1": 1},
+    }}
 
-    # Redelivery: the write-aside swap moves the old layer to
-    # ``day1.old-<ms>`` with a tombstone and renames the fresh one in.
+    # Redelivery: a fresh dir under the next sequence number, named by
+    # the pointer flip; the displaced dir is tombstoned, never renamed.
     minhash_signature_store_append(spark, store, day1, "day1")
-    old = [p.replace("day1/", "day1.old-*/") for p in layer]
-    assert [p for p in _tree(store) if p.startswith("append/")] == sorted(
-        layer + old + ["append/day1.old-*/superseded.json"]
+    assert [p for p in _tree(store) if p.startswith("app/")] == sorted(
+        layer("app/day1.1") + ["app/day1.1/superseded.json"]
+        + layer("app/day1.2")
     )
     assert _docs(store) == {
-        "current.json": {"version": 0, "folded": []},
-        "append/day1.old-*/superseded.json": {},
+        "current.json": {
+            "version": 0, "seq": 2, **empty, "app_layers": {"day1": 2},
+        },
+        "app/day1.1/superseded.json": {},
     }
 
     minhash_signature_store_delete(
         spark, store, spark.createDataFrame([(2,)], "doc_id long"), "del1"
     )
     dl = [
-        "deletes/del1/ids/._SUCCESS.crc",
-        "deletes/del1/ids/.part-*.parquet.crc",
-        "deletes/del1/ids/_SUCCESS", "deletes/del1/ids/part-*.parquet",
+        "del/del1.3/ids/._SUCCESS.crc",
+        "del/del1.3/ids/.part-*.parquet.crc",
+        "del/del1.3/ids/_SUCCESS", "del/del1.3/ids/part-*.parquet",
     ]
-    assert [p for p in _tree(store) if p.startswith("deletes/")] == dl
+    assert [p for p in _tree(store) if p.startswith("del/")] == dl
+    assert _docs(store)["current.json"] == {
+        "version": 0, "seq": 3, "app_layers": {"day1": 2},
+        "del_layers": {"del1": 3}, "folded": [], "del_folded": [],
+    }
 
     minhash_signature_store_compact(spark, store)
     v1 = [
@@ -126,9 +135,9 @@ def test_signature_store_format(spark, tmp_path, monkeypatch):
         and not p.endswith("_superseded.json")
     ]
     assert _tree(store) == sorted(
-        layer + ["append/day1/superseded.json"]
-        + old + ["append/day1.old-*/superseded.json"]
-        + dl + ["deletes/del1/superseded.json"]
+        layer("app/day1.1") + ["app/day1.1/superseded.json"]
+        + layer("app/day1.2") + ["app/day1.2/superseded.json"]
+        + dl + ["del/del1.3/superseded.json"]
         + [
             "buckets_v0/._SUCCESS.crc", "buckets_v0/.part-*.parquet.crc",
             "buckets_v0/_SUCCESS", "buckets_v0/_superseded.json",
@@ -143,14 +152,20 @@ def test_signature_store_format(spark, tmp_path, monkeypatch):
     )
     assert _docs(store) == {
         "current.json": {
-            "version": 1, "folded": ["day1"], "del_folded": ["del1"],
+            "version": 1, "seq": 3, "app_layers": {}, "del_layers": {},
+            "folded": ["day1"], "del_folded": ["del1"],
         },
-        "append/day1/superseded.json": {},
-        "append/day1.old-*/superseded.json": {},
-        "deletes/del1/superseded.json": {},
+        "app/day1.1/superseded.json": {},
+        "app/day1.2/superseded.json": {},
+        "del/del1.3/superseded.json": {},
         "sets_v0/_superseded.json": {},
         "buckets_v0/_superseded.json": {},
     }
+    with open(os.path.join(store, "current.json")) as f:
+        assert list(json.load(f)) == [
+            "version", "seq", "app_layers", "del_layers", "folded",
+            "del_folded",
+        ]
 
 
 def _emb(spark, ids, seed):
@@ -174,62 +189,73 @@ def test_codes_store_format(spark, tmp_path, monkeypatch):
                        k_centroids=8, sample_size=40)
     v0 = [
         "codes_v0/._SUCCESS.crc", "codes_v0/.part-*.parquet.crc",
-        "codes_v0/_SUCCESS", "codes_v0/part-*.parquet",
+        "codes_v0/_SUCCESS", "codes_v0/_index.npz", "codes_v0/part-*.parquet",
     ]
-    assert _tree(store) == sorted(
-        v0 + ["codes_current.json", "index.npz", "store.lock"]
-    )
-    assert _docs(store) == {"codes_current.json": {"version": 0}}
+    assert _tree(store) == sorted(v0 + ["codes_current.json", "store.lock"])
+    empty = {"app_layers": {}, "del_layers": {}, "app_folded": [],
+             "del_folded": []}
+    assert _docs(store) == {
+        "codes_current.json": {"version": 0, "seq": 0, **empty},
+    }
+
+    def app(d):
+        return [
+            f"codes_app/{d}/codes/._SUCCESS.crc",
+            f"codes_app/{d}/codes/.part-*.parquet.crc",
+            f"codes_app/{d}/codes/_SUCCESS",
+            f"codes_app/{d}/codes/part-*.parquet",
+        ]
 
     ivf_pq_index_append(_emb(spark, range(100, 105), 4), store, "day1")
-    app = [
-        "codes_append/day1/codes/._SUCCESS.crc",
-        "codes_append/day1/codes/.part-*.parquet.crc",
-        "codes_append/day1/codes/_SUCCESS",
-        "codes_append/day1/codes/part-*.parquet",
-    ]
     ivf_pq_index_append(_emb(spark, range(100, 105), 4), store, "day1")
-    app_old = [p.replace("day1/", "day1.old-*/") for p in app] + [
-        "codes_append/day1.old-*/superseded.json"
-    ]
     assert _docs(store) == {
-        "codes_current.json": {"version": 0},
-        "codes_append/day1.old-*/superseded.json": {},
+        "codes_current.json": {
+            "version": 0, "seq": 2, **empty, "app_layers": {"day1": 2},
+        },
+        "codes_app/day1.1/superseded.json": {},
     }
 
     ivf_pq_index_delete(
         spark, store, spark.createDataFrame([(3,)], "vec_id long"), "del1"
     )
     dl = [
-        "codes_deletes/del1/ids/._SUCCESS.crc",
-        "codes_deletes/del1/ids/.part-*.parquet.crc",
-        "codes_deletes/del1/ids/_SUCCESS",
-        "codes_deletes/del1/ids/part-*.parquet",
+        "codes_del/del1.3/ids/._SUCCESS.crc",
+        "codes_del/del1.3/ids/.part-*.parquet.crc",
+        "codes_del/del1.3/ids/_SUCCESS",
+        "codes_del/del1.3/ids/part-*.parquet",
     ]
     assert _tree(store) == sorted(
-        v0 + app + app_old + dl
-        + ["codes_current.json", "index.npz", "store.lock"]
+        v0 + app("day1.1") + ["codes_app/day1.1/superseded.json"]
+        + app("day1.2") + dl + ["codes_current.json", "store.lock"]
     )
 
     ivf_pq_codes_vacuum(spark, store)
     v1 = [p.replace("_v0/", "_v1/") for p in v0]
     assert _tree(store) == sorted(
         v0 + ["codes_v0/_superseded.json"] + v1
-        + app + ["codes_append/day1/superseded.json"] + app_old
-        + dl + ["codes_deletes/del1/superseded.json"]
-        + ["codes_current.json", "index.npz", "store.lock"]
+        + app("day1.1") + ["codes_app/day1.1/superseded.json"]
+        + app("day1.2") + ["codes_app/day1.2/superseded.json"]
+        + dl + ["codes_del/del1.3/superseded.json"]
+        + ["codes_current.json", "store.lock"]
     )
     assert _docs(store) == {
         "codes_current.json": {
-            "version": 1, "del_folded": ["del1"], "app_folded": ["day1"],
+            "version": 1, "seq": 3, "app_layers": {}, "del_layers": {},
+            "app_folded": ["day1"], "del_folded": ["del1"],
         },
         "codes_v0/_superseded.json": {},
-        "codes_append/day1/superseded.json": {},
-        "codes_append/day1.old-*/superseded.json": {},
-        "codes_deletes/del1/superseded.json": {},
+        "codes_app/day1.1/superseded.json": {},
+        "codes_app/day1.2/superseded.json": {},
+        "codes_del/del1.3/superseded.json": {},
     }
     with open(os.path.join(store, "codes_current.json")) as f:
-        assert list(json.load(f)) == ["version", "del_folded", "app_folded"]
+        assert list(json.load(f)) == [
+            "version", "seq", "app_layers", "del_layers", "app_folded",
+            "del_folded",
+        ]
+    # The vacuumed version carries its predecessor's sidecar, linked.
+    assert os.path.samefile(os.path.join(store, "codes_v0", "_index.npz"),
+                            os.path.join(store, "codes_v1", "_index.npz"))
 
 
 def test_layout_publish_format(spark, tmp_path, monkeypatch):

@@ -27,11 +27,13 @@ def _docs(spark, rows):
 
 
 def _codes_case(spark, tmp_path):
-    """An IVF-PQ store of 40 base + 10 appended vectors, and a vacuum's
-    post-commit state staged aside (codes_v1 holds all 50 rows; the new
-    pointer folds day1; the layer is not yet tombstoned)."""
+    """An IVF-PQ store of 40 base + 10 appended vectors, and a real
+    vacuum of a copy of it whose new version and pointer are staged
+    aside (codes_v1 holds all 50 rows; the layer in the store itself is
+    not yet tombstoned)."""
     from pycaim_spark.operators.similarity import (
         CODES_STORE,
+        ivf_pq_codes_vacuum,
         ivf_pq_index_append,
         ivf_pq_index_build,
     )
@@ -42,12 +44,8 @@ def _codes_case(spark, tmp_path):
                        k_centroids=8, sample_size=40)
     ivf_pq_index_append(_emb(spark, range(100, 110), rng), store, "day1")
     staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    commit.read_view(CODES_STORE, store).frame(spark, "codes").write.parquet(
-        os.path.join(staged, "codes_v1")
-    )
-    with open(os.path.join(staged, CODES_STORE.pointer), "w") as f:
-        json.dump({"version": 1, "app_folded": ["day1"]}, f)
+    shutil.copytree(store, staged)
+    ivf_pq_codes_vacuum(spark, staged)
     return CODES_STORE, store, staged, "codes", 50
 
 
@@ -134,9 +132,10 @@ def test_read_view_reads_one_pointer_snapshot(spark, tmp_path, monkeypatch,
 def test_manifest_trim_keeps_applied_deletes(spark, tmp_path):
     """Trimming the folded-keys manifest rewrites the pointer; the
     applied-deletion manifest must survive it, or a replayed delete key
-    re-lands as a live delete layer."""
+    re-lands as a live delete layer, and so must the live layers the
+    pointer names, or their rows drop out of every read."""
     from pycaim_spark.operators.dedup import (
-        _store_delete_dirs,
+        SIGNATURE_STORE,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -155,14 +154,210 @@ def test_manifest_trim_keeps_applied_deletes(spark, tmp_path):
     dels = spark.createDataFrame([(2,)], "doc_id long")
     minhash_signature_store_delete(spark, store, dels, "del1")
     minhash_signature_store_compact(spark, store)
+    # A live unfolded append layer and a live delete layer.
+    minhash_signature_store_append(spark, store, _docs(
+        spark, [(11, "north south east west up down left right")]
+    ), "day2")
+    minhash_signature_store_delete(
+        spark, store, spark.createDataFrame([(1,)], "doc_id long"), "del2")
 
     assert minhash_store_manifest_gc(store, keep_last=0) == 1
     with open(os.path.join(store, "current.json")) as f:
         assert json.load(f) == {
-            "version": 1, "folded": [], "del_folded": ["del1"],
+            "version": 1, "seq": 4, "app_layers": {"day2": 3},
+            "del_layers": {"del2": 4}, "folded": [], "del_folded": ["del1"],
         }
     minhash_signature_store_delete(spark, store, dels, "del1")
-    assert _store_delete_dirs(store) == []
+    view = commit.read_view(SIGNATURE_STORE, store)
+    assert list(view.del_layers) == ["del2"]
+    assert view.frame(spark, "sets").count() == 3
+    assert view.deleted_ids(spark).count() == 1
+
+
+_SIG_BASE = [
+    (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+    (2, "one two three four five six seven eight nine ten eleven"),
+]
+_SIG_DAY1 = [(10, "first fresh slice with its very own vocabulary entirely")]
+_SIG_PROBE = [
+    (30, "first fresh slice with its very own vocabulary entire"),
+    (31, "one two three four five six seven eight nine ten twelve"),
+]
+
+
+def _signature_store(spark, tmp_path, motion):
+    """A signature store with one live layer (a delete of doc 2 for the
+    delete fold, else the day1 append), its reader (the layered probe)
+    and the motion."""
+    from pycaim_spark.operators.dedup import (
+        SIGNATURE_STORE,
+        incremental_minhash_dedup_stored,
+        minhash_signature_store_append,
+        minhash_signature_store_build,
+        minhash_signature_store_compact,
+        minhash_signature_store_delete,
+    )
+
+    store = str(tmp_path / "store")
+    minhash_signature_store_build(_docs(spark, _SIG_BASE), store)
+    day1 = _docs(spark, _SIG_DAY1)
+    if motion == "delete_fold":
+        minhash_signature_store_delete(
+            spark, store, spark.createDataFrame([(2,)], "doc_id long"), "d1")
+    else:
+        minhash_signature_store_append(spark, store, day1, "day1")
+    motions = {
+        "fold": lambda: minhash_signature_store_compact(spark, store),
+        "delete_fold": lambda: minhash_signature_store_compact(spark, store),
+        "redelivery": lambda: minhash_signature_store_append(
+            spark, store, day1, "day1"),
+    }
+    return SIGNATURE_STORE, store, lambda: incremental_minhash_dedup_stored(
+        spark, store, _docs(spark, _SIG_PROBE)), motions[motion]
+
+
+def _codes_store(spark, tmp_path, motion, monkeypatch):
+    """An IVF-PQ store of 60 vectors with exact twins of the three query
+    vectors as a live append layer (for the delete fold: folded in, then
+    deleted by a live delete layer), its reader (the stored top-3 query)
+    and the motion. The retrain re-encodes a smaller corpus under a
+    bumped training version, which a same-params build retrains on."""
+    import pycaim_spark.operators.similarity as sim
+
+    rng = np.random.default_rng(9)
+    rows = [(i, [float(x) for x in v])
+            for i, v in enumerate(rng.normal(size=(60, 8)))]
+    schema = "vec_id long, embedding array<float>"
+    base = spark.createDataFrame(rows, schema)
+    twins = spark.createDataFrame(
+        [(1000 + q, rows[q][1]) for q in range(3)], schema)
+    emb = base.unionByName(twins)
+    kw = dict(n_cells=4, m=4, k_centroids=8, sample_size=60)
+    store = str(tmp_path / "ann")
+    sim.ivf_pq_index_build(base, store, **kw)
+    sim.ivf_pq_index_append(twins, store, "day1")
+    if motion == "delete_fold":
+        sim.ivf_pq_codes_vacuum(spark, store)
+        sim.ivf_pq_index_delete(spark, store, twins, "d1")
+
+    def retrain():
+        monkeypatch.setattr(sim, "_INDEX_ALGO_VERSION",
+                            sim._INDEX_ALGO_VERSION + 1)
+        sim.ivf_pq_index_build(
+            base.filter("vec_id NOT BETWEEN 3 AND 9"), store, **kw)
+
+    motions = {
+        "fold": lambda: sim.ivf_pq_codes_vacuum(spark, store),
+        "delete_fold": lambda: sim.ivf_pq_codes_vacuum(spark, store),
+        "redelivery": lambda: sim.ivf_pq_index_append(twins, store, "day1"),
+        "retrain": retrain,
+    }
+    return sim.CODES_STORE, store, lambda: sim.ivf_pq_topk_stored(
+        emb, store, nprobe=4, k=3, n_queries=3, n_candidates=16, **kw,
+    ), motions[motion]
+
+
+@pytest.mark.parametrize("kind,motion,point", [
+    ("signature", "fold", "pointer"),
+    ("signature", "delete_fold", "pointer"),
+    ("signature", "redelivery", "pointer"),
+    ("signature", "redelivery", "execute"),
+    ("codes", "fold", "pointer"),
+    ("codes", "delete_fold", "pointer"),
+    ("codes", "redelivery", "pointer"),
+    ("codes", "redelivery", "execute"),
+    ("codes", "retrain", "pointer"),
+    ("codes", "retrain", "sidecar"),
+])
+def test_interrupted_reader_sees_one_snapshot(spark, tmp_path, monkeypatch,
+                                              kind, motion, point):
+    """A lockless reader interrupted by a committing motion reads the
+    store as it was before the motion or as it is after it, and its
+    frames execute. The motion runs while the reader opens the pointer
+    (``pointer``), after the reader built its lazy frame (``execute``),
+    or right after the reader loaded the trained sidecar (``sidecar``)."""
+    if kind == "signature":
+        spec, store, reader, run = _signature_store(spark, tmp_path, motion)
+    else:
+        spec, store, reader, run = _codes_store(
+            spark, tmp_path, motion, monkeypatch)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    pre = rows(reader())
+    fired = []
+
+    def motion_once():
+        if not fired:
+            fired.append(motion)
+            run()
+
+    if point == "execute":
+        frame = reader()
+        motion_once()
+        got = rows(frame)
+    elif point == "pointer":
+        real_open = builtins.open
+
+        def hooked_open(file, mode="r", *args, **kwargs):
+            f = real_open(file, mode, *args, **kwargs)
+            if os.path.basename(str(file)) == spec.pointer and "r" in mode:
+                motion_once()
+            return f
+
+        monkeypatch.setattr(builtins, "open", hooked_open)
+        try:
+            got = rows(reader())
+        finally:
+            monkeypatch.setattr(builtins, "open", real_open)
+    else:
+        real_load = np.load
+
+        def hooked_load(*args, **kwargs):
+            out = real_load(*args, **kwargs)
+            motion_once()
+            return out
+
+        monkeypatch.setattr(np, "load", hooked_load)
+        try:
+            got = rows(reader())
+        finally:
+            monkeypatch.setattr(np, "load", real_load)
+    assert fired
+    post = rows(reader())
+    assert got in (pre, post), (got, pre, post)
+
+
+@pytest.mark.parametrize("kind", ["signature", "codes"])
+def test_read_view_lists_no_directory(spark, tmp_path, monkeypatch, kind):
+    """One pointer parse is the whole view: with ``os.listdir`` raising,
+    a store with a live append layer and a live delete layer resolves,
+    and its frames execute."""
+    if kind == "signature":
+        from pycaim_spark.operators.dedup import minhash_signature_store_delete
+
+        spec, store, _reader, _run = _signature_store(spark, tmp_path, "fold")
+        minhash_signature_store_delete(
+            spark, store, spark.createDataFrame([(2,)], "doc_id long"), "d1")
+        sub, rows = "sets", 3
+    else:
+        from pycaim_spark.operators.similarity import ivf_pq_index_delete
+
+        spec, store, _reader, _run = _codes_store(
+            spark, tmp_path, "fold", monkeypatch)
+        ivf_pq_index_delete(
+            spark, store, spark.createDataFrame([(5,)], "vec_id long"), "d1")
+        sub, rows = "codes", 63
+
+    def no_listdir(*args, **kwargs):
+        raise AssertionError("the read view listed a directory")
+
+    monkeypatch.setattr(os, "listdir", no_listdir)
+    view = commit.read_view(spec, store)
+    frame, dels = view.frame(spark, sub), view.deleted_ids(spark)
+    assert frame.count() == rows
+    assert dels.count() == 1
 
 
 def test_caim_hist_store_survives_failed_merge(spark, sf_dir, tmp_path,

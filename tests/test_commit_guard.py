@@ -1,18 +1,20 @@
 """The commit protocol has one implementation: ``operators/commit.py``.
 
-Writer locks (``fcntl``), durable writes (``.fsync``), tombstone names
-(any string containing ``superseded.json``, which matches both the
-layer and the data-dir spelling) and the write-aside ``.old-`` suffix
-may appear in package code only there. A store that needs one of them
-calls the commit helpers instead of growing its own copy.
+Writer locks (``fcntl``), durable writes (``.fsync``) and tombstone
+names (any string containing ``superseded.json``, which matches both the
+layer and the data-dir spelling) may appear in package code only there.
+A store that needs one of them calls the commit helpers instead of
+growing its own copy. The retired write-aside ``.old-`` suffix may
+appear nowhere in package code.
 
-The LSM store core is held in place the same way: calls to
-``live_layers(``, the manifest keys ``"folded"``, ``"app_folded"`` and
-``"del_folded"`` and the pointer names ``current.json`` and
-``codes_current.json`` may appear only in ``commit.py`` and in the two
-store spec constants (``dedup.SIGNATURE_STORE``,
-``similarity.CODES_STORE``). A store that lists its own layers or reads
-its own manifest has grown a second read view.
+The LSM store core is held in place the same way: the pointer's layer
+keys ``"app_layers"`` and ``"del_layers"``, the manifest keys
+``"folded"``, ``"app_folded"`` and ``"del_folded"`` and the pointer
+names ``current.json`` and ``codes_current.json`` may appear only in
+``commit.py`` and in the two store spec constants
+(``dedup.SIGNATURE_STORE``, ``similarity.CODES_STORE``). A store that
+names its own layers or reads its own manifest has grown a second read
+view.
 
 Comments and docstrings are not code and are not checked.
 """
@@ -64,22 +66,22 @@ def _hits(path: pathlib.Path) -> list[str]:
 
 def test_commit_primitives_live_only_in_commit_module():
     stray = [
-        h for path in sorted(PKG.rglob("*.py")) if path != HOME
-        for h in _hits(path)
+        h for path in sorted(PKG.rglob("*.py"))
+        for h in _hits(path) if path != HOME or h.endswith(":.old-")
     ]
     assert stray == []
 
 
 def test_guard_sees_the_commit_module():
     kinds = {h.rsplit(":", 1)[1] for h in _hits(HOME)}
-    assert kinds == {"fcntl", "fsync", "superseded.json", ".old-"}
+    assert kinds == {"fcntl", "fsync", "superseded.json"}
 
 
-# The LSM store core: the layer listing, the manifest keys and the
-# pointer names of the signature store and the IVF-PQ codes live in
+# The LSM store core: the layer keys, the manifest keys and the pointer
+# names of the signature store and the IVF-PQ codes live in
 # ``commit.py`` and in the two store spec constants that describe them.
-LSM_NAMES = {"folded", "app_folded", "del_folded", "current.json",
-             "codes_current.json"}
+LSM_NAMES = {"app_layers", "del_layers", "folded", "app_folded",
+             "del_folded", "current.json", "codes_current.json"}
 SPECS = {"operators/dedup.py": "SIGNATURE_STORE",
          "operators/similarity.py": "CODES_STORE"}
 
@@ -97,18 +99,10 @@ def _lsm_hits(path: pathlib.Path) -> tuple[list[str], list[str]]:
             inside |= {id(n) for n in ast.walk(node.value)}
     hits: tuple[list[str], list[str]] = ([], [])
     for node in ast.walk(tree):
-        hit = None
-        if isinstance(node, ast.Call):
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
-            if name == "live_layers":
-                hit = "live_layers("
-        elif (isinstance(node, ast.Constant) and node.value in LSM_NAMES
-              and id(node) not in docs):
-            hit = node.value
-        if hit is not None:
+        if (isinstance(node, ast.Constant) and node.value in LSM_NAMES
+                and id(node) not in docs):
             hits[id(node) not in inside].append(
-                f"{path.relative_to(PKG)}:{hit}"
+                f"{path.relative_to(PKG)}:{node.value}"
             )
     return hits
 
@@ -127,4 +121,3 @@ def test_lsm_guard_sees_the_specs_and_the_core():
         for rel in SPECS for h in _lsm_hits(PKG / rel)[0]
     }
     assert in_specs == LSM_NAMES
-    assert "operators/commit.py:live_layers(" in _lsm_hits(HOME)[1]

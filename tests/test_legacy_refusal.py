@@ -1,4 +1,4 @@
-"""A store dir holding an entry of a pre-pointer on-disk format is
+"""A store dir holding an entry of a retired on-disk format is
 refused by the store's write path with one error, `LegacyFormatError`,
 whose message names the dir and says to delete it and rebuild. The
 refusal never modifies the dir."""
@@ -60,6 +60,30 @@ def test_signature_store_refuses_legacy_entries(spark, tmp_path):
     _refused(store, lambda: minhash_signature_store_build(base, store))
 
 
+def test_signature_store_refuses_the_listed_layer_format(spark, tmp_path):
+    """The r18 format: a pointer that names no layers, with the layers
+    listed from ``append/`` and ``deletes/``. The lockless probe raises
+    instead of serving a base-only view, and so does every write path."""
+    from pycaim_spark.operators.dedup import (
+        incremental_minhash_dedup_stored,
+        minhash_signature_store_append,
+        minhash_signature_store_build,
+    )
+
+    base = _docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta")])
+    day1 = _docs(spark, [(2, "a fresh slice with its very own words")])
+    store = str(tmp_path / "store")
+    minhash_signature_store_build(base, store)
+    with open(os.path.join(store, "current.json"), "w") as f:
+        json.dump({"version": 0, "folded": []}, f)
+    _refused(store, lambda: incremental_minhash_dedup_stored(
+        spark, store, day1))
+    _refused(store, lambda: minhash_signature_store_build(base, store))
+    os.makedirs(os.path.join(store, "append", "day0", "bands"))
+    _refused(store, lambda: minhash_signature_store_append(
+        spark, store, day1, "day1"))
+
+
 def test_codes_store_refuses_legacy_entries(spark, tmp_path):
     from pycaim_spark.operators.similarity import (
         ivf_pq_index_append,
@@ -77,6 +101,33 @@ def test_codes_store_refuses_legacy_entries(spark, tmp_path):
                        sample_size=40)
     with open(os.path.join(store, "append_keys.json"), "w") as f:
         json.dump(["day0"], f)
+    _refused(store, lambda: ivf_pq_index_append(emb, store, "day1"))
+
+
+def test_codes_store_refuses_the_listed_layer_format(spark, tmp_path):
+    """The r18 codes format: ``index.npz`` beside the versions and a
+    pointer that names no layers. The lockless stored query raises
+    instead of serving a base-only view, and so does the write path."""
+    from pycaim_spark.operators.similarity import (
+        ivf_pq_index_append,
+        ivf_pq_index_build,
+        ivf_pq_topk_stored,
+    )
+
+    rng = np.random.default_rng(3)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v])
+         for i, v in enumerate(rng.normal(size=(40, 8)))],
+        "vec_id long, embedding array<float>",
+    )
+    kw = dict(n_cells=4, m=4, k_centroids=8, sample_size=40)
+    store = str(tmp_path / "ann")
+    ivf_pq_index_build(emb, store, **kw)
+    os.rename(os.path.join(store, "codes_v0", "_index.npz"),
+              os.path.join(store, "index.npz"))
+    with open(os.path.join(store, "codes_current.json"), "w") as f:
+        json.dump({"version": 0}, f)
+    _refused(store, lambda: ivf_pq_topk_stored(emb, store, **kw))
     _refused(store, lambda: ivf_pq_index_append(emb, store, "day1"))
 
 

@@ -902,7 +902,7 @@ def test_store_append_compact_equals_fresh_rebuild(spark, tmp_path):
     and replaying a folded ingest key must be a no-op."""
     from pycaim_spark.operators.dedup import (
         incremental_minhash_dedup,
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -925,7 +925,7 @@ def test_store_append_compact_equals_fresh_rebuild(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     minhash_signature_store_build(base, store)
-    v1 = incremental_minhash_dedup_layered(spark, store, s1)
+    v1 = incremental_minhash_dedup_stored(spark, store, s1)
     accepted = s1.join(
         v1.filter(v1.is_new == 1).select("doc_id"), "doc_id"
     )
@@ -933,29 +933,29 @@ def test_store_append_compact_equals_fresh_rebuild(spark, tmp_path):
     minhash_signature_store_append(spark, store, accepted, "day1")
 
     layered = {(r.doc_id, r.dup_of, r.is_new)
-               for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+               for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     fresh = {(r.doc_id, r.dup_of, r.is_new)
              for r in incremental_minhash_dedup(base.unionByName(accepted), s2).collect()}
     assert layered == fresh
     # the loop's point: 20 dups against the DAY-1-ONLY doc 10
     assert (20, 10, 0) in layered and (21, None, 1) in layered
 
+    (day1_layer,) = commit.read_view(SIGNATURE_STORE, store).appends
     minhash_signature_store_compact(spark, store)
     compacted = {(r.doc_id, r.dup_of, r.is_new)
-                 for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+                 for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     assert compacted == layered
     # two-phase GC (r15): the folded layer is TOMBSTONED in place — its
     # files must survive the grace period for stale readers — and it is
     # no longer a live layer; replaying the folded key is still a no-op
     import os
 
-    from pycaim_spark.operators.dedup import _store_layer_dirs
-    assert _store_layer_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).appends == []
     assert os.path.exists(
-        os.path.join(store, "append", "day1", "superseded.json")
+        os.path.join(day1_layer, "superseded.json")
     )
     minhash_signature_store_append(spark, store, accepted, "day1")
-    assert _store_layer_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).appends == []
 
 
 def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
@@ -972,8 +972,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _store_layer_dirs,
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -996,10 +995,11 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     store = str(tmp_path / "store")
     minhash_signature_store_build(base, store)
     assert commit.load_pointer(os.path.join(store, "current.json")) == {
-        "version": 0, "folded": []}
+        "version": 0, "seq": 0, "app_layers": {}, "del_layers": {},
+        "folded": [], "del_folded": []}
     minhash_signature_store_append(spark, store, s1, "day1")
     expected = {(r.doc_id, r.dup_of, r.is_new)
-                for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+                for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     assert (20, 10, 0) in expected and (21, 1, 0) in expected
 
     # (a) crash BEFORE the pointer flip: a stray uncommitted v1 dir. The
@@ -1007,12 +1007,14 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     # the next write path deletes it.
     os.makedirs(commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
     after_stray = {(r.doc_id, r.dup_of, r.is_new)
-                   for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+                   for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     assert after_stray == expected
     assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
     minhash_signature_store_append(spark, store, s1, "day1")  # re-delivery
     assert not os.path.exists(
         commit.base_dirs(SIGNATURE_STORE, store, 1)["sets"])
+
+    (day1_layer,) = commit.read_view(SIGNATURE_STORE, store).appends
 
     # (b) crash AFTER the flip, before phase-1 GC: the commit landed —
     # pointer at v1 with day1 folded — but no tombstone was laid on the
@@ -1030,7 +1032,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     ptr = commit.load_pointer(os.path.join(store, "current.json"))
     assert ptr["version"] == 1 and ptr["folded"] == ["day1"]
     assert not os.path.exists(
-        os.path.join(store, "append", "day1", "superseded.json")
+        os.path.join(day1_layer, "superseded.json")
     )
     assert not os.path.exists(
         os.path.join(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"],
@@ -1041,7 +1043,7 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     # folded-but-untombstoned layer via the pointer's folded list — no
     # double count — and leaves every artifact where it was.
     mid = {(r.doc_id, r.dup_of, r.is_new)
-           for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+           for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     assert mid == expected
     assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"])
 
@@ -1050,10 +1052,10 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     # and a second compact finds nothing to fold.
     minhash_signature_store_compact(spark, store)
     healed = {(r.doc_id, r.dup_of, r.is_new)
-              for r in incremental_minhash_dedup_layered(spark, store, s2).collect()}
+              for r in incremental_minhash_dedup_stored(spark, store, s2).collect()}
     assert healed == expected
     assert os.path.exists(
-        os.path.join(store, "append", "day1", "superseded.json")
+        os.path.join(day1_layer, "superseded.json")
     )
     assert os.path.exists(
         os.path.join(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"],
@@ -1061,11 +1063,11 @@ def test_store_compact_crash_recovery(spark, tmp_path, monkeypatch):
     )
     # grace-protected
     assert os.path.exists(commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"])
-    assert _store_layer_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).appends == []
     # the manifest survived the crash inside the pointer: replaying the
     # folded key is a no-op
     minhash_signature_store_append(spark, store, s1, "day1")
-    assert _store_layer_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).appends == []
     # no spurious recompact
     assert commit.load_pointer(
         os.path.join(store, "current.json"))["version"] == 1
@@ -1111,38 +1113,35 @@ def test_store_gc_fold_order_and_probe_cap(spark, tmp_path, monkeypatch):
             spark, store, s1, max_candidates_per_doc=BUCKET_STORE_CAP + 1
         )
 
-    # (a) 'day2' appended BEFORE 'day10' (enforced via layer mtimes so
-    # the fold order is deterministic regardless of fs timestamp grain)
+    # (a) 'day2' appended BEFORE 'day10' (the pointer names live layers
+    # in append order, so the fold order needs no fs timestamps)
     minhash_signature_store_append(spark, store, s1, "day2")
     minhash_signature_store_append(spark, store, s2, "day10")
-    os.utime(os.path.join(store, "append", "day2"), (1_000_000, 1_000_000))
-    os.utime(os.path.join(store, "append", "day10"), (2_000_000, 2_000_000))
     minhash_signature_store_compact(spark, store)
     assert commit.read_view(SIGNATURE_STORE, store).folded == ["day2", "day10"]
     assert minhash_store_manifest_gc(store, keep_last=1) == 1
     # fold-order recency keeps day10 (the newest fold), drops day2 —
     # lexicographic recency would have kept day2
     assert commit.read_view(SIGNATURE_STORE, store).folded == ["day10"]
-    from pycaim_spark.operators.dedup import _store_layer_dirs
     minhash_signature_store_append(spark, store, s2, "day10")  # no-op
-    assert _store_layer_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).appends == []
     minhash_signature_store_append(spark, store, s1, "day2")  # re-appends
-    assert _store_layer_dirs(store) == [
-        os.path.join(store, "append", "day2")
+    assert commit.read_view(SIGNATURE_STORE, store).appends == [
+        os.path.join(store, "app", "day2.3")
     ]
-    # ADVICE r15: the re-append is WRITE-ASIDE — the folded-in-grace old
-    # layer content was renamed aside (tombstoned, files intact for any
-    # stale reader), never overwritten in place, and the fresh live
+    # ADVICE r15: the re-append writes a FRESH dir — the folded-in-grace
+    # old layer stays where it was (tombstoned, files intact for any
+    # stale reader), never overwritten or renamed, and the fresh live
     # layer carries no tombstone.
-    old_dirs = [d for d in os.listdir(os.path.join(store, "append"))
-                if d.startswith("day2.old-")]
+    old_dirs = [d for d in os.listdir(os.path.join(store, "app"))
+                if d.startswith("day2.") and d != "day2.3"]
     assert len(old_dirs) == 1
     assert os.path.exists(os.path.join(
-        store, "append", old_dirs[0], "bands", "_SUCCESS"))
+        store, "app", old_dirs[0], "bands", "_SUCCESS"))
     assert os.path.exists(os.path.join(
-        store, "append", old_dirs[0], "superseded.json"))
+        store, "app", old_dirs[0], "superseded.json"))
     assert not os.path.exists(os.path.join(
-        store, "append", "day2", "superseded.json"))
+        store, "app", "day2.3", "superseded.json"))
 
     # (c) compaction runs GC itself under its write lock
     monkeypatch.setenv("PYCAIM_STORE_GC_KEEP", "1")
@@ -1166,8 +1165,7 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     import os
 
     from pycaim_spark.operators.dedup import (
-        _store_layer_dirs,
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -1190,8 +1188,8 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     minhash_signature_store_append(spark, store, s1, "day1")
 
     # The concurrent reader: resolves its layer paths pre-compaction...
-    reader_layers = _store_layer_dirs(store)
-    assert reader_layers == [os.path.join(store, "append", "day1")]
+    reader_layers = commit.read_view(SIGNATURE_STORE, store).appends
+    assert reader_layers == [os.path.join(store, "app", "day1.1")]
 
     # ...then the compactor runs to completion in between...
     minhash_signature_store_compact(spark, store)
@@ -1209,7 +1207,7 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     # A FRESH probe sees the compacted store only (no double count of the
     # tombstoned layer) and still finds the day-1 duplicate.
     verdicts = {(r.doc_id, r.dup_of, r.is_new)
-                for r in incremental_minhash_dedup_layered(
+                for r in incremental_minhash_dedup_stored(
                     spark, store, probe).collect()}
     assert (30, 10, 0) in verdicts
 
@@ -1224,11 +1222,11 @@ def test_store_two_phase_gc_protects_concurrent_readers(
     _time.sleep(0.05)
     minhash_signature_store_append(spark, store, s1, "day1")  # no-op
     assert not os.path.isdir(reader_layers[0])
-    assert not os.path.isdir(os.path.join(store, "append"))
+    assert not os.path.isdir(os.path.join(store, "app"))
     # Verdicts are unchanged after collection — the layer's rows live in
     # the compacted base.
     after_gc = {(r.doc_id, r.dup_of, r.is_new)
-                for r in incremental_minhash_dedup_layered(
+                for r in incremental_minhash_dedup_stored(
                     spark, store, probe).collect()}
     assert after_gc == verdicts
 
@@ -1248,7 +1246,7 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     import numpy as np
 
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
     )
@@ -1268,14 +1266,15 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     store = str(tmp_path / "store")
     minhash_signature_store_build(base, store)
     expected = {(r.doc_id, r.dup_of, r.is_new)
-                for r in incremental_minhash_dedup_layered(
+                for r in incremental_minhash_dedup_stored(
                     spark, store, probe).collect()}
 
     # Crash state A: v0 written, pointer write never happened.
     os.remove(os.path.join(store, "current.json"))
     minhash_signature_store_append(spark, store, s1, "day1")  # write path
     assert commit.load_pointer(os.path.join(store, "current.json")) == {
-        "version": 0, "folded": []}
+        "version": 0, "seq": 1, "app_layers": {"day1": 1}, "del_layers": {},
+        "folded": [], "del_folded": []}
     assert os.path.exists(os.path.join(
         commit.base_dirs(SIGNATURE_STORE, store, 0)["sets"], "_SUCCESS"))
     # Pre-append the probe doc was novel; after the healed store took
@@ -1283,7 +1282,7 @@ def test_store_migration_crash_forward_completion(spark, tmp_path):
     # base survived the crash intact.
     assert expected == {(30, None, 1)}
     healed = {(r.doc_id, r.dup_of, r.is_new)
-              for r in incremental_minhash_dedup_layered(
+              for r in incremental_minhash_dedup_stored(
                   spark, store, probe).collect()}
     assert healed == {(30, 10, 0)}
 
@@ -1345,7 +1344,7 @@ def test_store_base_swap_mid_scan_reader_survives(
     import os
 
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -1372,7 +1371,7 @@ def test_store_base_swap_mid_scan_reader_survives(
     sets_v0, buckets_v0 = view.base["sets"], view.base["buckets"]
     skip = set(view.folded)
     assert sets_v0.endswith("sets_v0") and skip == set()
-    stale_df = incremental_minhash_dedup_layered(spark, store, probe)
+    stale_df = incremental_minhash_dedup_stored(spark, store, probe)
 
     # ...the compactor commits version 1 in between...
     minhash_signature_store_compact(spark, store)
@@ -1385,7 +1384,7 @@ def test_store_base_swap_mid_scan_reader_survives(
     stale = {(r.doc_id, r.dup_of, r.is_new) for r in stale_df.collect()}
     assert (30, 10, 0) in stale
     fresh = {(r.doc_id, r.dup_of, r.is_new)
-             for r in incremental_minhash_dedup_layered(
+             for r in incremental_minhash_dedup_stored(
                  spark, store, probe).collect()}
     assert fresh == stale
     assert os.path.exists(os.path.join(sets_v0, "_superseded.json"))
@@ -1403,7 +1402,7 @@ def test_store_base_swap_mid_scan_reader_survives(
                      "_SUCCESS")
     )
     assert fresh == {(r.doc_id, r.dup_of, r.is_new)
-                     for r in incremental_minhash_dedup_layered(
+                     for r in incremental_minhash_dedup_stored(
                          spark, store, probe).collect()}
 
 
@@ -1458,11 +1457,11 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
         t.join()
     assert not errs, errs
     assert sorted(
-        os.path.basename(d) for d in CODES_STORE.append.live(store)
+        commit.read_view(CODES_STORE, store).app_layers
     ) == ["day1", "day2"], "both slices land as committed layers"
     n = commit.read_view(CODES_STORE, store).frame(spark, "codes").count()
     assert n == base_n + 10
-    # replay of an unfolded key overwrites its layer in place: no
+    # replay of an unfolded key replaces its layer with a fresh one: no
     # double indexing.
     for key in slices:
         ivf_pq_index_append(slices[key], store, key)
@@ -1479,13 +1478,13 @@ def test_ivf_pq_index_append_concurrent_keys_both_survive(spark, tmp_path):
         commit.read_view(CODES_STORE, store).base["codes"]).count() == n
     for key in slices:
         ivf_pq_index_append(slices[key], store, key)
-    assert CODES_STORE.append.live(store) == []
+    assert commit.read_view(CODES_STORE, store).appends == []
     assert commit.read_view(CODES_STORE, store).frame(
         spark, "codes").count() == n
 
 
 def test_ivf_pq_index_refuses_paramless_sidecar(spark, tmp_path):
-    """ADVICE r10: an index.npz with no persisted 'params' entry cannot
+    """ADVICE r10: a sidecar with no persisted 'params' entry cannot
     be validated against the requested hyperparameters — it must be
     refused, not silently served."""
     import os
@@ -1500,7 +1499,8 @@ def test_ivf_pq_index_refuses_paramless_sidecar(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     store = str(tmp_path / "ann")
     ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8, sample_size=40)
-    npz = os.path.join(store, "index.npz")
+    npz = os.path.join(
+        commit.read_view(CODES_STORE, store).base["codes"], "_index.npz")
     with np.load(npz) as idx:
         stripped = {k: idx[k] for k in idx.files if k != "params"}
     np.savez(npz, **stripped)
@@ -1600,7 +1600,7 @@ def test_stream_ingest_matches_sequential_loop(spark, tmp_path):
     verdicts of the sequential store loop on the same slices — and batch
     1 must flag a near-dup of a batch-0-ONLY doc (cross-batch state)."""
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         stream_ingest_dedup,
@@ -1642,7 +1642,7 @@ def test_stream_ingest_matches_sequential_loop(spark, tmp_path):
     minhash_signature_store_build(base, seq_store)
     expect = {}
     for i, sl in enumerate((s0, s1)):
-        v = incremental_minhash_dedup_layered(spark, seq_store, sl)
+        v = incremental_minhash_dedup_stored(spark, seq_store, sl)
         for r in v.collect():
             expect[(i, r.doc_id)] = (r.dup_of, r.is_new)
         accepted = sl.join(
@@ -1713,8 +1713,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     import os
 
     from pycaim_spark.operators.dedup import (
-        _store_delete_dirs,
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
@@ -1742,7 +1741,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     def verdicts(p):
         return {
             (r.doc_id, r.dup_of, r.is_new)
-            for r in incremental_minhash_dedup_layered(
+            for r in incremental_minhash_dedup_stored(
                 spark, store, p
             ).collect()
         }
@@ -1769,7 +1768,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
     assert spark.read.parquet(sets_path).filter("id = 1").count() == 0
     bk = spark.read.parquet(buckets_path)
     assert bk.filter(F.array_contains("ids", 1)).count() == 0
-    assert _store_delete_dirs(store) == [], "applied layer is retired"
+    assert commit.read_view(SIGNATURE_STORE, store).deletes == [], "applied layer is retired"
     assert verdicts(probe1) == {(30, None, 1)}
     assert verdicts(probe2) == {(31, 2, 0)}
 
@@ -1796,7 +1795,7 @@ def test_store_delete_lifecycle(spark, tmp_path):
 
     # Replay AFTER the fold: manifest guard, no new layer dir appears.
     minhash_signature_store_delete(spark, store, dels, "gdpr1")
-    assert _store_delete_dirs(store) == []
+    assert commit.read_view(SIGNATURE_STORE, store).deletes == []
 
     # Append-then-delete composition: a doc appended as a layer and
     # then deleted must not match either (layer signatures are
@@ -1901,7 +1900,7 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
     assert codes.filter(
         F.col("neighbor_id").isin([int(v) for v in victims])
     ).count() == 0
-    assert CODES_STORE.delete.live(store) == []
+    assert commit.read_view(CODES_STORE, store).deletes == []
     after = ivf_pq_topk_stored(
         emb, store, n_cells=4, m=4, k_centroids=8, sample_size=60,
         n_queries=8, k=3,
@@ -1914,7 +1913,7 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "gdpr-ann-1",
     )
-    assert CODES_STORE.delete.live(store) == []
+    assert commit.read_view(CODES_STORE, store).deletes == []
 
     # Two-phase retirement at zero grace: old version + layers collect.
     old_grace = os.environ.get("PYCAIM_STORE_GC_GRACE")
@@ -1927,7 +1926,7 @@ def test_ivf_pq_delete_and_vacuum(spark, tmp_path):
         else:
             os.environ["PYCAIM_STORE_GC_GRACE"] = old_grace
     assert not os.path.exists(os.path.join(store, f"codes_v{v0}"))
-    assert not os.path.isdir(os.path.join(store, "codes_deletes"))
+    assert not os.path.isdir(os.path.join(store, "codes_del"))
 
 
 def test_delete_candidate_slot_not_displaced(spark, tmp_path):
@@ -1940,7 +1939,7 @@ def test_delete_candidate_slot_not_displaced(spark, tmp_path):
     anti-join alone would return novel here: the deleted id takes the
     only slot and then fails verification)."""
     from pycaim_spark.operators.dedup import (
-        incremental_minhash_dedup_layered,
+        incremental_minhash_dedup_stored,
         minhash_signature_store_build,
         minhash_signature_store_delete,
     )
@@ -1961,7 +1960,7 @@ def test_delete_candidate_slot_not_displaced(spark, tmp_path):
     )
     got = {
         (r.doc_id, r.dup_of, r.is_new)
-        for r in incremental_minhash_dedup_layered(
+        for r in incremental_minhash_dedup_stored(
             spark, store, probe, max_candidates_per_doc=1
         ).collect()
     }
@@ -2004,7 +2003,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
         spark.createDataFrame([(v,) for v in victims], "vec_id long"),
         "stale-intent",
     )
-    assert CODES_STORE.delete.live(store)
+    assert commit.read_view(CODES_STORE, store).deletes
 
     # RETRAIN: simulate the algo_version path (training code changed,
     # request unchanged) by doctoring the sidecar's stored version —
@@ -2012,7 +2011,8 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     # still contains the 'deleted' vectors.
     import os
 
-    npz_path = os.path.join(store, "index.npz")
+    npz_path = os.path.join(
+        commit.read_view(CODES_STORE, store).base["codes"], "_index.npz")
     with np.load(npz_path) as idx:
         arrays = {k: idx[k] for k in idx.files}
     from pycaim_spark.operators.similarity import _INDEX_PARAM_KEYS
@@ -2025,7 +2025,7 @@ def test_retrain_discards_pending_delete_layers(spark, tmp_path):
     os.replace(npz_path + ".tmp", npz_path)
     ivf_pq_index_build(emb, store, n_cells=4, m=4, k_centroids=8,
                        sample_size=60)
-    assert CODES_STORE.delete.live(store) == [], \
+    assert commit.read_view(CODES_STORE, store).deletes == [], \
         "a retrain must discard pending delete intents"
     n = commit.read_view(CODES_STORE, store).frame(spark, "codes").count()
     ivf_pq_codes_vacuum(spark, store)  # nothing pending: no-op
