@@ -62,7 +62,7 @@ without touching the dir: every store is a rebuildable cache.
 **LSM stores.** The signature store and the IVF-PQ codes have one
 shape: a pointed base version, keyed append layers, keyed delete layers
 and a fold (compaction) that applies the layers to a new base. Each
-store describes its dirs and pointer keys in one `LsmStore` constant;
+store describes its dirs and manifest keys in one `LsmStore` constant;
 the shape itself is implemented once, here. The pointer names
 everything live: the base version, the live append and delete layers
 in append order, and both applied-key manifests. `read_view` is the
@@ -335,14 +335,20 @@ def collect_layers(root: str, grace: float) -> None:
 
 # -- LSM stores -------------------------------------------------------------
 
+#: The on-disk format of the LSM stores. Bump it with any change after
+#: which `read_view` or `recover` refuses a store of the old shape: the
+#: registry queries that keep a store as a cache put it in their dir
+#: name (``queries/llm_dedup.py``), so they build fresh ones.
+LSM_FORMAT = 2
+
+
 class Layers(NamedTuple):
     """One keyed layer family: immutable ``<root>/<key>.<seq>`` dirs, one
-    per write; the pointer key (``entries``) naming the live ones as
-    ``{key: seq}`` in append order; and the pointer key of the manifest
-    listing the keys a fold has applied."""
+    per write, named live in the pointer as ``{key: seq}`` in append
+    order (``app_layers``, ``del_layers``); and the pointer key of the
+    manifest listing the keys a fold has applied."""
 
     root: str
-    entries: str
     manifest: str
 
 
@@ -434,7 +440,7 @@ def read_view(spec: LsmStore, store_dir: str,
         raise _retired(store_dir, spec.pointer)
     return LsmView(
         spec, store_dir, ptr["version"], ptr["seq"],
-        ptr[spec.append.entries], ptr[spec.delete.entries],
+        ptr["app_layers"], ptr["del_layers"],
         ptr[spec.append.manifest], ptr[spec.delete.manifest],
     )
 
@@ -447,8 +453,8 @@ def write_pointer(view: LsmView) -> None:
     write_json_atomic(os.path.join(view.store_dir, spec.pointer), {
         "version": view.version,
         "seq": view.seq,
-        spec.append.entries: view.app_layers,
-        spec.delete.entries: view.del_layers,
+        "app_layers": view.app_layers,
+        "del_layers": view.del_layers,
         spec.append.manifest: view.folded,
         spec.delete.manifest: view.del_folded,
     })
@@ -525,22 +531,29 @@ def collect(spec: LsmStore, store_dir: str) -> None:
         collect_layers(os.path.join(store_dir, layers.root), grace)
 
 
-def put_layer(spec: LsmStore, store_dir: str, layers: Layers, key: str,
+#: The `LsmView` fields of each layer family: its live layers and its
+#: applied-key manifest.
+_FAMILY = {"append": ("app_layers", "folded"),
+           "delete": ("del_layers", "del_folded")}
+
+
+def put_layer(spec: LsmStore, store_dir: str, family: str, key: str,
               write) -> None:
-    """The keyed-layer motion (an append or a delete) on a built store:
-    under the writer lock and after `recover`, skip a key the family's
-    manifest already holds (a replay of a folded key), else
-    ``write(dir)`` a fresh ``<root>/<key>.<seq>`` dir and `flip` the
-    pointer to name it, replacing the key's entry on a redelivery."""
+    """The keyed-layer motion on a built store, ``family`` being
+    ``"append"`` or ``"delete"``: under the writer lock and after
+    `recover`, skip a key the family's manifest already holds (a replay
+    of a folded key), else ``write(dir)`` a fresh
+    ``<root>/<key>.<seq>`` dir and `flip` the pointer to name it,
+    replacing the key's entry on a redelivery."""
+    field, applied = _FAMILY[family]
     with store_lock(store_dir):
         recover(spec, store_dir)
         view = read_view(spec, store_dir)
-        field, applied = (("app_layers", view.folded) if layers == spec.append
-                          else ("del_layers", view.del_folded))
-        if key in applied:
+        if key in getattr(view, applied):
             return
         seq = view.seq + 1
-        write(os.path.join(store_dir, layers.root, f"{key}.{seq}"))
+        write(os.path.join(store_dir, getattr(spec, family).root,
+                           f"{key}.{seq}"))
         live = {k: s for k, s in getattr(view, field).items() if k != key}
         flip(view, view._replace(seq=seq, **{field: {**live, key: seq}}))
 

@@ -803,8 +803,8 @@ _LEGACY = (
 SIGNATURE_STORE = commit.LsmStore(
     pointer="current.json",
     base=("sets", "buckets"),
-    append=commit.Layers("app", "app_layers", "folded"),
-    delete=commit.Layers("del", "del_layers", "del_folded"),
+    append=commit.Layers("app", "folded"),
+    delete=commit.Layers("del", "del_folded"),
     legacy=_LEGACY,
 )
 
@@ -994,7 +994,7 @@ def minhash_signature_store_delete(
     (the physical pass — at 100 TB the same rewrite a table-format
     purge pays)."""
     commit.put_layer(
-        SIGNATURE_STORE, store_dir, SIGNATURE_STORE.delete, delete_key,
+        SIGNATURE_STORE, store_dir, "delete", delete_key,
         lambda fresh: (
             doc_ids.select(F.col(id_col).cast("long").alias("id"))
             .distinct()
@@ -1045,7 +1045,7 @@ def minhash_signature_store_append(
         )
 
     commit.put_layer(
-        SIGNATURE_STORE, store_dir, SIGNATURE_STORE.append, ingest_key, write
+        SIGNATURE_STORE, store_dir, "append", ingest_key, write
     )
 
 

@@ -814,16 +814,22 @@ _SIDECAR = "_index.npz"
 CODES_STORE = commit.LsmStore(
     pointer="codes_current.json",
     base=("codes",),
-    append=commit.Layers("codes_app", "app_layers", "app_folded"),
-    delete=commit.Layers("codes_del", "del_layers", "del_folded"),
+    append=commit.Layers("codes_app", "app_folded"),
+    delete=commit.Layers("codes_del", "del_folded"),
     legacy=_LEGACY,
 )
 
 
+def _sidecar(view: commit.LsmView) -> dict[str, np.ndarray]:
+    """Every array of ``view``'s codes-version sidecar, read eagerly."""
+    with np.load(os.path.join(view.base["codes"], _SIDECAR)) as idx:
+        return dict(idx)
+
+
 def index_arrays(view: commit.LsmView) -> tuple[np.ndarray, np.ndarray]:
     """The trained (centroids, codebooks) of ``view``'s codes version."""
-    with np.load(os.path.join(view.base["codes"], _SIDECAR)) as idx:
-        return idx["centroids"], idx["codebooks"]
+    idx = _sidecar(view)
+    return idx["centroids"], idx["codebooks"]
 
 
 def ivf_pq_index_build(
@@ -881,33 +887,33 @@ def _index_view(emb, store_dir, n_cells, m, k_centroids, sample_size,
         eagerly, and a committed version dir is never rewritten)."""
         if view.version is None:
             return None
-        with np.load(os.path.join(view.base["codes"], _SIDECAR)) as idx:
-            if "params" not in idx:
-                # ADVICE r10: a params-less sidecar is indistinguishable
-                # from a stale index — refuse rather than silently serve.
-                raise ValueError(
-                    f"IVF-PQ index at {store_dir} has no persisted build "
-                    "hyperparameters, so the requested parameters cannot "
-                    "be validated against it; delete the store and rebuild"
-                )
-            stored = dict(zip(_INDEX_PARAM_KEYS, idx["params"].tolist()))
-            if stored == params:
-                return view, idx["centroids"], idx["codebooks"]
-            diff = {
-                key: (stored.get(key, "absent"), params[key])
-                for key in _INDEX_PARAM_KEYS
-                if key != "algo_version" and stored.get(key) != params[key]
-            }
-            if diff:
-                raise ValueError(
-                    f"IVF-PQ index at {store_dir} was built with different "
-                    f"hyperparameters (stored vs requested): {diff}; "
-                    "delete the store or match the stored build"
-                )
-            # Only algo_version differs: the training CODE changed, the
-            # request didn't — fall through to a deterministic retrain
-            # with the same hyperparameters, replacing the stale index.
-            return None
+        idx = _sidecar(view)
+        if "params" not in idx:
+            # ADVICE r10: a params-less sidecar is indistinguishable
+            # from a stale index — refuse rather than silently serve.
+            raise ValueError(
+                f"IVF-PQ index at {store_dir} has no persisted build "
+                "hyperparameters, so the requested parameters cannot "
+                "be validated against it; delete the store and rebuild"
+            )
+        stored = dict(zip(_INDEX_PARAM_KEYS, idx["params"].tolist()))
+        if stored == params:
+            return view, idx["centroids"], idx["codebooks"]
+        diff = {
+            key: (stored.get(key, "absent"), params[key])
+            for key in _INDEX_PARAM_KEYS
+            if key != "algo_version" and stored.get(key) != params[key]
+        }
+        if diff:
+            raise ValueError(
+                f"IVF-PQ index at {store_dir} was built with different "
+                f"hyperparameters (stored vs requested): {diff}; "
+                "delete the store or match the stored build"
+            )
+        # Only algo_version differs: the training CODE changed, the
+        # request didn't — fall through to a deterministic retrain
+        # with the same hyperparameters, replacing the stale index.
+        return None
 
     got = _try_reuse(commit.read_view(CODES_STORE, store_dir, missing_ok=True))
     if got is not None:
@@ -1002,7 +1008,7 @@ def ivf_pq_index_append(
         ).parquet(os.path.join(fresh, "codes"))
 
     commit.put_layer(
-        CODES_STORE, store_dir, CODES_STORE.append, ingest_key, write
+        CODES_STORE, store_dir, "append", ingest_key, write
     )
 
 
@@ -1024,7 +1030,7 @@ def ivf_pq_index_delete(
     corpus it is given, so purge the source corpus too (the layout's
     CDC delete) before retraining."""
     commit.put_layer(
-        CODES_STORE, store_dir, CODES_STORE.delete, delete_key,
+        CODES_STORE, store_dir, "delete", delete_key,
         lambda fresh: (
             vec_ids.select(F.col(id_col).cast("long").alias("neighbor_id"))
             .distinct()

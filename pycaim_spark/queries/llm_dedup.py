@@ -19,6 +19,26 @@ from pycaim_spark.operators.similarity import (
 )
 from pycaim_spark.registry import register
 
+
+def _lsm_store_dir(prefix: str, sf_dir: str, table: str,
+                   suffix: str = "") -> str:
+    """The scratch dir of an LSM store a query keeps as a cache: keyed by
+    the fixture, the row count of its source ``table`` (footer metadata,
+    no scan) and `commit.LSM_FORMAT`, so an on-disk format change gives
+    the query a fresh store instead of the refusal of the old one."""
+    import os
+
+    from pycaim_spark.catalog import parquet_row_count
+    from pycaim_spark.operators.commit import LSM_FORMAT
+    from pycaim_spark.streaming.runner import _SCRATCH
+
+    return os.path.join(
+        _SCRATCH,
+        f"{prefix}_{os.path.basename(os.path.normpath(sf_dir))}"
+        f"_{parquet_row_count(sf_dir, table)}{suffix}_lsm{LSM_FORMAT}",
+    )
+
+
 # --------------------------------------------------------------------------
 # Exact / normalized dedup
 # --------------------------------------------------------------------------
@@ -472,7 +492,7 @@ def dedup_incremental_clusters(spark, sf_dir):
         f"{os.path.basename(os.path.normpath(sf_dir))}"
         f"_{parquet_row_count(sf_dir, 'documents')}"
     )
-    sig_store = os.path.join(_SCRATCH, f"sigstore_{key}")
+    sig_store = _lsm_store_dir("sigstore", sf_dir, "documents")
     minhash_signature_store_build(base, sig_store)
     assign_store = os.path.join(_SCRATCH, f"clusterstore_{key}")
     if not os.path.exists(os.path.join(assign_store, "_SUCCESS")):
@@ -506,23 +526,15 @@ def dedup_incremental_stored(spark, sf_dir):
     against broadcast delta bands, never reading base text. Verdicts are
     identical to dedup_incremental_minhash; what changes is what the run
     touches — the production split of index build from daily probe."""
-    import os
-
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.dedup import (
         incremental_minhash_dedup_stored,
         minhash_signature_store_build,
     )
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     d = load_table(spark, sf_dir, "documents")
     base = d.filter(F.col("doc_id") % 10 != 0)
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    store = os.path.join(
-        _SCRATCH,
-        f"sigstore_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'documents')}",
-    )
+    store = _lsm_store_dir("sigstore", sf_dir, "documents")
     minhash_signature_store_build(base, store)
     return incremental_minhash_dedup_stored(spark, store, delta)
 
@@ -547,26 +559,18 @@ def dedup_incremental_append(spark, sf_dir):
     Day-2 verdicts — the returned frame — flag near-dups of day-1-only
     docs, which a store that never learned day 1 would miss; they are
     checkpointed before compaction swaps the layer dirs away."""
-    import os
-
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.dedup import (
         incremental_minhash_dedup_stored,
         minhash_signature_store_append,
         minhash_signature_store_build,
         minhash_signature_store_compact,
     )
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     d = load_table(spark, sf_dir, "documents")
     base = d.filter(F.col("doc_id") % 10 >= 2)
     s1 = d.filter(F.col("doc_id") % 10 == 0)
     s2 = d.filter(F.col("doc_id") % 10 == 1)
-    store = os.path.join(
-        _SCRATCH,
-        f"appendstore_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'documents')}",
-    )
+    store = _lsm_store_dir("appendstore", sf_dir, "documents")
     minhash_signature_store_build(base, store)
     v1 = incremental_minhash_dedup_stored(spark, store, s1)
     accepted = s1.join(
@@ -605,25 +609,17 @@ def dedup_store_delete(spark, sf_dir):
     re-runs serve the committed state (build skipped by pointer,
     delete no-op'd by manifest, compaction no-op with nothing
     pending)."""
-    import os
-
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.dedup import (
         incremental_minhash_dedup_stored,
         minhash_signature_store_build,
         minhash_signature_store_compact,
         minhash_signature_store_delete,
     )
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     d = load_table(spark, sf_dir, "documents")
     base = d.filter(F.col("doc_id") % 10 >= 2)
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    store = os.path.join(
-        _SCRATCH,
-        f"delstore_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'documents')}",
-    )
+    store = _lsm_store_dir("delstore", sf_dir, "documents")
     minhash_signature_store_build(base, store)
     minhash_signature_store_delete(
         spark, store,
@@ -954,11 +950,7 @@ def sim_ivf_pq_stored(spark, sf_dir):
     variant isolates the query-side cost the IVF×PQ composition exists to
     minimize. Identical seeded training → identical results to
     sim_ivf_pq."""
-    import os
-
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.similarity import ivf_pq_topk_stored
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     emb = load_table(spark, sf_dir, "embeddings")
     # Store keyed by corpus name, row count (footer metadata, no scan) AND
@@ -966,11 +958,7 @@ def sim_ivf_pq_stored(spark, sf_dir):
     # cannot silently reuse a stale index — and a default-param bump gets
     # a fresh store instead of tripping the sidecar mismatch guard on an
     # index built under the old defaults.
-    store = os.path.join(
-        _SCRATCH,
-        f"ivfpq_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'embeddings')}_c32m8k32",
-    )
+    store = _lsm_store_dir("ivfpq", sf_dir, "embeddings", "_c32m8k32")
     return ivf_pq_topk_stored(
         emb, store, n_cells=32, nprobe=12, m=8, k_centroids=32, k=5,
         n_queries=10,
@@ -1000,22 +988,14 @@ def sim_ivf_pq_deleted(spark, sf_dir):
     no-op with nothing pending). At 100 TB this is the
     right-to-be-forgotten path for embedding indexes: O(batch) now,
     one codes rewrite at vacuum, retrain unaffected."""
-    import os
-
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators.similarity import (
         ivf_pq_codes_vacuum,
         ivf_pq_index_delete,
         ivf_pq_topk_stored,
     )
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     emb = load_table(spark, sf_dir, "embeddings")
-    store = os.path.join(
-        _SCRATCH,
-        f"ivfpqdel_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'embeddings')}_c32m8k32",
-    )
+    store = _lsm_store_dir("ivfpqdel", sf_dir, "embeddings", "_c32m8k32")
     # Build (idempotent) BEFORE deleting so the delete layer targets a
     # committed index.
     ivf_pq_topk_stored(
@@ -1051,10 +1031,8 @@ def sim_ann_index_append(spark, sf_dir):
     appended vectors; exact re-rank keeps every returned cosine exact.
     The store is rebuilt per run (cheap at fixture scale) so repeated
     runs are deterministic."""
-    import os
     import shutil
 
-    from pycaim_spark.catalog import parquet_row_count
     from pycaim_spark.operators import commit
     from pycaim_spark.operators.similarity import (
         CODES_STORE,
@@ -1063,16 +1041,11 @@ def sim_ann_index_append(spark, sf_dir):
         ivf_pq_index_append,
         ivf_pq_index_build,
     )
-    from pycaim_spark.streaming.runner import _SCRATCH
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 5)
     delta = emb.filter(F.col("vec_id") % 10 == 5)
-    store = os.path.join(
-        _SCRATCH,
-        f"annappend_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{parquet_row_count(sf_dir, 'embeddings')}",
-    )
+    store = _lsm_store_dir("annappend", sf_dir, "embeddings")
     shutil.rmtree(store, ignore_errors=True)
     ivf_pq_index_build(base, store, n_cells=32, m=8, k_centroids=32)
     ivf_pq_index_append(delta, store, "day1")
