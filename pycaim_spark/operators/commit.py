@@ -78,6 +78,12 @@ into the manifests. `flip` is the only retirement of a live dir (the
 tombstones follow the pointer write), and `write_pointer`, which takes
 the whole pointer record, is the only writer of these pointers.
 
+**Store reads.** `read_store` is the one reader of a store dir: it
+declares the schema Spark wrote into the part files' footers, so a read
+is planned with no footer-schema Spark job, and the probe decides its
+deleted-id filter from the delete layers' footer row counts
+(`local_layer_ids`). A stored read therefore builds with no Spark job.
+
 **Locks.** Writers serialize on an exclusive ``flock`` (`FileLock`);
 readers take none. Acquisition re-checks the lock file's inode, so a
 waiter blocked on a file that was unlinked (a collected slug's lock)
@@ -308,15 +314,66 @@ def link_files(src: str, dst: str, skip=None) -> None:
             shutil.copy2(full, os.path.join(dst, fn))
 
 
+# -- store reads ------------------------------------------------------------
+
+#: The footer key under which Spark records, in every part file it
+#: writes, the schema of the rows written: the schema its own inference
+#: reads back.
+_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _part_files(spark, path: str) -> list[str]:
+    """The local paths of the part files a Spark scan of ``path`` reads,
+    from Spark's own file index (a driver-side listing, no job)."""
+    from urllib.parse import unquote, urlparse
+
+    files = spark.read.schema("_ int").parquet(path).inputFiles()
+    return sorted(unquote(urlparse(f).path) for f in files
+                  if f.endswith(".parquet"))
+
+
+def read_store(spark, path: str):
+    """The store parquet dir ``path`` as a DataFrame, built with no Spark
+    job: the schema is declared from a part file's footer, read on the
+    driver, instead of inferred by a footer-schema job. Spark writes a
+    part file even for an empty frame, and the footer schema is exactly
+    what its inference returns, so no column is cast and an id keeps the
+    writer's type. Every store dir is immutable once a pointer names it,
+    so the footer and the scan see the same files."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_metadata(_part_files(spark, path)[0]).metadata
+    schema = StructType.fromJson(json.loads(meta[_ROW_SCHEMA]))
+    return spark.read.schema(schema).parquet(path)
+
+
 # -- keyed layers -----------------------------------------------------------
 
 def union_layer_ids(spark, layers: list[str]):
     """The distinct union of every layer's ``ids`` parquet, or None."""
     out = None
     for d in layers:
-        ids = spark.read.parquet(os.path.join(d, "ids"))
+        ids = read_store(spark, os.path.join(d, "ids"))
         out = ids if out is None else out.unionByName(ids)
     return None if out is None else out.distinct()
+
+
+def local_layer_ids(spark, layers: list[str],
+                    limit: int) -> list[int] | None:
+    """The distinct ids of every layer's one-column ``ids`` parquet, read
+    on the driver (no Spark job), or None when the layers' footer row
+    counts sum past ``limit``. An id in two live layers counts twice."""
+    import pyarrow.parquet as pq
+
+    parts = [f for d in layers
+             for f in _part_files(spark, os.path.join(d, "ids"))]
+    if sum(pq.read_metadata(f).num_rows for f in parts) > limit:
+        return None
+    ids = set()
+    for f in parts:
+        ids.update(pq.read_table(f).column(0).to_pylist())
+    return sorted(ids)
 
 
 def collect_layers(root: str, grace: float) -> None:
@@ -400,16 +457,16 @@ class LsmView(NamedTuple):
 
     def frame(self, spark, kind: str):
         """The base ``kind`` dir unioned with every append layer's."""
-        out = spark.read.parquet(self.base[kind])
+        out = read_store(spark, self.base[kind])
         for layer in self.appends:
-            out = out.unionByName(spark.read.parquet(os.path.join(layer, kind)))
+            out = out.unionByName(read_store(spark, os.path.join(layer, kind)))
         return out
 
     def pending(self, spark, sub: str):
         """The union of the append layers' ``sub`` dirs, or None."""
         out = None
         for layer in self.appends:
-            df = spark.read.parquet(os.path.join(layer, sub))
+            df = read_store(spark, os.path.join(layer, sub))
             out = df if out is None else out.unionByName(df)
         return out
 

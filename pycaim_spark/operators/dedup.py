@@ -17,6 +17,7 @@ pointer, two-phase grace GC.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -542,6 +543,15 @@ def _incremental_matches(
         F.col("id").alias("delta_id"), "table_id", "mh"
     )
 
+    # ONE literal for the whole id list: a JSON string Catalyst
+    # constant-folds to an array, where an array of per-id literals
+    # costs a py4j round trip per id.
+    deleted = (
+        F.from_json(F.lit(json.dumps([int(i) for i in deleted_ids])),
+                    "array<bigint>")
+        if deleted_ids else None
+    )
+
     def _cands(ids_col):
         """The per-bucket candidate prefix: DELETED ids are removed
         BEFORE the cap is applied (r18 self-review #4) — a deleted id
@@ -555,13 +565,8 @@ def _incremental_matches(
         is driver-bounded by the callers (deletes since the last
         compaction, literal-array threshold enforced there)."""
         col = F.col(ids_col)
-        if deleted_ids:
-            col = F.array_except(
-                col,
-                F.array(
-                    *[F.lit(int(i)) for i in deleted_ids]
-                ).cast("array<bigint>"),
-            )
+        if deleted is not None:
+            col = F.array_except(col, deleted)
         return F.slice(col, 1, max_candidates_per_doc).alias("ids")
     # (1) broadcast the delta probe: the base store streams through a BHJ,
     # one hit row per (delta doc, band) with the bucket's member array
@@ -857,7 +862,8 @@ def minhash_signature_store_build(
         spark = base_docs.sparkSession
         (
             _band_buckets(
-                _band_rows(spark.read.parquet(dirs["sets"]), num_hashes, seed)
+                _band_rows(commit.read_store(spark, dirs["sets"]), num_hashes,
+                           seed)
             )
             .write.mode("overwrite")
             .parquet(dirs["buckets"])
@@ -901,7 +907,7 @@ def incremental_minhash_dedup_stored(
     _check_probe_cap(max_candidates_per_doc)
     view = commit.read_view(SIGNATURE_STORE, store_dir)
     b_sets = view.frame(spark, "sets")
-    store_buckets = spark.read.parquet(view.base["buckets"])
+    store_buckets = commit.read_store(spark, view.base["buckets"])
     pending = view.pending(spark, "bands")
     # Pending deletions (r18) apply logically, in two layers, to base
     # AND layer signatures: the sets-side anti-join guarantees a deleted
@@ -917,7 +923,9 @@ def incremental_minhash_dedup_stored(
         b_sets, store_buckets, delta_docs, text_col, id_col, shingle_n,
         num_hashes, max_jaccard_dist, seed, max_candidates_per_doc,
         extra_buckets=None if pending is None else _band_buckets(pending),
-        deleted_ids=_deleted_ids_for_probe(dels),
+        deleted_ids=commit.local_layer_ids(
+            spark, view.deletes, _DELETE_CANDIDATE_FILTER_MAX
+        ),
     )
 
 
@@ -935,24 +943,13 @@ def _store_delete_dirs(store_dir: str) -> list[str]:
     return commit.read_view(SIGNATURE_STORE, store_dir).deletes
 
 
-#: Above this many pending deleted ids the probes skip the exact
+#: Above this many pending deleted ids (the delete layers' footer row
+#: counts, so the decision runs no Spark job) the probes skip the exact
 #: pre-cap candidate filter (a literal array that large would bloat
 #: the plan) and fall back to the sets-side anti-join alone — deleted
 #: ids then cost candidate slots until compaction. Compaction restores
 #: exactness at any size.
 _DELETE_CANDIDATE_FILTER_MAX = 4096
-
-
-def _deleted_ids_for_probe(dels) -> list[int] | None:
-    """Driver-side deleted-id list for the probe's exact pre-cap
-    candidate filter, or None past `_DELETE_CANDIDATE_FILTER_MAX`
-    (bounded: deletes since the last compaction)."""
-    if dels is None:
-        return None
-    rows = dels.limit(_DELETE_CANDIDATE_FILTER_MAX + 1).collect()
-    if len(rows) > _DELETE_CANDIDATE_FILTER_MAX:
-        return None
-    return [r.id for r in rows]
 
 
 def minhash_signature_store_delete(
@@ -1037,7 +1034,7 @@ def minhash_signature_store_append(
         a_sets.write.mode("overwrite").parquet(os.path.join(fresh, "sets"))
         (
             _band_rows(
-                spark.read.parquet(os.path.join(fresh, "sets")),
+                commit.read_store(spark, os.path.join(fresh, "sets")),
                 num_hashes, seed,
             )
             .write.mode("overwrite")
@@ -1090,6 +1087,63 @@ def _merge_bucket_layers(
     )
 
 
+def _compact_frames(spark, view: commit.LsmView):
+    """The (sets, buckets) frames of the base version a compaction of
+    ``view`` writes: base ∪ append layers, minus the delete layers."""
+    merged_sets = view.frame(spark, "sets")
+    pending = view.pending(spark, "bands")
+    merged_buckets = commit.read_store(spark, view.base["buckets"])
+    if pending is not None:
+        merged_buckets = _merge_bucket_layers(merged_buckets, pending)
+    if view.deletes:
+        # PHYSICAL deletion fold (r18): drop deleted docs from the
+        # sets side and filter them out of every bucket's member
+        # array (explode → anti-mark → re-aggregate under the same
+        # merge-stable min-id-prefix cap; width decremented by the
+        # members actually removed — beyond-cap width remains the
+        # conservative collision count it always was). A bucket
+        # whose members are all deleted vanishes. After this pass
+        # the store is byte-equivalent to one built without the
+        # deleted docs, except where a deleted id had evicted
+        # another past BUCKET_STORE_CAP (cap 1024 — a documented,
+        # fixture-unreachable approximation).
+        dels = view.deleted_ids(spark)
+        merged_sets = merged_sets.join(
+            F.broadcast(dels), "id", "left_anti"
+        )
+        mark = dels.select(F.col("id").alias("_did")).withColumn(
+            "_del", F.lit(1)
+        )
+        merged_buckets = (
+            merged_buckets.select(
+                "table_id", "mh", "width",
+                F.explode("ids").alias("_did"),
+            )
+            .join(F.broadcast(mark), "_did", "left")
+            .groupBy("table_id", "mh")
+            .agg(
+                F.slice(
+                    F.sort_array(
+                        F.collect_list(
+                            F.when(
+                                F.col("_del").isNull(),
+                                F.col("_did"),
+                            )
+                        )
+                    ),
+                    1,
+                    BUCKET_STORE_CAP,
+                ).alias("ids"),
+                (
+                    F.first("width")
+                    - F.coalesce(F.sum("_del"), F.lit(0))
+                ).cast("long").alias("width"),
+            )
+            .filter(F.size("ids") > 0)
+        )
+    return merged_sets, merged_buckets
+
+
 def minhash_signature_store_compact(spark, store_dir: str) -> None:
     """Fold every live append layer into a NEW base version and commit
     it with one atomic pointer flip — the LSM compaction, re-based on
@@ -1117,57 +1171,7 @@ def minhash_signature_store_compact(spark, store_dir: str) -> None:
         view = commit.fold_view(SIGNATURE_STORE, store_dir)
         if view is None:
             return
-        merged_sets = view.frame(spark, "sets")
-        pending = view.pending(spark, "bands")
-        merged_buckets = spark.read.parquet(view.base["buckets"])
-        if pending is not None:
-            merged_buckets = _merge_bucket_layers(merged_buckets, pending)
-        if view.deletes:
-            # PHYSICAL deletion fold (r18): drop deleted docs from the
-            # sets side and filter them out of every bucket's member
-            # array (explode → anti-mark → re-aggregate under the same
-            # merge-stable min-id-prefix cap; width decremented by the
-            # members actually removed — beyond-cap width remains the
-            # conservative collision count it always was). A bucket
-            # whose members are all deleted vanishes. After this pass
-            # the store is byte-equivalent to one built without the
-            # deleted docs, except where a deleted id had evicted
-            # another past BUCKET_STORE_CAP (cap 1024 — a documented,
-            # fixture-unreachable approximation).
-            dels = view.deleted_ids(spark)
-            merged_sets = merged_sets.join(
-                F.broadcast(dels), "id", "left_anti"
-            )
-            mark = dels.select(F.col("id").alias("_did")).withColumn(
-                "_del", F.lit(1)
-            )
-            merged_buckets = (
-                merged_buckets.select(
-                    "table_id", "mh", "width",
-                    F.explode("ids").alias("_did"),
-                )
-                .join(F.broadcast(mark), "_did", "left")
-                .groupBy("table_id", "mh")
-                .agg(
-                    F.slice(
-                        F.sort_array(
-                            F.collect_list(
-                                F.when(
-                                    F.col("_del").isNull(),
-                                    F.col("_did"),
-                                )
-                            )
-                        ),
-                        1,
-                        BUCKET_STORE_CAP,
-                    ).alias("ids"),
-                    (
-                        F.first("width")
-                        - F.coalesce(F.sum("_del"), F.lit(0))
-                    ).cast("long").alias("width"),
-                )
-                .filter(F.size("ids") > 0)
-            )
+        merged_sets, merged_buckets = _compact_frames(spark, view)
         new = commit.base_dirs(SIGNATURE_STORE, store_dir, view.version + 1)
         merged_sets.write.mode("overwrite").parquet(new["sets"])
         merged_buckets.write.mode("overwrite").parquet(new["buckets"])

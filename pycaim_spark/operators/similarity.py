@@ -420,11 +420,18 @@ def _exact_rerank(
     cosine (same index-order fold + rounding as sim_cosine_exact), so every
     returned cos is exact and recall is the only approximation. Shared tail
     of the PQ and IVF-PQ operators."""
+    import pandas as pd
     from pyspark.sql import Window
 
+    # From pandas through Arrow: a local relation, where a list of rows
+    # would be reserialized by a Python worker.
     queries_df = F.broadcast(
         emb.sparkSession.createDataFrame(
-            [(int(r.vec_id), list(map(float, r.embedding))) for r in q_rows],
+            pd.DataFrame({
+                "query_id": [int(r.vec_id) for r in q_rows],
+                "q_emb": [np.asarray(r.embedding, dtype=np.float64)
+                          for r in q_rows],
+            }),
             "query_id int, q_emb array<double>",
         ).select(
             "query_id", "q_emb", norm_expr(F.col("q_emb")).alias("q_norm")
@@ -611,8 +618,9 @@ def ivf_pq_topk_neighbors(
        parallelism fix measured on sim_ivf, ISOLATE_r8.json ivf_*).
     3. A query scores ONLY rows in its ``nprobe`` nearest cells (tiny
        broadcast probe frame joined on cell id), from codes alone:
-       dot(q, x) ≈ dot(q, centroid_cell) + Σ lut[i][code_i], both terms
-       from closure-resident tables — no vector column is read.
+       dot(q, x) ≈ dot(q, centroid_cell) + Σ lut[i][code_i], a JVM
+       expression over tables each probe row carries — no vector
+       column is read and no Python worker runs.
     4. Exact JVM re-rank of the top ``n_candidates`` per query (shared
        ``_exact_rerank`` tail) — returned cosines are bit-exact.
 
@@ -708,15 +716,18 @@ def _ivf_pq_query(
     n_candidates: int,
 ) -> DataFrame:
     """Query side of IVF-PQ: probe frame → ADC over codes in probed cells
-    → exact re-rank. Shared by the inline and stored-index operators."""
+    → exact re-rank. Shared by the inline and stored-index operators.
+    Runs no Python worker: the query vectors are collected and sorted on
+    the driver (no sort job), the probe frame comes from pandas through
+    Arrow, and ADC is a JVM expression."""
     import pandas as pd
 
-    m, _, sub = codebooks.shape
-    q_rows = (
+    m, k_cent, sub = codebooks.shape
+    q_rows = sorted(
         emb.filter(F.col("vec_id") < n_queries)
-        .orderBy("vec_id")
         .select("vec_id", "embedding")
-        .collect()
+        .collect(),
+        key=lambda r: r.vec_id,
     )
     q_mat = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in q_rows])
     q_norms = np.linalg.norm(q_mat, axis=1)
@@ -725,30 +736,33 @@ def _ivf_pq_query(
     qc_dots = q_mat @ centroids.T  # (n_q, n_cells): the dot(q, centroid) term
     luts = np.einsum(
         "qis,ics->qic", q_mat.reshape(len(q_rows), m, sub), codebooks
-    )
+    ).reshape(len(q_rows), m * k_cent)
 
-    def _adc(qpos, cell, codes, recon):
-        qp = qpos.to_numpy()
-        c = np.stack(codes.to_numpy())
-        dots = qc_dots[qp, cell.to_numpy()] + luts[
-            qp[:, None], np.arange(m)[None, :], c
-        ].sum(1)
-        return pd.Series(dots / (q_norms[qp] * recon.to_numpy()))
-
-    adc = F.pandas_udf(_adc, "double")
-
-    # Tiny probe frame: (query position, ACTUAL query vec_id, probed cell);
-    # real ids ride along so no positional/id divergence is possible.
+    # Tiny probe frame, one row per (query, probed cell), carrying the
+    # query's ACTUAL vec_id (no positional/id divergence is possible),
+    # its flattened m×K look-up table, dot(q, centroid_cell) and |q|.
+    qpos = np.repeat(np.arange(len(q_rows)), q_cells.shape[1])
+    cells = q_cells.reshape(-1)
     probes = F.broadcast(
         emb.sparkSession.createDataFrame(
-            [
-                (pos, int(r.vec_id), int(cell))
-                for pos, r in enumerate(q_rows)
-                for cell in q_cells[pos]
-            ],
-            "qpos int, query_id int, cell int",
+            pd.DataFrame({
+                "query_id": np.array([int(r.vec_id) for r in q_rows],
+                                     dtype=np.int32)[qpos],
+                "cell": cells.astype(np.int32),
+                "lut": list(luts[qpos]),
+                "qc": qc_dots[qpos, cells],
+                "qn": q_norms[qpos],
+            }),
+            "query_id int, cell int, lut array<double>, qc double, "
+            "qn double",
         )
     )
+    # ADC: dot(q, x) ≈ dot(q, centroid) + Σ_i lut[i][codes[i]], over the
+    # cosine's two norms; the sum is unrolled over the m subspaces.
+    lut, codes = F.col("lut"), F.col("codes")
+    dot = F.col("qc")
+    for i in range(m):
+        dot = dot + lut[codes[i] + i * k_cent]
     from pyspark.sql import Window
 
     scored = (
@@ -757,7 +771,7 @@ def _ivf_pq_query(
         .select(
             "query_id",
             "neighbor_id",
-            adc("qpos", "cell", "codes", "recon_norm").alias("approx"),
+            (dot / (F.col("qn") * F.col("recon_norm"))).alias("approx"),
         )
     )
     wa = Window.partitionBy("query_id").orderBy(
@@ -1040,6 +1054,16 @@ def ivf_pq_index_delete(
     )
 
 
+def _live_codes(spark, view: commit.LsmView) -> DataFrame:
+    """``view``'s codes: the base version ∪ the append layers, minus the
+    delete layers' ids — what a query scans and a vacuum writes."""
+    coded = view.frame(spark, "codes")
+    dels = view.deleted_ids(spark)
+    if dels is not None:
+        coded = coded.join(F.broadcast(dels), "neighbor_id", "left_anti")
+    return coded
+
+
 def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
     """The codes COMPACTION (r18): publish ``codes_v{N+1}`` = (base ∪
     live append layers) minus every live delete layer's ids, flip the
@@ -1054,12 +1078,7 @@ def ivf_pq_codes_vacuum(spark, store_dir: str) -> None:
         view = commit.fold_view(CODES_STORE, store_dir)
         if view is None:
             return
-        cur = view.frame(spark, "codes")
-        if view.deletes:
-            cur = cur.join(
-                F.broadcast(view.deleted_ids(spark)), "neighbor_id",
-                "left_anti",
-            )
+        cur = _live_codes(spark, view)
         new = commit.base_dirs(CODES_STORE, store_dir, view.version + 1)
         os.makedirs(new["codes"])
         commit.link_files(view.base["codes"], new["codes"],
@@ -1098,12 +1117,9 @@ def ivf_pq_topk_stored(
     view, centroids, codebooks = _index_view(
         emb, store_dir, n_cells, m, k_centroids, sample_size, iters, seed
     )
-    coded = view.frame(emb.sparkSession, "codes")
-    dels = view.deleted_ids(emb.sparkSession)
-    if dels is not None:
-        coded = coded.join(F.broadcast(dels), "neighbor_id", "left_anti")
     return _ivf_pq_query(
-        emb, coded, centroids, codebooks, nprobe, k, n_queries, n_candidates
+        emb, _live_codes(emb.sparkSession, view), centroids, codebooks,
+        nprobe, k, n_queries, n_candidates,
     )
 
 

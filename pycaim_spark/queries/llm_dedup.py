@@ -503,9 +503,9 @@ def dedup_incremental_clusters(spark, sf_dir):
     return incremental_cluster_assignments(
         base,
         delta,
-        spark.read.parquet(assign_store),
-        b_sets=spark.read.parquet(view.base["sets"]),
-        store_buckets=spark.read.parquet(view.base["buckets"]),
+        commit.read_store(spark, assign_store),
+        b_sets=commit.read_store(spark, view.base["sets"]),
+        store_buckets=commit.read_store(spark, view.base["buckets"]),
     )
 
 

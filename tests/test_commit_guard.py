@@ -16,6 +16,11 @@ pointer's layer keys ``"app_layers"`` and ``"del_layers"``, which every
 store shares, only in ``commit.py``. A store that names its own layers
 or reads its own manifest has grown a second read view.
 
+Store reads are held the same way: ``commit.read_store`` is the one
+reader of a store dir, and a bare ``.read.parquet(`` (which infers the
+schema with a Spark job) may appear neither in ``commit.py`` nor in a
+store function of ``dedup.py`` or ``similarity.py``.
+
 Comments and docstrings are not code and are not checked.
 """
 
@@ -126,3 +131,54 @@ def test_lsm_guard_sees_the_specs_and_the_core():
     assert in_specs == LSM_NAMES
     in_core = {h.rsplit(":", 1)[1] for h in _lsm_hits(HOME)[1]}
     assert CORE_NAMES <= in_core
+
+
+# Store reads: every read of a store dir goes through
+# ``commit.read_store``, which declares the footer schema, so no store
+# read pays a footer-schema Spark job. A bare ``<session>.read.parquet(``
+# may not appear in ``commit.py`` nor in a store function of
+# ``dedup.py``/``similarity.py`` (a top-level function that uses the
+# ``commit`` module, the store's spec constant or another store
+# function of its module).
+STORE_MODULES = {"operators/dedup.py": "SIGNATURE_STORE",
+                 "operators/similarity.py": "CODES_STORE"}
+
+
+def _bare_reads(node: ast.AST) -> int:
+    return sum(
+        isinstance(n, ast.Attribute) and n.attr == "parquet"
+        and isinstance(n.value, ast.Attribute) and n.value.attr == "read"
+        for n in ast.walk(node)
+    )
+
+
+def _store_functions(rel: str) -> dict[str, ast.FunctionDef]:
+    tree = ast.parse((PKG / rel).read_text())
+    fns = {fn.name: fn for fn in tree.body if isinstance(fn, ast.FunctionDef)}
+    uses = {
+        name: {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+        for name, fn in fns.items()
+    }
+    store = {"commit", STORE_MODULES[rel]}
+    while True:
+        grown = store | {name for name, u in uses.items() if u & store}
+        if grown == store:
+            return {name: fns[name] for name in store if name in fns}
+        store = grown
+
+
+def test_store_reads_declare_their_schema():
+    stray = [] if _bare_reads(ast.parse(HOME.read_text())) == 0 else [
+        "operators/commit.py"]
+    stray += [
+        f"{rel}:{name}" for rel in STORE_MODULES
+        for name, fn in _store_functions(rel).items() if _bare_reads(fn)
+    ]
+    assert stray == []
+
+
+def test_store_read_guard_sees_the_store_functions():
+    names = {n for rel in STORE_MODULES for n in _store_functions(rel)}
+    assert {"incremental_minhash_dedup_stored", "_compact_frames",
+            "minhash_signature_store_build", "minhash_signature_store_append",
+            "ivf_pq_topk_stored", "_live_codes"} <= names
