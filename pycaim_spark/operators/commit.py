@@ -322,14 +322,14 @@ def link_files(src: str, dst: str, skip=None) -> None:
 _ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _part_files(spark, path: str) -> list[str]:
-    """The local paths of the part files a Spark scan of ``path`` reads,
-    from Spark's own file index (a driver-side listing, no job)."""
-    from urllib.parse import unquote, urlparse
+def _dataset(path: str):
+    """The parquet part files of the data dir ``path`` as a pyarrow
+    dataset, read on the driver: discovery skips ``_``- and ``.``-files
+    as Spark's scan does, and the schema is the first part file's
+    footer."""
+    import pyarrow.dataset as ds
 
-    files = spark.read.schema("_ int").parquet(path).inputFiles()
-    return sorted(unquote(urlparse(f).path) for f in files
-                  if f.endswith(".parquet"))
+    return ds.dataset(path, format="parquet")
 
 
 def read_store(spark, path: str):
@@ -340,10 +340,9 @@ def read_store(spark, path: str):
     what its inference returns, so no column is cast and an id keeps the
     writer's type. Every store dir is immutable once a pointer names it,
     so the footer and the scan see the same files."""
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    meta = pq.read_metadata(_part_files(spark, path)[0]).metadata
+    meta = _dataset(path).schema.metadata
     schema = StructType.fromJson(json.loads(meta[_ROW_SCHEMA]))
     return spark.read.schema(schema).parquet(path)
 
@@ -359,21 +358,15 @@ def union_layer_ids(spark, layers: list[str]):
     return None if out is None else out.distinct()
 
 
-def local_layer_ids(spark, layers: list[str],
-                    limit: int) -> list[int] | None:
+def local_layer_ids(layers: list[str], limit: int) -> list[int] | None:
     """The distinct ids of every layer's one-column ``ids`` parquet, read
     on the driver (no Spark job), or None when the layers' footer row
     counts sum past ``limit``. An id in two live layers counts twice."""
-    import pyarrow.parquet as pq
-
-    parts = [f for d in layers
-             for f in _part_files(spark, os.path.join(d, "ids"))]
-    if sum(pq.read_metadata(f).num_rows for f in parts) > limit:
+    parts = [_dataset(os.path.join(d, "ids")) for d in layers]
+    if sum(p.count_rows() for p in parts) > limit:
         return None
-    ids = set()
-    for f in parts:
-        ids.update(pq.read_table(f).column(0).to_pylist())
-    return sorted(ids)
+    return sorted({i for p in parts
+                   for i in p.to_table().column(0).to_pylist()})
 
 
 def collect_layers(root: str, grace: float) -> None:

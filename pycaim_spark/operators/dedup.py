@@ -924,7 +924,7 @@ def incremental_minhash_dedup_stored(
         num_hashes, max_jaccard_dist, seed, max_candidates_per_doc,
         extra_buckets=None if pending is None else _band_buckets(pending),
         deleted_ids=commit.local_layer_ids(
-            spark, view.deletes, _DELETE_CANDIDATE_FILTER_MAX
+            view.deletes, _DELETE_CANDIDATE_FILTER_MAX
         ),
     )
 

@@ -193,7 +193,7 @@ def test_delete_filter_threshold_matches_compacted(spark, tmp_path,
     minhash_signature_store_delete(
         spark, store, _ids(spark, [1, 3, *filler]), "gdpr")
     exact = commit.local_layer_ids(
-        spark, commit.read_view(SIGNATURE_STORE, store).deletes,
+        commit.read_view(SIGNATURE_STORE, store).deletes,
         _DELETE_CANDIDATE_FILTER_MAX,
     )
     assert (exact is not None) == (n_deleted <= _DELETE_CANDIDATE_FILTER_MAX)
